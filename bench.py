@@ -29,7 +29,7 @@ def _calibration_sec(spark, sf_dir: str) -> float:
     +/-20-25% between rounds with foreign load (r04 125.6s vs r05 146.7s
     was a uniform environment shift); recording this constant workload
     alongside every bench lets per-round comparisons normalize out the
-    environment (scripts/bench_diff.py divides by the calibration ratio).
+    environment (scripts/bench_history.py divides by the calibration ratio).
     Median of 5 warm runs of a plan that never changes."""
     import statistics
 

@@ -209,185 +209,196 @@ def run_release_cycle(
     )
 
     comp = batch_completeness(expected, arrived, key, batch_col)
-    # Cached: the held branch re-reads this join in the manifest rollup,
-    # and the caller feeds `held` into the NEXT cycle's candidate set —
-    # without the cache every one of those consumers re-runs the
-    # candidates scan + completeness broadcast. Dropping this cache (and
-    # decided's, below) was tried in round 11: it removed two AQE
-    # cache-fill cascades but made every overlapped tail leg recompute
-    # the shared subtrees concurrently, which regressed the 32-core
-    # driver bench 33% — re-measured round 12, the caches win (9.6 ->
-    # 6.8 s min-of-4 at local[32]).
+    # Cached: two in-cycle branches read this join — `proc` feeds the
+    # cascade (annotated -> decided, filled by the uniqueness-gate action
+    # below) and `held` feeds the manifest's held_back rows in the tail
+    # rollup; without the cache each re-runs the candidates scan +
+    # completeness broadcast. It is released before the cycle returns, so
+    # a caller re-reading the returned `held` re-derives it from one
+    # broadcast join. Dropping this cache (and decided's, below) was
+    # tried in round 11: it removed two AQE cache-fill cascades but made
+    # every overlapped tail leg recompute the shared subtrees
+    # concurrently, which regressed the 32-core driver bench 33% —
+    # re-measured round 12, the caches win (9.6 -> 6.8 s min-of-4 at
+    # local[32]).
     flagged = candidates.join(
         F.broadcast(comp.select(batch_col, "is_complete")), batch_col, "left"
     ).cache()
-    held = flagged.filter(~F.coalesce("is_complete", F.lit(False))).drop("is_complete")
-    proc = flagged.filter(F.coalesce("is_complete", F.lit(False))).drop("is_complete")
-    if payload_cols:
-        # Payload-skinny cascade: the duplicate_idx window shuffles on
-        # key — keep the wide columns out of that exchange (docstring;
-        # they re-attach to the accepted delta below).
-        proc = proc.drop(*payload_cols)
-
-    annotated, qc = build_release_plan(
-        proc, key, quality_col, batch_col, rules, tiebreak_col=tiebreak_col
-    )
-    # Every downstream consumer (failed/eligible split, the resequencing
-    # gate, the uniqueness gate, the merge, the QC report, the manifest)
-    # derives from this frame; the uniqueness-gate action below fills it.
-    annotated = annotated.cache()
-    failed = annotated.filter(F.col("reason") != REASON_RELEASE)
-    eligible = annotated.filter(F.col("reason") == REASON_RELEASE)
-
-    if released_cols is None:
-        released_cols = [key, quality_col]
-    if current_version(table_dir) is None:
-        if released_schema is not None:
-            released_cur = spark.createDataFrame([], released_schema)
-        else:
-            # Derive the empty table's schema from the candidates
-            # themselves (round-9 ADVICE): a hardcoded type string breaks
-            # string-keyed or differently-typed corpora on the first
-            # cycle's unionByName under ANSI.
-            released_cur = spark.createDataFrame(
-                [], candidates.select(*released_cols).schema
-            )
-    else:
-        released_cur = read_published(spark, table_dir)
-    # Cached: three tail legs consume this frame (the merge under the
-    # publish write, the manifest rollup, and the gate aggregation that
-    # fills it) — uncached, the released-table read + best-attempt
-    # aggregate + broadcast join re-ran once per leg, and running those
-    # duplicated subtrees CONCURRENTLY in the overlapped tail was the
-    # round-11 32-core regression (the in-flight-cache-fill trap's
-    # sibling: overlap is only cheap over materialized inputs).
-    decided = resequencing_decisions(released_cur, eligible, key, quality_col).cache()
-
-    accepted = decided.filter(F.col("decision").isin("submit_new", "submit_update"))
-    # ONE delta-sized aggregation does three jobs: the loud uniqueness
-    # gate (merge_delta doubles rows on duplicate keys — fail instead),
-    # the measured delta count, and the delta's key-byte estimate that
-    # decides the plan-time broadcast hint below.
-    stats = accepted.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct(F.col(key)).alias("n_keys"),
-        F.coalesce(
-            F.sum(F.octet_length(F.col(key).cast("string")) + F.lit(16)), F.lit(0)
-        ).alias("key_bytes"),
-    ).collect()[0]
-    if stats["n"] != stats["n_keys"]:
-        raise ValueError(
-            f"run_release_cycle: accepted rows carry duplicate {key!r} values "
-            f"({stats['n']} rows over {stats['n_keys']} keys) — the rules must "
-            "fail worse duplicates (add a duplicate_idx > 1 rule) before rows "
-            "reach the merge; merging would silently double published rows"
-        )
-    hint = stats["key_bytes"] <= broadcast_accepted_max_bytes
-    to_release = accepted
-    if payload_cols:
-        # Re-attach payloads to the accepted delta only: the stored
-        # payload frame streams map-side past the broadcast-hinted
-        # accepted (key, tiebreak) pairs — the payload bytes' ONLY join
-        # in the whole cycle, and it never enters an exchange.
-        payloads = candidates.select(key, tiebreak_col, *payload_cols)
-        to_release = payloads.join(
-            F.broadcast(accepted) if hint else accepted,
-            on=[key, tiebreak_col],
-        ).cache()
-        # The uniqueness gate above ran PRE-join; duplicate (key,
-        # tiebreak) candidate rows would re-inflate the delta HERE and
-        # silently double published rows (round-10 ADVICE), and a
-        # candidate row missing its payload twin would silently DROP an
-        # accepted release. Both are hard errors: the re-attach must be
-        # exactly 1:1 with the gated accepted set. One delta-sized count
-        # against the cached join (the merge below re-reads it hot).
-        n_attached = to_release.count()
-        if n_attached != stats["n"]:
-            to_release.unpersist()
-            raise ValueError(
-                f"run_release_cycle: payload re-attach changed the accepted "
-                f"delta from {stats['n']} to {n_attached} rows — candidate "
-                f"({key}, {tiebreak_col}) pairs must be unique and complete; "
-                "merging would corrupt the published table"
-            )
-    # Delta merge: the released table streams map-side past the accepted
-    # key set — no full-outer exchange of the accumulated table. The hint
-    # is plan-time because the delta is MEASURED above; AQE's own
-    # broadcast flip comes only after the stored side's (potentially
-    # payload-carrying) map stage already wrote shuffle output.
-    merged = merge_delta(
-        released_cur,
-        to_release.select(*released_cols),
-        [key],
-        broadcast_touched=hint,
-    )
-
-    manifest = (
-        failed.withColumn("status", F.col("reason"))
-        .unionByName(decided.withColumn("status", F.col("decision")), allowMissingColumns=True)
-        .unionByName(
-            held.withColumn("duplicate_idx", F.lit(None).cast("int")).withColumn(
-                "status", F.lit("held_back")
-            ),
-            allowMissingColumns=True,
-        )
-    ).cache()  # the rollup below materializes it; callers re-read it hot
-
-    # The publish write, the manifest rollup, and the suspicious-batch
-    # alert are three independent actions whose shared inputs are ALREADY
-    # materialized (the uniqueness-gate action above computed through
-    # flagged -> annotated -> decided, filling all three caches) —
-    # overlap them so one job's straggler tail back-fills with the
-    # others' tasks (guide §2.6). NOTE the ordering constraint this
-    # relies on: overlapping actions over a NOT-yet-materialized cache
-    # duplicates the whole subtree (in-flight cache fills are not shared
-    # between concurrent jobs — measured 2x job time when this ran
-    # before the gate action, and the round-11 regression when the legs
-    # recomputed uncached subtrees concurrently).
-    def _publish() -> int:
-        v = publish_versioned(merged, table_dir)
+    cached = [flagged]  # released on every exit, error paths included
+    manifest = None  # caller-owned once returned
+    try:
+        held = flagged.filter(~F.coalesce("is_complete", F.lit(False))).drop("is_complete")
+        proc = flagged.filter(F.coalesce("is_complete", F.lit(False))).drop("is_complete")
         if payload_cols:
-            to_release.unpersist()
-        return v
+            # Payload-skinny cascade: the duplicate_idx window shuffles on
+            # key — keep the wide columns out of that exchange (docstring;
+            # they re-attach to the accepted delta below).
+            proc = proc.drop(*payload_cols)
 
-    def _rollup() -> dict[str, int]:
-        # One rollup action covers every report count except the
-        # suspicious-batch alert (different grain); it also populates the
-        # manifest cache, so the intermediates can be released without
-        # the RETURNED frames recomputing the cascade.
-        return {
-            r["status"]: r["n"]
-            for r in manifest.groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
+        annotated, qc = build_release_plan(
+            proc, key, quality_col, batch_col, rules, tiebreak_col=tiebreak_col
+        )
+        # Every downstream consumer (failed/eligible split, the resequencing
+        # gate, the uniqueness gate, the merge, the QC report, the manifest)
+        # derives from this frame; the uniqueness-gate action below fills it.
+        annotated = annotated.cache()
+        cached.append(annotated)
+        failed = annotated.filter(F.col("reason") != REASON_RELEASE)
+        eligible = annotated.filter(F.col("reason") == REASON_RELEASE)
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_version = pool.submit(_publish)
-        f_by_status = pool.submit(_rollup)
-        f_susp = pool.submit(lambda: suspicious_batches(qc, batch_col).count())
-        version = f_version.result()
-        by_status = f_by_status.result()
-        n_susp = f_susp.result()
-    report = ReleaseCycleReport(
-        version=version,
-        n_candidates=sum(by_status.values()),
-        n_held_back=by_status.get("held_back", 0),
-        n_failed=sum(n for s, n in by_status.items() if s not in
-                     ("submit_new", "submit_update", "tombstone", "held_back")),
-        n_submit_new=by_status.get("submit_new", 0),
-        n_submit_update=by_status.get("submit_update", 0),
-        n_tombstoned=by_status.get("tombstone", 0),
-        n_suspicious_batches=n_susp,
-    )
-    # The rollup and suspicious count above are the last actions that
-    # read the cascade cache — release it (round-9 ADVICE: leaked caches
-    # outlive the cycle). The returned manifest stays cached — one
-    # delta-sized skinny frame instead of three payload-bearing ones —
-    # and the CALLER unpersists it after consuming
-    # (release_export_replay does, after its TSV export); held
-    # re-derives from one broadcast join if re-read.
-    decided.unpersist()
-    annotated.unpersist()
-    flagged.unpersist()
+        if released_cols is None:
+            released_cols = [key, quality_col]
+        if current_version(table_dir) is None:
+            if released_schema is not None:
+                released_cur = spark.createDataFrame([], released_schema)
+            else:
+                # Derive the empty table's schema from the candidates
+                # themselves (round-9 ADVICE): a hardcoded type string breaks
+                # string-keyed or differently-typed corpora on the first
+                # cycle's unionByName under ANSI.
+                released_cur = spark.createDataFrame(
+                    [], candidates.select(*released_cols).schema
+                )
+        else:
+            released_cur = read_published(spark, table_dir)
+        # Cached: three tail legs consume this frame (the merge under the
+        # publish write, the manifest rollup, and the gate aggregation that
+        # fills it) — uncached, the released-table read + best-attempt
+        # aggregate + broadcast join re-ran once per leg, and running those
+        # duplicated subtrees CONCURRENTLY in the overlapped tail was the
+        # round-11 32-core regression (the in-flight-cache-fill trap's
+        # sibling: overlap is only cheap over materialized inputs).
+        decided = resequencing_decisions(released_cur, eligible, key, quality_col).cache()
+        cached.append(decided)
+
+        accepted = decided.filter(F.col("decision").isin("submit_new", "submit_update"))
+        # ONE delta-sized aggregation does three jobs: the loud uniqueness
+        # gate (merge_delta doubles rows on duplicate keys — fail instead),
+        # the measured delta count, and the delta's key-byte estimate that
+        # decides the plan-time broadcast hint below.
+        stats = accepted.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct(F.col(key)).alias("n_keys"),
+            F.coalesce(
+                F.sum(F.octet_length(F.col(key).cast("string")) + F.lit(16)), F.lit(0)
+            ).alias("key_bytes"),
+        ).collect()[0]
+        if stats["n"] != stats["n_keys"]:
+            raise ValueError(
+                f"run_release_cycle: accepted rows carry duplicate {key!r} values "
+                f"({stats['n']} rows over {stats['n_keys']} keys) — the rules must "
+                "fail worse duplicates (add a duplicate_idx > 1 rule) before rows "
+                "reach the merge; merging would silently double published rows"
+            )
+        hint = stats["key_bytes"] <= broadcast_accepted_max_bytes
+        to_release = accepted
+        if payload_cols:
+            # Re-attach payloads to the accepted delta only: the stored
+            # payload frame streams map-side past the broadcast-hinted
+            # accepted (key, tiebreak) pairs — the payload bytes' ONLY join
+            # in the whole cycle, and it never enters an exchange.
+            payloads = candidates.select(key, tiebreak_col, *payload_cols)
+            to_release = payloads.join(
+                F.broadcast(accepted) if hint else accepted,
+                on=[key, tiebreak_col],
+            ).cache()
+            cached.append(to_release)
+            # The uniqueness gate above ran PRE-join; duplicate (key,
+            # tiebreak) candidate rows would re-inflate the delta HERE and
+            # silently double published rows (round-10 ADVICE), and a
+            # candidate row missing its payload twin would silently DROP an
+            # accepted release. Both are hard errors: the re-attach must be
+            # exactly 1:1 with the gated accepted set. One delta-sized count
+            # against the cached join (the merge below re-reads it hot).
+            n_attached = to_release.count()
+            if n_attached != stats["n"]:
+                raise ValueError(
+                    f"run_release_cycle: payload re-attach changed the accepted "
+                    f"delta from {stats['n']} to {n_attached} rows — candidate "
+                    f"({key}, {tiebreak_col}) pairs must be unique and complete; "
+                    "merging would corrupt the published table"
+                )
+        # Delta merge: the released table streams map-side past the accepted
+        # key set — no full-outer exchange of the accumulated table. The hint
+        # is plan-time because the delta is MEASURED above; AQE's own
+        # broadcast flip comes only after the stored side's (potentially
+        # payload-carrying) map stage already wrote shuffle output.
+        merged = merge_delta(
+            released_cur,
+            to_release.select(*released_cols),
+            [key],
+            broadcast_touched=hint,
+        )
+
+        manifest = (
+            failed.withColumn("status", F.col("reason"))
+            .unionByName(decided.withColumn("status", F.col("decision")), allowMissingColumns=True)
+            .unionByName(
+                held.withColumn("duplicate_idx", F.lit(None).cast("int")).withColumn(
+                    "status", F.lit("held_back")
+                ),
+                allowMissingColumns=True,
+            )
+        ).cache()  # the rollup below materializes it; callers re-read it hot
+
+        # The publish write, the manifest rollup, and the suspicious-batch
+        # alert are three independent actions whose shared inputs are ALREADY
+        # materialized (the uniqueness-gate action above computed through
+        # flagged -> annotated -> decided, filling all three caches) —
+        # overlap them so one job's straggler tail back-fills with the
+        # others' tasks (guide §2.6). NOTE the ordering constraint this
+        # relies on: overlapping actions over a NOT-yet-materialized cache
+        # duplicates the whole subtree (in-flight cache fills are not shared
+        # between concurrent jobs — measured 2x job time when this ran
+        # before the gate action, and the round-11 regression when the legs
+        # recomputed uncached subtrees concurrently).
+        def _publish() -> int:
+            v = publish_versioned(merged, table_dir)
+            if payload_cols:
+                to_release.unpersist()
+            return v
+
+        def _rollup() -> dict[str, int]:
+            # One rollup action covers every report count except the
+            # suspicious-batch alert (different grain); it also populates the
+            # manifest cache, so the intermediates can be released without
+            # the RETURNED frames recomputing the cascade.
+            return {
+                r["status"]: r["n"]
+                for r in manifest.groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()
+            }
+
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            f_version = pool.submit(_publish)
+            f_by_status = pool.submit(_rollup)
+            f_susp = pool.submit(lambda: suspicious_batches(qc, batch_col).count())
+            version = f_version.result()
+            by_status = f_by_status.result()
+            n_susp = f_susp.result()
+        report = ReleaseCycleReport(
+            version=version,
+            n_candidates=sum(by_status.values()),
+            n_held_back=by_status.get("held_back", 0),
+            n_failed=sum(n for s, n in by_status.items() if s not in
+                         ("submit_new", "submit_update", "tombstone", "held_back")),
+            n_submit_new=by_status.get("submit_new", 0),
+            n_submit_update=by_status.get("submit_update", 0),
+            n_tombstoned=by_status.get("tombstone", 0),
+            n_suspicious_batches=n_susp,
+        )
+    except BaseException:
+        if manifest is not None:
+            manifest.unpersist()
+        raise
+    finally:
+        # The rollup and suspicious count are the last actions that read
+        # the cascade cache (round-9 ADVICE: leaked caches outlive the
+        # cycle). The returned manifest stays cached — one delta-sized
+        # skinny frame instead of three payload-bearing ones — and the
+        # CALLER unpersists it after consuming (release_export_replay
+        # does, after its TSV export).
+        for frame in reversed(cached):
+            frame.unpersist()
     return manifest, held, report
 
 

@@ -2,7 +2,7 @@
 row-count + schema + order-insensitive value comparison between a Spark
 query and its DuckDB oracle on the same parquet tables.
 
-Used by tests/ and scripts/check_oracle.py so every registered query is
+Used by tests/ and scripts/oracle.py so every registered query is
 verified locally before the driver ever sees it.
 """
 

@@ -2,10 +2,11 @@
 """Derive an sf1-scale corpus (10x sf0.1 = 100x sf0.01) for the scaling
 curve, since the driver generates testdata only up to sf0.1.
 
-NOT test data for correctness — the oracle harness never reads it. It
-exists solely so scripts/scaling_curve_100x.py can measure a 100x data
-step (SCALING_100x.json) instead of extrapolating from the single 10x
-step in SCALING.json. Rows are derived from the driver's own sf0.1
+NOT part of the pytest corpus. It exists so scripts/scaling.py 100x
+can measure a 100x data step (SCALING_100x.json) instead of
+extrapolating from the single 10x step in SCALING.json, and so
+scripts/oracle.py can certify SF1_PANEL at that scale
+(CORRECTNESS_SF1.json). Rows are derived from the driver's own sf0.1
 tables by FK-consistent replication:
 
 - every fact/entity table unions 10 copies with all surrogate keys

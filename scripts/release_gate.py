@@ -12,8 +12,8 @@ artifact provenance, and one all_green verdict.
 Gates (each exits non-zero on failure; each also writes its own
 artifact, whose embedded git_head is cross-checked here):
 
-  self_check      full-registry oracle parity at sf0.01 + staleness gate
-  oracle_sf1      oracle parity slice at the derived sf1 corpus
+  self_check      full-registry oracle parity at sf0.01 (scripts/oracle.py)
+  oracle_sf1      oracle parity on SF1_PANEL at the derived sf1 corpus
   audit_plans     physical-plan red-flag sweep (196 plans)
   shuffle_audit   per-query shuffle-bytes-per-input-byte accounting
   drift_guard     two-stage oracle-drift sweep (pinned-constant tripwire)
@@ -66,11 +66,12 @@ REPO = Path(__file__).resolve().parent.parent
 
 GATES: dict[str, dict] = {
     "self_check": {
-        "cmd": [sys.executable, "scripts/self_check.py"],
+        "cmd": [sys.executable, "scripts/oracle.py", "--artifact", "CORRECTNESS_SELF.json"],
         "artifact": "CORRECTNESS_SELF.json",
     },
     "oracle_sf1": {
-        "cmd": [sys.executable, "scripts/check_oracle_sf1.py"],
+        "cmd": [sys.executable, "scripts/oracle.py", "--sf", ".scaling/sf1",
+                "--artifact", "CORRECTNESS_SF1.json"],
         "artifact": "CORRECTNESS_SF1.json",
     },
     "audit_plans": {

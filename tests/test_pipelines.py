@@ -551,3 +551,45 @@ def test_run_release_cycle_rejects_duplicate_accepted_keys(spark, tmp_path):
             key="sample_id", quality_col="consensus_n", batch_col="batch",
             tiebreak_col="attempt_id",
         )
+
+
+def _persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.parametrize("path", ["duplicate_keys", "payload_reattach"])
+def test_run_release_cycle_error_paths_release_caches(spark, tmp_path, path):
+    """Both hard-error exits of run_release_cycle leave the session's
+    persisted-RDD count where it was: the cascade caches (flagged,
+    annotated, decided and the payload re-attach) are released on the
+    error path, not only on success."""
+    from harvester_database_and_automation_spark.pipelines.release import run_release_cycle
+
+    expected = spark.createDataFrame([(1, 0)], "sample_id bigint, batch int")
+    if path == "duplicate_keys":
+        # No duplicate_idx rule: both attempts of sample 1 are accepted.
+        c1 = spark.createDataFrame(
+            [(1, 1, 0, 30), (1, 2, 0, 20)],
+            "sample_id bigint, attempt_id int, batch int, consensus_n int",
+        )
+        kwargs = {"rules": []}
+    else:
+        # Duplicate (key, tiebreak) rows pass the gate, then inflate the
+        # payload re-attach join.
+        c1 = spark.createDataFrame(
+            [(1, 1, 0, 30, "PAYLOAD-A"), (1, 1, 0, 30, "PAYLOAD-B")],
+            "sample_id bigint, attempt_id int, batch int, consensus_n int, payload string",
+        )
+        kwargs = {
+            "rules": [("duplicate", F.col("duplicate_idx") > 1)],
+            "released_cols": ["sample_id", "consensus_n", "payload"],
+            "payload_cols": ["payload"],
+        }
+    before = _persisted_rdds(spark)
+    with pytest.raises(ValueError, match="duplicate" if path == "duplicate_keys" else "re-attach"):
+        run_release_cycle(
+            spark, c1, expected, c1.select("sample_id"), str(tmp_path / "released"),
+            key="sample_id", quality_col="consensus_n", batch_col="batch",
+            tiebreak_col="attempt_id", **kwargs,
+        )
+    assert _persisted_rdds(spark) == before

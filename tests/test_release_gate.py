@@ -99,3 +99,10 @@ class TestRefuseOverwrite:
     def test_no_prior_writes(self):
         new = self._out({"a": _gate_row(False, stderr_tail="No space left on device")})
         assert release_gate.refuse_overwrite(None, new) is None
+
+
+def test_every_gate_script_exists():
+    """A gate pointing at a folded or deleted script would fail only when
+    the full gate runs; catch it here."""
+    for name, spec in release_gate.GATES.items():
+        assert (release_gate.REPO / spec["cmd"][1]).is_file(), name
