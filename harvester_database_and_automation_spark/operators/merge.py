@@ -16,10 +16,31 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 CHANGE_COL = "change_type"
+
+BROADCAST_MAX_ROWS = 1_000_000
+BROADCAST_MAX_BYTES = 64 * 1024 * 1024
+
+
+def key_bytes(cols: Sequence[str]) -> Column:
+    """Per-row width estimate of ``cols``: each value's string octet
+    length (NULL counts as 0) plus 16 B of UnsafeRow field and offset
+    overhead per column. Summed over a delta, it feeds :func:`fits_broadcast`."""
+    return sum(
+        (F.coalesce(F.octet_length(F.col(c).cast("string")), F.lit(0)) + F.lit(16)) for c in cols
+    )
+
+
+def fits_broadcast(n_rows: int, n_bytes: int) -> bool:
+    """The plan-time broadcast rule for a MEASURED delta (merge_delta's
+    ``broadcast_touched``): rows AND estimated bytes (:func:`key_bytes`)
+    within bounds. ``F.broadcast`` bypasses autoBroadcastJoinThreshold and
+    AQE's size check, so a row cap alone would broadcast hundreds of MB of
+    wide composite keys on exactly the large-delta days it exists for."""
+    return n_rows <= BROADCAST_MAX_ROWS and n_bytes <= BROADCAST_MAX_BYTES
 
 
 def merge_upsert(current: DataFrame, updates: DataFrame, keys: Sequence[str]) -> DataFrame:

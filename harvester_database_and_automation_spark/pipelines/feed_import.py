@@ -31,6 +31,8 @@ from harvester_database_and_automation_spark.operators.external import (
 from harvester_database_and_automation_spark.operators.merge import (
     CHANGE_COL,
     classify_changes,
+    fits_broadcast,
+    key_bytes,
     merge_delta,
 )
 from harvester_database_and_automation_spark.operators.publish import (
@@ -87,8 +89,6 @@ def run_feed_import(
     checks: dict[str, Column],
     annotate: Callable[[DataFrame], DataFrame] | None = None,
     required_fields: set[str] | None = None,
-    broadcast_delta_max_rows: int = 1_000_000,
-    broadcast_delta_max_bytes: int = 64 * 1024 * 1024,
 ) -> FeedImportReport:
     """Run one import cycle of ``feed_path`` into ``table_dir``.
 
@@ -97,14 +97,11 @@ def run_feed_import(
     invoked ONLY on insert/payload_changed rows; unchanged and
     metadata-changed rows keep their stored annotation untouched.
 
-    Broadcast gating is on MEASURED rows AND estimated bytes: an explicit
-    ``F.broadcast`` bypasses autoBroadcastJoinThreshold and AQE's size
-    check entirely, so a row-count gate alone would happily broadcast
-    hundreds of MB of composite/wide string keys on exactly the
-    large-delta days the gate exists for (round-9 ADVICE). The byte
-    estimate (per-row key/metadata octet lengths, summed in the same
-    classification rollup that feeds the run report — no extra action)
-    must stay under ``broadcast_delta_max_bytes`` as well.
+    Broadcast gating is on MEASURED rows AND estimated bytes
+    (``operators.merge.fits_broadcast``, round-9 ADVICE), both summed in
+    the classification rollup that feeds the run report — no extra action.
+    Every cache the cycle fills is released on every exit, error paths
+    included.
     """
     if required_fields:
         drift = check_field_drift(spark, feed_path, required=required_fields)
@@ -112,144 +109,136 @@ def run_feed_import(
             raise ValueError(f"feed schema drift: missing required {sorted(drift.missing_required)}")
 
     scan = read_jsonl(spark, feed_path, schema)
-    clean, quarantined = validate(scan.good, checks)
-    # First action ON PURPOSE: materializes the shared parse cache, so
-    # the quarantine count and the classification rollup below can run
-    # as overlapped actions over warm inputs (overlapping BEFORE the
-    # cache is filled would make each concurrent job recompute the whole
-    # parse — the in-flight-cache-fill trap measured in the release
-    # pipeline).
-    n_corrupt = scan.corrupt.count()
+    classified = annotated_cached = None
+    try:
+        clean, quarantined = validate(scan.good, checks)
+        # First action ON PURPOSE: materializes the shared parse cache, so
+        # the quarantine count and the classification rollup below can run
+        # as overlapped actions over warm inputs (overlapping BEFORE the
+        # cache is filled would make each concurrent job recompute the whole
+        # parse — the in-flight-cache-fill trap measured in the release
+        # pipeline).
+        n_corrupt = scan.corrupt.count()
 
-    first_run = current_version(table_dir) is None
-    if first_run:
-        current = spark.createDataFrame([], schema)
-    else:
-        current = read_published(spark, table_dir).select(*[f.name for f in schema.fields])
+        first_run = current_version(table_dir) is None
+        if first_run:
+            current = spark.createDataFrame([], schema)
+        else:
+            current = read_published(spark, table_dir).select(*[f.name for f in schema.fields])
 
-    # PAYLOAD-SKINNY classification (the wide-row discipline, SURVEY §7
-    # risk register): the 30KB payload is hashed map-side and only the
-    # hash enters the classification exchange — the join that decides
-    # every row's fate moves ~tens of bytes per row however wide the
-    # genome column is (measured: WIDE_ROW_BYTES.json).
-    classified = classify_changes(
-        current, clean, keys, metadata_cols, payload_cols, payload_skinny=True
-    ).cache()
-    # Per-row width estimates ride the SAME rollup as the change counts
-    # (one action): +16 B/column covers UnsafeRow field + offset overhead;
-    # delete rows carry NULL metadata (coalesce to 0). These feed the
-    # byte-aware broadcast gates below.
-    _w = lambda cols: sum(  # noqa: E731 - local shorthand
-        (F.coalesce(F.octet_length(F.col(c).cast("string")), F.lit(0)) + F.lit(16))
-        for c in cols
-    )
-    # The quarantine count (parse cache, warm) and the classification
-    # rollup (fills the classified cache) touch disjoint caches with warm
-    # shared inputs — overlap them (guide on overlapping independent
-    # jobs; see the n_corrupt ordering note above).
-    from concurrent.futures import ThreadPoolExecutor
+        # PAYLOAD-SKINNY classification (the wide-row discipline, SURVEY §7
+        # risk register): the 30KB payload is hashed map-side and only the
+        # hash enters the classification exchange — the join that decides
+        # every row's fate moves ~tens of bytes per row however wide the
+        # genome column is (measured: WIDE_ROW_BYTES.json).
+        classified = classify_changes(
+            current, clean, keys, metadata_cols, payload_cols, payload_skinny=True
+        ).cache()
+        # The quarantine count (parse cache, warm) and the classification
+        # rollup (fills the classified cache) touch disjoint caches with warm
+        # shared inputs — overlap them (guide on overlapping independent
+        # jobs; see the n_corrupt ordering note above).
+        from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_quar = _pool.submit(quarantined.count)
-        rollup = (
-            classified.groupBy(CHANGE_COL)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(_w(keys)).alias("key_bytes"),
-                F.sum(_w(keys) + _w(metadata_cols)).alias("row_bytes"),
+        with ThreadPoolExecutor(max_workers=2) as _pool:
+            _f_quar = _pool.submit(quarantined.count)
+            rollup = (
+                classified.groupBy(CHANGE_COL)
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum(key_bytes(keys)).alias("key_bytes"),
+                    F.sum(key_bytes([*keys, *metadata_cols])).alias("row_bytes"),
+                )
+                .collect()
             )
-            .collect()
+            n_quarantined = _f_quar.result()
+        by_type = {r[CHANGE_COL]: r["n"] for r in rollup}
+        key_size = {r[CHANGE_COL]: r["key_bytes"] or 0 for r in rollup}
+        row_size = {r[CHANGE_COL]: r["row_bytes"] or 0 for r in rollup}
+
+        # Re-attach payloads ONLY to the delta that needs processing. The
+        # delta cardinality is ALREADY MEASURED (by_type above feeds the run
+        # report), so when it is bounded the key set is broadcast-HINTED at
+        # plan time: AQE's own broadcast decision comes from runtime shuffle
+        # stats, i.e. after the payload side's map stage has already written
+        # its shuffle output — the hint is what keeps 30 KB payload rows off
+        # shuffle storage entirely (WIDE_ROW_BYTES.json measures both).
+        # First run: everything is an insert — no join needed at all.
+        n_process = by_type.get("insert", 0) + by_type.get("payload_changed", 0)
+        n_meta = by_type.get("metadata_changed", 0)
+        n_delete = by_type.get("delete", 0)
+
+        process_key_bytes = key_size.get("insert", 0) + key_size.get("payload_changed", 0)
+        if first_run:
+            to_process = clean
+        else:
+            process_keys = classified.filter(
+                F.col(CHANGE_COL).isin("insert", "payload_changed")
+            ).select(*keys)
+            if fits_broadcast(n_process, process_key_bytes):
+                process_keys = F.broadcast(process_keys)
+            to_process = clean.join(process_keys, on=list(keys), how="left_semi")
+        n_tool_failed = 0
+        if annotate is not None:
+            # Cache the annotated frame: the count below would otherwise run
+            # the expensive annotation once, and the merge/publish a second
+            # time — doubling exactly the stage this route exists to minimize.
+            # (Keep the handle: unpersisting a FILTERED child later would be a
+            # CacheManager no-op and leak the cache.)
+            annotated_cached = annotate(to_process).cache()
+            to_process = annotated_cached
+            # S8 quarantine contract (operators/external.py): an annotate
+            # stage built on run_fasta_tool(on_error="quarantine") marks rows
+            # whose tool batch failed with a non-null _tool_error column.
+            # Failed rows stay OUT of the publish — a failed payload-change
+            # keeps its stored version (its key never enters the merge's
+            # touched set), a failed insert simply waits for the next run —
+            # and they count against the reference's <5% abort gate
+            # (FeedImportReport.ok).
+            if TOOL_ERROR_COL in to_process.columns:
+                n_tool_failed = to_process.filter(F.col(TOOL_ERROR_COL).isNotNull()).count()
+                to_process = to_process.filter(F.col(TOOL_ERROR_COL).isNull()).drop(
+                    TOOL_ERROR_COL, TOOL_INPUT_NAME_COL
+                )
+        n_annotated = to_process.count()
+
+        # Metadata-only changes take metadata from the feed but KEEP the stored
+        # payload-derived columns (the feed carries them as nulls; recomputing
+        # them is exactly what this route exists to avoid). The skinny
+        # classified frame carries the feed metadata already; stored payloads
+        # join map-side against the delta-sized metadata_changed set.
+        kept_cols = [c for c in current.columns if c not in keys and c not in metadata_cols]
+        meta_side = classified.filter(F.col(CHANGE_COL) == "metadata_changed").select(
+            *keys, *metadata_cols
         )
-        n_quarantined = _f_quar.result()
-    by_type = {r[CHANGE_COL]: r["n"] for r in rollup}
-    key_bytes = {r[CHANGE_COL]: r["key_bytes"] or 0 for r in rollup}
-    row_bytes = {r[CHANGE_COL]: r["row_bytes"] or 0 for r in rollup}
+        if fits_broadcast(n_meta, row_size.get("metadata_changed", 0)):
+            meta_side = F.broadcast(meta_side)
+        meta_updates = meta_side.join(current.select(*keys, *kept_cols), list(keys)).select(
+            *current.columns
+        )
+        updates = to_process.unionByName(meta_updates)
+        deletes = classified.filter(F.col(CHANGE_COL) == "delete").select(*keys)
 
-    # Re-attach payloads ONLY to the delta that needs processing. The
-    # delta cardinality is ALREADY MEASURED (by_type above feeds the run
-    # report), so when it is bounded the key set is broadcast-HINTED at
-    # plan time: AQE's own broadcast decision comes from runtime shuffle
-    # stats, i.e. after the payload side's map stage has already written
-    # its shuffle output — the hint is what keeps 30 KB payload rows off
-    # shuffle storage entirely (WIDE_ROW_BYTES.json measures both).
-    # First run: everything is an insert — no join needed at all.
-    n_process = by_type.get("insert", 0) + by_type.get("payload_changed", 0)
-    n_meta = by_type.get("metadata_changed", 0)
-    n_delete = by_type.get("delete", 0)
-
-    def small(n: int, est_bytes: int) -> bool:
-        return n <= broadcast_delta_max_rows and est_bytes <= broadcast_delta_max_bytes
-
-    process_key_bytes = key_bytes.get("insert", 0) + key_bytes.get("payload_changed", 0)
-    if first_run:
-        to_process = clean
-    else:
-        process_keys = classified.filter(
-            F.col(CHANGE_COL).isin("insert", "payload_changed")
-        ).select(*keys)
-        if small(n_process, process_key_bytes):
-            process_keys = F.broadcast(process_keys)
-        to_process = clean.join(process_keys, on=list(keys), how="left_semi")
-    n_tool_failed = 0
-    annotated_cached = None
-    if annotate is not None:
-        # Cache the annotated frame: the count below would otherwise run
-        # the expensive annotation once, and the merge/publish a second
-        # time — doubling exactly the stage this route exists to minimize.
-        # (Keep the handle: unpersisting a FILTERED child later would be a
-        # CacheManager no-op and leak the cache.)
-        annotated_cached = annotate(to_process).cache()
-        to_process = annotated_cached
-        # S8 quarantine contract (operators/external.py): an annotate
-        # stage built on run_fasta_tool(on_error="quarantine") marks rows
-        # whose tool batch failed with a non-null _tool_error column.
-        # Failed rows stay OUT of the publish — a failed payload-change
-        # keeps its stored version (its key never enters the merge's
-        # touched set), a failed insert simply waits for the next run —
-        # and they count against the reference's <5% abort gate
-        # (FeedImportReport.ok).
-        if TOOL_ERROR_COL in to_process.columns:
-            n_tool_failed = to_process.filter(F.col(TOOL_ERROR_COL).isNotNull()).count()
-            to_process = to_process.filter(F.col(TOOL_ERROR_COL).isNull()).drop(
-                TOOL_ERROR_COL, TOOL_INPUT_NAME_COL
-            )
-    n_annotated = to_process.count()
-
-    # Metadata-only changes take metadata from the feed but KEEP the stored
-    # payload-derived columns (the feed carries them as nulls; recomputing
-    # them is exactly what this route exists to avoid). The skinny
-    # classified frame carries the feed metadata already; stored payloads
-    # join map-side against the delta-sized metadata_changed set.
-    kept_cols = [c for c in current.columns if c not in keys and c not in metadata_cols]
-    meta_side = classified.filter(F.col(CHANGE_COL) == "metadata_changed").select(
-        *keys, *metadata_cols
-    )
-    if small(n_meta, row_bytes.get("metadata_changed", 0)):
-        meta_side = F.broadcast(meta_side)
-    meta_updates = meta_side.join(current.select(*keys, *kept_cols), list(keys)).select(
-        *current.columns
-    )
-    updates = to_process.unionByName(meta_updates)
-    deletes = classified.filter(F.col(CHANGE_COL) == "delete").select(*keys)
-
-    # Delta merge instead of full-outer upsert: stored payloads are never
-    # exchanged — `current` anti-joins the touched-key set map-side
-    # (plan-time broadcast when the measured delta is bounded) and the
-    # delta unions on (operators/merge.merge_delta).
-    touched_key_bytes = (
-        process_key_bytes + key_bytes.get("metadata_changed", 0) + key_bytes.get("delete", 0)
-    )
-    final = merge_delta(
-        current, updates, keys, delete_keys=deletes,
-        broadcast_touched=small(n_process + n_meta + n_delete, touched_key_bytes),
-    )
-    version = publish_versioned(final, table_dir)
-    classified.unpersist()
-    if annotated_cached is not None:
-        annotated_cached.unpersist()
-    scan.release()  # drops the cached PARENT parse frame (unpersisting
-    # the filtered `good` view would be a CacheManager no-op and leak
-    # one full-feed cache per import cycle)
+        # Delta merge instead of full-outer upsert: stored payloads are never
+        # exchanged — `current` anti-joins the touched-key set map-side
+        # (plan-time broadcast when the measured delta is bounded) and the
+        # delta unions on (operators/merge.merge_delta).
+        touched_key_bytes = (
+            process_key_bytes + key_size.get("metadata_changed", 0) + key_size.get("delete", 0)
+        )
+        final = merge_delta(
+            current, updates, keys, delete_keys=deletes,
+            broadcast_touched=fits_broadcast(n_process + n_meta + n_delete, touched_key_bytes),
+        )
+        version = publish_versioned(final, table_dir)
+    finally:
+        if classified is not None:
+            classified.unpersist()
+        if annotated_cached is not None:
+            annotated_cached.unpersist()
+        scan.release()  # drops the cached PARENT parse frame (unpersisting
+        # the filtered `good` view would be a CacheManager no-op and leak
+        # one full-feed cache per import cycle)
 
     return FeedImportReport(
         version=version,

@@ -133,7 +133,6 @@ def run_release_cycle(
     released_schema: str | None = None,
     released_cols: list[str] | None = None,
     payload_cols: list[str] | None = None,
-    broadcast_accepted_max_bytes: int = 64 * 1024 * 1024,
 ) -> tuple[DataFrame, DataFrame, ReleaseCycleReport]:
     """One cycle of the SPSP release pipeline (SURVEY.md §3.2, the `main`
     flow of database/R/export_spsp_submission.R:20-57), composed from the
@@ -190,7 +189,7 @@ def run_release_cycle(
     accepted set), not silent row doubling in the published table. The
     same aggregation measures the accepted delta's key bytes, so the
     merge's anti-join is broadcast-HINTED at plan time whenever the delta
-    is provably bounded (< ``broadcast_accepted_max_bytes``) — AQE's own
+    is provably bounded (``operators.merge.fits_broadcast``) — AQE's own
     flip happens only after the stored side's map stage has written its
     shuffle output (operators/merge.py doctrine).
 
@@ -201,7 +200,11 @@ def run_release_cycle(
     table map-side past the hinted delta key set. Nothing here is
     driver-side except the bounded report counts.
     """
-    from harvester_database_and_automation_spark.operators.merge import merge_delta
+    from harvester_database_and_automation_spark.operators.merge import (
+        fits_broadcast,
+        key_bytes,
+        merge_delta,
+    )
     from harvester_database_and_automation_spark.operators.publish import (
         current_version,
         publish_versioned,
@@ -279,9 +282,7 @@ def run_release_cycle(
         stats = accepted.agg(
             F.count(F.lit(1)).alias("n"),
             F.count_distinct(F.col(key)).alias("n_keys"),
-            F.coalesce(
-                F.sum(F.octet_length(F.col(key).cast("string")) + F.lit(16)), F.lit(0)
-            ).alias("key_bytes"),
+            F.coalesce(F.sum(key_bytes([key])), F.lit(0)).alias("key_bytes"),
         ).collect()[0]
         if stats["n"] != stats["n_keys"]:
             raise ValueError(
@@ -290,7 +291,7 @@ def run_release_cycle(
                 "fail worse duplicates (add a duplicate_idx > 1 rule) before rows "
                 "reach the merge; merging would silently double published rows"
             )
-        hint = stats["key_bytes"] <= broadcast_accepted_max_bytes
+        hint = fits_broadcast(stats["n"], stats["key_bytes"])
         to_release = accepted
         if payload_cols:
             # Re-attach payloads to the accepted delta only: the stored

@@ -22,7 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from harvester_database_and_automation_spark.operators.merge import merge_delta
+from harvester_database_and_automation_spark.operators.merge import (
+    fits_broadcast,
+    key_bytes,
+    merge_delta,
+)
 from harvester_database_and_automation_spark.operators.publish import (
     current_version,
     publish_versioned,
@@ -39,8 +43,6 @@ def stream_upsert_into_published(
     keys: Sequence[str],
     fmt: str = "csv",
     reader_options: dict[str, str] | None = None,
-    broadcast_batch_max_rows: int = 1_000_000,
-    broadcast_batch_max_bytes: int = 64 * 1024 * 1024,
 ) -> None:
     """One poll iteration: merge every unseen file under ``src_dir`` into
     the published table at ``table_dir`` (insert new keys, overwrite
@@ -68,21 +70,9 @@ def stream_upsert_into_published(
             batch_df.persist()
             stats = batch_df.agg(
                 F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.sum(
-                        sum(
-                            (F.coalesce(F.octet_length(F.col(k).cast("string")), F.lit(0))
-                             + F.lit(16))
-                            for k in keys
-                        )
-                    ),
-                    F.lit(0),
-                ).alias("key_bytes"),
+                F.coalesce(F.sum(key_bytes(keys)), F.lit(0)).alias("key_bytes"),
             ).collect()[0]
-            hint = (
-                stats["n"] <= broadcast_batch_max_rows
-                and stats["key_bytes"] <= broadcast_batch_max_bytes
-            )
+            hint = fits_broadcast(stats["n"], stats["key_bytes"])
             merged = merge_delta(
                 read_published(spark, table_dir), batch_df, keys, broadcast_touched=hint
             )

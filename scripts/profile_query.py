@@ -1,24 +1,33 @@
 #!/usr/bin/env python
-"""Profile one or more registered queries: warm noop-sink timings plus
-optional .explain("formatted") capture for plans/r11/ before/after files.
+"""Profile registered queries: warm noop-sink timings, the Spark job
+breakdown of the last run, and optional .explain("formatted") dumps.
 
 Usage:
-  python scripts/profile_query.py [--runs N] [--explain plans/r11 --tag before] q1 [q2 ...]
+  python scripts/profile_query.py q1 [q2 ...] [--runs N] [--explain DIR --tag T] [--sf-dir D]
 
 Timing methodology matches bench.py (untimed warm pass, then N timed
 passes, report min + all) so numbers are comparable to BENCH_FULL.json.
+After the last run it prints that run's `observe.measure` summary and
+one line per Spark job (duration, gap since the previous job, tasks) —
+the local-mode substitute for clicking through the Spark UI.
+
+Not named profile.py: that would shadow the stdlib module pyspark imports.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+os.environ.setdefault("SPARK_UI", "1")
+
+from harvester_database_and_automation_spark.observe import measure  # noqa: E402
 from harvester_database_and_automation_spark.plans import QUERIES  # noqa: E402
 from harvester_database_and_automation_spark.plans.shared import cleanup_scratch  # noqa: E402
 from harvester_database_and_automation_spark.session import get_spark  # noqa: E402
@@ -36,16 +45,11 @@ def main() -> None:
     spark = get_spark("profile-query")
     for name in args.queries:
         spec = QUERIES[name]
-        spark.sparkContext.setJobDescription(f"profile:{name}")
         # capture plan BEFORE any timing (plan shape, not data)
         if args.explain:
-            import contextlib
-            import io
-
-            df = spec.fn(spark, args.sf_dir)
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
+                spec.fn(spark, args.sf_dir).explain("formatted")
             outdir = Path(args.explain)
             outdir.mkdir(parents=True, exist_ok=True)
             (outdir / f"{name}_{args.tag}.txt").write_text(buf.getvalue())
@@ -55,11 +59,19 @@ def main() -> None:
         cleanup_scratch()
         times = []
         for _ in range(args.runs):
-            t0 = time.time()
-            spec.fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
-            times.append(round(time.time() - t0, 3))
+            with measure(spark, f"profile:{name}") as m:
+                spec.fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
             cleanup_scratch()
-        print(f"{name}: min={min(times)} runs={times}", flush=True)
+            times.append(round(m["wall_s"], 3))
+        print(f"{name}: min={min(times)} runs={times}")
+        summary = {k: round(v, 3) for k, v in m.items() if k != "jobs"}
+        print(f"  last run: jobs={len(m['jobs'])} {summary}")
+        for j in m["jobs"]:
+            print(
+                f"  job {j['id']:4d}  dur={j['duration_s']:7.3f}s gap={j['gap_s']:7.3f}s "
+                f"tasks={j['tasks']:4d}  {j['description'][:100]}",
+                flush=True,
+            )
 
 
 if __name__ == "__main__":

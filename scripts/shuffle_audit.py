@@ -17,8 +17,8 @@ Methodology: one untimed warmup pass first (builds the session-shared
 hubs — a persisted InMemoryRelation is part of the steady state a
 long-lived cluster serves from, and its one-time build shuffle is not a
 per-query cost), then each query runs once against the no-op sink and is
-charged the stage deltas of its own run. Bytes are deterministic for a
-fixed corpus, so this can run alongside other load (unlike the bench).
+charged its own jobs' stages (`observe.measure`). Bytes are deterministic
+for a fixed corpus, so this can run alongside other load (unlike the bench).
 
 Usage: SPARK_GRAFT_SF_DIR=... python scripts/shuffle_audit.py [query ...]
 """
@@ -29,13 +29,13 @@ import json
 import os
 import subprocess
 import sys
-import urllib.request
 from pathlib import Path
 
 os.environ.setdefault("SPARK_UI", "1")
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from harvester_database_and_automation_spark.observe import measure  # noqa: E402
 from harvester_database_and_automation_spark.plans import QUERIES  # noqa: E402
 from harvester_database_and_automation_spark.session import get_spark  # noqa: E402
 
@@ -52,12 +52,6 @@ ANNOTATED: dict[str, str] = {
 }
 
 
-def _stage_rows(ui: str, app_id: str) -> list[dict]:
-    url = f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
-    with urllib.request.urlopen(url) as r:  # localhost UI, loopback only
-        return json.load(r)
-
-
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     names = sys.argv[1:] or list(QUERIES)
@@ -67,11 +61,6 @@ def main() -> int:
         return 2
 
     spark = get_spark("shuffle-audit")
-    sc = spark.sparkContext
-    ui, app_id = sc.uiWebUrl, sc.applicationId
-    if not ui:
-        print("Spark UI disabled — set SPARK_UI=1", file=sys.stderr)
-        return 2
 
     def run(name: str) -> None:
         QUERIES[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
@@ -79,26 +68,17 @@ def main() -> int:
     for name in names:  # warmup: shared hubs, JIT, parquet footers
         run(name)
 
-    seen: set[tuple[int, int]] = {
-        (s["stageId"], s["attemptId"]) for s in _stage_rows(ui, app_id)
-    }
     results: dict[str, dict] = {}
     for name in names:
-        run(name)
-        fresh = [
-            s
-            for s in _stage_rows(ui, app_id)
-            if (s["stageId"], s["attemptId"]) not in seen
-        ]
-        seen.update((s["stageId"], s["attemptId"]) for s in fresh)
+        with measure(spark, f"shuffle_audit:{name}") as m:
+            run(name)
         mb = 1024.0 * 1024.0
-        inp = sum(s["inputBytes"] for s in fresh)
-        shw = sum(s["shuffleWriteBytes"] for s in fresh)
+        inp, shw = m["input_bytes"], m["shuffle_write_bytes"]
         entry = {
             "input_mb": round(inp / mb, 3),
             "shuffle_write_mb": round(shw / mb, 3),
-            "shuffle_read_mb": round(sum(s["shuffleReadBytes"] for s in fresh) / mb, 3),
-            "n_stages": len(fresh),
+            "shuffle_read_mb": round(m["shuffle_read_bytes"] / mb, 3),
+            "n_stages": m["stages"],
         }
         entry["ratio"] = round(shw / inp, 3) if inp else None
         if shw / mb > MIN_FLAG_MB and (not inp or shw > SHUFFLE_RATIO * inp):
@@ -112,21 +92,8 @@ def main() -> int:
     head = subprocess.run(
         ["git", "rev-parse", "HEAD"], capture_output=True, text=True, check=True
     ).stdout.strip()
-    flagged = sorted(n for n, e in results.items() if "flag" in e)
-    total_in = round(sum(e["input_mb"] for e in results.values()), 1)
-    total_sh = round(sum(e["shuffle_write_mb"] for e in results.values()), 1)
-    out = {
-        "git_head": head,
-        "sf_dir": sf_dir,
-        "n_queries": len(results),
-        "total_input_mb": total_in,
-        "total_shuffle_write_mb": total_sh,
-        "shuffled_bytes_per_scanned_byte": round(total_sh / total_in, 4) if total_in else None,
-        "flag_rule": f"shuffle_write > {SHUFFLE_RATIO}x input AND > {MIN_FLAG_MB} MB, unless annotated",
-        "flagged": flagged,
-        "queries": results,
-    }
     artifact = Path(__file__).resolve().parent.parent / "SHUFFLE_BYTES.json"
+    queries = results
     if sys.argv[1:] and artifact.exists():
         # Explicit-query rerun: merge into the existing artifact — but only
         # when the stored provenance matches this run, otherwise the merged
@@ -141,20 +108,20 @@ def main() -> int:
                 file=sys.stderr,
             )
             return 2
-        prior_q = prior.get("queries", {})
-        prior_q.update(results)
-        out["queries"] = prior_q
-        out["n_queries"] = len(prior_q)
-        out["total_input_mb"] = round(sum(e["input_mb"] for e in prior_q.values()), 1)
-        out["total_shuffle_write_mb"] = round(
-            sum(e["shuffle_write_mb"] for e in prior_q.values()), 1
-        )
-        out["shuffled_bytes_per_scanned_byte"] = (
-            round(out["total_shuffle_write_mb"] / out["total_input_mb"], 4)
-            if out["total_input_mb"]
-            else None
-        )
-        out["flagged"] = sorted(n for n, e in prior_q.items() if "flag" in e)
+        queries = {**prior.get("queries", {}), **results}
+    total_in = round(sum(e["input_mb"] for e in queries.values()), 1)
+    total_sh = round(sum(e["shuffle_write_mb"] for e in queries.values()), 1)
+    out = {
+        "git_head": head,
+        "sf_dir": sf_dir,
+        "n_queries": len(queries),
+        "total_input_mb": total_in,
+        "total_shuffle_write_mb": total_sh,
+        "shuffled_bytes_per_scanned_byte": round(total_sh / total_in, 4) if total_in else None,
+        "flag_rule": f"shuffle_write > {SHUFFLE_RATIO}x input AND > {MIN_FLAG_MB} MB, unless annotated",
+        "flagged": sorted(n for n, e in queries.items() if "flag" in e),
+        "queries": queries,
+    }
     artifact.write_text(json.dumps(out, indent=1) + "\n")
     print(
         f"{out['n_queries']} queries: {out['total_shuffle_write_mb']} MB shuffled / "

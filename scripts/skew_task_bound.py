@@ -11,8 +11,8 @@ third of the corpus). Two measurements per scale factor:
   from the block-size distribution (deterministic; the quantity the
   adaptive per-key salt bounds at ~hot_threshold^2 up to hash slack);
 - max_task_ms: the longest completed task's executorRunTime across the
-  stages of that run, read from the Spark UI REST API — the direct
-  straggler measurement.
+  stages of that run (`observe.measure`, from the Spark status API) —
+  the direct straggler measurement.
 
 The session disables auto-broadcast: at the corpus sizes this harness can
 hold, Spark turns the naive self-join into a broadcast hash join, whose
@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import json
 import sys
-import urllib.request
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -45,6 +44,7 @@ os.environ.setdefault("SPARK_UI", "true")
 from pyspark.sql import functions as F  # noqa: E402
 
 from harvester_database_and_automation_spark.catalog import load_table  # noqa: E402
+from harvester_database_and_automation_spark.observe import measure  # noqa: E402
 from harvester_database_and_automation_spark.operators.skew import salted_self_pairs  # noqa: E402
 from harvester_database_and_automation_spark.plans.shared import fanout  # noqa: E402
 from harvester_database_and_automation_spark.session import get_spark  # noqa: E402
@@ -77,31 +77,6 @@ def _agg(pairs):
         .cast("bigint")
         .alias("n_close"),
     )
-
-
-def _rest(url: str):
-    with urllib.request.urlopen(url, timeout=30) as resp:
-        return json.load(resp)
-
-
-def _stage_ids(ui: str, app: str) -> set[tuple[int, int]]:
-    return {
-        (s["stageId"], s["attemptId"])
-        for s in _rest(f"{ui}/api/v1/applications/{app}/stages?status=complete")
-    }
-
-
-def _max_task_ms(ui: str, app: str, stages: set[tuple[int, int]]) -> float:
-    mx = 0.0
-    for sid, att in stages:
-        try:
-            summ = _rest(
-                f"{ui}/api/v1/applications/{app}/stages/{sid}/{att}/taskSummary?quantiles=1.0"
-            )
-            mx = max(mx, summ["executorRunTime"][0])
-        except Exception:
-            continue  # tiny stages may have no task summary
-    return round(mx, 1)
 
 
 def _max_group_pairs_salted(d) -> int:
@@ -137,11 +112,6 @@ def main() -> int:
         "skew-task-bound",
         extra_conf={"spark.sql.autoBroadcastJoinThreshold": "-1"},
     )
-    ui = f"http://localhost:{spark.sparkContext.uiWebUrl.rsplit(':', 1)[1]}" if spark.sparkContext.uiWebUrl else None
-    if ui is None:
-        print("Spark UI disabled; run with SPARK_UI=true", file=sys.stderr)
-        return 2
-    app = spark.sparkContext.applicationId
     out: dict = {
         "workload": "hot_band_pair_stress profile: band -1 holds 1/3 of documents, rest uniform over 97 bands",
         "operator": f"salted_self_pairs(hot_threshold={HOT_THRESHOLD}, max_salt={MAX_SALT}) vs plain a.band=b.band AND a.id<b.id self-join",
@@ -167,10 +137,9 @@ def main() -> int:
         ):
             # warm once so JIT/scan costs don't masquerade as skew
             _agg(pairs).write.mode("overwrite").format("noop").save()
-            before = _stage_ids(ui, app)
-            _agg(pairs).write.mode("overwrite").format("noop").save()
-            stages = _stage_ids(ui, app) - before
-            runs[variant] = {"max_task_ms": _max_task_ms(ui, app, stages)}
+            with measure(spark, f"skew_task_bound:{label}:{variant}") as m:
+                _agg(pairs).write.mode("overwrite").format("noop").save()
+            runs[variant] = {"max_task_ms": round(m["max_task_ms"], 1)}
         runs["unsalted"]["max_group_pairs"] = _max_group_pairs_unsalted(d)
         runs["salted_adaptive"]["max_group_pairs"] = _max_group_pairs_salted(d)
         runs["salted_adaptive"]["pair_bound_note"] = (
@@ -182,14 +151,14 @@ def main() -> int:
         print(label, json.dumps(runs))
     sf1 = SFS.get("sf1")
     if sf1 and Path(sf1).exists():
-        out["cc_contraction_sf1"] = measure_cc(spark, ui, app, sf1)
+        out["cc_contraction_sf1"] = measure_cc(spark, sf1)
         print("cc_contraction_sf1", json.dumps(out["cc_contraction_sf1"]))
     (REPO / "SKEW_TASK_BOUND.json").write_text(json.dumps(out, indent=1) + "\n")
     print("-> SKEW_TASK_BOUND.json")
     return 0
 
 
-def measure_cc(spark, ui: str, app: str, sf_dir: str) -> dict:
+def measure_cc(spark, sf_dir: str) -> dict:
     """Straggler bound for the connected-components contraction under a
     planted mega-cluster: ONE component holding 1/3 of all documents
     (hierarchical stars of ~1000 under a root chain — linear edge count,
@@ -237,13 +206,13 @@ def measure_cc(spark, ui: str, app: str, sf_dir: str) -> dict:
         per_round: list[float] = []
         prev_sig = None
         for _ in range(30):
-            before = _stage_ids(ui, app)
-            cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
-            row = cur.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-            ).first()
-            per_round.append(_max_task_ms(ui, app, _stage_ids(ui, app) - before))
+            with measure(spark, f"skew_task_bound:cc_round{len(per_round) + 1}") as m:
+                cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
+                row = cur.agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
+                ).first()
+            per_round.append(round(m["max_task_ms"], 1))
             sig = (row["n"], row["h"])
             if sig == prev_sig:
                 break

@@ -8,7 +8,7 @@ refactoring_v3_schema.sql keeps sequences in their own table). This
 audit PROVES the two write-path pipelines obey that rule as data, not
 prose, by running each twice — once with ~60 B payloads, once with the
 same rows padded to 30 KB — and recording per-cycle shuffle bytes from
-the status API:
+the status API (`observe.measure`):
 
 - **feed_import leg**: the two-cycle import DAG (insert/delete/metadata/
   payload/unchanged mix keyed on doc_id % 10, like feed_import_replay).
@@ -49,7 +49,6 @@ import json
 import os
 import subprocess
 import sys
-import urllib.request
 from pathlib import Path
 
 os.environ.setdefault("SPARK_UI", "1")
@@ -59,6 +58,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
 
+from harvester_database_and_automation_spark import observe  # noqa: E402
 from harvester_database_and_automation_spark.catalog import load_table  # noqa: E402
 from harvester_database_and_automation_spark.pipelines.feed_import import run_feed_import  # noqa: E402
 from harvester_database_and_automation_spark.pipelines.release import run_release_cycle  # noqa: E402
@@ -77,34 +77,20 @@ GATE_PAYLOAD_FRAC = 0.01    # wide cycle-2 shuffle / wide payload volume
 GATE_EXCESS_FRAC = 0.005    # (wide - narrow cycle-2 shuffle) / payload volume
 
 
-def _stages(ui: str, app_id: str) -> list[dict]:
-    url = f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
-    with urllib.request.urlopen(url) as r:  # localhost UI, loopback only
-        return json.load(r)
-
-
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("wide-row-audit")
-    sc = spark.sparkContext
-    ui, app_id = sc.uiWebUrl, sc.applicationId
-    if not ui:
-        print("Spark UI disabled — set SPARK_UI=1", file=sys.stderr)
-        return 2
     head = subprocess.run(
         ["git", "rev-parse", "HEAD"], capture_output=True, text=True, check=True
     ).stdout.strip()
 
     def measure(label: str, fn) -> dict:
-        seen = {(s["stageId"], s["attemptId"]) for s in _stages(ui, app_id)}
-        fn()
-        fresh = [
-            s for s in _stages(ui, app_id) if (s["stageId"], s["attemptId"]) not in seen
-        ]
+        with observe.measure(spark, f"wide_row_audit:{label}") as m:
+            fn()
         row = {
-            "input_mb": round(sum(s["inputBytes"] for s in fresh) / 1e6, 2),
-            "shuffle_write_mb": round(sum(s["shuffleWriteBytes"] for s in fresh) / 1e6, 2),
-            "n_stages": len(fresh),
+            "input_mb": round(m["input_bytes"] / 1e6, 2),
+            "shuffle_write_mb": round(m["shuffle_write_bytes"] / 1e6, 2),
+            "n_stages": m["stages"],
         }
         print(f"  {label}: {row}")
         return row

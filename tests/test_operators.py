@@ -113,6 +113,31 @@ def test_merge_delta_current_never_shuffles(spark, current):
     assert a == b
 
 
+def test_fits_broadcast_boundaries():
+    """Both caps are inclusive, and either one alone refuses the hint."""
+    from harvester_database_and_automation_spark.operators.merge import (
+        BROADCAST_MAX_BYTES,
+        BROADCAST_MAX_ROWS,
+        fits_broadcast,
+    )
+
+    assert fits_broadcast(0, 0)
+    assert fits_broadcast(BROADCAST_MAX_ROWS, BROADCAST_MAX_BYTES)
+    assert not fits_broadcast(BROADCAST_MAX_ROWS + 1, BROADCAST_MAX_BYTES)
+    assert not fits_broadcast(BROADCAST_MAX_ROWS, BROADCAST_MAX_BYTES + 1)
+    assert not fits_broadcast(BROADCAST_MAX_ROWS + 1, BROADCAST_MAX_BYTES + 1)
+
+
+def test_key_bytes_counts_null_as_empty(spark):
+    """A NULL key contributes only the 16 B per-column overhead; a value
+    adds its string octet length (multi-byte UTF-8 counted in bytes)."""
+    from harvester_database_and_automation_spark.operators.merge import key_bytes
+
+    df = spark.createDataFrame([(None, 7), ("é", 7)], "k string, n int")
+    got = [r["b"] for r in df.select(key_bytes(["k", "n"]).alias("b")).collect()]
+    assert got == [16 + 17, 18 + 17]
+
+
 def test_update_from_sets_only_listed_columns(spark, current):
     src = spark.createDataFrame(
         [(2, "m2-upd", "ZZZ"), (9, "m9", "TTT")], SCHEMA  # 9 matches nothing

@@ -593,3 +593,24 @@ def test_run_release_cycle_error_paths_release_caches(spark, tmp_path, path):
             tiebreak_col="attempt_id", **kwargs,
         )
     assert _persisted_rdds(spark) == before
+
+
+def test_run_feed_import_error_path_releases_caches(spark, tmp_path):
+    """An annotate stage that raises leaves the session's persisted-RDD
+    count where it was: the parse cache and the classified frame are
+    released on the error path, not only on success."""
+    feed = str(tmp_path / "feed.jsonl")
+    _write_feed(feed, [{"seq_id": "a", "country": "CH", "sequence": "ACGG"}])
+
+    def failing_annotate(df):
+        raise RuntimeError("annotation tool crashed")
+
+    before = _persisted_rdds(spark)
+    with pytest.raises(RuntimeError, match="annotation tool crashed"):
+        run_feed_import(
+            spark, feed, str(tmp_path / "seq_table"), FEED_SCHEMA,
+            keys=["seq_id"], metadata_cols=["country"], payload_cols=["sequence"],
+            checks={"country_required": not_null("country")},
+            annotate=failing_annotate,
+        )
+    assert _persisted_rdds(spark) == before
