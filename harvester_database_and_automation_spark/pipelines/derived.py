@@ -27,6 +27,7 @@ from harvester_database_and_automation_spark.operators.publish import (
     publish_versioned,
     read_published,
 )
+from harvester_database_and_automation_spark.oracle_cache import corpus_fingerprint
 
 
 @dataclass(frozen=True)
@@ -67,6 +68,32 @@ class DerivedLayer:
 
         return deco
 
+    def _by_level(self, names: list[str], one: Callable[[str], int]) -> dict[str, int]:
+        """Run ``one(name) -> version`` over ``names`` in dependency LEVELS:
+        a table is ready once none of its dependencies is still remaining.
+        Tables in the same level are independent builds writing distinct
+        dirs, and Spark happily runs their jobs concurrently — the next
+        build's tasks back-fill executors idling in the previous build's
+        straggler tail and driver-side publish/listing gaps (guide on
+        overlapping independent jobs), so a level of several tables runs
+        on a small thread pool. Results are identical: each table still
+        builds from fully-published deps. Returns {table: version}."""
+        versions: dict[str, int] = {}
+        remaining = list(names)
+        while remaining:
+            ready = [
+                n for n in remaining if not any(d in remaining for d in self.tables[n].depends_on)
+            ]
+            if not ready:
+                raise ValueError(f"dependency cycle among {remaining!r}")
+            if len(ready) == 1:
+                versions[ready[0]] = one(ready[0])
+            else:
+                with ThreadPoolExecutor(max_workers=min(4, len(ready))) as pool:
+                    versions.update(zip(ready, pool.map(one, ready)))
+            remaining = [n for n in remaining if n not in versions]
+        return versions
+
     def rebuild(
         self,
         spark: SparkSession,
@@ -89,41 +116,16 @@ class DerivedLayer:
                     continue
                 wanted.add(n)
                 stack.extend(self.tables[n].depends_on)
-        built: dict[str, DataFrame] = {}
-        versions: dict[str, int] = {}
 
-        def one(name: str) -> tuple[str, int]:
+        def one(name: str) -> int:
             spec = self.tables[name]
-            deps = {d: built[d] for d in spec.depends_on}
+            deps = {d: read_published(spark, os.path.join(out_root, d)) for d in spec.depends_on}
             df = spec.build(spark, sf_dir, deps)
-            return name, publish_versioned(
+            return publish_versioned(
                 df, os.path.join(out_root, name), partition_by=list(spec.partition_by) or None
             )
 
-        # Dependency-LEVEL scheduling with a small thread pool: tables in
-        # the same level are independent builds writing distinct dirs, and
-        # Spark happily runs their jobs concurrently — the next build's
-        # tasks back-fill executors idling in the previous build's
-        # straggler tail and driver-side publish/listing gaps (guide on
-        # overlapping independent jobs). Results are identical: each table
-        # still builds from fully-published deps.
-        remaining = [n for n in self.tables if wanted is None or n in wanted]
-        while remaining:
-            ready = [
-                n for n in remaining if all(d in built for d in self.tables[n].depends_on)
-            ]
-            if not ready:
-                raise ValueError(f"dependency cycle among {remaining!r}")
-            if len(ready) == 1:
-                results = [one(ready[0])]
-            else:
-                with ThreadPoolExecutor(max_workers=min(4, len(ready))) as pool:
-                    results = list(pool.map(one, ready))
-            for name, v in results:
-                versions[name] = v
-                built[name] = read_published(spark, os.path.join(out_root, name))
-            remaining = [n for n in remaining if n not in versions]
-        return versions
+        return self._by_level([n for n in self.tables if wanted is None or n in wanted], one)
 
     def rebuild_incremental(
         self, spark: SparkSession, sf_dir: str, out_root: str, predicates: dict[str, Column]
@@ -149,7 +151,7 @@ class DerivedLayer:
             if not self.tables[name].partition_by:
                 raise ValueError(f"{name!r} has no partition_by; register one to rebuild incrementally")
 
-        def one(name: str) -> tuple[str, int]:
+        def one(name: str) -> int:
             spec = self.tables[name]
             deps = {d: read_published(spark, os.path.join(out_root, d)) for d in spec.depends_on}
             full = spec.build(spark, sf_dir, deps)
@@ -192,7 +194,7 @@ class DerivedLayer:
                 )
             except FileNotFoundError:
                 stale = []  # first publish: nothing to carry over or drop
-            return name, publish_incremental(
+            return publish_incremental(
                 df,
                 os.path.join(out_root, name),
                 partition_by=list(spec.partition_by),
@@ -200,27 +202,10 @@ class DerivedLayer:
             )
 
         # Listed tables with no listed dependency between them are
-        # independent (each reads only PUBLISHED deps), so their rebuild
-        # jobs overlap in the scheduler — same back-filling rationale as
-        # ``rebuild``. A listed table that depends on another listed table
-        # still waits for that dep's fresh version, preserving the
-        # sequential walk's ordering.
-        versions: dict[str, int] = {}
-        remaining = [n for n in self.tables if n in predicates]
-        while remaining:
-            ready = [
-                n
-                for n in remaining
-                if not any(d in remaining for d in self.tables[n].depends_on)
-            ]
-            if len(ready) == 1:
-                results = [one(ready[0])]
-            else:
-                with ThreadPoolExecutor(max_workers=min(4, len(ready))) as pool:
-                    results = list(pool.map(one, ready))
-            versions.update(dict(results))
-            remaining = [n for n in remaining if n not in versions]
-        return versions
+        # independent (each reads only PUBLISHED deps); a listed table that
+        # depends on another listed table still waits for that dep's fresh
+        # version, preserving the sequential walk's ordering.
+        return self._by_level([n for n in self.tables if n in predicates], one)
 
 
 # ---------------------------------------------------------------------------
@@ -592,35 +577,11 @@ def _build_fingerprint(name: str) -> str:
     return hashlib.sha256("\n".join(sorted(parts)).encode()).hexdigest()[:10]
 
 
-def _corpus_fingerprint(sf_dir: str) -> str:
-    """Short hash over (relative path, size, mtime_ns) of every parquet
-    file under ``sf_dir``. A corpus REGENERATED AT THE SAME PATH (the
-    driver rewrites /root/testdata each round) must not be served another
-    corpus's published tables — the path alone is not an identity. Sizes
-    and mtimes change on regeneration, so the store re-keys and the first
-    reader rebuilds; a byte-identical copy at most costs one spurious
-    rebuild. Nanosecond mtimes: a small deterministic fixture can be
-    regenerated same-size within one SECOND, which whole-second
-    truncation would silently alias to the previous corpus."""
-    import hashlib
-
-    entries: list[str] = []
-    root = os.path.abspath(sf_dir)
-    for dirpath, _dirnames, filenames in os.walk(root):
-        for fn in filenames:
-            if not fn.endswith(".parquet"):
-                continue
-            p = os.path.join(dirpath, fn)
-            st = os.stat(p)
-            entries.append(f"{os.path.relpath(p, root)}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.sha256("\n".join(sorted(entries)).encode()).hexdigest()[:10]
-
-
 def _serve_dir(sf_dir: str, name: str) -> str:
     tag = os.path.abspath(sf_dir).strip(os.sep).replace(os.sep, "__")
     return os.path.join(
         _SERVE_ROOT,
-        f"{tag}-{_corpus_fingerprint(sf_dir)}",
+        f"{tag}-{corpus_fingerprint(sf_dir)}",
         f"{name}-{_build_fingerprint(name)}",
     )
 

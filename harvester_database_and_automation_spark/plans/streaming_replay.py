@@ -9,19 +9,14 @@ result as a batch DataFrame. The classification semantics are pure SQL
 over the same events table, so the ORACLE replays them with window
 functions and the driver's value-hash certifies the stateful stream.
 
-Determinism contract: each key (user) appears AT MOST ONCE per
-micro-batch file, so the per-batch state transition is independent of
-row order within the shuffled state groups; batch ORDER is fixed by
-file modification times (FileStreamSource processes oldest first) and
-``maxFilesPerTrigger=1`` forces one file per micro-batch. Every call
-uses fresh temp spool/checkpoint/output dirs — the spool write is the
-test-harness seam (files arrive from an external fetcher in
-production, `sources/http.py`); the operator under test is the stream.
+Every replay runs through one harness (`_replay_dirs` / `_replay`), which
+states the determinism contract.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +25,87 @@ from pyspark.sql import functions as F
 from harvester_database_and_automation_spark.catalog import load_table
 from harvester_database_and_automation_spark.plans.registry import register
 from harvester_database_and_automation_spark.plans.shared import scratch_dir
+from harvester_database_and_automation_spark.streaming.ingest import spool_batches
+
+
+@contextmanager
+def _replay_dirs(spark: SparkSession, batches: Sequence[DataFrame], parent: DataFrame):
+    """Scratch dir, spool and state-partition scope of one replay: spools
+    ``batches`` (``parent`` persisted for the writes, see
+    ``spool_batches``) and yields ``(feed, checkpoint, out)`` paths with
+    the session at 4 shuffle/state partitions.
+
+    Determinism contract: each key appears AT MOST ONCE per micro-batch
+    file, so the per-batch state transition is independent of row order
+    within the shuffled state groups; batch ORDER is fixed by file
+    modification times (FileStreamSource processes oldest first) and
+    ``maxFilesPerTrigger=1`` forces one file per micro-batch. Every call
+    uses fresh temp spool/checkpoint/output dirs — the spool write is the
+    test-harness seam (files arrive from an external fetcher in
+    production, `sources/http.py`); the operator under test is the stream.
+
+    State partitions: a stateful stream creates one state-store directory
+    PER shuffle partition and checkpoints every one of them each
+    micro-batch; at the session default (32) that is 32 delta files + CRC
+    sidecars + commit metadata per batch for state that is a few thousand
+    rows — pure filesystem overhead that dominated the replay family's
+    bench cost (measured ~2x end-to-end at sf0.1). Every replay's contract
+    is order- and partition-count-independent (exact integer aggregation,
+    dedup, session merge, sketch algebra), so the state partition count
+    is a pure knob. At 100 TB a real deployment raises it back with one
+    conf — the number is fixed at FIRST query start by the checkpoint,
+    which is fresh per replay. The conf is restored on every exit so the
+    enclosing session (bench / driver / audit sweeps) is untouched; the
+    spool derivation runs before it at full parallelism.
+    """
+    root = scratch_dir(prefix="stream_replay_")
+    feed = os.path.join(root, "feed")
+    spool_batches(feed, batches, parent=parent)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        yield feed, os.path.join(root, "ckpt"), os.path.join(root, "out")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _replay(
+    spark: SparkSession,
+    batches: Sequence[DataFrame],
+    schema: str,
+    transform: Callable[[DataFrame], DataFrame],
+    parent: DataFrame,
+    output_mode: str = "append",
+) -> DataFrame:
+    """Replay ``batches`` (all filtered from ``parent``) as a
+    ``maxFilesPerTrigger=1`` JSON file stream with ``schema`` through
+    ``transform`` under one ``availableNow`` trigger, and return the
+    ledger of every row it emitted."""
+    with _replay_dirs(spark, batches, parent) as (feed, ckpt, out):
+
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            # Plain append parquet per micro-batch: skips the streaming
+            # parquet sink's per-batch manifest commit + _spark_metadata
+            # log (pure fixed cost here), and takes update-mode output,
+            # which the parquet sink rejects. NOT idempotent under
+            # batch-level re-execution in general — safe here only because
+            # availableNow + a fresh per-run output dir + fresh checkpoint
+            # mean a failed batch aborts the whole replay rather than
+            # retrying. Reusing this sink with a long-lived checkpoint
+            # would need a per-batch_id subdir (or an idempotent format).
+            batch_df.write.mode("append").parquet(out)
+
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(feed)
+        (
+            transform(stream)
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    return spark.read.parquet(out)
 
 
 @register(
@@ -64,7 +140,7 @@ def streaming_change_router_replay(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale shape: the router's state is one hash per key in the state
     store (sharded across executors); each micro-batch shuffles only
-    (id, hash) pairs. The spool is Spark-written (`_spool_batches`:
+    (id, hash) pairs. The spool is Spark-written (`spool_batches`:
     repartition(1) + rename, proper JSON encoding) — no driver-side row
     collection at any corpus size; production feeds land as files from
     the fetchers and the stream is unchanged."""
@@ -87,102 +163,10 @@ def streaming_change_router_replay(spark: SparkSession, sf_dir: str) -> DataFram
         F.col("user_id").cast("string").alias("id"), F.col("event_type").alias("content_hash")
     )
 
-    root = scratch_dir(prefix="router_replay_")
-    feed = _spool_batches(spark, root, [firsts, lasts], parent=fe)
-
-    stream = (
-        spark.readStream.schema("id string, content_hash string")
-        .option("maxFilesPerTrigger", 1)
-        .json(feed)
+    routed = _replay(
+        spark, [firsts, lasts], "id string, content_hash string", streaming_change_router, parent=fe
     )
-    out = os.path.join(root, "routed")
-    with _stream_state_partitions(spark):
-        def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            # Plain append parquet per micro-batch: skips the streaming
-            # parquet sink's per-batch manifest commit + _spark_metadata
-            # log (pure fixed cost here). NOT idempotent under batch-level
-            # re-execution in general — safe here only because availableNow
-            # + a fresh per-run output dir + fresh checkpoint mean a failed
-            # batch aborts the whole replay rather than retrying. Reusing
-            # this sink with a long-lived checkpoint would need a
-            # per-batch_id subdir (or an idempotent format) instead.
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            streaming_change_router(stream)
-            .writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out).select("id", "content_hash", "change_kind")
-
-
-@contextmanager
-def _stream_state_partitions(spark: SparkSession, n: int = 4):
-    """Run a micro-batch stream with ``n`` shuffle/state partitions.
-
-    A stateful stream creates one state-store directory PER shuffle
-    partition and checkpoints every one of them each micro-batch; at the
-    session default (32) that is 32 delta files + CRC sidecars + commit
-    metadata per batch for state that is a few thousand rows — pure
-    filesystem overhead that dominated the replay family's bench cost
-    (measured ~2x end-to-end at sf0.1). Every replay's contract is
-    order- and partition-count-independent (exact integer aggregation,
-    dedup, session merge, sketch algebra), so the state partition count
-    is a pure knob. At 100 TB a real deployment raises it back with one
-    conf — the number is fixed at FIRST query start by the checkpoint,
-    which is fresh per replay.
-
-    The conf is restored afterwards so the enclosing session (bench /
-    driver / audit sweeps) is untouched; the spool derivation runs
-    OUTSIDE this context at full parallelism.
-    """
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def _spool_batches(spark: SparkSession, root: str, batches, parent: DataFrame | None = None) -> str:
-    """Write each batch DataFrame as ONE json file under root/feed with
-    ascending mtimes (FileStreamSource processes oldest first), via a
-    Spark write + rename — no driver-side row collection.
-
-    ``parent``: an expensive shared frame the batches all filter (e.g. a
-    row_number window over the full events table) — persisted for the
-    duration of the writes so the window shuffle runs ONCE instead of
-    once per batch file (measured ~2 full-corpus window passes saved on
-    the three-batch replays)."""
-    import glob
-    import shutil
-
-    if parent is not None:
-        parent.persist()
-        try:
-            return _spool_batches(spark, root, batches)
-        finally:
-            parent.unpersist()
-    feed = os.path.join(root, "feed")
-    os.makedirs(feed)
-    for i, df in enumerate(batches):
-        stage = os.path.join(root, f"stage_{i}")
-        # repartition(1), not coalesce(1): coalesce collapses the whole
-        # upstream scan+derivation into the single writer task (measured
-        # 3.6x on the 100x step for the CMS sink); repartition computes
-        # upstream at full parallelism and ships only the batch rows to
-        # one writer. Row order within the file is immaterial — every
-        # replay's state contract is order-independent within a batch.
-        df.repartition(1).write.json(stage)
-        part = glob.glob(os.path.join(stage, "part-*"))[0]
-        dst = os.path.join(feed, f"batch_{i}.json")
-        shutil.move(part, dst)
-        os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-    return feed
+    return routed.select("id", "content_hash", "change_kind")
 
 
 @register(
@@ -268,41 +252,18 @@ def streaming_watermark_window_replay(spark: SparkSession, sf_dir: str) -> DataF
     b1 = e.filter((F.col("s") >= 1_296_000) & (F.col("s") < 1_900_800))
     b2 = e.filter(F.col("s") >= 1_900_800).unionByName(e.filter(F.col("s") < 259_200))
 
-    root = scratch_dir(prefix="wm_replay_")
-    feed = _spool_batches(spark, root, [b0, b1, b2], parent=e)
-    stream = (
-        spark.readStream.schema("s long, event_type string, cents long")
-        .option("maxFilesPerTrigger", 1)
-        .json(feed)
-        .withColumn("ts", F.timestamp_seconds(F.col("s") + epoch_2024))
+    windows = _replay(
+        spark,
+        [b0, b1, b2],
+        "s long, event_type string, cents long",
+        lambda stream: windowed_event_counts(
+            stream.withColumn("ts", F.timestamp_seconds(F.col("s") + epoch_2024)),
+            ts_col="ts", key_col="event_type", window="1 hour",
+            watermark="2 hours", value_col="cents",
+        ),
+        parent=e,
     )
-    agg = windowed_event_counts(
-        stream, ts_col="ts", key_col="event_type", window="1 hour",
-        watermark="2 hours", value_col="cents",
-    )
-    out = os.path.join(root, "windows")
-    with _stream_state_partitions(spark):
-        def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            # Plain append parquet per micro-batch: skips the streaming
-            # parquet sink's per-batch manifest commit + _spark_metadata
-            # log (pure fixed cost here). NOT idempotent under batch-level
-            # re-execution in general — safe here only because availableNow
-            # + a fresh per-run output dir + fresh checkpoint mean a failed
-            # batch aborts the whole replay rather than retrying. Reusing
-            # this sink with a long-lived checkpoint would need a
-            # per-batch_id subdir (or an idempotent format) instead.
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            agg
-            .writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out).select(
+    return windows.select(
         (F.unix_timestamp("window_start") - epoch_2024).cast("bigint").alias("window_start_s"),
         (F.unix_timestamp("window_end") - epoch_2024).cast("bigint").alias("window_end_s"),
         "event_type",
@@ -363,38 +324,16 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-trip is already certified by batch 1's overlap.
     b1 = canonical.filter(g != 0)
 
-    root = scratch_dir(prefix="dedup_replay_")
-    feed = _spool_batches(spark, root, [b0, b1], parent=canonical)
-    stream = (
-        spark.readStream.schema("user_id long, first_type string, s long")
-        .option("maxFilesPerTrigger", 1)
-        .json(feed)
-        .withColumn("ts", F.timestamp_seconds(F.col("s") + 1_704_067_200))
+    return _replay(
+        spark,
+        [b0, b1],
+        "user_id long, first_type string, s long",
+        lambda stream: dedup_within_watermark(
+            stream.withColumn("ts", F.timestamp_seconds(F.col("s") + 1_704_067_200)),
+            ["user_id"], ts_col="ts", watermark="2 hours",
+        ).select("user_id", "first_type"),
+        parent=canonical,
     )
-    deduped = dedup_within_watermark(stream, ["user_id"], ts_col="ts", watermark="2 hours")
-    out = os.path.join(root, "deduped")
-    with _stream_state_partitions(spark):
-        def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            # Plain append parquet per micro-batch: skips the streaming
-            # parquet sink's per-batch manifest commit + _spark_metadata
-            # log (pure fixed cost here). NOT idempotent under batch-level
-            # re-execution in general — safe here only because availableNow
-            # + a fresh per-run output dir + fresh checkpoint mean a failed
-            # batch aborts the whole replay rather than retrying. Reusing
-            # this sink with a long-lived checkpoint would need a
-            # per-batch_id subdir (or an idempotent format) instead.
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            deduped.select("user_id", "first_type")
-            .writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out).select("user_id", "first_type")
 
 
 @register(
@@ -463,8 +402,6 @@ def streaming_upsert_publish_replay(spark: SparkSession, sf_dir: str) -> DataFra
     # published table.
     b1 = lasts.filter(F.col("user_id") % 3 != 0)
 
-    root = scratch_dir(prefix="upsert_replay_")
-    feed = _spool_batches(spark, root, [b0, b1], parent=fe)
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -474,13 +411,12 @@ def streaming_upsert_publish_replay(spark: SparkSession, sf_dir: str) -> DataFra
             T.StructField("cents", T.LongType()),
         ]
     )
-    table = os.path.join(root, "published")
-    with _stream_state_partitions(spark):
+    with _replay_dirs(spark, [b0, b1], parent=fe) as (feed, ckpt, table):
         stream_upsert_into_published(
             spark,
             feed,
             schema,
-            os.path.join(root, "ckpt"),
+            ckpt,
             table,
             keys=["user_id"],
             fmt="json",
@@ -565,41 +501,18 @@ def streaming_session_window_replay(spark: SparkSession, sf_dir: str) -> DataFra
     b0 = e.filter(F.col("s") < 1_296_000)
     b1 = e.filter(F.col("s") >= 1_296_000)
 
-    root = scratch_dir(prefix="session_replay_")
-    feed = _spool_batches(spark, root, [b0, b1], parent=e)
-    stream = (
-        spark.readStream.schema("s long, user_id long, cents long")
-        .option("maxFilesPerTrigger", 1)
-        .json(feed)
-        .withColumn("ts", F.timestamp_seconds(F.col("s") + epoch_2024))
+    sessions = _replay(
+        spark,
+        [b0, b1],
+        "s long, user_id long, cents long",
+        lambda stream: session_windowed_counts(
+            stream.withColumn("ts", F.timestamp_seconds(F.col("s") + epoch_2024)),
+            ts_col="ts", key_col="user_id", gap="30 minutes",
+            watermark="2 hours", value_col="cents",
+        ),
+        parent=e,
     )
-    agg = session_windowed_counts(
-        stream, ts_col="ts", key_col="user_id", gap="30 minutes",
-        watermark="2 hours", value_col="cents",
-    )
-    out = os.path.join(root, "sessions")
-    with _stream_state_partitions(spark):
-        def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            # Plain append parquet per micro-batch: skips the streaming
-            # parquet sink's per-batch manifest commit + _spark_metadata
-            # log (pure fixed cost here). NOT idempotent under batch-level
-            # re-execution in general — safe here only because availableNow
-            # + a fresh per-run output dir + fresh checkpoint mean a failed
-            # batch aborts the whole replay rather than retrying. Reusing
-            # this sink with a long-lived checkpoint would need a
-            # per-batch_id subdir (or an idempotent format) instead.
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            agg
-            .writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out).select(
+    return sessions.select(
         (F.unix_timestamp("session_start") - epoch_2024).cast("bigint").alias("start_s"),
         (F.unix_timestamp("session_end") - epoch_2024).cast("bigint").alias("end_s"),
         "user_id",
@@ -666,30 +579,15 @@ def streaming_stateful_ledger_replay(spark: SparkSession, sf_dir: str) -> DataFr
     b0 = e.filter(F.col("s") < 1_296_000).select("key")
     b1 = e.filter(F.col("s") >= 1_296_000).select("key")
 
-    root = scratch_dir(prefix="ledger_replay_")
-    feed = _spool_batches(spark, root, [b0, b1], parent=e)
-    stream = (
-        spark.readStream.schema("key string")
-        .option("maxFilesPerTrigger", 1)
-        .json(feed)
+    ledger = _replay(
+        spark,
+        [b0, b1],
+        "key string",
+        lambda stream: running_dedup_counts(stream, key_col="key"),
+        parent=e,
+        output_mode="update",
     )
-    out = os.path.join(root, "ledger")
-    os.makedirs(out)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    with _stream_state_partitions(spark):
-        q = (
-            running_dedup_counts(stream, key_col="key")
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out).select("key", "total_seen", "new_in_batch")
+    return ledger.select("key", "total_seen", "new_in_batch")
 
 
 def _cms_replay_oracle() -> str:
@@ -765,15 +663,12 @@ def streaming_cms_sink_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     b0 = e.filter(F.col("s") < 1_296_000).select("k")
     b1 = e.filter(F.col("s") >= 1_296_000).select("k")
 
-    root = scratch_dir(prefix="cms_sink_replay_")
-    feed = _spool_batches(spark, root, [b0, b1], parent=e)
-    table_dir = os.path.join(root, "cms_table")
-    with _stream_state_partitions(spark):
+    with _replay_dirs(spark, [b0, b1], parent=e) as (feed, ckpt, table_dir):
         stream_cms_into_published(
             spark,
             feed,
             T.StructType([T.StructField("k", T.StringType())]),
-            checkpoint_dir=os.path.join(root, "ckpt"),
+            checkpoint_dir=ckpt,
             table_dir=table_dir,
             col="k",
             width=1024,

@@ -226,9 +226,7 @@ def main() -> int:
 
     # ---------------------------------------------------- streaming upsert
     def streaming_leg(wide: bool) -> dict:
-        import glob
-        import shutil
-
+        from harvester_database_and_automation_spark.streaming.ingest import spool_batches
         from harvester_database_and_automation_spark.streaming.upsert_sink import (
             stream_upsert_into_published,
         )
@@ -236,7 +234,6 @@ def main() -> int:
         label = "wide" if wide else "narrow"
         root = scratch_dir(prefix=f"widerow_stream_{label}_")
         feed = os.path.join(root, "feed")
-        os.makedirs(feed)
         table = os.path.join(root, "pub_tbl")
         ckpt = os.path.join(root, "ckpt")
         base = load_table(spark, sf_dir, "documents").select(
@@ -248,14 +245,6 @@ def main() -> int:
         if wide:
             base = base.withColumn("payload", F.rpad("payload", WIDE_BYTES, "acgtn"))
 
-        def spool(df, name):
-            # One file per micro-batch, Spark-written then renamed (the
-            # spool write itself is not part of a measured cycle).
-            stage = os.path.join(root, f"stage_{name}")
-            df.repartition(1).write.json(stage)
-            part = glob.glob(os.path.join(stage, "part-*"))[0]
-            shutil.move(part, os.path.join(feed, f"{name}.json"))
-
         def poll():
             stream_upsert_into_published(
                 spark, feed, feed_schema, ckpt, table, keys=["doc_id"], fmt="json"
@@ -264,8 +253,9 @@ def main() -> int:
         n_docs = base.count()
         print(f"streaming/{label}: {n_docs} docs")
         cycles = {}
-        # Cycle 1 (bulk backlog): every doc except the late arrivals.
-        spool(base.filter(F.col("m0") != 2).drop("m0"), "batch_1")
+        # Cycle 1 (bulk backlog): every doc except the late arrivals. One
+        # file per micro-batch; the spool write is not part of a cycle.
+        spool_batches(feed, [base.filter(F.col("m0") != 2).drop("m0")])
         cycles["cycle1_bulk_load"] = measure(f"streaming/{label}/cycle1_bulk_load", poll)
         # Cycle 2 (steady state): payload resubmissions (m0==3), metadata
         # updates (m0==4), late inserts (m0==2) — merged via the sink's
@@ -281,7 +271,7 @@ def main() -> int:
             )
             .drop("m0")
         )
-        spool(b2, "batch_2")
+        spool_batches(feed, [b2])
         cycles["cycle2_steady_state"] = measure(
             f"streaming/{label}/cycle2_steady_state", poll
         )

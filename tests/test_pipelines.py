@@ -309,6 +309,7 @@ def test_read_derived_serving_store(spark, tmp_path, monkeypatch):
         current_version,
         publish_versioned,
     )
+    from harvester_database_and_automation_spark.oracle_cache import corpus_fingerprint
 
     monkeypatch.setattr(dv, "_SERVE_ROOT", str(tmp_path / "store"))
     sf = "/root/testdata/sf0.001"
@@ -357,10 +358,10 @@ def test_read_derived_serving_store(spark, tmp_path, monkeypatch):
     fake = tmp_path / "corpus"
     fake.mkdir()
     (fake / "t.parquet").write_bytes(b"v1-bytes")
-    fp1 = dv._corpus_fingerprint(str(fake))
+    fp1 = corpus_fingerprint(str(fake))
     dir_before = dv._serve_dir(str(fake), "dup_pairs")
     (fake / "t.parquet").write_bytes(b"regenerated-bytes")
-    fp2 = dv._corpus_fingerprint(str(fake))
+    fp2 = corpus_fingerprint(str(fake))
     dir_after = dv._serve_dir(str(fake), "dup_pairs")
     assert fp1 != fp2
     # The serve directory itself must move with the regeneration — the
@@ -371,7 +372,7 @@ def test_read_derived_serving_store(spark, tmp_path, monkeypatch):
     # SAME-SIZE regeneration within the same wall-clock second must still
     # re-key (nanosecond mtimes; whole-second truncation aliased this).
     (fake / "t.parquet").write_bytes(b"regenerated-bytez")
-    assert dv._corpus_fingerprint(str(fake)) != fp2
+    assert corpus_fingerprint(str(fake)) != fp2
 
     # code_deps: the delegated helper module's source is part of the
     # build fingerprint, so a helper-only edit re-keys the store.

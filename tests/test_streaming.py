@@ -610,3 +610,70 @@ def test_streaming_cms_rejects_geometry_change(spark, tmp_path):
             spark, str(src), schema, ckpt, table, col="w", width=128, depth=2,
             reader_options={"header": "true"},
         )
+
+
+def test_spool_batches_appends_after_existing_files(spark, tmp_path):
+    """A second spool call numbers its file, and sets its mtime, after the
+    files already in the feed dir, so a file stream picks it up next."""
+    import os
+
+    from harvester_database_and_automation_spark.streaming import spool_batches
+
+    feed = str(tmp_path / "feed")
+    spool_batches(feed, [spark.range(3), spark.range(2)])
+    spool_batches(feed, [spark.range(1)])
+    names = sorted(os.listdir(feed))
+    assert names == ["batch_0.json", "batch_1.json", "batch_2.json"]
+    mtimes = [os.stat(os.path.join(feed, n)).st_mtime for n in names]
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == 3
+    assert sorted(os.listdir(tmp_path)) == ["feed"]  # stage dirs removed
+    assert spark.read.json(feed).count() == 6
+
+
+def test_replay_harness_error_path_restores_session(spark):
+    """A replay whose stream raises inside a micro-batch leaves the session
+    as it found it: shuffle partitions restored and the ``parent`` frame's
+    spool persist released."""
+    import pytest
+
+    from pyspark.errors import StreamingQueryException
+
+    from harvester_database_and_automation_spark.plans.streaming_replay import _replay
+
+    def persisted_rdds() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    parent = spark.range(40).select(F.col("id").cast("string").alias("key"))
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    before = persisted_rdds()
+    with pytest.raises(StreamingQueryException, match="replay boom"):
+        _replay(
+            spark,
+            [parent.filter("key < '2'"), parent.filter("key >= '2'")],
+            "key string",
+            lambda s: s.select(F.coalesce(F.raise_error(F.lit("replay boom")), "key").alias("key")),
+            parent=parent,
+        )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
+    assert persisted_rdds() == before
+
+
+def test_replays_share_one_harness():
+    """Every registered replay takes its stream, sink, scratch dir and
+    state-partition scope from the harness, and the wide-row audit spools
+    through ``spool_batches`` instead of its own part-file rename."""
+    import inspect
+    from pathlib import Path
+
+    from harvester_database_and_automation_spark.plans import QUERIES, streaming_replay
+
+    fns = [s.fn for s in QUERIES.values() if s.fn.__module__ == streaming_replay.__name__]
+    assert len(fns) == 7
+    banned = ("readStream", "writeStream", "awaitTermination", "scratch_dir",
+              "_stream_state_partitions")
+    offenders = [
+        (fn.__name__, word) for fn in fns for word in banned if word in inspect.getsource(fn)
+    ]
+    assert offenders == []
+    audit = Path(__file__).resolve().parent.parent / "scripts" / "wide_row_audit.py"
+    assert "part-*" not in audit.read_text(encoding="utf-8")
