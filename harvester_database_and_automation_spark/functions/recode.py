@@ -1,15 +1,13 @@
 """Recode/lookup helpers (SURVEY.md §2.8 lookup family, §2.2 P4).
 
-Age-group binning (init.sql:787-867 dashboard view), enum code->label
-maps (import_bag_meldeformular.R:26-92), and the R coalesce_join
-(utility.R:324-357).
+Age-group binning (init.sql:787-867 dashboard view) and enum code->label
+maps (import_bag_meldeformular.R:26-92). The R coalesce_join
+(utility.R:324-357) is ``operators.joins.coalesce_join``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -36,15 +34,3 @@ def recode_map(col: Column | str, mapping: dict, default: Column | str | None = 
         raise ValueError("empty mapping")
     return expr.otherwise(default if default is not None else F.lit(None))
 
-
-def coalesce_join(
-    left: DataFrame, right: DataFrame, on: Sequence[str], how: str = "left"
-) -> DataFrame:
-    """Dplyr-style coalesce_join (utility.R:324-357). Canonical
-    implementation lives in operators.joins (adds a ``prefer`` side);
-    re-exported here for the recode/enrichment call sites."""
-    from harvester_database_and_automation_spark.operators.joins import (
-        coalesce_join as _cj,
-    )
-
-    return _cj(left, right, on, how=how)

@@ -144,18 +144,31 @@ def merge_delta(
     return kept.unionByName(updates.select(*current.columns))
 
 
+def content_hash(cols: Sequence[str]) -> Column:
+    """xxhash64 over ``cols`` with an explicit null flag per column
+    instead of a sentinel string: a real value equal to any sentinel would
+    collide with NULL, and xxhash64 hashes the flag and the value as
+    separate inputs so (NULL) and ('\\0') hash differently. Values are
+    only meaningful compared within one plan."""
+    parts: list = []
+    for c in cols:
+        parts.append(F.isnull(c).cast("int"))
+        parts.append(F.col(c).cast("string"))
+    return F.xxhash64(*parts)
+
+
 def classify_changes(
     current: DataFrame,
     incoming: DataFrame,
     keys: Sequence[str],
     metadata_cols: Sequence[str],
     payload_cols: Sequence[str],
-    payload_skinny: bool = False,
 ) -> DataFrame:
     """M2 — route incoming rows by what changed against current.
 
-    Returns the incoming rows (current keys absent from the feed appended
-    as deletes) with a ``change_type`` column:
+    Returns the incoming rows' ``keys + metadata_cols`` (current keys
+    absent from the feed appended as deletes) with a ``change_type``
+    column:
 
     - ``insert``: key not present in current
     - ``unchanged``: metadata hash and payload hash both equal
@@ -168,38 +181,23 @@ def classify_changes(
     skip reprocessing: the 30KB genome string hashes once per side and
     never needs a field-wise diff.
 
-    ``payload_skinny=True`` drops the payload columns from the incoming
-    side BEFORE the classification join (they are hashed map-side and
-    only the hash travels), returning ``keys + metadata_cols +
-    change_type``. The classification exchange then moves ~tens of bytes
-    per row regardless of payload width; the caller re-attaches payloads
-    to the (delta-sized) rows that need processing with a semi-join the
+    The payload columns are dropped from the incoming side BEFORE the
+    classification join (they are hashed map-side and only the hash
+    travels), so the classification exchange moves ~tens of bytes per
+    row regardless of payload width; the caller re-attaches payloads to
+    the (delta-sized) rows that need processing with a semi-join the
     optimizer can run map-side. This is the 100 TB wide-row shape —
     WIDE_ROW_BYTES.json measures it.
     """
-    def _group_hash(cols: Sequence[str]):
-        # An explicit null flag per column instead of a sentinel string: a
-        # real value equal to any sentinel would collide with NULL, and
-        # xxhash64 hashes the flag and the value as separate inputs so
-        # (NULL) and ('\0') hash differently.
-        parts: list = []
-        for c in cols:
-            parts.append(F.isnull(c).cast("int"))
-            parts.append(F.col(c).cast("string"))
-        return F.xxhash64(*parts)
-
-    meta_hash = _group_hash(metadata_cols)
-    pay_hash = _group_hash(payload_cols)
+    meta_hash = content_hash(metadata_cols)
+    pay_hash = content_hash(payload_cols)
 
     cur = current.select(
         *keys, meta_hash.alias("_cur_meta"), pay_hash.alias("_cur_pay")
     )
-    if payload_skinny:
-        inc = incoming.select(
-            *keys, *metadata_cols, meta_hash.alias("_inc_meta"), pay_hash.alias("_inc_pay")
-        )
-    else:
-        inc = incoming.withColumn("_inc_meta", meta_hash).withColumn("_inc_pay", pay_hash)
+    inc = incoming.select(
+        *keys, *metadata_cols, meta_hash.alias("_inc_meta"), pay_hash.alias("_inc_pay")
+    )
 
     joined = inc.join(cur, on=list(keys), how="left")
     change = (

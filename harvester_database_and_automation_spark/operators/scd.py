@@ -25,6 +25,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from harvester_database_and_automation_spark.operators.merge import content_hash
+
 VALID_FROM = "valid_from"
 VALID_TO = "valid_to"
 IS_CURRENT = "is_current"
@@ -39,16 +41,6 @@ def scd2_init(snapshot: DataFrame, batch_ts) -> DataFrame:
         F.lit(None).cast("timestamp_ntz").alias(VALID_TO),
         F.lit(True).alias(IS_CURRENT),
     )
-
-
-def _fingerprint(df: DataFrame, cols: Sequence[str]):
-    # null-flag + cast chain (same contract as merge.classify_changes): a
-    # real value equal to any sentinel stays distinct from NULL.
-    parts: list = []
-    for c in cols:
-        parts.append(F.isnull(c).cast("string"))
-        parts.append(F.col(c).cast("string"))
-    return F.xxhash64(*parts)
 
 
 def scd2_merge(
@@ -76,8 +68,8 @@ def scd2_merge(
     closed = history.filter(~F.col(IS_CURRENT))
     current = history.filter(F.col(IS_CURRENT))
 
-    cur = current.withColumn("_fp", _fingerprint(current, attr_cols)).alias("cur")
-    upd = updates.withColumn("_fp_new", _fingerprint(updates, attr_cols)).alias("upd")
+    cur = current.withColumn("_fp", content_hash(attr_cols)).alias("cur")
+    upd = updates.withColumn("_fp_new", content_hash(attr_cols)).alias("upd")
     j = cur.join(upd, on=list(keys), how="full_outer")
 
     matched_new = F.col("upd._fp_new").isNotNull()

@@ -7,21 +7,27 @@ derived table is a named function over the base corpus plus previously
 built derived tables; ``rebuild`` walks the registry in dependency order
 and atomically publishes each via the versioned-directory swap — readers
 of table N never see a state where N is newer than its inputs unless the
-build completed.
+build completed. ``read_derived`` serves the same tables to queries from
+a store keyed by corpus content and the package's code, laid out and
+published by the same build step as ``rebuild``.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from harvester_database_and_automation_spark.catalog import load_table
 from harvester_database_and_automation_spark.operators.publish import (
+    current_version,
     partition_leaves,
     publish_incremental,
     publish_versioned,
@@ -36,14 +42,6 @@ class DerivedTable:
     build: Callable[[SparkSession, str, dict[str, DataFrame]], DataFrame]
     depends_on: tuple[str, ...] = ()
     partition_by: tuple[str, ...] = ()
-    # Package modules (dotted, relative to this package) whose code the
-    # builder DELEGATES to — a one-line `return _helper(spark, sf_dir)`
-    # builder re-keys the serving store only if the helper's module is
-    # fingerprinted too. Whole-module hashing is deliberately coarse: an
-    # unrelated edit in the module costs one spurious rebuild (seconds),
-    # while an uncaptured helper edit would serve a STALE table against a
-    # freshly-changed oracle — a correctness bug.
-    code_deps: tuple[str, ...] = ()
 
 
 @dataclass
@@ -55,7 +53,6 @@ class DerivedLayer:
         name: str,
         depends_on: tuple[str, ...] = (),
         partition_by: tuple[str, ...] = (),
-        code_deps: tuple[str, ...] = (),
     ):
         def deco(fn):
             if name in self.tables:
@@ -63,10 +60,26 @@ class DerivedLayer:
             for dep in depends_on:
                 if dep not in self.tables:
                     raise ValueError(f"{name!r} depends on unknown table {dep!r}")
-            self.tables[name] = DerivedTable(name, fn, depends_on, partition_by, code_deps)
+            self.tables[name] = DerivedTable(name, fn, depends_on, partition_by)
             return fn
 
         return deco
+
+    def _build(self, spark: SparkSession, sf_dir: str, out_root: str, name: str) -> DataFrame:
+        """Plan table ``name`` over the corpus at ``sf_dir``, reading each
+        dependency's version published under ``out_root``."""
+        spec = self.tables[name]
+        deps = {d: read_published(spark, os.path.join(out_root, d)) for d in spec.depends_on}
+        return spec.build(spark, sf_dir, deps)
+
+    def _publish(self, spark: SparkSession, sf_dir: str, out_root: str, name: str) -> int:
+        """Build table ``name`` and publish it as the next version of
+        ``out_root/<name>``; returns that version."""
+        return publish_versioned(
+            self._build(spark, sf_dir, out_root, name),
+            os.path.join(out_root, name),
+            partition_by=list(self.tables[name].partition_by) or None,
+        )
 
     def _by_level(self, names: list[str], one: Callable[[str], int]) -> dict[str, int]:
         """Run ``one(name) -> version`` over ``names`` in dependency LEVELS:
@@ -117,15 +130,10 @@ class DerivedLayer:
                 wanted.add(n)
                 stack.extend(self.tables[n].depends_on)
 
-        def one(name: str) -> int:
-            spec = self.tables[name]
-            deps = {d: read_published(spark, os.path.join(out_root, d)) for d in spec.depends_on}
-            df = spec.build(spark, sf_dir, deps)
-            return publish_versioned(
-                df, os.path.join(out_root, name), partition_by=list(spec.partition_by) or None
-            )
-
-        return self._by_level([n for n in self.tables if wanted is None or n in wanted], one)
+        return self._by_level(
+            [n for n in self.tables if wanted is None or n in wanted],
+            lambda name: self._publish(spark, sf_dir, out_root, name),
+        )
 
     def rebuild_incremental(
         self, spark: SparkSession, sf_dir: str, out_root: str, predicates: dict[str, Column]
@@ -153,8 +161,7 @@ class DerivedLayer:
 
         def one(name: str) -> int:
             spec = self.tables[name]
-            deps = {d: read_published(spark, os.path.join(out_root, d)) for d in spec.depends_on}
-            full = spec.build(spark, sf_dir, deps)
+            full = self._build(spark, sf_dir, out_root, name)
             pcols = list(spec.partition_by)
             # Dirty-key selection runs as its own bounded action (partition
             # keys only — the same cardinality partition_leaves already
@@ -257,7 +264,7 @@ def lang_term_intensity(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     )
 
 
-@LAYER.register("weekly_dashboard", code_deps=("functions.recode",))
+@LAYER.register("weekly_dashboard")
 def weekly_dashboard(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     """The dashboard_main_view analog (init.sql:783-948): two sources
     conformed and unioned (cases+tests there; events+orders here), value
@@ -321,7 +328,7 @@ def daily_event_intensity(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     )
 
 
-@LAYER.register("lineage_mutation_counts", partition_by=("lang",), code_deps=("plans.kernels",))
+@LAYER.register("lineage_mutation_counts", partition_by=("lang",))
 def lineage_mutation_counts_table(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     """Layer 5 — the spectrum_pangolin_lineage_mutation MV family
     (sequences_gisaid_api_based.sql:435-471): mutation counts + share per
@@ -342,7 +349,7 @@ def lineage_mutation_counts_table(spark: SparkSession, sf_dir: str, deps) -> Dat
 # rebuilt per ingest (incrementally via the churn predicate), consumed by
 # every dedup query without re-deriving the explode/join.
 # ---------------------------------------------------------------------------
-@LAYER.register("shingle_index", code_deps=("plans.text",))
+@LAYER.register("shingle_index")
 def shingle_index(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     """Layer 6 — (doc_id, shingle_digest): the inverted-index hub of the
     dedup family, digests only so the table never carries text."""
@@ -351,7 +358,7 @@ def shingle_index(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     return _shingles(spark, sf_dir).select("doc_id", F.md5("shingle").alias("shingle_digest"))
 
 
-@LAYER.register("minhash_signatures", code_deps=("plans.text",))
+@LAYER.register("minhash_signatures")
 def minhash_signatures(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     """Layer 6 — per-doc 16-component MinHash signature table (what a
     dedup service keys its LSH banding off between ingests)."""
@@ -388,7 +395,7 @@ def dup_pairs(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     )
 
 
-@LAYER.register("ivf_index", code_deps=("plans.embeddings",))
+@LAYER.register("ivf_index")
 def ivf_index(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     """Layer 6 — the ANN inverted file (vec_id, cid, sim, rk): per-vector
     centroid similarities with assignment rank, the table a vector store
@@ -400,7 +407,7 @@ def ivf_index(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     return _ivf_ranked(spark, sf_dir)
 
 
-@LAYER.register("dup_components", depends_on=("dup_pairs",), code_deps=("operators.components",))
+@LAYER.register("dup_components", depends_on=("dup_pairs",))
 def dup_components(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     """Layer 8 — the published (doc_id, component_id) map over the 0.5
     edge slice of dup_pairs; the table `incremental_components` maintains
@@ -417,7 +424,7 @@ def dup_components(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     )
 
 
-@LAYER.register("mutation_table", code_deps=("plans.kernels",))
+@LAYER.register("mutation_table")
 def mutation_table(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     """Layer 6 — the exploded (doc_id, pos, base) mutation triple table,
     the hub of the kernel family. The reference MATERIALIZES exactly this
@@ -432,7 +439,7 @@ def mutation_table(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     return muts
 
 
-@LAYER.register("winnow_fingerprints", code_deps=("plans.text",))
+@LAYER.register("winnow_fingerprints")
 def winnow_fingerprints(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     """Layer 6 — the winnow fingerprint frame (doc_id, block, fp): the
     inverted-index input of the substring-overlap dedup signal. A dedup
@@ -444,7 +451,7 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     return _winnow_fps(spark, sf_dir)
 
 
-@LAYER.register("pq_recon", code_deps=("plans.embeddings",))
+@LAYER.register("pq_recon")
 def pq_recon(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     """Layer 6 — per-vector PQ reconstructions (vec_id, rv): the decode of
     the stored 8-byte PQ codes against the broadcast codebook. In a vector
@@ -495,9 +502,7 @@ def kmv_sketches(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     )
 
 
-@LAYER.register(
-    "semdedup_assign", partition_by=("cell_bucket",), code_deps=("plans.embeddings",)
-)
+@LAYER.register("semdedup_assign", partition_by=("cell_bucket",))
 def semdedup_assign(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     """Layer 6 — the SemDeDup cell assignment (vec_id, cell, vec, norm,
     cell_bucket): the three-level tree-descent assignment runs once per
@@ -518,7 +523,7 @@ def semdedup_assign(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     )
 
 
-@LAYER.register("copurchase_edges", code_deps=("plans.text",))
+@LAYER.register("copurchase_edges")
 def copurchase_edges(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     """Layer 6 — the weighted part co-purchase edge list (pa < pb, weight
     = co-occurring orders, pruned at weight >= 2): the graph hub that
@@ -540,49 +545,31 @@ def copurchase_edges(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
 # reader of a (corpus, table) pair publishes it once via the versioned
 # protocol; every later plan is a parquet scan of the published version.
 # ---------------------------------------------------------------------------
-_SERVE_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".derived",
-)
+_PKG_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_SERVE_ROOT = os.path.join(os.path.dirname(_PKG_DIR), ".derived")
 
 
-def _build_fingerprint(name: str) -> str:
-    """Short hash over the builder source of ``name``, its transitive
-    deps, AND the full source of every ``code_deps`` module in the chain,
-    so a code change to any builder — or to the plans/operators helper a
-    one-line builder delegates to — republishes rather than serving a
-    stale table across rounds. Module-level hashing captures the
-    helper's own intra-module helpers too; helpers in modules NOT named
-    by any code_deps (catalog, shared) still need a manual store wipe."""
-    import hashlib
-    import importlib
-    import inspect
-
-    parts: list[str] = []
-    stack = [name]
-    seen: set[str] = set()
-    mods: set[str] = set()
-    while stack:
-        n = stack.pop()
-        if n in seen:
-            continue
-        seen.add(n)
-        spec = LAYER.tables[n]
-        parts.append(inspect.getsource(spec.build))
-        mods.update(spec.code_deps)
-        stack.extend(spec.depends_on)
-    pkg = __name__.rsplit(".", 2)[0]  # harvester_database_and_automation_spark
-    for mod in sorted(mods):
-        parts.append(inspect.getsource(importlib.import_module(f"{pkg}.{mod}")))
-    return hashlib.sha256("\n".join(sorted(parts)).encode()).hexdigest()[:10]
+@functools.cache
+def _code_fingerprint(pkg_dir: str) -> str:
+    """sha256 over every ``.py`` file under ``pkg_dir`` (relative path and
+    bytes, in path order). A table's output depends on helpers anywhere
+    in the package (catalog, shared fan-out, functions), so only the whole
+    package is a key that cannot miss an input."""
+    h = hashlib.sha256()
+    root = Path(pkg_dir)
+    for p in sorted(root.rglob("*.py")):
+        data = p.read_bytes()
+        h.update(f"{p.relative_to(root).as_posix()}\0{len(data)}\0".encode())
+        h.update(data)
+    return h.hexdigest()[:16]
 
 
-def _serve_dir(sf_dir: str, name: str) -> str:
+def _store_root(sf_dir: str) -> str:
+    """The store's ``out_root`` for the corpus at ``sf_dir`` under the
+    running code: ``<corpus tag>-<corpus fp>-<code fp>``."""
     tag = os.path.abspath(sf_dir).strip(os.sep).replace(os.sep, "__")
     return os.path.join(
-        _SERVE_ROOT,
-        f"{tag}-{corpus_fingerprint(sf_dir)}",
-        f"{name}-{_build_fingerprint(name)}",
+        _SERVE_ROOT, f"{tag}-{corpus_fingerprint(sf_dir)}-{_code_fingerprint(_PKG_DIR)}"
     )
 
 
@@ -590,21 +577,23 @@ def read_derived(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read derived table ``name`` for the corpus at ``sf_dir`` from the
     published serving store, building and publishing it (and its
     transitive deps, each from the PUBLISHED layer below) once per
-    (corpus-content, builder-version). Freshness is structural: the
-    store directory is keyed by a corpus fingerprint (file sizes +
-    mtimes — a corpus regenerated at the same path re-keys) AND a
-    builder-source fingerprint (code changes re-key), so existence of
-    a published version IS the freshness check."""
-    spec = LAYER.tables[name]
-    table_dir = _serve_dir(sf_dir, name)
+    (corpus content, package code). The store is laid out like a
+    ``rebuild`` output, ``<store root>/<table>``, where the root is keyed
+    by a corpus fingerprint (file sizes + mtimes — a corpus regenerated at
+    the same path re-keys) AND a sha256 over every ``.py`` file of the
+    package, so existence of a published version IS the freshness check.
+    The cost of that key: any edit to the package rebuilds each table
+    once per corpus, on its first read."""
+    root = _store_root(sf_dir)
+    table_dir = os.path.join(root, name)
     try:
         return read_published(spark, table_dir)
     except FileNotFoundError:
         pass
-    deps = {d: read_derived(spark, sf_dir, d) for d in spec.depends_on}
-    df = spec.build(spark, sf_dir, deps)
+    for dep in LAYER.tables[name].depends_on:
+        read_derived(spark, sf_dir, dep)  # publishes the dep if absent
     try:
-        publish_versioned(df, table_dir, partition_by=list(spec.partition_by) or None)
+        LAYER._publish(spark, sf_dir, root, name)
     except Exception:
         # Only a concurrent publisher winning the version directory is
         # recoverable (its marker is authoritative — read what it
@@ -612,10 +601,6 @@ def read_derived(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # interrupted write) leaves NO current version; re-raising here
         # keeps the root cause instead of a misleading FileNotFoundError
         # from the follow-up read.
-        from harvester_database_and_automation_spark.operators.publish import (
-            current_version,
-        )
-
         if current_version(table_dir) is None:
             raise
     return read_published(spark, table_dir)

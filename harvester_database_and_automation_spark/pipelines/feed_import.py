@@ -131,9 +131,7 @@ def run_feed_import(
         # hash enters the classification exchange — the join that decides
         # every row's fate moves ~tens of bytes per row however wide the
         # genome column is (measured: WIDE_ROW_BYTES.json).
-        classified = classify_changes(
-            current, clean, keys, metadata_cols, payload_cols, payload_skinny=True
-        ).cache()
+        classified = classify_changes(current, clean, keys, metadata_cols, payload_cols).cache()
         # The quarantine count (parse cache, warm) and the classification
         # rollup (fills the classified cache) touch disjoint caches with warm
         # shared inputs — overlap them (guide on overlapping independent

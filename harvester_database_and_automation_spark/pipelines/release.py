@@ -130,7 +130,6 @@ def run_release_cycle(
     quality_col: str,
     batch_col: str,
     tiebreak_col: str,
-    released_schema: str | None = None,
     released_cols: list[str] | None = None,
     payload_cols: list[str] | None = None,
 ) -> tuple[DataFrame, DataFrame, ReleaseCycleReport]:
@@ -252,16 +251,11 @@ def run_release_cycle(
         if released_cols is None:
             released_cols = [key, quality_col]
         if current_version(table_dir) is None:
-            if released_schema is not None:
-                released_cur = spark.createDataFrame([], released_schema)
-            else:
-                # Derive the empty table's schema from the candidates
-                # themselves (round-9 ADVICE): a hardcoded type string breaks
-                # string-keyed or differently-typed corpora on the first
-                # cycle's unionByName under ANSI.
-                released_cur = spark.createDataFrame(
-                    [], candidates.select(*released_cols).schema
-                )
+            # Derive the empty table's schema from the candidates themselves
+            # (round-9 ADVICE): a hardcoded type string breaks string-keyed
+            # or differently-typed corpora on the first cycle's unionByName
+            # under ANSI.
+            released_cur = spark.createDataFrame([], candidates.select(*released_cols).schema)
         else:
             released_cur = read_published(spark, table_dir)
         # Cached: three tail legs consume this frame (the merge under the

@@ -8,7 +8,7 @@ from harvester_database_and_automation_spark.sources.http import (
     iter_pages,
 )
 from harvester_database_and_automation_spark.sources.excel import read_xlsx
-from harvester_database_and_automation_spark.sources.jsonl import JsonlScan, check_field_drift, read_jsonl
+from harvester_database_and_automation_spark.sources.jsonl import ParsedScan, check_field_drift, read_jsonl
 from harvester_database_and_automation_spark.sources.quarantine import validate
 from harvester_database_and_automation_spark.sources.tabular import read_csv
 
@@ -16,7 +16,7 @@ __all__ = [
     "read_fasta",
     "write_fasta",
     "read_jsonl",
-    "JsonlScan",
+    "ParsedScan",
     "read_xlsx",
     "check_field_drift",
     "validate",

@@ -104,14 +104,15 @@ def read_jsonl_xz(
     schema: T.StructType,
     spool_dir: str,
     chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-) -> JsonlScan:
+) -> ParsedScan:
     """``read_jsonl`` over an ``.xz`` feed via the streaming spool."""
     spool_xz_jsonl(xz_path, spool_dir, chunk_bytes=chunk_bytes)
     return read_jsonl(spark, spool_dir, schema)
 
 
-class JsonlScan(NamedTuple):
-    """(good, corrupt) views over one cached parse of a JSON-lines feed.
+class ParsedScan(NamedTuple):
+    """(good, corrupt) views over one cached parse of a JSON-lines or
+    delimited feed (``read_jsonl``, ``sources.tabular.read_csv``).
 
     Both views filter the same cached parent frame; call ``release()``
     once both are consumed. Unpersisting ``good`` or ``corrupt`` directly
@@ -130,8 +131,8 @@ class JsonlScan(NamedTuple):
         self.parsed.unpersist()
 
 
-def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> JsonlScan:
-    """Read JSON-lines with an explicit schema into a ``JsonlScan``.
+def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> ParsedScan:
+    """Read JSON-lines with an explicit schema into a ``ParsedScan``.
 
     Unparseable lines land in the corrupt DataFrame with the raw line
     preserved — the quarantine contract of SURVEY.md §2.2 P6. Gzip inputs
@@ -154,7 +155,7 @@ def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> JsonlSca
     )
     good = df.filter(df[CORRUPT_COL].isNull()).drop(CORRUPT_COL)
     corrupt = df.filter(df[CORRUPT_COL].isNotNull()).select(CORRUPT_COL)
-    return JsonlScan(good, corrupt, df)
+    return ParsedScan(good, corrupt, df)
 
 
 @dataclass

@@ -13,21 +13,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-CORRUPT_COL = "_corrupt_record"
+from harvester_database_and_automation_spark.sources.jsonl import CORRUPT_COL, ParsedScan
 
 
-def read_csv(
+def _parse(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    sep: str = ",",
-    header: bool = True,
-    quote: str = '"',
-    null_value: str | None = None,
-    date_format: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Read a delimited file with a mandatory explicit schema into
-    (good, corrupt). No schema inference, ever (SURVEY.md §1.3)."""
+    sep: str,
+    header: bool,
+    quote: str,
+    null_value: str | None,
+    date_format: str | None,
+) -> DataFrame:
+    """PERMISSIVE parse of ``path`` against ``schema`` plus the
+    corrupt-record column — the reader both public readers share."""
     full = T.StructType(schema.fields + [T.StructField(CORRUPT_COL, T.StringType())])
     reader = (
         spark.read.option("mode", "PERMISSIVE")
@@ -41,10 +41,30 @@ def read_csv(
         reader = reader.option("nullValue", null_value)
     if date_format is not None:
         reader = reader.option("dateFormat", date_format)
-    df = reader.schema(full).csv(path).cache()
+    return reader.schema(full).csv(path)
+
+
+def read_csv(
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType,
+    sep: str = ",",
+    header: bool = True,
+    quote: str = '"',
+    null_value: str | None = None,
+    date_format: str | None = None,
+) -> ParsedScan:
+    """Read a delimited file with a mandatory explicit schema into a
+    ``ParsedScan`` of (good, corrupt) views. No schema inference, ever
+    (SURVEY.md §1.3).
+
+    The parse is cached so the split is one parse, not two; ownership
+    passes to the caller — call ``scan.release()`` once both views are
+    consumed (unpersisting a view does not drop the cache)."""
+    df = _parse(spark, path, schema, sep, header, quote, null_value, date_format).cache()
     good = df.filter(df[CORRUPT_COL].isNull()).drop(CORRUPT_COL)
     corrupt = df.filter(df[CORRUPT_COL].isNotNull())
-    return good, corrupt
+    return ParsedScan(good, corrupt, df)
 
 
 def read_csv_strict(
@@ -72,20 +92,7 @@ def read_csv_strict(
     contract — projecting callers keep the guarantee and pay the full
     parse; use ``read_csv`` when prunable reads matter more than the
     tripwire."""
-    full = T.StructType(schema.fields + [T.StructField(CORRUPT_COL, T.StringType())])
-    reader = (
-        spark.read.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("sep", sep)
-        .option("header", header)
-        .option("quote", quote)
-        .option("enforceSchema", False)
-    )
-    if null_value is not None:
-        reader = reader.option("nullValue", null_value)
-    if date_format is not None:
-        reader = reader.option("dateFormat", date_format)
-    df = reader.schema(full).csv(path)
+    df = _parse(spark, path, schema, sep, header, quote, null_value, date_format)
     # Always-true but not constant-foldable, and it names every field —
     # the filter's required columns then cover the whole schema, which
     # defeats parser column pruning however the caller projects.

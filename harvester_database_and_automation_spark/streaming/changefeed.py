@@ -8,16 +8,8 @@ inside the streaming checkpoint, so a feed can be routed continuously:
 each record is classified against the last content hash seen for its key,
 with no external current-table join in the hot path.
 
-Two implementations of the same semantics:
-
-- ``streaming_change_router`` — ``applyInPandasWithState``: works
-  everywhere Spark 4 runs; this is the production entry point.
-- ``ChangeRouter`` + ``streaming_change_router_tws`` — the Spark 4
-  ``transformWithStateInPandas`` / ``StatefulProcessor`` successor API.
-  Its Python side requires the ``google.protobuf`` package, which this
-  container does not ship, so the builder is gated by
-  ``TWS_AVAILABLE`` (import-try per the environment rules). The class is
-  complete and the gated test exercises it wherever protobuf exists.
+``streaming_change_router`` is built on ``applyInPandasWithState``,
+which works everywhere Spark 4 runs.
 """
 
 from __future__ import annotations
@@ -32,18 +24,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 OUTPUT_SCHEMA = "id string, content_hash string, change_kind string"
 _STATE_SCHEMA = "h string"
 
-try:  # transformWithState's worker needs google.protobuf at runtime
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-
-    TWS_AVAILABLE = True
-except ImportError:
-    TWS_AVAILABLE = False
-
 
 def _classify(last: str | None, hashes) -> tuple[list[str], str | None]:
     """Fold a key's batch of hashes against the prior state; returns the
-    per-row kinds and the new last-hash. Shared by both implementations so
-    their semantics cannot drift."""
+    per-row kinds and the new last-hash."""
     kinds: list[str] = []
     for h in hashes:
         if last is None:
@@ -95,55 +79,3 @@ def streaming_change_router(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-try:  # the StatefulProcessor ABC itself imports cleanly without protobuf
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor as _TWS_BASE
-except ImportError:  # pragma: no cover - very old pyspark
-    _TWS_BASE = object
-
-
-class ChangeRouter(_TWS_BASE):
-    """Same classification on the ``StatefulProcessor`` API: per-key
-    value state holds the last hash; rows fold in Arrow batch order.
-
-    Defined unconditionally: the processor's logic needs only pandas and
-    the handle protocol (getValueState -> exists/get/update), so the
-    no-protobuf environments can still drive it directly with a fake
-    handle (tests/test_streaming.py does exactly that as the fallback
-    assertion path); only ``transformWithStateInPandas`` itself — whose
-    Python worker speaks protobuf to the JVM — is gated."""
-
-    def init(self, handle) -> None:
-        self._last = handle.getValueState("last_hash", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        last = self._last.get()[0] if self._last.exists() else None
-        ids, hashes, kinds = [], [], []
-        for pdf in rows:
-            batch_kinds, last = _classify(last, pdf["content_hash"])
-            ids.extend([key[0]] * len(pdf))
-            hashes.extend(pdf["content_hash"])
-            kinds.extend(batch_kinds)
-        self._last.update((last,))
-        yield pd.DataFrame({"id": ids, "content_hash": hashes, "change_kind": kinds})
-
-    def close(self) -> None:
-        pass
-
-
-if TWS_AVAILABLE:  # pragma: no cover - container lacks protobuf
-
-    def streaming_change_router_tws(
-        keyed: DataFrame, id_col: str = "id", hash_col: str = "content_hash"
-    ) -> DataFrame:
-        renamed = keyed.select(
-            F.col(id_col).cast("string").alias("id"),
-            F.col(hash_col).cast("string").alias("content_hash"),
-        )
-        return renamed.groupBy("id").transformWithStateInPandas(
-            statefulProcessor=ChangeRouter(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )

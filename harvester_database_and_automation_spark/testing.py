@@ -17,6 +17,7 @@ import numpy as np
 import pandas as pd
 
 from harvester_database_and_automation_spark.catalog import TABLES
+from harvester_database_and_automation_spark.oracle_cache import canonical_digest
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -141,6 +142,9 @@ def compare_frames(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame)
 
 def check_query(spark, con: duckdb.DuckDBPyConnection, name: str, sf_dir: str) -> CompareResult:
     from harvester_database_and_automation_spark.plans import QUERIES
+
+    def digest(pdf: pd.DataFrame) -> str:
+        return canonical_digest(*canonical_rows(pdf))
 
     spec = QUERIES[name]
     spark_pdf = spec.fn(spark, sf_dir).toPandas()
@@ -303,10 +307,6 @@ class DriftResult:
         return self.spark_moved == self.oracle_moved and self.perturbed_parity
 
 
-def _result_hash(pdf: pd.DataFrame) -> int:
-    return hash(tuple(map(tuple, canonical_rows(pdf)[1])) + tuple(canonical_rows(pdf)[0]))
-
-
 def drift_check(spark, name: str, clean_dir: str, pert_dir: str,
                 clean_con=None, pert_con=None) -> DriftResult:
     """Run one registered query + its oracle on both corpora.
@@ -318,16 +318,19 @@ def drift_check(spark, name: str, clean_dir: str, pert_dir: str,
     """
     from harvester_database_and_automation_spark.plans import QUERIES
 
+    def digest(pdf: pd.DataFrame) -> str:
+        return canonical_digest(*canonical_rows(pdf))
+
     spec = QUERIES[name]
     clean_con = clean_con or duckdb_connection(clean_dir)
     pert_con = pert_con or duckdb_connection(pert_dir)
     s_clean = spec.fn(spark, clean_dir).toPandas()
     s_pert = spec.fn(spark, pert_dir).toPandas()
-    spark_moved = _result_hash(s_clean) != _result_hash(s_pert)
+    spark_moved = digest(s_clean) != digest(s_pert)
     if spec.oracle is None:
         return DriftResult(name, spark_moved, None, True)
     o_clean = clean_con.execute(spec.oracle).df()
     o_pert = pert_con.execute(spec.oracle).df()
-    oracle_moved = _result_hash(o_clean) != _result_hash(o_pert)
+    oracle_moved = digest(o_clean) != digest(o_pert)
     parity = compare_frames(name, s_pert, o_pert).ok
     return DriftResult(name, spark_moved, oracle_moved, parity)

@@ -12,8 +12,8 @@ the status API (`observe.measure`):
 
 - **feed_import leg**: the two-cycle import DAG (insert/delete/metadata/
   payload/unchanged mix keyed on doc_id % 10, like feed_import_replay).
-  Skinny shape = classify_changes(payload_skinny=True) + measured-delta
-  broadcast hints + merge_delta.
+  Skinny shape = classify_changes (payloads hashed map-side, only the
+  hash joins) + measured-delta broadcast hints + merge_delta.
 - **release leg**: two release cycles (bulk release, then a steady-state
   mix of resequencing updates / tombstones / late inserts) with the
   30 KB consensus payload carried INTO the published released table.

@@ -12,11 +12,8 @@ from harvester_database_and_automation_spark.functions.dates import (
     parse_multi_format_date,
     repair_imprecise_date,
 )
-from harvester_database_and_automation_spark.functions.recode import (
-    age_group,
-    coalesce_join,
-    recode_map,
-)
+from harvester_database_and_automation_spark.functions.recode import age_group, recode_map
+from harvester_database_and_automation_spark.operators.joins import coalesce_join
 
 
 def _col(spark, values, expr):

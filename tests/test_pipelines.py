@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -316,8 +317,9 @@ def test_read_derived_serving_store(spark, tmp_path, monkeypatch):
 
     # First read publishes v1 of dup_pairs AND its dep shingle_index.
     pairs1 = dv.read_derived(spark, sf, "dup_pairs")
-    pairs_dir = dv._serve_dir(sf, "dup_pairs")
-    dep_dir = dv._serve_dir(sf, "shingle_index")
+    root = dv._store_root(sf)
+    pairs_dir = os.path.join(root, "dup_pairs")
+    dep_dir = os.path.join(root, "shingle_index")
     assert current_version(pairs_dir) == 1
     assert current_version(dep_dir) == 1
     n1 = pairs1.count()
@@ -327,25 +329,13 @@ def test_read_derived_serving_store(spark, tmp_path, monkeypatch):
     assert current_version(pairs_dir) == 1
     assert pairs2.count() == n1
 
-    # The store key carries the builder-source fingerprint, so a builder
-    # change re-keys the directory instead of serving a stale table.
-    fp = dv._build_fingerprint("dup_pairs")
-    assert pairs_dir.endswith(f"dup_pairs-{fp}")
-    assert fp != dv._build_fingerprint("shingle_index")
-    # The fingerprint hashes transitive deps too: dup_pairs' key differs
-    # from what hashing only its own builder source would give.
-    import hashlib
-    import inspect
-
-    own_only = hashlib.sha256(
-        "\n".join(sorted([inspect.getsource(dv.LAYER.tables["dup_pairs"].build)])).encode()
-    ).hexdigest()[:10]
-    assert fp != own_only
+    # The store root carries the code fingerprint of the running package.
+    assert root.endswith(f"-{dv._code_fingerprint(dv._PKG_DIR)}")
 
     # Concurrent-publisher fallback: a table dir that already has a
     # published version is authoritative — read_derived must NOT overwrite
     # it (corpora are immutable, existence == freshness).
-    sentinel_dir = dv._serve_dir(sf, "minhash_signatures")
+    sentinel_dir = os.path.join(root, "minhash_signatures")
     sentinel = spark.range(3).selectExpr("id AS doc_id")
     publish_versioned(sentinel, sentinel_dir)
     served = dv.read_derived(spark, sf, "minhash_signatures")
@@ -359,10 +349,10 @@ def test_read_derived_serving_store(spark, tmp_path, monkeypatch):
     fake.mkdir()
     (fake / "t.parquet").write_bytes(b"v1-bytes")
     fp1 = corpus_fingerprint(str(fake))
-    dir_before = dv._serve_dir(str(fake), "dup_pairs")
+    dir_before = dv._store_root(str(fake))
     (fake / "t.parquet").write_bytes(b"regenerated-bytes")
     fp2 = corpus_fingerprint(str(fake))
-    dir_after = dv._serve_dir(str(fake), "dup_pairs")
+    dir_after = dv._store_root(str(fake))
     assert fp1 != fp2
     # The serve directory itself must move with the regeneration — the
     # post-rewrite path carries the NEW fingerprint, not the old one.
@@ -373,17 +363,31 @@ def test_read_derived_serving_store(spark, tmp_path, monkeypatch):
     # re-key (nanosecond mtimes; whole-second truncation aliased this).
     (fake / "t.parquet").write_bytes(b"regenerated-bytez")
     assert corpus_fingerprint(str(fake)) != fp2
+    assert dv._store_root(str(fake)) != dir_after
 
-    # code_deps: the delegated helper module's source is part of the
-    # build fingerprint, so a helper-only edit re-keys the store.
-    fp_with = dv._build_fingerprint("semdedup_assign")
-    spec = dv.LAYER.tables["semdedup_assign"]
-    stripped = dv.DerivedTable(spec.name, spec.build, spec.depends_on, spec.partition_by, ())
-    dv.LAYER.tables["semdedup_assign"] = stripped
-    try:
-        assert dv._build_fingerprint("semdedup_assign") != fp_with
-    finally:
-        dv.LAYER.tables["semdedup_assign"] = spec
+
+def test_serving_key_covers_every_package_module(tmp_path, monkeypatch):
+    """An edit to a helper no builder names (functions/genomics.py feeds
+    the kernel tables through plans/kernels) re-keys the serving store;
+    an unedited copy of the package keys the same as the original."""
+    import shutil
+
+    import harvester_database_and_automation_spark.pipelines.derived as dv
+
+    sf = "/root/testdata/sf0.001"
+    original = dv._store_root(sf)
+    ignore = shutil.ignore_patterns("__pycache__")
+    same = tmp_path / "same"
+    edited = tmp_path / "edited"
+    shutil.copytree(dv._PKG_DIR, same, ignore=ignore)
+    shutil.copytree(dv._PKG_DIR, edited, ignore=ignore)
+    with open(edited / "functions" / "genomics.py", "a") as fh:
+        fh.write("\n# edited\n")
+
+    monkeypatch.setattr(dv, "_PKG_DIR", str(same))
+    assert dv._store_root(sf) == original
+    monkeypatch.setattr(dv, "_PKG_DIR", str(edited))
+    assert dv._store_root(sf) != original
 
 
 def test_run_release_cycle_two_cycles(spark, tmp_path):
@@ -449,7 +453,7 @@ def test_run_release_cycle_two_cycles(spark, tmp_path):
     assert final == {1: 26, 3: 20, 4: 50, 10: 10, 11: 8}
 
 
-def test_run_release_cycle_payload_skinny(spark, tmp_path):
+def test_run_release_cycle_payload_cols(spark, tmp_path):
     """payload_cols: wide columns skip the cascade window and re-attach
     only to the accepted delta — published rows carry the RIGHT attempt's
     payload (the accepted (key, tiebreak) pair, not an arbitrary one)."""

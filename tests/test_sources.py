@@ -151,10 +151,32 @@ def test_read_csv_semicolon_typed(spark, tmp_path):
             T.StructField("score", T.DoubleType()),
         ]
     )
-    good, corrupt = read_csv(spark, str(p), schema, sep=";")
-    assert {r["sample"] for r in good.collect()} == {"s1", "s3"}
-    assert corrupt.count() == 1
-    assert "oops" in corrupt.collect()[0]["_corrupt_record"]
+    scan = read_csv(spark, str(p), schema, sep=";")
+    assert {r["sample"] for r in scan.good.collect()} == {"s1", "s3"}
+    assert scan.corrupt.count() == 1
+    assert "oops" in scan.corrupt.collect()[0]["_corrupt_record"]
+    scan.release()
+
+
+def test_read_csv_release_drops_parse_cache(spark, tmp_path):
+    """read_csv caches one parse behind both views; release() must drop
+    it (unpersisting a filtered view is a no-op, so before the handle
+    existed the cache could never be freed)."""
+    p = tmp_path / "feed.csv"
+    p.write_text("sample,score\ns1,0.5\ns2,oops\n")
+    schema = T.StructType(
+        [T.StructField("sample", T.StringType()), T.StructField("score", T.DoubleType())]
+    )
+
+    def n_persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = n_persisted()
+    scan = read_csv(spark, str(p), schema)
+    assert (scan.good.count(), scan.corrupt.count()) == (1, 1)
+    assert n_persisted() == before + 1
+    scan.release()
+    assert n_persisted() == before
 
 
 def test_read_csv_strict_one_pass_tripwire(spark, tmp_path):
@@ -287,9 +309,10 @@ def test_read_gzip_csv_transparently(spark, tmp_path):
             T.StructField("score", T.DoubleType()),
         ]
     )
-    good, corrupt = read_csv(spark, str(p), schema, sep=";")
-    assert {r["sample"] for r in good.collect()} == {"s1", "s2"}
-    assert corrupt.count() == 0
+    scan = read_csv(spark, str(p), schema, sep=";")
+    assert {r["sample"] for r in scan.good.collect()} == {"s1", "s2"}
+    assert scan.corrupt.count() == 0
+    scan.release()
 
 
 def test_orc_roundtrip_with_predicate_pushdown(spark, tmp_path):

@@ -445,72 +445,19 @@ def test_streaming_change_router_classifies_against_state(spark, tmp_path):
     }
 
 
-def test_streaming_change_router_tws_variant(spark, tmp_path):
-    """The transformWithStateInPandas variant. Where the protobuf worker
-    dependency exists, run the real streaming query; otherwise fall back
-    to driving the StatefulProcessor directly with a fake state handle —
-    the classification + state protocol (init/handleInputRows/state
-    persistence across batches) is asserted either way, so no
-    environment skips the operator's logic."""
-    import pandas as pd
+def test_change_router_classify_fold():
+    """The per-key fold behind ``streaming_change_router``: first sight
+    inserts, an in-batch re-arrival is unchanged, and the returned
+    last-hash carries the state into the next batch."""
+    from harvester_database_and_automation_spark.streaming.changefeed import _classify
 
-    from harvester_database_and_automation_spark.streaming import changefeed
-
-    if not changefeed.TWS_AVAILABLE:
-        # Fallback assertion path: protocol-level drive of ChangeRouter.
-        class FakeValueState:
-            def __init__(self):
-                self._v = None
-
-            def exists(self):
-                return self._v is not None
-
-            def get(self):
-                return self._v
-
-            def update(self, v):
-                self._v = v
-
-        class FakeHandle:
-            def __init__(self):
-                self.states = {}
-
-            def getValueState(self, name, schema):
-                return self.states.setdefault(name, FakeValueState())
-
-        handle = FakeHandle()
-        router = changefeed.ChangeRouter()
-        router.init(handle)
-
-        def drive(hashes):
-            out = list(router.handleInputRows(("s1",), [pd.DataFrame({"content_hash": hashes})], None))
-            return list(pd.concat(out)["change_kind"])
-
-        # Batch 1: first sight inserts, immediate re-arrival unchanged.
-        assert drive(["h1", "h1"]) == ["insert", "unchanged"]
-        # Batch 2 (state persisted in the handle): same hash unchanged,
-        # new hash update, then unchanged against the NEW hash.
-        assert drive(["h1", "h9", "h9"]) == ["unchanged", "update", "unchanged"]
-        assert handle.states["last_hash"].get() == ("h9",)
-        router.close()
-        return
-
-    src = tmp_path / "feed"
-    src.mkdir()
-    (src / "b1.json").write_text('{"id": "s1", "content_hash": "h1"}\n')
-    stream = spark.readStream.schema("id string, content_hash string").json(str(src))
-    out = str(tmp_path / "routed")
-    q = (
-        changefeed.streaming_change_router_tws(stream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = {(r["id"], r["change_kind"]) for r in spark.read.parquet(out).collect()}
-    assert rows == {("s1", "insert")}
+    # Batch 1: first sight inserts, immediate re-arrival unchanged.
+    kinds, last = _classify(None, ["h1", "h1"])
+    assert (kinds, last) == (["insert", "unchanged"], "h1")
+    # Batch 2 (state carried from batch 1): same hash unchanged, new hash
+    # update, then unchanged against the NEW hash.
+    kinds, last = _classify(last, ["h1", "h9", "h9"])
+    assert (kinds, last) == (["unchanged", "update", "unchanged"], "h9")
 
 
 def test_streaming_cms_maintains_published_grid(spark, tmp_path):
