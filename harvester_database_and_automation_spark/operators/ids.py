@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -29,34 +30,11 @@ def assign_global_ids(
     id_col: str = "assigned_id",
 ) -> DataFrame:
     """Add ``id_col`` = start, start+1, ... in the total order given by
-    ``order_cols`` — distributed (no single-partition window)."""
-    sorted_df = df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
-    # Pin the partitioned data before the two passes: without this, a
-    # nondeterministic upstream expression could re-evaluate between the
-    # count pass and the id pass and silently duplicate ids. (The pinned
-    # blocks are reclaimed by Spark's ContextCleaner once the returned
-    # frame is no longer referenced.) MEMORY_AND_DISK,
-    # not the MEMORY_ONLY default — an evicted partition would be recomputed
-    # (possibly with different content), which the partition-count guard
-    # below cannot detect.
-    rdd = sorted_df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    counts = rdd.mapPartitions(lambda it: [sum(1 for _ in it)]).collect()
-    offsets: list[int] = [start]
-    for c in counts[:-1]:
-        offsets.append(offsets[-1] + c)
-
-    def add_ids(idx: int, it):
-        if idx >= len(offsets):
-            raise RuntimeError(
-                f"partition {idx} appeared after the count pass saw {len(offsets)} "
-                "partitions — upstream nondeterminism; ids would be duplicated"
-            )
-        base = offsets[idx]
-        for i, row in enumerate(it):
-            yield (*row, base + i)
-
-    schema = T.StructType(sorted_df.schema.fields + [T.StructField(id_col, T.LongType(), False)])
-    return sorted_df.sparkSession.createDataFrame(rdd.mapPartitionsWithIndex(add_ids), schema)
+    ``order_cols`` — distributed (no single-partition window): the
+    running total of a literal-1 weight, shifted by ``start``."""
+    ones = df.withColumn("_assign_one", F.lit(1))
+    ranked = add_running_total(ones, order_cols, "_assign_one", id_col)
+    return ranked.select(*df.columns, (F.col(id_col) + F.lit(start)).alias(id_col))
 
 
 def add_running_total(
@@ -66,9 +44,9 @@ def add_running_total(
     out_col: str = "running_before",
 ) -> DataFrame:
     """Add ``out_col`` = exclusive prefix sum of ``value_col`` in the total
-    order given by ``order_cols`` — the weighted generalization of
-    :func:`assign_global_ids`, same two-pass shape (per-partition totals,
-    then offset + local running sum). Equivalent to
+    order given by ``order_cols`` — two passes over the range-sorted,
+    pinned partitions (per-partition totals, then offset + local running
+    sum); :func:`assign_global_ids` is its unit-weight case. Equivalent to
     ``sum(value) OVER (ORDER BY ... ROWS UNBOUNDED PRECEDING AND 1
     PRECEDING)`` but distributed: no single-partition window at any scale.
 
@@ -76,6 +54,11 @@ def add_running_total(
     places its boundaries, so results are deterministic for any
     deterministic total order (include a unique tie-break column)."""
     sorted_df = df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
+    # Pin the sorted partitions so a nondeterministic upstream expression
+    # cannot re-evaluate between the two passes; MEMORY_AND_DISK because
+    # an evicted partition would be recomputed, possibly with different
+    # content. Spark's ContextCleaner reclaims the blocks once the
+    # returned frame is unreferenced.
     rdd = sorted_df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
     # NULL values contribute 0 (SQL sum semantics); the output type follows
     # the value column (long stays long, fractional widens to double).

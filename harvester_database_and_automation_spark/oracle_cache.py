@@ -165,62 +165,61 @@ class OracleCache:
 
 
 def check_query_cached(spark, con_factory, name: str, sf_dir: str,
-                       cache: OracleCache):
-    """check_query with the oracle side served from ``cache`` when the
-    Spark result's digest matches the stored oracle digest.
+                       cache: OracleCache | None):
+    """Check registered query ``name`` against its DuckDB oracle; returns
+    (CompareResult, served_from_cache). A query without an oracle gets
+    the rows-only gate (an empty result fails).
 
-    ``con_factory`` is a zero-arg callable returning a DuckDB connection
-    with the corpus views registered — called ONLY on the slow path, so
-    an all-hits run never opens DuckDB at all (the malloc-exposure
-    window the verdict asked to shrink).
+    With a ``cache``, the oracle side is served from it when the Spark
+    result's digest matches the stored oracle digest. ``con_factory`` is a
+    zero-arg callable returning a DuckDB connection with the corpus views
+    registered — called ONLY on the slow path, so an all-hits run never
+    opens DuckDB at all (the malloc-exposure window the verdict asked to
+    shrink).
 
-    Slow path (no entry, or digest mismatch): run the live oracle, do
-    the full diagnostic compare, refresh the entry from the live oracle
-    result. The cache never produces a failure by itself."""
+    Slow path (``cache=None``, no entry, or digest mismatch): run the live
+    oracle, do the full diagnostic compare, and refresh the entry (if
+    caching) from the live oracle result. The cache never produces a
+    failure by itself."""
     from harvester_database_and_automation_spark.plans import QUERIES
     from harvester_database_and_automation_spark.testing import (
         CompareResult,
         canonical_rows,
+        compare_frames,
     )
 
     spec = QUERIES[name]
+    spark_pdf = spec.fn(spark, sf_dir).toPandas()
     if spec.oracle is None:
-        # Rows-only gate (testing.check_query semantics) — no oracle, so
-        # no DuckDB connection either.
-        spark_pdf = spec.fn(spark, sf_dir).toPandas()
         return CompareResult(
             name=name, ok=len(spark_pdf) > 0, spark_rows=len(spark_pdf),
             oracle_rows=-1, problems=["no oracle: rows-only check"],
         ), False
 
-    corpus_digest = corpus_fingerprint(sf_dir)
-    entry = cache.get(spec.oracle, corpus_digest)
-    if entry is not None:
-        spark_pdf = spec.fn(spark, sf_dir).toPandas()
-        s_cols, s_rows = canonical_rows(spark_pdf)
-        if (
-            s_cols == entry.cols
-            and len(s_rows) == entry.n_rows
-            and canonical_digest(s_cols, s_rows) == entry.result_digest
-        ):
-            cache.hits += 1
-            return CompareResult(
-                name=name, ok=True, spark_rows=len(s_rows),
-                oracle_rows=entry.n_rows,
-            ), True
-        # Mismatch against the cached digest: never fail from the cache —
-        # fall through to the live oracle for the real diagnostic compare.
-        cache.refreshes += 1
-    else:
-        cache.misses += 1
+    if cache is not None:
+        corpus_digest = corpus_fingerprint(sf_dir)
+        entry = cache.get(spec.oracle, corpus_digest)
+        if entry is None:
+            cache.misses += 1
+        else:
+            s_cols, s_rows = canonical_rows(spark_pdf)
+            if (
+                s_cols == entry.cols
+                and len(s_rows) == entry.n_rows
+                and canonical_digest(s_cols, s_rows) == entry.result_digest
+            ):
+                cache.hits += 1
+                return CompareResult(
+                    name=name, ok=True, spark_rows=len(s_rows),
+                    oracle_rows=entry.n_rows,
+                ), True
+            # Mismatch against the cached digest: never fail from the
+            # cache — fall through to the live oracle for the real compare.
+            cache.refreshes += 1
 
-    con = con_factory()
     t0 = time.time()
-    oracle_pdf = con.execute(spec.oracle).df()
-    compute_sec = time.time() - t0
-    o_cols, o_rows = canonical_rows(oracle_pdf)
-    cache.put(spec.oracle, corpus_digest, o_cols, o_rows, compute_sec)
-    from harvester_database_and_automation_spark.testing import compare_frames
-
-    spark_pdf = spec.fn(spark, sf_dir).toPandas() if entry is None else spark_pdf
+    oracle_pdf = con_factory().execute(spec.oracle).df()
+    if cache is not None:
+        o_cols, o_rows = canonical_rows(oracle_pdf)
+        cache.put(spec.oracle, corpus_digest, o_cols, o_rows, time.time() - t0)
     return compare_frames(name, spark_pdf, oracle_pdf), False

@@ -328,51 +328,58 @@ def daily_event_intensity(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     )
 
 
-@LAYER.register("lineage_mutation_counts", partition_by=("lang",))
-def lineage_mutation_counts_table(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
-    """Layer 5 — the spectrum_pangolin_lineage_mutation MV family
-    (sequences_gisaid_api_based.sql:435-471): mutation counts + share per
-    (lang, lineage, mutation). Materializing it here is what collapses the
-    registered query's recompute exchanges into a single build per ingest —
-    exactly why the reference keeps these as materialized views."""
-    from harvester_database_and_automation_spark.plans.kernels import (
-        lineage_mutation_counts,
-    )
-
-    return lineage_mutation_counts(spark, sf_dir)
-
-
 # ---------------------------------------------------------------------------
-# Dedup hub tables — the session-cached frames of plans/text.py published
-# as real tables. This is the deployment shape the cache mirrors: shingle
-# index, MinHash signature table, scored pair table, component map —
-# rebuilt per ingest (incrementally via the churn predicate), consumed by
-# every dedup query without re-deriving the explode/join.
+# Hub tables — every intermediate that more than one registered query reads
+# (shingles, signatures, scored pairs, index frames, mutation triples) is a
+# derived table here, built by a plain builder in its plan module and read
+# with ``read_derived``. This is the only way a hub is shared between
+# queries: the store re-keys on corpus content and package code, and a
+# parquet scan holds no executor memory between queries. Hubs built over
+# another hub take it from ``deps``, so ``rebuild(out_root)`` stays
+# self-contained.
 # ---------------------------------------------------------------------------
-@LAYER.register("shingle_index")
-def shingle_index(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
-    """Layer 6 — (doc_id, shingle_digest): the inverted-index hub of the
-    dedup family, digests only so the table never carries text."""
+@LAYER.register("shingles")
+def shingles(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
+    """Layer 6 — distinct 3-word shingles per document (doc_id, shingle):
+    the text-bearing hub the decontamination, prefix-filter and MinHash
+    queries read."""
     from harvester_database_and_automation_spark.plans.text import _shingles
 
-    return _shingles(spark, sf_dir).select("doc_id", F.md5("shingle").alias("shingle_digest"))
+    return _shingles(spark, sf_dir)
 
 
-@LAYER.register("minhash_signatures")
+@LAYER.register("shingle_index", depends_on=("shingles",))
+def shingle_index(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
+    """Layer 7 — (doc_id, shingle_digest): the inverted-index hub of the
+    dedup family, digests only so the table never carries text."""
+    return deps["shingles"].select("doc_id", F.md5("shingle").alias("shingle_digest"))
+
+
+@LAYER.register("minhash_signatures", depends_on=("shingles",))
 def minhash_signatures(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
-    """Layer 6 — per-doc 16-component MinHash signature table (what a
+    """Layer 7 — per-doc 16-component MinHash signature table (what a
     dedup service keys its LSH banding off between ingests)."""
     from harvester_database_and_automation_spark.plans.text import _minhash_sigs
 
-    return _minhash_sigs(spark, sf_dir)
+    return _minhash_sigs(deps["shingles"])
+
+
+@LAYER.register("minhash_calib_matched", depends_on=("minhash_signatures",))
+def minhash_calib_matched(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
+    """Layer 8 — LSH candidate pairs with their matching-component count
+    (doc_a, doc_b, n_sig_match), the scored-pair frame the MinHash
+    calibration reads in four branches."""
+    from harvester_database_and_automation_spark.plans.text import _minhash_calib_matched
+
+    return _minhash_calib_matched(deps["minhash_signatures"])
 
 
 @LAYER.register("dup_pairs", depends_on=("shingle_index",))
 def dup_pairs(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
-    """Layer 7 — scored near-dup pairs (Jaccard >= 0.1) built from the
-    PUBLISHED shingle index, not a recompute: the inverted-index self-join
-    reads digests only. Downstream thresholds slice this table (pair
-    report at 0.1, clustering edges at 0.5)."""
+    """Layer 8 — scored near-dup pairs (Jaccard >= 0.1, unrounded) built
+    from the PUBLISHED shingle index: the inverted-index self-join reads
+    digests only. Downstream thresholds slice this table (pair report at
+    0.1, clustering edges and the prefix filter's verification at 0.5)."""
     sh = deps["shingle_index"]
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.alias("a")
@@ -395,21 +402,9 @@ def dup_pairs(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     )
 
 
-@LAYER.register("ivf_index")
-def ivf_index(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
-    """Layer 6 — the ANN inverted file (vec_id, cid, sim, rk): per-vector
-    centroid similarities with assignment rank, the table a vector store
-    rebuilds only when centroids move. The probe and recall queries read
-    this through the session cache locally; published here it serves them
-    across jobs."""
-    from harvester_database_and_automation_spark.plans.embeddings import _ivf_ranked
-
-    return _ivf_ranked(spark, sf_dir)
-
-
 @LAYER.register("dup_components", depends_on=("dup_pairs",))
 def dup_components(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
-    """Layer 8 — the published (doc_id, component_id) map over the 0.5
+    """Layer 9 — the published (doc_id, component_id) map over the 0.5
     edge slice of dup_pairs; the table `incremental_components` maintains
     between full rebuilds."""
     from harvester_database_and_automation_spark.operators.components import (
@@ -424,19 +419,24 @@ def dup_components(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     )
 
 
-@LAYER.register("mutation_table")
-def mutation_table(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
-    """Layer 6 — the exploded (doc_id, pos, base) mutation triple table,
-    the hub of the kernel family. The reference MATERIALIZES exactly this
-    relation (consensus_sequence_mutation_nucleotide, init.sql:403-410)
-    and rebuilds it per ingest; published here it serves K3/K4's
-    distance-batch queries without re-deriving the explode per consumer
-    (K1 and the lineage-counts table keep the inline build as the
-    end-to-end certification of the derivation itself)."""
-    from harvester_database_and_automation_spark.plans.kernels import _mutations
+@LAYER.register("simhash32_sig")
+def simhash32_sig(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
+    """Layer 6 — per-doc 32-bit SimHash signatures (doc_id, simhash32).
+    Besides sharing the fold, the published scan is a pushdown barrier:
+    join-inferred null checks on the band key cannot re-inline the fold
+    below the fan-out."""
+    from harvester_database_and_automation_spark.plans.text import _simhash32_sig
 
-    _, muts, _ = _mutations(spark, sf_dir)
-    return muts
+    return _simhash32_sig(spark, sf_dir)
+
+
+@LAYER.register("simhash64_sig")
+def simhash64_sig(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
+    """Layer 6 — per-doc 64-bit SimHash signatures as two 32-bit words
+    (doc_id, lo, hi); the same pushdown barrier as ``simhash32_sig``."""
+    from harvester_database_and_automation_spark.plans.text import _simhash64_sig
+
+    return _simhash64_sig(spark, sf_dir)
 
 
 @LAYER.register("winnow_fingerprints")
@@ -444,11 +444,20 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     """Layer 6 — the winnow fingerprint frame (doc_id, block, fp): the
     inverted-index input of the substring-overlap dedup signal. A dedup
     service persists fingerprints per ingest and pairs against the stored
-    table; `doc_winnow_fingerprints` keeps the inline rolling-hash build
-    as the derivation certification."""
+    table."""
     from harvester_database_and_automation_spark.plans.text import _winnow_fps
 
     return _winnow_fps(spark, sf_dir)
+
+
+@LAYER.register("ivf_index")
+def ivf_index(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
+    """Layer 6 — the ANN inverted file (vec_id, cid, sim, rk): per-vector
+    centroid similarities with assignment rank, the table a vector store
+    rebuilds only when centroids move."""
+    from harvester_database_and_automation_spark.plans.embeddings import _ivf_ranked
+
+    return _ivf_ranked(spark, sf_dir)
 
 
 @LAYER.register("pq_recon")
@@ -456,11 +465,60 @@ def pq_recon(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     """Layer 6 — per-vector PQ reconstructions (vec_id, rv): the decode of
     the stored 8-byte PQ codes against the broadcast codebook. In a vector
     store the codes table is the persisted artifact; publishing the decoded
-    frame serves the composed IVF-PQ probe the same way (the flat
-    `pq_adc_topk` keeps the inline encode as the recall certification)."""
+    frame serves the flat and the IVF-composed ADC scans the same way."""
     from harvester_database_and_automation_spark.plans.embeddings import _pq_recon
 
     return _pq_recon(spark, sf_dir)
+
+
+@LAYER.register("mutation_table")
+def mutation_table(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
+    """Layer 6 — the exploded (doc_id, pos, base) mutation triple table,
+    the hub of the kernel family. The reference MATERIALIZES exactly this
+    relation (consensus_sequence_mutation_nucleotide, init.sql:403-410)
+    and rebuilds it per ingest; every kernel query reads it from here."""
+    from harvester_database_and_automation_spark.plans.kernels import _mutations
+
+    return _mutations(spark, sf_dir)
+
+
+@LAYER.register("mutation_sets", depends_on=("mutation_table",))
+def mutation_sets(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
+    """Layer 7 — per-doc sorted int-encoded mutation sets (doc_id, mset),
+    the pivot K3 and K4 compute set distances on."""
+    from harvester_database_and_automation_spark.plans.kernels import _mutation_sets
+
+    return _mutation_sets(deps["mutation_table"])
+
+
+@LAYER.register("variant_calls")
+def variant_calls(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
+    """Layer 6 — per-(doc, variant) defining-site counts (doc_id, variant,
+    n_confirmed, n_unknown, n_sites): K2's call table, which the lineage
+    spectrum and the concordance report label documents from."""
+    from harvester_database_and_automation_spark.plans.kernels import _variant_calls
+
+    return _variant_calls(spark, sf_dir)
+
+
+@LAYER.register(
+    "lineage_mutation_counts",
+    depends_on=("mutation_table", "variant_calls"),
+    partition_by=("lang",),
+)
+def lineage_mutation_counts_table(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
+    """Layer 7 — the spectrum_pangolin_lineage_mutation MV family
+    (sequences_gisaid_api_based.sql:435-471): mutation counts + share per
+    (lang, lineage, mutation). Materializing it here is what collapses the
+    registered query's recompute exchanges into a single build per ingest —
+    exactly why the reference keeps these as materialized views."""
+    from harvester_database_and_automation_spark.plans.kernels import (
+        _lineage_mutation_counts,
+    )
+
+    return _lineage_mutation_counts(
+        spark, sf_dir, deps["mutation_table"], deps["variant_calls"]
+    )
 
 
 @LAYER.register("kmv_sketches")
@@ -527,10 +585,9 @@ def semdedup_assign(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
 def copurchase_edges(spark: SparkSession, sf_dir: str, deps) -> DataFrame:
     """Layer 6 — the weighted part co-purchase edge list (pa < pb, weight
     = co-occurring orders, pruned at weight >= 2): the graph hub that
-    `part_copurchase_pagerank` and `part_copurchase_triangles` derive
-    inline under the oracle gate. Published, the basket pair expansion
-    (the expensive map-side step) runs once per ingest; rank/triangle
-    jobs read int pairs."""
+    `part_copurchase_pagerank` and `part_copurchase_triangles` read.
+    Published, the basket pair expansion (the expensive map-side step)
+    runs once per ingest; rank/triangle jobs read int pairs."""
     from harvester_database_and_automation_spark.plans.text import _copurchase_edges
 
     return _copurchase_edges(spark, sf_dir)
@@ -583,7 +640,9 @@ def read_derived(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the same path re-keys) AND a sha256 over every ``.py`` file of the
     package, so existence of a published version IS the freshness check.
     The cost of that key: any edit to the package rebuilds each table
-    once per corpus, on its first read."""
+    once per corpus, on its first read. This is the only tier that shares
+    a hub between queries, so each consumer pays one parquet read of the
+    published table, and a cold store publishes each hub once."""
     root = _store_root(sf_dir)
     table_dir = os.path.join(root, name)
     try:

@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 
 from harvester_database_and_automation_spark.catalog import load_table
 from harvester_database_and_automation_spark.plans.registry import register
-from harvester_database_and_automation_spark.plans.shared import fanout, shared_df
+from harvester_database_and_automation_spark.pipelines.derived import read_derived
+from harvester_database_and_automation_spark.plans.shared import fanout
 
 # DuckDB-side cosine between two DOUBLE[] lists.
 _COS_SQL = (
@@ -52,11 +53,10 @@ def _emb_with_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     while producing bit-identical cosines (the division tree
     dot/(na*nb) is unchanged).
 
-    Deliberately NOT session-cached: caching the full vector frame would
-    hide the parquet scan behind an InMemoryRelation, defeating the
-    pushdown/pruning guarantees the physical-plan gates assert. Only the
-    narrow IVF assignment frame (ids + sims, no vectors) is shared — see
-    ``_ivf_ranked``."""
+    Deliberately NOT materialized: the vector frame stays a parquet scan,
+    keeping the pushdown/pruning guarantees the physical-plan gates
+    assert. Only the narrow IVF assignment frame (ids + sims, no vectors)
+    is published — see ``_ivf_ranked``."""
     e = _emb(spark, sf_dir)
     return e.withColumn("norm", F.sqrt(_dot(F.col("vec"), F.col("vec"))))
 
@@ -270,28 +270,25 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivf_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector centroid similarities with assignment rank — the
     inverted-file index frame (vec_id, cid, sim, rk), 8 rows per vector
-    and no payload columns. Both the IVF probe query and the recall
-    certification consume it, so it is session-shared: at 100 TB this IS
-    the materialized index table a vector store maintains, rebuilt only
-    when centroids move."""
-
-    def build() -> DataFrame:
-        e = _emb_with_norm(spark, sf_dir)
-        cents = F.broadcast(
-            e.filter(F.col("vec_id") < 8).select(
-                F.col("vec_id").alias("cid"), F.col("vec").alias("cv"), F.col("norm").alias("cn")
-            )
+    and no payload columns. The builder of the ``ivf_index`` derived
+    table, which the IVF probes, the recall certification and the
+    cell-diverse sample read: the materialized index table a vector store
+    maintains, rebuilt only when centroids move."""
+    e = _emb_with_norm(spark, sf_dir)
+    cents = F.broadcast(
+        e.filter(F.col("vec_id") < 8).select(
+            F.col("vec_id").alias("cid"), F.col("vec").alias("cv"), F.col("norm").alias("cn")
         )
-        vecs = _fanout(e.select("vec_id", "vec", "norm"))
-        vc = vecs.crossJoin(cents).select(
-            "vec_id",
-            "cid",
-            (_dot(F.col("vec"), F.col("cv")) / (F.col("norm") * F.col("cn"))).alias("sim"),
-        )
-        w_assign = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cid").asc())
-        return vc.withColumn("rk", F.row_number().over(w_assign))
+    )
+    vecs = _fanout(e.select("vec_id", "vec", "norm"))
+    vc = vecs.crossJoin(cents).select(
+        "vec_id",
+        "cid",
+        (_dot(F.col("vec"), F.col("cv")) / (F.col("norm") * F.col("cn"))).alias("sim"),
+    )
+    w_assign = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cid").asc())
+    return vc.withColumn("rk", F.row_number().over(w_assign))
 
-    return shared_df(spark, ("ivf_ranked", sf_dir), build)
 
 
 @register(
@@ -369,18 +366,14 @@ def _ivf_probe(
     queries: DataFrame,
     n_probe: int = 2,
     k: int = 3,
-    ranked: DataFrame | None = None,
 ) -> DataFrame:
     """IVF probe over an arbitrary query frame (query_id, qv, qn):
-    probe each query's top-``n_probe`` cells from the inverted file
-    (the session-shared build by default; pass ``ranked`` to probe a
-    MAINTAINED index table instead — the serving shape), exact-rerank
-    the cell members, return (query_id, neighbor_id, rk, sim) for
-    rk <= k. The registered probe queries and the recall certification
-    all route through this."""
+    probe each query's top-``n_probe`` cells from the MAINTAINED
+    ``ivf_index`` derived table, exact-rerank the cell members, return
+    (query_id, neighbor_id, rk, sim) for rk <= k. The registered probe
+    queries and the recall certification all route through this."""
     e = _emb_with_norm(spark, sf_dir)
-    if ranked is None:
-        ranked = _ivf_ranked(spark, sf_dir)
+    ranked = read_derived(spark, sf_dir, "ivf_index")
     assign = ranked.filter(F.col("rk") == 1).select("vec_id", F.col("cid").alias("cell"))
     probe = (
         ranked.join(queries.select(F.col("query_id").alias("vec_id")), "vec_id", "inner")
@@ -462,25 +455,13 @@ def ivf_probe_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sequences_gisaid_api_based.sql:22-113: the spectrum tables are
     read per query, refreshed per ingest — refreshes.sql:3-36).
 
-    `ivf_topk_probe` keeps the inline/session-shared build as the
-    certification of the whole pipeline; this query is the steady-state
-    plan a vector store actually executes per query batch, and the
-    100x scaling entry that replaces the rebuild-bound tail. The query
-    batch is a FIXED 64-vector hash draw (`_query_sample`) — a
-    modulus filter would grow the batch with the corpus and turn the
-    probe into an O(N x N/cells) scan, the exact corpus-proportional
-    sample defect the round-5 kernel reworks removed. The oracle
-    replays assignment + probe from the base table, so the publish +
-    read round-trip is itself hash-certified."""
-    from harvester_database_and_automation_spark.pipelines.derived import read_derived
-
-    ranked = read_derived(spark, sf_dir, "ivf_index")
-    e = _emb_with_norm(spark, sf_dir)
-    queries = _query_sample(e, 64).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qv"), F.col("norm").alias("qn")
-    )
-    topk = _ivf_probe(spark, sf_dir, queries, n_probe=2, k=3, ranked=ranked)
-    return topk.select("query_id", "neighbor_id", "rk", F.round("sim", 6).alias("sim"))
+    Every IVF probe now reads the published index, so this is the same
+    plan as `ivf_topk_probe`: the steady-state plan a vector store
+    executes per query batch, and the 100x scaling entry that replaces
+    the rebuild-bound tail. The oracle replays assignment + probe from
+    the base table, so the publish + read round-trip is itself
+    hash-certified."""
+    return ivf_topk_probe(spark, sf_dir)
 
 
 @register(
@@ -634,7 +615,7 @@ def ivf_recall_at_3(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution (n_hits in 0..3 -> how many queries) — the measurement
     that justifies shipping the bucketed ANN path at scale. The IVF side
     routes through the same `_ivf_probe` plan as the registered
-    ivf_topk_probe (reusing the session-shared inverted-file frame); the
+    ivf_topk_probe (reading the published `ivf_index` table); the
     ground-truth side is an Arrow-batched mapInPandas GEMM — the query
     block rides the closure, each reference partition computes its exact
     top-3 per query with one numpy matrix-product, and only
@@ -1164,8 +1145,6 @@ def semantic_dedup_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     the base table, so publish + read is hash-certified;
     `semantic_dedup_cells` stays registered as the inline end-to-end
     certification."""
-    from harvester_database_and_automation_spark.pipelines.derived import read_derived
-
     members = read_derived(spark, sf_dir, "semdedup_assign")
     return _semdedup_report(spark, members)
 
@@ -1180,49 +1159,46 @@ def _sq8_sql(a: str, b: str) -> str:
 def _pq_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector PQ reconstruction (vec_id, rv): 8 subspaces, per-label
     exemplar codewords, encode-by-argmin, decode by concatenating the
-    winning codewords. Session-shared (like `_ivf_ranked`) because both
-    the flat ADC scan and the IVF-PQ composition consume it — in
+    winning codewords. The builder of the ``pq_recon`` derived table,
+    which both the flat ADC scan and the IVF-PQ composition read — in
     production the stored artifact is the CODES table (8 B/vector) plus
     the broadcast codebook, and decode happens in the scoring expression;
-    the reconstruction frame here is that decode, materialized once per
-    session."""
+    the reconstruction frame here is that decode, published once per
+    corpus."""
+    e = _emb(spark, sf_dir)
+    subs = F.broadcast(spark.range(8).select(F.col("id").cast("int").alias("m")))
+    subvec = e.crossJoin(subs).select(
+        "vec_id", "label", "m", F.slice("vec", F.col("m") * 8 + 1, 8).alias("sv")
+    )
+    ex = e.groupBy("label").agg(F.min("vec_id").alias("ex_id"))
+    cw = F.broadcast(
+        subvec.join(ex, subvec["vec_id"] == ex["ex_id"], "inner").select(
+            "m", F.col("sv").alias("cwv"), subvec["label"].alias("code")
+        )
+    )
+    d2 = sum(
+        (F.element_at("sv", i) - F.element_at("cwv", i))
+        * (F.element_at("sv", i) - F.element_at("cwv", i))
+        for i in range(1, 9)
+    )
+    dists = _fanout(subvec).join(cw, "m").select("vec_id", "m", "code", d2.alias("d2"))
+    codes = (
+        dists.groupBy("vec_id", "m")
+        .agg(F.min(F.struct("d2", "code")).alias("best"))
+        .select("vec_id", "m", F.col("best.code").alias("code"))
+    )
+    return (
+        codes.join(cw.select("m", "code", "cwv"), ["m", "code"])
+        .groupBy("vec_id")
+        .agg(
+            F.flatten(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("m", "cwv"))), lambda s: s["cwv"]
+                )
+            ).alias("rv")
+        )
+    )
 
-    def build() -> DataFrame:
-        e = _emb(spark, sf_dir)
-        subs = F.broadcast(spark.range(8).select(F.col("id").cast("int").alias("m")))
-        subvec = e.crossJoin(subs).select(
-            "vec_id", "label", "m", F.slice("vec", F.col("m") * 8 + 1, 8).alias("sv")
-        )
-        ex = e.groupBy("label").agg(F.min("vec_id").alias("ex_id"))
-        cw = F.broadcast(
-            subvec.join(ex, subvec["vec_id"] == ex["ex_id"], "inner").select(
-                "m", F.col("sv").alias("cwv"), subvec["label"].alias("code")
-            )
-        )
-        d2 = sum(
-            (F.element_at("sv", i) - F.element_at("cwv", i))
-            * (F.element_at("sv", i) - F.element_at("cwv", i))
-            for i in range(1, 9)
-        )
-        dists = _fanout(subvec).join(cw, "m").select("vec_id", "m", "code", d2.alias("d2"))
-        codes = (
-            dists.groupBy("vec_id", "m")
-            .agg(F.min(F.struct("d2", "code")).alias("best"))
-            .select("vec_id", "m", F.col("best.code").alias("code"))
-        )
-        return (
-            codes.join(cw.select("m", "code", "cwv"), ["m", "code"])
-            .groupBy("vec_id")
-            .agg(
-                F.flatten(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("m", "cwv"))), lambda s: s["cwv"]
-                    )
-                ).alias("rv")
-            )
-        )
-
-    return shared_df(spark, ("pq_recon", sf_dir), build)
 
 
 @register(
@@ -1286,7 +1262,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor, then a per-query top-k window over Q x N narrow rows —
     vectors themselves never shuffle."""
     e = _emb(spark, sf_dir)
-    recon = _pq_recon(spark, sf_dir)
+    recon = read_derived(spark, sf_dir, "pq_recon")
     # FIXED-size query sample: a `vec_id % m` slice makes the ADC scan
     # O(Q x N) = O(N^2/m) and is why this query scaled superlinearly; a
     # PQ scan is definitionally linear per query, so a constant query
@@ -1392,12 +1368,9 @@ def ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC scan touches ~2N/k cell members instead of the full corpus, so
     total work is O(Q · N/k) narrow rows with the codebook and query
     block broadcast — no vector ever shuffles. The flat `pq_adc_topk`
-    keeps the inline PQ encode as the recall-ceiling certification and
-    `ivf_topk_probe` the inline IVF build; this query's oracle replays
-    both derivations from the base table, so the publish + read
-    round-trip is itself hash-certified."""
-    from harvester_database_and_automation_spark.pipelines.derived import read_derived
-
+    reads the same reconstructions as the recall-ceiling certification;
+    this query's oracle replays both derivations from the base table, so
+    the publish + read round-trip is itself hash-certified."""
     e = _emb_with_norm(spark, sf_dir)
     queries = _query_sample(e.select("vec_id", "vec", "norm"), 100).select(
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qv"), F.col("norm").alias("qn")
@@ -1582,11 +1555,11 @@ def ivf_cell_diverse_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding space, so per-cell quotas cover every region including
     sparse ones a uniform sample would miss.
 
-    Reuses the session-shared IVF index frame (`_ivf_ranked`) — sampling
-    rides the index a vector store already maintains; the per-cell
+    Reads the published IVF index (`ivf_index`) — sampling rides the
+    index a vector store already maintains; the per-cell
     ranking window runs over (cell, vec_id, jitter) triples, vectors
     never shuffle."""
-    assign = _ivf_ranked(spark, sf_dir).filter(F.col("rk") == 1).select(
+    assign = read_derived(spark, sf_dir, "ivf_index").filter(F.col("rk") == 1).select(
         "vec_id", F.col("cid").alias("cell")
     )
     jitter = F.expr("cast(conv(substr(md5(cast(vec_id as string)), 1, 15), 16, 10) as bigint)")

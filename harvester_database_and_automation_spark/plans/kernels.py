@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 from harvester_database_and_automation_spark.catalog import load_table
 from harvester_database_and_automation_spark.functions.genomics import pseudo_sequence
 from harvester_database_and_automation_spark.plans.registry import register
-from harvester_database_and_automation_spark.plans.shared import fanout, shared_df
+from harvester_database_and_automation_spark.pipelines.derived import read_derived
+from harvester_database_and_automation_spark.plans.shared import fanout
 
 # Pseudo-genome: the document's ACGT letters, uppercased (deterministic,
 # same expression both engines).
@@ -65,8 +66,11 @@ mut_sizes AS (
 """
 
 
-def _mutations(spark: SparkSession, sf_dir: str):
-    """(seqs, muts, sizes) DataFrames mirroring _MUTS_CTES.
+def _mutations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (doc_id, pos, base) mutation triple table mirroring
+    _MUTS_CTES' ``muts`` — the builder of the ``mutation_table`` derived
+    table, the hub of the kernel family (the reference materializes it as
+    consensus_sequence_mutation_nucleotide, init.sql:403-410).
 
     K1 — nucleotide mutation finder (general/NucleotideMutationFinder.java:
     76-117): aligned sequence vs broadcast reference, masked sites skipped,
@@ -77,31 +81,26 @@ def _mutations(spark: SparkSession, sf_dir: str):
     seqs = fanout(docs.select("doc_id", "text")).select(
         "doc_id", pseudo_sequence("text").alias("seq")
     )
-
-    def build_muts() -> DataFrame:
-        ref = seqs.filter(F.col("doc_id") == 0).select(F.col("seq").alias("refseq"))
-        site = F.substring(F.col("seq"), F.col("pos"), 1)
-        ref_site = F.substring(F.col("refseq"), F.col("pos"), 1)
-        return (
-            seqs.crossJoin(F.broadcast(ref))
-            .select("doc_id", "seq", "refseq", F.explode(F.sequence(F.lit(1), F.lit(_SEQ_WINDOW))).alias("pos"))
-            .filter(F.col("pos") <= F.least(F.length("seq"), F.length("refseq")))
-            .filter(site != ref_site)
-            .filter(site.isin("A", "C", "G", "T") & ref_site.isin("A", "C", "G", "T"))
-            .filter(~F.col("pos").isin(*_MASKED_SITES))
-            .select("doc_id", "pos", site.alias("base"))
-        )
-
-    # The mutation triple table is the shared hub of the kernel family (the
-    # reference materializes it as consensus_sequence_mutation_nucleotide) —
-    # persist it once per session; K1/K3/K4/lineage all reuse the partitions.
-    muts = shared_df(spark, ("muts", sf_dir), build_muts)
-    sizes = (
-        seqs.join(muts, "doc_id", "left")
-        .groupBy("doc_id")
-        .agg(F.count("pos").alias("sz"))
+    ref = seqs.filter(F.col("doc_id") == 0).select(F.col("seq").alias("refseq"))
+    site = F.substring(F.col("seq"), F.col("pos"), 1)
+    ref_site = F.substring(F.col("refseq"), F.col("pos"), 1)
+    return (
+        seqs.crossJoin(F.broadcast(ref))
+        .select("doc_id", "seq", "refseq", F.explode(F.sequence(F.lit(1), F.lit(_SEQ_WINDOW))).alias("pos"))
+        .filter(F.col("pos") <= F.least(F.length("seq"), F.length("refseq")))
+        .filter(site != ref_site)
+        .filter(site.isin("A", "C", "G", "T") & ref_site.isin("A", "C", "G", "T"))
+        .filter(~F.col("pos").isin(*_MASKED_SITES))
+        .select("doc_id", "pos", site.alias("base"))
     )
-    return seqs, muts, sizes
+
+
+def _mutation_sets(muts: DataFrame) -> DataFrame:
+    """Per-doc sorted int-encoded mutation set (doc_id, mset), encoding
+    pos*256 + base codepoint — the builder of the ``mutation_sets``
+    derived table over the published mutation triples."""
+    enc = (F.col("pos") * 256 + F.ascii("base")).cast("int")
+    return muts.groupBy("doc_id").agg(F.array_sort(F.collect_list(enc)).alias("mset"))
 
 
 # Portable multiplicative hash over doc ids (same Knuth constant and
@@ -142,25 +141,11 @@ def _pair_distances(spark: SparkSession, sf_dir: str, n_queries: int, r_cols):
     shuffle join, no recomputation of the mutation subtree per use, and
     genome strings never enter a shuffle (SURVEY.md §7 risk register).
     """
-    def build_msets() -> DataFrame:
-        # Production shape: the mutation triple table is read from the
-        # MAINTAINED `mutation_table` derived table (pipelines/derived.py),
-        # not re-exploded per consumer — the reference materializes exactly
-        # this relation (consensus_sequence_mutation_nucleotide,
-        # init.sql:403-410) and serves every kernel from it. K1 keeps the
-        # inline explode as the derivation's end-to-end certification, and
-        # K3/K4's oracles replay the derivation from raw text, so the
-        # publish + read round-trip stays hash-certified.
-        from harvester_database_and_automation_spark.pipelines.derived import (
-            read_derived,
-        )
-
-        muts = read_derived(spark, sf_dir, "mutation_table")
-        enc = (F.col("pos") * 256 + F.ascii("base")).cast("int")
-        return muts.groupBy("doc_id").agg(F.array_sort(F.collect_list(enc)).alias("mset"))
-
-    # K3 and K4 both pivot on the per-doc mutation set; persist it once.
-    msets = shared_df(spark, ("msets", sf_dir), build_msets)
+    # K3 and K4 both pivot on the per-doc mutation set, read from the
+    # `mutation_sets` derived table (itself built from the published
+    # `mutation_table`). K3/K4's oracles replay the derivation from raw
+    # text, so what they certify is the publish + read round trip.
+    msets = read_derived(spark, sf_dir, "mutation_sets")
     docs = load_table(spark, sf_dir, "documents")
     base = docs.join(msets, "doc_id", "left").withColumn(
         "mset", F.coalesce(F.col("mset"), F.array().cast("array<int>"))
@@ -206,7 +191,7 @@ def k1_mutation_finder(spark: SparkSession, sf_dir: str) -> DataFrame:
     spectrum (position, base, #sequences). The exploded long-format mutation
     table is the same shape as consensus_sequence_mutation_nucleotide
     (/root/reference/database/init.sql:403-410)."""
-    _, muts, _ = _mutations(spark, sf_dir)
+    muts = read_derived(spark, sf_dir, "mutation_table")
     return muts.groupBy("pos", "base").agg(F.count(F.lit(1)).alias("n_seqs"))
 
 
@@ -603,26 +588,23 @@ def a11_mean_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _variant_calls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(doc, variant) defining-site classification — the shared core of
     K2 and the lineage-spectrum MV (which labels each doc with its best
-    call). Persisted per session like the reference's variant call tables."""
-
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents")
-        seqs = fanout(docs.select("doc_id", "text")).select(
-            "doc_id", pseudo_sequence("text").alias("seq")
+    call). The builder of the ``variant_calls`` derived table, the analog
+    of the reference's variant call tables."""
+    docs = load_table(spark, sf_dir, "documents")
+    seqs = fanout(docs.select("doc_id", "text")).select(
+        "doc_id", pseudo_sequence("text").alias("seq")
+    )
+    defs = spark.createDataFrame(_VARIANT_DEFS, "variant string, pos int, base string")
+    site = F.substring(F.col("seq"), F.col("pos"), 1)
+    return (
+        seqs.crossJoin(F.broadcast(defs))
+        .groupBy("doc_id", "variant")
+        .agg(
+            F.sum(F.when(site == F.col("base"), 1).otherwise(0)).cast("bigint").alias("n_confirmed"),
+            F.sum(F.when(site == "", 1).otherwise(0)).cast("bigint").alias("n_unknown"),
+            F.count(F.lit(1)).alias("n_sites"),
         )
-        defs = spark.createDataFrame(_VARIANT_DEFS, "variant string, pos int, base string")
-        site = F.substring(F.col("seq"), F.col("pos"), 1)
-        return (
-            seqs.crossJoin(F.broadcast(defs))
-            .groupBy("doc_id", "variant")
-            .agg(
-                F.sum(F.when(site == F.col("base"), 1).otherwise(0)).cast("bigint").alias("n_confirmed"),
-                F.sum(F.when(site == "", 1).otherwise(0)).cast("bigint").alias("n_unknown"),
-                F.count(F.lit(1)).alias("n_sites"),
-            )
-        )
-
-    return shared_df(spark, ("variant_calls", sf_dir), build)
+    )
 
 
 @register(
@@ -653,7 +635,7 @@ def k2_variant_caller(spark: SparkSession, sf_dir: str) -> DataFrame:
     the definition (database/sql/consensus_sequence.sql:21-72; GISAID
     version gisaid.sql:170-254). crossJoin(sequences, defs) + conditional
     agg, with the small definition table broadcast."""
-    calls = _variant_calls(spark, sf_dir)
+    calls = read_derived(spark, sf_dir, "variant_calls")
     return calls.groupBy("variant").agg(
         F.sum(F.when(F.col("n_confirmed") >= 0.8 * F.col("n_sites"), 1).otherwise(0))
         .cast("bigint")
@@ -854,8 +836,8 @@ def k10_base_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared by `lineage_mutation_counts` (inline end-to-end certification of
-# the K1 x K2 + share-of-group composition) and
+# Shared by `lineage_mutation_counts` (the K1 x K2 + share-of-group
+# composition over the published hub tables) and
 # `lineage_mutation_counts_served` (reads the MAINTAINED derived table):
 # the oracle always replays the full derivation from raw text.
 _LINEAGE_MUTATION_ORACLE = f"""
@@ -905,13 +887,24 @@ def lineage_mutation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant name; 'NONE' when nothing reaches 80%).
 
     Composition of K1 (mutation table) x K2 (variant call) + the A7
-    share-of-total join. In production the lineage and mutation tables are
-    materialized once in the derived layer (pipelines/derived.py); under
-    the oracle gate each is recomputed from raw text, which is where the
-    extra exchanges come from.
+    share-of-total join, over the published ``mutation_table`` and
+    ``variant_calls`` derived tables; the oracle recomputes both from raw
+    text.
     """
-    _, muts, _ = _mutations(spark, sf_dir)
-    calls = _variant_calls(spark, sf_dir)
+    return _lineage_mutation_counts(
+        spark,
+        sf_dir,
+        read_derived(spark, sf_dir, "mutation_table"),
+        read_derived(spark, sf_dir, "variant_calls"),
+    )
+
+
+def _lineage_mutation_counts(
+    spark: SparkSession, sf_dir: str, muts: DataFrame, calls: DataFrame
+) -> DataFrame:
+    """`lineage_mutation_counts` over given mutation-triple and
+    variant-call frames — shared with the derived table of that name,
+    which passes its published dependencies."""
     lineage = calls.groupBy("doc_id").agg(
         F.min(
             F.when(
@@ -954,20 +947,10 @@ def lineage_mutation_counts_served(spark: SparkSession, sf_dir: str) -> DataFram
     derivation exchanges in the plan. The oracle replays the full
     K1 x K2 + share-of-group derivation from raw text, so the publish +
     read round-trip is hash-certified; `lineage_mutation_counts` stays
-    registered as the inline certification of the derivation itself."""
-    from harvester_database_and_automation_spark.pipelines.derived import read_derived
-
+    registered as the certification of the composition over the
+    published hub tables."""
     t = read_derived(spark, sf_dir, "lineage_mutation_counts")
     return t.select("lang", "lineage", "pos", "base", "n_seqs", "share")
-
-
-def _served_muts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The maintained (doc_id, pos, base) mutation triple table — the
-    consensus_sequence_mutation_nucleotide analog every ad-hoc analysis
-    in the reference's sql/ directory queries directly."""
-    from harvester_database_and_automation_spark.pipelines.derived import read_derived
-
-    return read_derived(spark, sf_dir, "mutation_table")
 
 
 @register(
@@ -1007,7 +990,7 @@ def lineage_common_mutations(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts onto the <= |positions|x4 count frame. The oracle replays
     the mutation derivation from raw text, keeping the publish + read
     round-trip hash-certified."""
-    muts = _served_muts(spark, sf_dir)
+    muts = read_derived(spark, sf_dir, "mutation_table")
     lineage_docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("lang") == "de")
@@ -1074,7 +1057,7 @@ def variant_panel_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mutation-load LEFT JOIN aggregates the served `mutation_table`
     once. Every join is on doc_id — AQE broadcasts the detected set when
     small and falls back to shuffle when a real outbreak makes it big."""
-    muts = _served_muts(spark, sf_dir)
+    muts = read_derived(spark, sf_dir, "mutation_table")
     docs = load_table(spark, sf_dir, "documents")
     panel = spark.createDataFrame(_PANEL_DEFS, "pos int, base string")
     hits = (
@@ -1177,7 +1160,7 @@ def variant_outcome_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT-EXISTS self-join), the variant flag joins the served
     `mutation_table` against a 5-row broadcast panel, and the final
     contingency is a 9-group conditional agg."""
-    muts = _served_muts(spark, sf_dir)
+    muts = read_derived(spark, sf_dir, "mutation_table")
     docs = load_table(spark, sf_dir, "documents")
     adefs = spark.createDataFrame(
         [(p, b) for v, p, b in _VARIANT_DEFS if v == "ALPHA"], "pos int, base string"
@@ -1296,17 +1279,17 @@ def seq_method_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
     load from the served `mutation_table`, experiment batch := source
     'src2'.
 
-    Scale shape: the lineage call reuses the session-shared K2 calls
-    frame (broadcast 10-row definition panel); the EXISTS cohort is a
-    LEFT SEMI against the broadcast batch id list, derived from the raw
-    table rather than from per_doc (a per_doc-derived cohort would state
-    the whole K2 subtree twice — the audit's exchange-storm rule caught
-    that in the first cut); string_aggs are collect_list + array_sort
-    over per-entity groups of exactly two rows, so no group ever exceeds
-    the method count."""
-    muts = _served_muts(spark, sf_dir)
+    Scale shape: the lineage call reads K2's published `variant_calls`
+    table, so the variant-definition cross join is not in the plan; the
+    EXISTS cohort is a LEFT SEMI against the broadcast batch id list,
+    derived from the raw table rather than from per_doc (a
+    per_doc-derived cohort would state the K2 calls subtree twice — the
+    audit's exchange-storm rule caught that in the first cut);
+    string_aggs are collect_list + array_sort over per-entity groups of
+    exactly two rows, so no group ever exceeds the method count."""
+    muts = read_derived(spark, sf_dir, "mutation_table")
     docs = load_table(spark, sf_dir, "documents")
-    calls = _variant_calls(spark, sf_dir)
+    calls = read_derived(spark, sf_dir, "variant_calls")
     lineage = calls.groupBy("doc_id").agg(
         F.min(
             F.when(

@@ -1,23 +1,13 @@
-"""Session-scoped shared subplans.
+"""Helpers shared by the plan modules: scratch directories for replay
+queries, split-aware fan-out, and exact grouped quantiles.
 
-Several registered queries consume the same expensive intermediate — the
-exploded mutation table feeds K1/K3/K4/lineage counts, the shingle table
-feeds the whole Jaccard/MinHash dedup family. Re-deriving that subtree per
-query is pure waste in any session that runs more than one of them (the
-bench harness, a notebook, a scheduled report batch), so the first consumer
-materializes it with ``persist(MEMORY_AND_DISK)`` and later consumers reuse
-the cached partitions.
-
-This mirrors the reference's design, where those intermediates are *tables*
-(``consensus_sequence_mutation_nucleotide``, populated once and queried by
-every downstream report — /root/reference/database/init.sql:403-410) rather
-than per-query recomputations.
-
-Scale note (100 TB): what is a ``persist`` here becomes a materialized
-derived table via ``operators/publish.py`` on a real cluster — the cache is
-the single-session analogue, not the deployment strategy. Only narrow
-post-aggregation frames (mutation triples, shingle ids, signature sets) are
-ever cached; raw text/genome payloads stay in the scan.
+Intermediates that several queries consume (the mutation triple table,
+the shingle table, signature and index frames) are not cached here: they
+are derived tables (``pipelines/derived.py``), published once per corpus
+content and package code and read by every consumer with
+``read_derived``. That mirrors the reference, where those intermediates
+are tables (``consensus_sequence_mutation_nucleotide``, populated once
+and queried by every downstream report — init.sql:403-410).
 """
 
 from __future__ import annotations
@@ -25,12 +15,8 @@ from __future__ import annotations
 import atexit
 import shutil
 import tempfile
-from typing import Callable
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
-
-_ATTR = "_hdas_shared_plans"
+from pyspark.sql import DataFrame
 
 _SCRATCH_DIRS: list[str] = []
 
@@ -69,8 +55,10 @@ def fanout(df: DataFrame) -> DataFrame:
     shuffle, so it is skipped.
 
     Split detection estimates the scan's partition count from its input
-    files' on-disk sizes (sum of ceil(size / maxPartitionBytes)) — the
-    same arithmetic FilePartition uses, at the cost of a file listing.
+    files' on-disk sizes (sum of ceil(size / maxPartitionBytes), with the
+    byte value the session itself parsed from the setting, so "64m" is
+    64 MiB) — the same arithmetic FilePartition uses, at the cost of a
+    file listing.
     The previous probe, ``df.rdd.getNumPartitions()``, forced a full
     plan-to-RDD conversion worth 0.1-1s of driver time PER QUERY; the
     listing is ~10x cheaper and warm-cached by the session catalog.
@@ -82,8 +70,7 @@ def fanout(df: DataFrame) -> DataFrame:
     n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     files = df.inputFiles()
     if files:
-        raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-        max_bytes = int("".join(ch for ch in raw if ch.isdigit()) or "134217728")
+        max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
         splits = 0
         for f in files:
             path = f.removeprefix("file://").removeprefix("file:")
@@ -98,18 +85,6 @@ def fanout(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)
-
-
-def shared_df(spark: SparkSession, key: tuple, builder: Callable[[], DataFrame]) -> DataFrame:
-    """Return the session-cached DataFrame for ``key``, building + persisting
-    it on first use. ``key`` must include every input the plan depends on
-    (at minimum the sf_dir)."""
-    cache: dict = spark.__dict__.setdefault(_ATTR, {})
-    df = cache.get(key)
-    if df is None:
-        df = builder().persist(StorageLevel.MEMORY_AND_DISK)
-        cache[key] = df
-    return df
 
 
 def group_quantiles_exact(df: DataFrame, group_cols: list, value_col: str, qs: list):
@@ -295,12 +270,3 @@ def group_quantiles_binned(
         dist, group_cols, value_col, "cnt", qs, bins_per_octave=bins_per_octave
     )
 
-
-def clear_shared(spark: SparkSession) -> None:
-    """Unpersist and drop every shared subplan (test isolation hook)."""
-    cache: dict = spark.__dict__.pop(_ATTR, {})
-    for df in cache.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass

@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 
 from harvester_database_and_automation_spark.catalog import load_table
 from harvester_database_and_automation_spark.plans.registry import register
-from harvester_database_and_automation_spark.plans.shared import fanout, shared_df
+from harvester_database_and_automation_spark.pipelines.derived import read_derived
+from harvester_database_and_automation_spark.plans.shared import fanout
 
 # Shared CTE: distinct 3-word shingles per document (dedup unit of the
 # MinHash/Jaccard family). DuckDB arrays are 1-based.
@@ -34,32 +35,28 @@ _fanout = fanout  # shared split-aware repartition (plans/shared.py)
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct 3-word shingles per doc, via higher-order functions (no UDF).
 
-    Shared hub of the dedup family (Jaccard pairs, connected components,
-    MinHash/LSH all start here) — persisted once per session so the
-    explode+distinct shuffle runs once, not once per consumer."""
-
-    def build() -> DataFrame:
-        docs = _fanout(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-        # Guard sub-shingle documents BEFORE the sequence: Spark's
-        # sequence(0, n-3) runs DESCENDING for n < 3 and the resulting
-        # slice(words, 0, 3) is a runtime error — a 2-token document
-        # would kill the whole dedup family, where the oracle's
-        # generate_series is simply empty (same trap as cdc_chunk_stats).
-        return (
-            docs.filter(F.size(F.split("text", " ")) >= 3)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(0, size(split(text, ' ')) - 3),"
-                        " i -> concat_ws(' ', slice(split(text, ' '), i + 1, 3)))"
-                    )
-                ).alias("shingle"),
-            )
-            .distinct()
+    Hub of the dedup family (Jaccard pairs, connected components,
+    MinHash/LSH all start here): the ``shingles`` derived table builds it
+    once per corpus and consumers read it with ``read_derived``."""
+    docs = _fanout(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
+    # Guard sub-shingle documents BEFORE the sequence: Spark's
+    # sequence(0, n-3) runs DESCENDING for n < 3 and the resulting
+    # slice(words, 0, 3) is a runtime error — a 2-token document
+    # would kill the whole dedup family, where the oracle's
+    # generate_series is simply empty (same trap as cdc_chunk_stats).
+    return (
+        docs.filter(F.size(F.split("text", " ")) >= 3)
+        .select(
+            "doc_id",
+            F.explode(
+                F.expr(
+                    "transform(sequence(0, size(split(text, ' ')) - 3),"
+                    " i -> concat_ws(' ', slice(split(text, ' '), i + 1, 3)))"
+                )
+            ).alias("shingle"),
         )
-
-    return shared_df(spark, ("shingles", sf_dir), build)
+        .distinct()
+    )
 
 
 @register(
@@ -340,12 +337,17 @@ def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer-valued throughout, so Spark and the oracle agree exactly on
     any plan. Scale shape: the explode is map-side (no shuffle until the
     per-(doc, block) min, which partial-aggregates), and documents hash
-    independently — embarrassingly parallel over doc partitions.
+    independently — embarrassingly parallel over doc partitions. Read
+    from the ``winnow_fingerprints`` derived table; the oracle replays the
+    fingerprinting from raw text, so the publish + read round trip is
+    hash-certified.
     """
-    return _winnow_fps(spark, sf_dir)
+    return read_derived(spark, sf_dir, "winnow_fingerprints")
 
 
-def _build_winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The winnow fingerprint frame (doc_id, block, fp) — the builder of
+    the ``winnow_fingerprints`` derived table."""
     docs = _fanout(
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
@@ -367,14 +369,6 @@ def _build_winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
         h.alias("h"),
     )
     return hashed.groupBy("doc_id", "block").agg(F.min("h").alias("fp"))
-
-
-def _winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-shared winnow fingerprint frame (doc_id, block, fp) —
-    built once for the fingerprint report and the overlap pair search."""
-    return shared_df(
-        spark, ("winnow_fps", sf_dir), lambda: _build_winnow_fps(spark, sf_dir)
-    )
 
 
 @register(
@@ -431,13 +425,10 @@ def substring_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: an inverted-index equi-join on the fingerprint value over
     the MAINTAINED `winnow_fingerprints` derived table (pipelines/
     derived.py `read_derived` — fingerprinting runs once per ingest, the
-    pair search scans the published table; `doc_winnow_fingerprints`
-    keeps the inline rolling-hash build as the derivation certification,
-    and this oracle replays it from raw text so publish + read is
-    hash-certified) — cost tracks fingerprint-bucket collisions, never
+    pair search scans the published table; this oracle replays the
+    fingerprinting from raw text, so publish + read is hash-certified)
+    — cost tracks fingerprint-bucket collisions, never
     |docs|²; text itself never enters the join."""
-    from harvester_database_and_automation_spark.pipelines.derived import read_derived
-
     dfp = read_derived(spark, sf_dir, "winnow_fingerprints").select("doc_id", "fp").distinct()
     sizes = dfp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fps"))
     # Document-frequency pruning before the self-join: a fingerprint in a
@@ -518,39 +509,8 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full derivation from raw text, so the publish + read round-trip
     is itself hash-certified. Reference analog: the MV serving layer,
     sequences_gisaid_api_based.sql:22-113 / refreshes.sql:3-36."""
-    from harvester_database_and_automation_spark.pipelines.derived import read_derived
-
     pairs = read_derived(spark, sf_dir, "dup_pairs")
     return pairs.select("doc_a", "doc_b", F.round(F.col("jaccard"), 6).alias("jaccard"))
-
-
-def _jaccard_pairs(spark: SparkSession, sf_dir: str, threshold: float) -> DataFrame:
-    """Shingle-Jaccard pairs above ``threshold``, jaccard left UNROUNDED so
-    every consumer thresholds on the identical double the oracle computes.
-
-    The scored (unthresholded) pair table is persisted per session: the
-    inverted-index self-join is the expensive step and both the pair report
-    (>= 0.1) and the dup-clustering edge list (>= 0.5) slice the same frame."""
-
-    def build() -> DataFrame:
-        sh = _shingles(spark, sf_dir)
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-        a = sh.alias("a")
-        b = sh.alias("b")
-        inter = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        jac = F.col("n_common") * 1.0 / (F.col("s1.sz") + F.col("s2.sz") - F.col("n_common"))
-        return (
-            inter.join(sizes.alias("s1"), F.col("doc_a") == F.col("s1.doc_id"))
-            .join(sizes.alias("s2"), F.col("doc_b") == F.col("s2.doc_id"))
-            .select("doc_a", "doc_b", jac.alias("jaccard"))
-        )
-
-    scored = shared_df(spark, ("jaccard_scored", sf_dir), build)
-    return scored.filter(F.col("jaccard") >= threshold)
 
 
 @register(
@@ -611,7 +571,7 @@ def dup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.length("text").alias("doc_len")
     )
-    edges = _jaccard_pairs(spark, sf_dir, 0.5).select("doc_a", "doc_b")
+    edges = read_derived(spark, sf_dir, "dup_pairs").filter("jaccard >= 0.5").select("doc_a", "doc_b")
     labels = alternating_star_components(edges, src="doc_a", dst="doc_b")
     comp = (
         docs.join(labels, docs.doc_id == labels.node, "left")
@@ -673,8 +633,6 @@ def shingle_novelty_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing; the oracle replays the derivation from raw text, keeping
     publish + read hash-certified. Integer-exact throughout except the
     final per-source ratio (one division, both engines)."""
-    from harvester_database_and_automation_spark.pipelines.derived import read_derived
-
     sh = read_derived(spark, sf_dir, "shingle_index").withColumnRenamed(
         "shingle_digest", "shingle"
     )
@@ -746,7 +704,7 @@ def incremental_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     split_at = 250
-    edges = _jaccard_pairs(spark, sf_dir, 0.5).select("doc_a", "doc_b")
+    edges = read_derived(spark, sf_dir, "dup_pairs").filter("jaccard >= 0.5").select("doc_a", "doc_b")
     prior = edges.filter(F.col("doc_b") < split_at)
     delta = edges.filter(F.col("doc_b") >= split_at)
     prior_map = alternating_star_components(prior, src="doc_a", dst="doc_b")
@@ -771,26 +729,72 @@ _MINHASH_PERMS_SQL = ", ".join(
 )
 
 
-def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc 16-component MinHash signature (doc_id, m0..m15), session-
-    shared: all 16 minhashes are min-aggregates of ONE groupBy over the
+def _minhash_sigs(shingles: DataFrame) -> DataFrame:
+    """Per-doc 16-component MinHash signature (doc_id, m0..m15) over the
+    shingle frame — the builder of the ``minhash_signatures`` derived
+    table: all 16 minhashes are min-aggregates of ONE groupBy over the
     shingle base hash, so partial (map-side) aggregation ships at most 16
-    values per doc per task — the shape that survives a 100 TB corpus. The
-    LSH banding query and the estimator-calibration query both consume it;
-    at scale this IS the persisted signature table a dedup service keeps."""
+    values per doc per task — the shape that survives a 100 TB corpus."""
+    sh = shingles.withColumn(
+        "m", F.expr("cast(conv(substr(md5(shingle), 1, 8), 16, 10) as bigint)")
+    )
+    return sh.groupBy("doc_id").agg(
+        *[
+            F.min((F.lit(a) * F.col("m") + F.lit(b)) % F.lit(_MINHASH_P)).alias(f"m{h}")
+            for h, (a, b) in enumerate(_MINHASH_PERMS)
+        ]
+    )
 
-    def build() -> DataFrame:
-        sh = _shingles(spark, sf_dir).withColumn(
-            "m", F.expr("cast(conv(substr(md5(shingle), 1, 8), 16, 10) as bigint)")
-        )
-        return sh.groupBy("doc_id").agg(
-            *[
-                F.min((F.lit(a) * F.col("m") + F.lit(b)) % F.lit(_MINHASH_P)).alias(f"m{h}")
-                for h, (a, b) in enumerate(_MINHASH_PERMS)
-            ]
-        )
 
-    return shared_df(spark, ("minhash_sigs", sf_dir), build)
+def _lsh_candidates(sigs: DataFrame) -> DataFrame:
+    """LSH banding (4 bands x 4 rows) over a signature frame: the
+    distinct doc pairs agreeing on any band signature."""
+    band_structs = [
+        F.struct(
+            F.lit(band).alias("band"),
+            F.md5(F.concat_ws(",", *[F.col(f"m{band * 4 + i}") for i in range(4)])).alias("band_sig"),
+        )
+        for band in range(4)
+    ]
+    bands = sigs.select(
+        "doc_id", F.explode(F.array(*band_structs)).alias("bs")
+    ).select("doc_id", F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig"))
+    a = bands.alias("a")
+    b = bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.band_sig") == F.col("b.band_sig"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+def _minhash_calib_matched(sigs: DataFrame) -> DataFrame:
+    """LSH candidate pairs scored by their count of matching signature
+    components (doc_a, doc_b, n_sig_match) — the builder of the
+    ``minhash_calib_matched`` derived table. The calibration reads it in
+    four branches (sample windows, bucket totals and the sample's two
+    exact-Jaccard probes), so it is published rather than replayed per
+    branch: at scale it is the scored-pair table a dedup service keeps
+    anyway (narrow int triples)."""
+    sa = sigs.select(F.col("doc_id").alias("doc_a"), *[F.col(f"m{h}").alias(f"a{h}") for h in range(16)])
+    sb = sigs.select(F.col("doc_id").alias("doc_b"), *[F.col(f"m{h}").alias(f"b{h}") for h in range(16)])
+    return (
+        _lsh_candidates(sigs)
+        .join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            sum((F.col(f"a{h}") == F.col(f"b{h}")).cast("int") for h in range(16))
+            .cast("int")
+            .alias("n_sig_match"),
+        )
+    )
 
 
 # Shared oracle CTE chain: per-doc per-permutation minhash, band signatures,
@@ -891,29 +895,7 @@ def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     per bucket over the <=64k survivors) so no task ever sorts a whole
     bucket's candidate set; the global per-bucket sample is preserved
     exactly because every global winner survives its sub-bucket cut."""
-    def build_matched() -> DataFrame:
-        cands = minhash_lsh_candidates(spark, sf_dir)
-        sigs = _minhash_sigs(spark, sf_dir)
-        sa = sigs.select(F.col("doc_id").alias("doc_a"), *[F.col(f"m{h}").alias(f"a{h}") for h in range(16)])
-        sb = sigs.select(F.col("doc_id").alias("doc_b"), *[F.col(f"m{h}").alias(f"b{h}") for h in range(16)])
-        return (
-            cands.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                sum((F.col(f"a{h}") == F.col(f"b{h}")).cast("int") for h in range(16))
-                .cast("int")
-                .alias("n_sig_match"),
-            )
-        )
-
-    # Session-shared: the scored-candidate frame feeds FOUR branches
-    # (sample windows, bucket totals, and the sample's two exact-Jaccard
-    # probes) — uncached, each branch would replay the signature joins.
-    # At scale this frame is the maintained scored-pair table a dedup
-    # service keeps anyway (narrow int triples).
-    matched = shared_df(spark, ("minhash_calib_matched", sf_dir), build_matched)
+    matched = read_derived(spark, sf_dir, "minhash_calib_matched")
     pair_hash = (
         (
             (F.col("doc_a") % F.lit(1_000_000_007)) * F.lit(1_000_003)
@@ -932,20 +914,21 @@ def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("rk", "sub")
     )
     w2 = Window.partitionBy("n_sig_match").orderBy("ph", "doc_a", "doc_b")
-    # <=17 buckets x 40 rows: checkpoint so the three consuming branches
-    # read the materialized sample, not three replays of the windows.
+    # <=17 buckets (n_sig_match is 0..16) x 40 rows: collect the sample so
+    # the three consuming branches read a local relation, not three
+    # replays of the windows — a bounded driver action that pins nothing.
     sample = (
         lvl1.withColumn("rk", F.row_number().over(w2))
         .filter(F.col("rk") <= s_cap)
         .select("doc_a", "doc_b", "n_sig_match")
-        .localCheckpoint(eager=True)
     )
+    sample = spark.createDataFrame(sample.collect(), sample.schema)
     totals = matched.groupBy("n_sig_match").agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
 
     # Exact Jaccard for the sampled pairs ONLY: prune the shingle frame to
     # the <=2 x 17 x sample docs first (broadcast semi-join), then the
     # intersection join touches sample-proportional rows, not the corpus.
-    sh = _shingles(spark, sf_dir)
+    sh = read_derived(spark, sf_dir, "shingles")
     docs_needed = (
         sample.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id")).distinct()
     )
@@ -1013,31 +996,11 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This is the 100TB-scale dedup path: signature generation is a map-side
     explode+agg, candidate generation an equi-join on (band, signature) —
-    cost is proportional to collisions, not to |docs|^2.
+    cost is proportional to collisions, not to |docs|^2. The signatures
+    are read from the ``minhash_signatures`` derived table; the oracle
+    replays their derivation from raw text.
     """
-    sigs = _minhash_sigs(spark, sf_dir)
-    band_structs = [
-        F.struct(
-            F.lit(band).alias("band"),
-            F.md5(F.concat_ws(",", *[F.col(f"m{band * 4 + i}") for i in range(4)])).alias("band_sig"),
-        )
-        for band in range(4)
-    ]
-    bands = sigs.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bs")
-    ).select("doc_id", F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig"))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    return _lsh_candidates(read_derived(spark, sf_dir, "minhash_signatures"))
 
 
 @register(
@@ -1071,35 +1034,11 @@ def minhash_lsh_candidates_served(spark: SparkSession, sf_dir: str) -> DataFrame
     plan a signature service runs per ingest — published-parquet scan,
     band explode (map-side), one equi-join on (band, band_sig), distinct.
     Signature GENERATION (the shingle explode + 16-way min agg) moves to
-    ingest time; `minhash_lsh_candidates` keeps the inline build as the
-    end-to-end certification. The oracle replays the whole derivation
-    from raw text, so the publish + read round-trip is hash-certified.
-    Reference analog: the MV serving layer, refreshes.sql:3-36."""
-    from harvester_database_and_automation_spark.pipelines.derived import read_derived
-
-    sigs = read_derived(spark, sf_dir, "minhash_signatures")
-    band_structs = [
-        F.struct(
-            F.lit(band).alias("band"),
-            F.md5(F.concat_ws(",", *[F.col(f"m{band * 4 + i}") for i in range(4)])).alias("band_sig"),
-        )
-        for band in range(4)
-    ]
-    bands = sigs.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bs")
-    ).select("doc_id", F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig"))
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    ingest time, so this is the same plan as `minhash_lsh_candidates`.
+    The oracle replays the whole derivation from raw text, so the
+    publish + read round-trip is hash-certified. Reference analog: the
+    MV serving layer, refreshes.sql:3-36."""
+    return _lsh_candidates(read_derived(spark, sf_dir, "minhash_signatures"))
 
 
 @register(
@@ -1180,6 +1119,36 @@ _SIMHASH32_SQL = """
 """
 
 
+def _simhash32_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc 32-bit SimHash (doc_id, simhash32) — the builder of the
+    ``simhash32_sig`` derived table, the signature table a production
+    dedup service maintains. Reading the published table also keeps
+    join-inferred IsNotNull(band_val) checks from inlining the whole
+    signature fold below the fanout repartition (measured as a
+    single-task re-evaluation of the fold per join side): the parquet
+    scan is a pushdown barrier."""
+    docs = _fanout(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
+    return docs.select(
+        "doc_id",
+        F.expr(
+            """
+            aggregate(
+              zip_with(
+                aggregate(
+                  transform(array_distinct(split(text, ' ')),
+                            w -> cast(conv(reverse(substr(md5(w), 1, 8)), 16, 10) as bigint)),
+                  array_repeat(0L, 32),
+                  (acc, m) -> zip_with(acc, sequence(0, 31),
+                                       (a, b) -> a + ((m >> b) & 1))),
+                sequence(0, 31),
+                (cnt, b) -> if(2 * cnt >= size(array_distinct(split(text, ' '))),
+                               shiftleft(cast(1 as bigint), b), cast(0 as bigint))),
+              cast(0 as bigint), (x, y) -> x + y)
+            """
+        ).alias("simhash32"),
+    )
+
+
 @register(
     "simhash_hamming_pairs",
     survey_ref="dedup-simhash,J1,A1",
@@ -1217,35 +1186,7 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     thin; the plan is unchanged. The signature itself is the
     simhash_buckets construction at double width — still a zero-shuffle
     per-document fold."""
-    # Session-shared SIGNATURE TABLE (the artifact a production dedup
-    # service maintains, like the MinHash signatures in
-    # pipelines/derived.py). The persist is also the pushdown barrier
-    # that keeps join-inferred IsNotNull(band_val) checks from inlining
-    # the whole signature fold below the fanout repartition — measured
-    # as a single-task re-evaluation of the fold per join side.
-    def build_sig() -> DataFrame:
-        docs = _fanout(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-        return docs.select(
-            "doc_id",
-            F.expr(
-                """
-                aggregate(
-                  zip_with(
-                    aggregate(
-                      transform(array_distinct(split(text, ' ')),
-                                w -> cast(conv(reverse(substr(md5(w), 1, 8)), 16, 10) as bigint)),
-                      array_repeat(0L, 32),
-                      (acc, m) -> zip_with(acc, sequence(0, 31),
-                                           (a, b) -> a + ((m >> b) & 1))),
-                    sequence(0, 31),
-                    (cnt, b) -> if(2 * cnt >= size(array_distinct(split(text, ' '))),
-                                   shiftleft(cast(1 as bigint), b), cast(0 as bigint))),
-                  cast(0 as bigint), (x, y) -> x + y)
-                """
-            ).alias("simhash32"),
-        )
-
-    sig = shared_df(spark, ("simhash32_sig", sf_dir), build_sig)
+    sig = read_derived(spark, sf_dir, "simhash32_sig")
     bands = sig.select(
         "doc_id",
         "simhash32",
@@ -1274,6 +1215,41 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(hamming <= 1)
         .select("doc_a", "doc_b", hamming.cast("int").alias("hamming"))
         .distinct()
+    )
+
+
+def _simhash64_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc 64-bit SimHash as two 32-bit words (doc_id, lo, hi) — the
+    builder of the ``simhash64_sig`` derived table; its published scan
+    is the same pushdown barrier as `_simhash32_sig`'s."""
+    docs = _fanout(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
+    cnts = docs.select(
+        "doc_id",
+        F.expr(
+            """
+            aggregate(
+              transform(
+                transform(array_distinct(split(text, ' ')), w -> md5(w)),
+                h -> struct(
+                  cast(conv(reverse(substr(h, 1, 8)), 16, 10) as bigint) as lo,
+                  cast(conv(reverse(substr(h, 9, 8)), 16, 10) as bigint) as hi)),
+              array_repeat(cast(0 as bigint), 64),
+              (acc, m) -> zip_with(acc, sequence(0, 63),
+                                   (a, b) -> a + if(b < 32, shiftright(m.lo, b) & 1,
+                                                    shiftright(m.hi, b - 32) & 1)))
+            """
+        ).alias("cnts"),
+        F.expr("size(array_distinct(split(text, ' ')))").alias("n_tok"),
+    )
+    word = (
+        "aggregate(zip_with(slice(cnts, {start}, 32), sequence(0, 31),"
+        " (c, b) -> if(2 * c >= n_tok, shiftleft(cast(1 as bigint), b), cast(0 as bigint))),"
+        " cast(0 as bigint), (x, y) -> x + y)"
+    )
+    return cnts.select(
+        "doc_id",
+        F.expr(word.format(start=1)).alias("lo"),
+        F.expr(word.format(start=33)).alias("hi"),
     )
 
 
@@ -1329,41 +1305,7 @@ def simhash64_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     word-array layout sidesteps the divergence and is how >64-bit
     signatures lay out anyway. Same zero-shuffle per-document majority
     fold as the narrower variants, one 64-slot count array per doc."""
-    # Session-shared signature table, as in `simhash_hamming_pairs` —
-    # persist doubles as the pushdown barrier against join-inferred
-    # IsNotNull checks re-inlining the 64-slot fold below the fanout.
-    def build_sig() -> DataFrame:
-        docs = _fanout(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-        cnts = docs.select(
-            "doc_id",
-            F.expr(
-                """
-                aggregate(
-                  transform(
-                    transform(array_distinct(split(text, ' ')), w -> md5(w)),
-                    h -> struct(
-                      cast(conv(reverse(substr(h, 1, 8)), 16, 10) as bigint) as lo,
-                      cast(conv(reverse(substr(h, 9, 8)), 16, 10) as bigint) as hi)),
-                  array_repeat(cast(0 as bigint), 64),
-                  (acc, m) -> zip_with(acc, sequence(0, 63),
-                                       (a, b) -> a + if(b < 32, shiftright(m.lo, b) & 1,
-                                                        shiftright(m.hi, b - 32) & 1)))
-                """
-            ).alias("cnts"),
-            F.expr("size(array_distinct(split(text, ' ')))").alias("n_tok"),
-        )
-        word = (
-            "aggregate(zip_with(slice(cnts, {start}, 32), sequence(0, 31),"
-            " (c, b) -> if(2 * c >= n_tok, shiftleft(cast(1 as bigint), b), cast(0 as bigint))),"
-            " cast(0 as bigint), (x, y) -> x + y)"
-        )
-        return cnts.select(
-            "doc_id",
-            F.expr(word.format(start=1)).alias("lo"),
-            F.expr(word.format(start=33)).alias("hi"),
-        )
-
-    sig = shared_df(spark, ("simhash64_sig", sf_dir), build_sig)
+    sig = read_derived(spark, sf_dir, "simhash64_sig")
     bands = sig.select(
         "doc_id", "lo", "hi", F.explode(F.expr("sequence(0, 3)")).alias("band")
     ).withColumn(
@@ -1528,7 +1470,7 @@ def benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side broadcast left join + groupBy — the corpus is scanned exactly
     once and no shingle list ever shuffles by shingle key.
     """
-    sh = _shingles(spark, sf_dir)
+    sh = read_derived(spark, sf_dir, "shingles")
     is_eval = F.col("doc_id") % 41 == 0
     eval_grams = sh.filter(is_eval).select("shingle").distinct().withColumn("hit", F.lit(1))
     corpus = (
@@ -1637,7 +1579,7 @@ def bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_bloom,
     )
 
-    sh = _shingles(spark, sf_dir)
+    sh = read_derived(spark, sf_dir, "shingles")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     is_eval = F.col("doc_id") % 41 == 0
     eval_grams = sh.filter(is_eval).select("shingle").distinct()
@@ -1800,12 +1742,11 @@ def cms_word_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
         count_min_estimate,
     )
 
-    def build_words() -> DataFrame:
-        docs = _fanout(load_table(spark, sf_dir, "documents").select("text"))
-        return docs.select(F.explode(F.split("text", " ")).alias("word"))
-
-    # Persisted: the token stream feeds the truth ranking AND the grid.
-    words = shared_df(spark, ("cms_words", sf_dir), build_words)
+    # The token stream feeds the truth ranking AND the grid: each branch
+    # re-reads the scan through a map-only explode, cheaper than
+    # materializing every token occurrence.
+    docs = _fanout(load_table(spark, sf_dir, "documents").select("text"))
+    words = docs.select(F.explode(F.split("text", " ")).alias("word"))
     top = (
         words.groupBy("word")
         .agg(F.count(F.lit(1)).alias("true_count"))
@@ -2020,8 +1961,8 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     back (AQE-chosen strategy — the vocab-sized df table is unbounded,
     so no broadcast hint), a per-doc ranking window over compact
     (doc, shingle-df) rows, the prefix-only self-join, then exact
-    verification against the session-shared scored pair frame."""
-    sh = _shingles(spark, sf_dir)
+    verification against the published ``dup_pairs`` table."""
+    sh = read_derived(spark, sf_dir, "shingles")
     df_tab = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     # No broadcast hint on df_tab: the per-shingle document-frequency
     # table grows with the corpus vocabulary — an unbounded frame that
@@ -2042,7 +1983,7 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("pa.doc_id").alias("doc_a"), F.col("pb.doc_id").alias("doc_b"))
         .distinct()
     )
-    verified = _jaccard_pairs(spark, sf_dir, 0.5)
+    verified = read_derived(spark, sf_dir, "dup_pairs").filter("jaccard >= 0.5")
     return cands.join(verified, ["doc_a", "doc_b"]).select(
         "doc_a", "doc_b", F.round(F.col("jaccard"), 6).alias("jaccard")
     )
@@ -2208,29 +2149,22 @@ def cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted oriented co-purchase edges (pa < pb, w = co-occurring
     orders, pruned at w >= 2) — the ONE definition of the graph that
-    PageRank, triangle counting, and the published derived table all
-    consume (session-shared here; `pipelines/derived.py` materializes it).
-    Basket pair expansion is map-side (per-order distinct array, double
-    higher-order transform); the prune kills hot-pair tails before the
-    graph exists."""
-
-    def build() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem")
-        baskets = li.groupBy("l_orderkey").agg(
-            F.array_sort(F.collect_set("l_partkey")).alias("parts")
-        )
-        pair_structs = F.expr(
-            "flatten(transform(parts, (a, i) ->"
-            " transform(slice(parts, i + 2, size(parts)), b -> struct(a, b))))"
-        )
-        return (
-            baskets.select(F.explode(pair_structs).alias("p"))
-            .groupBy(F.col("p.a").alias("pa"), F.col("p.b").alias("pb"))
-            .agg(F.count(F.lit(1)).alias("w"))
-            .filter(F.col("w") >= 2)
-        )
-
-    return shared_df(spark, ("copurchase_edges", sf_dir), build)
+    PageRank and triangle counting consume, through the
+    ``copurchase_edges`` derived table this builds. Basket pair expansion
+    is map-side (per-order distinct array, double higher-order
+    transform); the prune kills hot-pair tails before the graph exists."""
+    li = load_table(spark, sf_dir, "lineitem")
+    baskets = li.groupBy("l_orderkey").agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
+    pair_structs = F.expr(
+        "flatten(transform(parts, (a, i) ->"
+        " transform(slice(parts, i + 2, size(parts)), b -> struct(a, b))))"
+    )
+    return (
+        baskets.select(F.explode(pair_structs).alias("p"))
+        .groupBy(F.col("p.a").alias("pa"), F.col("p.b").alias("pb"))
+        .agg(F.count(F.lit(1)).alias("w"))
+        .filter(F.col("w") >= 2)
+    )
 
 
 # 3 unrolled fixed-point PageRank iterations for the DuckDB oracle.
@@ -2291,7 +2225,7 @@ def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     list are reused across rounds (at 100 TB: localCheckpoint the edge
     frame once, as `operators/components.py` does per contraction
     round). Cost per round ∝ edges, rounds fixed at 3."""
-    wedges = _copurchase_edges(spark, sf_dir)
+    wedges = read_derived(spark, sf_dir, "copurchase_edges")
     edges = wedges.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionByName(
         wedges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
     ).localCheckpoint()
@@ -2360,7 +2294,7 @@ def part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard distributed-triangle trick. Two equi-joins on int pairs plus
     one union-explode aggregation; the weight-2 prune bounds the edge
     list before any join."""
-    edges = _copurchase_edges(spark, sf_dir).select("pa", "pb").localCheckpoint()
+    edges = read_derived(spark, sf_dir, "copurchase_edges").select("pa", "pb")
     e1 = edges.select(F.col("pa").alias("a"), F.col("pb").alias("b"))
     e2 = edges.select(F.col("pa").alias("b"), F.col("pb").alias("c"))
     e3 = edges.select(F.col("pa").alias("a"), F.col("pb").alias("c"))

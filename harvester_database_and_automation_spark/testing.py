@@ -140,22 +140,6 @@ def compare_frames(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame)
     )
 
 
-def check_query(spark, con: duckdb.DuckDBPyConnection, name: str, sf_dir: str) -> CompareResult:
-    from harvester_database_and_automation_spark.plans import QUERIES
-
-    def digest(pdf: pd.DataFrame) -> str:
-        return canonical_digest(*canonical_rows(pdf))
-
-    spec = QUERIES[name]
-    spark_pdf = spec.fn(spark, sf_dir).toPandas()
-    if spec.oracle is None:
-        # Rows-only gate: an empty result is a failure, not a pass.
-        return CompareResult(name=name, ok=len(spark_pdf) > 0, spark_rows=len(spark_pdf), oracle_rows=-1,
-                             problems=["no oracle: rows-only check"])
-    oracle_pdf = con.execute(spec.oracle).df()
-    return compare_frames(name, spark_pdf, oracle_pdf)
-
-
 # --------------------------------------------------------------------------
 # Oracle-drift guard (r8 verdict ask #3): 400 green driver checks can never
 # see an oracle that stopped reading its input — if BOTH engines pin the

@@ -41,8 +41,11 @@ ALLOWED: dict[str, dict[str, str]] = {
     # ngram_jaccard_pairs + curation_funnel_report read dup_pairs,
     # source_boilerplate_fraction + shingle_novelty_by_source read
     # shingle_index, substring_overlap_pairs reads winnow_fingerprints,
-    # K3/K4 read mutation_table, ivfpq_adc_topk reads ivf_index +
-    # pq_recon — their former "materialized in production" entries are
+    # K3/K4 read mutation_sets, lineage_mutation_counts reads
+    # mutation_table + variant_calls, the IVF probes read ivf_index,
+    # prefix_filter_jaccard_pairs verifies against dup_pairs,
+    # ivfpq_adc_topk reads ivf_index + pq_recon — their former
+    # "materialized in production" entries are
     # GONE because the production shape IS the registered, audited plan.
     # What remains below are CERTIFICATION/CALIBRATION queries that by
     # design run a derivation AND its ground truth (or an incremental
@@ -61,10 +64,7 @@ ALLOWED: dict[str, dict[str, str]] = {
         "exchange-storm": "certification runs the bloom candidate path AND the exact ground-truth labeling in one plan; in production the ~1 KB bitset is built once and broadcast, misses die map-side, and every exchange here ships bit positions, 32-bit words, or (source, count) partials — never document text"
     },
     "minhash_jaccard_calibration": {
-        "exchange-storm": "certification runs BOTH the sketch (signatures+banding) and the ground truth (scored pair frame) — each is a session-shared/materialized intermediate in production, and every exchange ships int keys only"
-    },
-    "prefix_filter_jaccard_pairs": {
-        "exchange-storm": "certification recomputes BOTH the shingle hub (df rank + prefix frames) and the ground-truth scored pair frame inline (each session-shared / materialized in production); the candidate join itself touches only prefix rows and every exchange ships (doc_id, shingle-hash, df) triples, never text"
+        "exchange-storm": "certification runs BOTH the sketch (the published scored-candidate table) and the sampled exact-Jaccard ground truth over the published shingles — bucket totals, two-level sample windows and the sample's shingle joins; every exchange ships int keys only"
     },
     "semantic_dedup_cells": {
         "exchange-storm": "the SemDeDup shape itself: a k-row seed top-k, the assignment partial-agg (map-side-combined (vec_id, cell) rows), and ONE co-location shuffle of vectors by cell feeding the within-cell pair scan — that single vector shuffle is the algorithm's irreducible cost and replaces the all-pairs N^2 product"
@@ -72,12 +72,8 @@ ALLOWED: dict[str, dict[str, str]] = {
     "substring_overlap_pairs": {
         "exchange-storm": "the winnow fingerprint frame is now READ from the published winnow_fingerprints derived table (zero recompute exchanges); the 11 that remain are the pair enumeration's own structure — dfp distinct, per-doc size agg, df-prune agg + join, the fp self-join, the pair aggregate, and the two denominator join-backs — every one shipping (doc_id, fp) or (doc, n_fps) int rows with map-side partial aggregation, never text"
     },
-    "ivf_topk_probe": {"exchange-storm": "centroid sims reused for assign+probe; inverted file materialized at scale"},
     "ivf_recall_at_3": {
         "exchange-storm": "recall certification runs BOTH the IVF plan and the brute-force ground truth and joins them — exchanges are the sum of the two audited plans, never shipped to production"
-    },
-    "lineage_mutation_counts": {
-        "exchange-storm": "lineage+mutation tables recomputed per consumer under the gate; materialized in pipelines/derived.py"
     },
     "upsert_plan_intersect": {
         "exchange-storm": "three set-op branches (intersect/except/except) each shuffle key-only projections; U4's operator under test IS intersect, and every exchange ships a single bigint column"
@@ -98,7 +94,7 @@ def superseded_ids(plan: str) -> set[int]:
     tree section.
 
     When a cached/adaptive subplan has already executed (e.g. a
-    session-shared persisted frame that some earlier query materialized),
+    frame that some earlier query materialized),
     formatted explain prints it TWICE — ``== Final Plan ==`` then the
     superseded ``== Initial Plan ==``. Counting the Initial copy
     double-counts exchanges that AQE replaced at runtime, which made the

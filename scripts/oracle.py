@@ -174,7 +174,6 @@ def main(argv: list[str] | None = None) -> int:
     from harvester_database_and_automation_spark.plans.shared import cleanup_scratch
     from harvester_database_and_automation_spark.testing import (
         CompareResult,
-        check_query,
         duckdb_connection,
         oracle_env_mode,
     )
@@ -196,10 +195,7 @@ def main(argv: list[str] | None = None) -> int:
     for name in names:
         t0 = time.time()
         try:
-            if cache is not None:
-                res, was_hit = check_query_cached(spark, con_factory, name, args.sf, cache)
-            else:
-                res, was_hit = check_query(spark, con_factory(), name, args.sf), False
+            res, was_hit = check_query_cached(spark, con_factory, name, args.sf, cache)
             print(f"{res}{' [cached oracle]' if was_hit else ''}  ({time.time() - t0:.1f}s)")
         except Exception as exc:  # pragma: no cover - diagnostic path
             res, was_hit = CompareResult(name, False, -1, -1, [f"{type(exc).__name__}: {exc}"]), False

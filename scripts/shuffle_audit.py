@@ -13,8 +13,8 @@ SHUFFLE_RATIO x its input bytes AND the absolute volume is above
 MIN_FLAG_MB (sub-megabyte dims shuffle freely). Deliberate cases carry
 annotations below, the same contract as audit_plans.ALLOWED.
 
-Methodology: one untimed warmup pass first (builds the session-shared
-hubs — a persisted InMemoryRelation is part of the steady state a
+Methodology: one untimed warmup pass first (publishes the derived-table
+hubs on a cold store — a published hub is part of the steady state a
 long-lived cluster serves from, and its one-time build shuffle is not a
 per-query cost), then each query runs once against the no-op sink and is
 charged its own jobs' stages (`observe.measure`). Bytes are deterministic
@@ -65,7 +65,7 @@ def main() -> int:
     def run(name: str) -> None:
         QUERIES[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
 
-    for name in names:  # warmup: shared hubs, JIT, parquet footers
+    for name in names:  # warmup: hub publishes, JIT, parquet footers
         run(name)
 
     results: dict[str, dict] = {}

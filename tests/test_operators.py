@@ -621,27 +621,27 @@ def test_cascade_rollup_rejects_bad_levels(spark):
 
 
 # ---------------------------------------------------------------------------
-# plans/shared.py — session-scoped subplan cache
+# plans/shared.py — split-aware fan-out
 # ---------------------------------------------------------------------------
-def test_shared_df_builds_once_and_clears(spark):
-    from harvester_database_and_automation_spark.plans.shared import clear_shared, shared_df
+def test_fanout_reads_max_partition_bytes_with_unit(spark, tmp_path):
+    """maxPartitionBytes "64m" is 64 MiB: a single small file is ONE split,
+    so fanout must repartition it to the shuffle parallelism (reading the
+    setting as 64 bytes made every file look pre-split)."""
+    from harvester_database_and_automation_spark.plans.shared import fanout
 
-    calls = {"n": 0}
-
-    def build():
-        calls["n"] += 1
-        return spark.range(5)
-
-    a = shared_df(spark, ("t", "x"), build)
-    b = shared_df(spark, ("t", "x"), build)
-    c = shared_df(spark, ("t", "y"), build)
-    assert calls["n"] == 2  # same key reuses, new key rebuilds
-    assert a is b and a is not c
-    assert a.storageLevel.useMemory  # persisted
-    clear_shared(spark)
-    d = shared_df(spark, ("t", "x"), build)
-    assert calls["n"] == 3 and d is not a
-    clear_shared(spark)
+    path = str(tmp_path / "one_file")
+    spark.range(2000).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64m")
+    try:
+        out = fanout(df)
+    finally:
+        spark.conf.set(key, old)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert out is not df
+    assert out.rdd.getNumPartitions() == n
 
 
 # ---------------------------------------------------------------------------

@@ -6,8 +6,9 @@ from __future__ import annotations
 
 import pytest
 
+from harvester_database_and_automation_spark.oracle_cache import check_query_cached
 from harvester_database_and_automation_spark.plans import QUERIES
-from harvester_database_and_automation_spark.testing import check_query, duckdb_connection
+from harvester_database_and_automation_spark.testing import duckdb_connection
 
 from tests.conftest import SF_DIR
 
@@ -21,7 +22,7 @@ def con():
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, con, name):
-    res = check_query(spark, con, name, SF_DIR)
+    res, _ = check_query_cached(spark, lambda: con, name, SF_DIR, None)
     assert res.ok, str(res)
 
 

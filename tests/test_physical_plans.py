@@ -190,10 +190,18 @@ def test_semantic_dedup_pairs_is_cell_colocated(spark):
 
 def test_pq_codebook_joins_are_broadcast(spark):
     """PQ encode + ADC: the codebook (8 subspaces x 10 codes) and the query
-    block must broadcast — the only streamed side is the vector corpus."""
+    block must broadcast — the only streamed side is the vector corpus.
+    The encode is the `pq_recon` derived-table build; the ADC scan reads
+    the published reconstructions."""
+    from harvester_database_and_automation_spark.plans.embeddings import _pq_recon
+
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    encode = _pq_recon(spark, SF_DIR)._jdf.queryExecution().explainString(mode)
+    assert count_nodes(encode, "CartesianProduct") == 0
+    assert "BroadcastHashJoin" in encode
     plan = fmt_plan(spark, "pq_adc_topk")
     assert count_nodes(plan, "CartesianProduct") == 0
-    assert "BroadcastHashJoin" in plan
+    assert "BroadcastExchange" in plan
 
 
 def test_rolling_window_partitions_by_user(spark):
@@ -388,8 +396,15 @@ def test_concordance_cohort_is_semi_not_subtree(spark):
     assert re.search(r"BroadcastHashJoin.*LeftSemi|LeftSemi.*BroadcastHashJoin", plan) or (
         "LeftSemi" in plan and "BroadcastExchange" in plan
     ), plan[:1200]
-    # the variant-calls hub must appear once, not per consumer
-    assert len(re.findall(r"InMemoryRelation", plan)) <= 2, plan[:1200]
+    # the variant-calls hub is read from the store: no variant-definition
+    # cross join in the plan, one scan of the published table
+    assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan, plan[:1200]
+    scans = [
+        blk
+        for blk in re.split(r"\n\n", plan)
+        if re.match(r"^\(\d+\) Scan parquet", blk.lstrip()) and "variant_calls" in blk
+    ]
+    assert len(scans) == 1, plan[:1200]
 
 
 def test_plan_audit_detectors_fire_on_planted_bad_plans(spark, tmp_path):

@@ -240,12 +240,13 @@ def test_batch_completeness(spark):
 
 
 def test_dedup_hub_tables_match_query_plans(spark, tmp_path):
-    """The published dedup hub (shingle index -> scored pairs -> component
-    map) must reproduce exactly what the session-cached query plans
-    compute — materialization changes cost, never answers."""
+    """The dedup hub rebuilt into a fresh root (shingles -> shingle index
+    -> scored pairs -> component map) must reproduce exactly what the
+    DuckDB oracle computes from raw text and what the query plans read
+    from the serving store — materialization changes cost, never answers."""
     from harvester_database_and_automation_spark.pipelines.derived import LAYER
-    from harvester_database_and_automation_spark.plans.text import _jaccard_pairs
     from harvester_database_and_automation_spark.plans import QUERIES
+    from harvester_database_and_automation_spark.testing import duckdb_connection
 
     sf = "/root/testdata/sf0.001"
     out = str(tmp_path / "derived")
@@ -254,14 +255,17 @@ def test_dedup_hub_tables_match_query_plans(spark, tmp_path):
     from harvester_database_and_automation_spark.operators.publish import read_published
 
     pairs_tbl = {
-        (r["doc_a"], r["doc_b"]): round(r["jaccard"], 9)
+        (r["doc_a"], r["doc_b"]): round(r["jaccard"], 6)
         for r in read_published(spark, f"{out}/dup_pairs").collect()
     }
-    pairs_qry = {
-        (r["doc_a"], r["doc_b"]): round(r["jaccard"], 9)
-        for r in _jaccard_pairs(spark, sf, 0.1).collect()
-    }
-    assert pairs_tbl == pairs_qry
+    con = duckdb_connection(sf)
+    try:
+        oracle = con.execute(QUERIES["ngram_jaccard_pairs"].oracle).fetchall()
+    finally:
+        con.close()
+    oracle_pairs = {(a, b): j for a, b, j in oracle}
+    assert pairs_tbl.keys() == oracle_pairs.keys()
+    assert all(abs(pairs_tbl[k] - j) < 1e-6 for k, j in oracle_pairs.items())
 
     comp_tbl = {
         (r["doc_id"], r["component_id"])
@@ -388,6 +392,64 @@ def test_serving_key_covers_every_package_module(tmp_path, monkeypatch):
     assert dv._store_root(sf) == original
     monkeypatch.setattr(dv, "_PKG_DIR", str(edited))
     assert dv._store_root(sf) != original
+
+
+def _corpus_copy(tmp_path):
+    import shutil
+
+    dst = tmp_path / "corpus"
+    shutil.copytree("/root/testdata/sf0.001", dst)
+    return str(dst)
+
+
+def test_hub_consumers_leave_no_persisted_rdd(spark, tmp_path, monkeypatch):
+    """Hub consumers read the derived-table store: materializing them
+    adds no persisted RDD to the session (a session cache would pin every
+    hub until the session ends). Compared by RDD id, not by count: the
+    ContextCleaner may drop earlier tests' RDDs meanwhile."""
+    import harvester_database_and_automation_spark.pipelines.derived as dv
+    from harvester_database_and_automation_spark.plans import QUERIES
+
+    monkeypatch.setattr(dv, "_SERVE_ROOT", str(tmp_path / "store"))
+    sf = _corpus_copy(tmp_path)  # a path no earlier test has read
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set[int]:
+        return {int(k) for k in jsc.getPersistentRDDs().keySet()}
+
+    before = persisted()
+    for name in ("k3_origin_estimator", "minhash_jaccard_calibration"):
+        QUERIES[name].fn(spark, sf).write.mode("overwrite").format("noop").save()
+    assert persisted() - before == set()
+
+
+def test_hubs_rekey_on_same_path_regeneration(spark, tmp_path, monkeypatch):
+    """A corpus rewritten in place within one session must not be served
+    hubs built from the old files: K2 matches its oracle on the rewritten
+    corpus (every row perturbed moves K2's result)."""
+    import harvester_database_and_automation_spark.pipelines.derived as dv
+    from harvester_database_and_automation_spark.oracle_cache import check_query_cached
+    from harvester_database_and_automation_spark.testing import (
+        duckdb_connection,
+        perturb_corpus,
+    )
+
+    monkeypatch.setattr(dv, "_SERVE_ROOT", str(tmp_path / "store"))
+    sf = _corpus_copy(tmp_path)
+
+    def check():
+        con = duckdb_connection(sf)
+        try:
+            res, _ = check_query_cached(spark, lambda: con, "k2_variant_caller", sf, None)
+        finally:
+            con.close()
+        return res
+
+    first = check()
+    assert first.ok, str(first)
+    perturb_corpus(sf, sf, all_rows=True)
+    second = check()
+    assert second.ok, str(second)
 
 
 def test_run_release_cycle_two_cycles(spark, tmp_path):

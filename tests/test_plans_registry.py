@@ -33,3 +33,17 @@ def test_import_opens_no_round_artifacts():
     hits = [p for p in out.splitlines()
             if re.search(r"CORRECTNESS_r|BENCH_r01|rotation_inventory_r", p)]
     assert hits == []
+
+
+def test_plans_hold_no_session_cache():
+    """Hubs shared between queries are derived tables read with
+    `read_derived`; a plan module that persists or caches a frame pins
+    it for the life of the session under a key that is not its inputs."""
+    pattern = re.compile(r"shared_df|\.persist\(|\.cache\(\)")
+    offenders = [
+        f"{p.name}:{n}"
+        for p in sorted(PLANS.glob("*.py"))
+        for n, line in enumerate(p.read_text(encoding="utf-8").splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert offenders == []
