@@ -3,7 +3,9 @@
 The reference repairs imprecise GISAID dates ('2021-03-XX' -> first of
 month, auto_import_gisaid.R:108-113), normalizes dd.mm.yyyy
 (viollier/parser.py:133-139), and rejects out-of-range dates
-(utility.R:933-955). All pure expressions — no UDFs.
+(utility.R:933-955). All pure expressions — no UDFs. ``trunc_ntz`` is
+the NTZ-preserving ``date_trunc`` the plans and the rollup cascade
+bucket by.
 """
 
 from __future__ import annotations
@@ -37,3 +39,10 @@ def clamp_date_range(col: Column | str, lo: str, hi: Column | None = None) -> Co
     c = F.col(col) if isinstance(col, str) else col
     upper = hi if hi is not None else F.current_date()
     return F.when((c >= F.lit(lo).cast("date")) & (c <= upper), c)
+
+
+def trunc_ntz(unit: str, col: Column | str) -> Column:
+    """date_trunc that stays NTZ. Spark's date_trunc promotes NTZ input to
+    LTZ via the session zone; casting back through the same zone restores
+    the wall-clock value and the NTZ type."""
+    return F.date_trunc(unit, col).cast("timestamp_ntz")

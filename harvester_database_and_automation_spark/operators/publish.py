@@ -15,6 +15,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -147,15 +148,13 @@ def _escape_path_value(v) -> str:
     )
 
 
-def partition_leaves(df: DataFrame, partition_by: list[str]) -> list[str]:
-    """Leaf directory names (``k=a``, ``k=a/d=2``) for the distinct
-    partition-key tuples present in ``df`` — the same hive-style layout
-    the writers produce, so the result can feed
-    ``publish_incremental(drop_partitions=...)``. Collects only distinct
-    key tuples (partition counts are small by design)."""
-    rows = df.select(*partition_by).distinct().collect()
+def partition_leaves(keys: Iterable[tuple], partition_by: list[str]) -> list[str]:
+    """Leaf directory names (``k=a``, ``k=a/d=2``) for partition-key
+    tuples already collected by the caller, in ``partition_by`` order —
+    the same hive-style layout the writers produce, so the result can
+    feed ``publish_incremental(drop_partitions=...)``."""
     return sorted(
-        "/".join(f"{c}={_escape_path_value(r[c])}" for c in partition_by) for r in rows
+        "/".join(f"{c}={_escape_path_value(v)}" for c, v in zip(partition_by, key)) for key in keys
     )
 
 

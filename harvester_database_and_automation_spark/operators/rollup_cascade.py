@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from harvester_database_and_automation_spark.functions.dates import trunc_ntz
+
 _UNITS = ["minute", "hour", "day", "week", "month"]
 
 # inner unit -> coarser units whose buckets it tiles exactly.
@@ -40,12 +42,6 @@ _NESTS_IN = {
     "week": set(),  # ISO weeks cross month boundaries
     "month": set(),
 }
-
-
-def _trunc_ntz(unit: str, col) -> F.Column:
-    # date_trunc promotes NTZ to LTZ through the session zone; casting back
-    # restores the wall-clock value (same helper as plans/relational.py).
-    return F.date_trunc(unit, col).cast("timestamp_ntz")
 
 
 def cascade_rollup(
@@ -70,7 +66,7 @@ def cascade_rollup(
     out: dict[str, DataFrame] = {}
     finest = levels[0]
     base = events.groupBy(
-        _trunc_ntz(finest, ts_col).alias("bucket"), *[F.col(k) for k in keys]
+        trunc_ntz(finest, ts_col).alias("bucket"), *[F.col(k) for k in keys]
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(value_col).alias("value_sum"),
@@ -88,7 +84,7 @@ def cascade_rollup(
             )
         src = out[sources[-1]]  # nearest (coarsest) nesting level
         out[unit] = src.groupBy(
-            _trunc_ntz(unit, "bucket").alias("bucket"), *[F.col(k) for k in keys]
+            trunc_ntz(unit, "bucket").alias("bucket"), *[F.col(k) for k in keys]
         ).agg(
             F.sum("n_events").alias("n_events"),
             F.sum("value_sum").alias("value_sum"),

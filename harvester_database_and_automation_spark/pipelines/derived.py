@@ -140,72 +140,42 @@ class DerivedLayer:
     ) -> dict[str, int]:
         """Rebuild ONLY the partitions matching each table's predicate —
         the SURVEY.md §4 incremental-maintenance design: the build stays the
-        same declarative full-table plan, the predicate prunes it down to
-        the churned partitions (Catalyst pushes it into the scans), and
+        same declarative full-table plan, filtered down to the dirty
+        partitions (Catalyst pushes the key condition into the scans), and
         ``publish_incremental`` carries every other partition over to the
         new version without rewriting it.
 
         Tables absent from ``predicates`` are untouched; listed tables must
-        have been registered with ``partition_by`` and published before.
+        have been registered with ``partition_by``.
 
-        The predicate SELECTS DIRTY PARTITIONS, it does not filter rows:
-        the rebuilt partitions always contain every row the full build
-        would put there (the predicate's matching rows pick the partition
-        keys, then the unfiltered build is semi-joined to those keys), so
-        a row-level churn predicate can never silently drop the
-        non-matching rows of a touched partition.
+        The predicate SELECTS DIRTY PARTITIONS, it does not filter rows: a
+        partition is dirty when any row matching the predicate lands in it,
+        in the new build OR in the prior published version (null keys
+        included). Every dirty partition is rewritten with all the rows the
+        full build puts there, or dropped when the build no longer produces
+        it, so for every dirty partition the result equals a full rebuild.
         """
         for name in predicates:
             if not self.tables[name].partition_by:
                 raise ValueError(f"{name!r} has no partition_by; register one to rebuild incrementally")
 
         def one(name: str) -> int:
-            spec = self.tables[name]
+            table_dir = os.path.join(out_root, name)
+            pcols = list(self.tables[name].partition_by)
             full = self._build(spark, sf_dir, out_root, name)
-            pcols = list(spec.partition_by)
-            # Dirty-key selection runs as its own bounded action (partition
-            # keys only — the same cardinality partition_leaves already
-            # collects below), and the rebuild filters on the IN-list
-            # instead of semi-joining the build against itself: the former
-            # semi-join planted the whole build subtree TWICE in one plan
-            # (once under the distinct, once as the probe side), so every
-            # incremental rebuild executed the expensive derivation two
-            # times; the literal filter executes it once AND pushes the
-            # partition predicate into the dep scans. Null partition keys
-            # never matched the null-unsafe semi-join either, so dropping
-            # them from the IN-list preserves row-for-row semantics.
-            dirty_rows = full.filter(predicates[name]).select(*pcols).distinct().collect()
-            keep = [tuple(r[c] for c in pcols) for r in dirty_rows]
-            keep = [t for t in keep if all(v is not None for v in t)]
-            if not keep:
-                cond = F.lit(False)
-            elif len(pcols) == 1:
-                cond = F.col(pcols[0]).isin([t[0] for t in keep])
-            else:
-                cond = F.lit(False)
-                for t in keep:
-                    match = F.lit(True)
-                    for c, v in zip(pcols, t):
-                        match = match & (F.col(c) == F.lit(v))
-                    cond = cond | match
-            df = full.filter(cond)
-            # Every previous-version partition the predicate matches is up
-            # for replacement: the ones the new build still produces get
-            # written fresh, and the ones whose keys vanished from the
-            # source must NOT be hard-linked forward — otherwise the
-            # incremental rebuild diverges from a full rebuild.
-            try:
-                prior = read_published(spark, os.path.join(out_root, name))
-                stale = partition_leaves(
-                    prior.filter(predicates[name]), list(spec.partition_by)
-                )
-            except FileNotFoundError:
-                stale = []  # first publish: nothing to carry over or drop
+            keys = full.filter(predicates[name]).select(*pcols)
+            if current_version(table_dir) is not None:
+                prior = read_published(spark, table_dir)
+                keys = keys.unionByName(prior.filter(predicates[name]).select(*pcols))
+            # Bounded by construction: at most one tuple per leaf directory of
+            # the prior version plus one per partition the new version writes,
+            # the two sets publish_incremental lists on the driver anyway.
+            dirty = [tuple(r) for r in keys.distinct().collect()]
             return publish_incremental(
-                df,
-                os.path.join(out_root, name),
-                partition_by=list(spec.partition_by),
-                drop_partitions=stale,
+                full.filter(_key_in(pcols, dirty)),
+                table_dir,
+                partition_by=pcols,
+                drop_partitions=partition_leaves(dirty, pcols),
             )
 
         # Listed tables with no listed dependency between them are
@@ -213,6 +183,20 @@ class DerivedLayer:
         # depends on another listed table still waits for that dep's fresh
         # version, preserving the sequential walk's ordering.
         return self._by_level([n for n in self.tables if n in predicates], one)
+
+
+def _key_in(pcols: list[str], keys: list[tuple]) -> Column:
+    """Null-safe membership of the partition columns in ``keys``. One
+    column stays a plain ``isin`` (pushed to parquet as ``In``), plus
+    ``IS NULL`` when a null key was collected; several columns compare
+    one struct, whose ``IN`` treats null fields as equal."""
+    if len(pcols) == 1:
+        values = [k[0] for k in keys if k[0] is not None]
+        cond = F.col(pcols[0]).isin(values)
+        return cond | F.col(pcols[0]).isNull() if len(values) < len(keys) else cond
+    return F.struct(*pcols).isin(
+        [F.struct(*(F.lit(v).alias(c) for c, v in zip(pcols, k))) for k in keys]
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -15,7 +15,7 @@ from harvester_database_and_automation_spark.catalog import load_table
 from harvester_database_and_automation_spark.functions.genomics import pseudo_sequence
 from harvester_database_and_automation_spark.plans.registry import register
 from harvester_database_and_automation_spark.pipelines.derived import read_derived
-from harvester_database_and_automation_spark.plans.shared import fanout
+from harvester_database_and_automation_spark.plans.shared import QHASH_SQL, fanout, qhash
 
 # Pseudo-genome: the document's ACGT letters, uppercased (deterministic,
 # same expression both engines).
@@ -103,24 +103,16 @@ def _mutation_sets(muts: DataFrame) -> DataFrame:
     return muts.groupBy("doc_id").agg(F.array_sort(F.collect_list(enc)).alias("mset"))
 
 
-# Portable multiplicative hash over doc ids (same Knuth constant and
-# modulus as the embeddings side's _QHASH_SQL): draws FIXED-SIZE
-# pseudo-random doc samples. A modulus predicate (doc_id % m) makes the
-# sample corpus-PROPORTIONAL, which turns the (query x reference) pair
-# scan into O(N^2) — the full-registry 100x curve measured K3/K4 at 30-42x
-# for 10x data on exactly that shape.
-_DOC_QHASH_SQL = "(((doc_id) % 1000000007) * 2654435761) % 1000000007"
-
-
-def _doc_qhash(col):
-    return ((col % F.lit(1_000_000_007)) * F.lit(2_654_435_761)) % F.lit(1_000_000_007)
-
-
+# FIXED-SIZE doc samples (shared.qhash): a modulus predicate (doc_id % m)
+# makes the sample corpus-PROPORTIONAL, which turns the (query x
+# reference) pair scan into O(N^2) — the full-registry 100x curve
+# measured K3/K4 at 30-42x for 10x data on exactly that shape.
 def _doc_sample_sql(n: int) -> str:
     """DuckDB CTE body: the ``n`` doc_ids with the smallest portable hash."""
     return (
         "SELECT doc_id FROM ("
-        f"  SELECT doc_id, row_number() OVER (ORDER BY {_DOC_QHASH_SQL}, doc_id) AS qrk"
+        "  SELECT doc_id, row_number() OVER "
+        f"(ORDER BY {QHASH_SQL.format(id='doc_id')}, doc_id) AS qrk"
         "   FROM documents"
         f") t WHERE qrk <= {n}"
     )
@@ -152,7 +144,7 @@ def _pair_distances(spark: SparkSession, sf_dir: str, n_queries: int, r_cols):
     )
     qids = (
         docs.select("doc_id")
-        .withColumn("_qh", _doc_qhash(F.col("doc_id")))
+        .withColumn("_qh", qhash(F.col("doc_id")))
         .orderBy("_qh", "doc_id")
         .limit(n_queries)
         .drop("_qh")
@@ -562,7 +554,7 @@ def a11_mean_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq = pseudo_sequence("text")
     qids = (
         docs.select("doc_id")
-        .withColumn("_qh", _doc_qhash(F.col("doc_id")))
+        .withColumn("_qh", qhash(F.col("doc_id")))
         .orderBy("_qh", "doc_id")
         .limit(120)
         .drop("_qh")

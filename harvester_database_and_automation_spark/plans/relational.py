@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from harvester_database_and_automation_spark.catalog import load_table
+from harvester_database_and_automation_spark.functions.dates import trunc_ntz
 from harvester_database_and_automation_spark.plans.registry import register
 
 
@@ -26,13 +27,6 @@ def _ntz(literal: str):
     """Timestamp literal as TIMESTAMP_NTZ — a bare ``cast('..' as timestamp)``
     yields session-timezone LTZ, which shifts under non-UTC driver sessions."""
     return F.lit(literal).cast("timestamp_ntz")
-
-
-def _trunc_ntz(unit: str, col):
-    """date_trunc that stays NTZ. Spark's date_trunc promotes NTZ input to
-    LTZ via the session zone; casting back through the same zone restores
-    the wall-clock value and the NTZ type."""
-    return F.date_trunc(unit, col).cast("timestamp_ntz")
 
 
 def _money2(col):
@@ -274,12 +268,12 @@ def weekly_activity_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     weekly positive-tests pattern (database/sql/gisaid.sql:80-87)."""
     o = (
         load_table(spark, sf_dir, "orders")
-        .groupBy(_trunc_ntz("week", "o_orderdate").alias("week"))
+        .groupBy(trunc_ntz("week", "o_orderdate").alias("week"))
         .agg(F.count(F.lit(1)).alias("n_orders"))
     )
     e = (
         load_table(spark, sf_dir, "events")
-        .groupBy(_trunc_ntz("week", "ts").alias("week"))
+        .groupBy(trunc_ntz("week", "ts").alias("week"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
     return (
@@ -377,7 +371,7 @@ def monthly_priority_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     prio = o.select("o_orderpriority").distinct()
     actual = (
         o.groupBy(
-            _trunc_ntz("month", "o_orderdate").alias("month"),
+            trunc_ntz("month", "o_orderdate").alias("month"),
             "o_orderpriority",
         ).agg(F.count(F.lit(1)).alias("n"))
     )
@@ -425,7 +419,7 @@ def intensity_spine_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales with days × types, not row count.
     """
     ev = load_table(spark, sf_dir, "events").select(
-        _trunc_ntz("day", "ts").alias("day"), "event_type"
+        trunc_ntz("day", "ts").alias("day"), "event_type"
     )
     bounds = ev.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
     spine = bounds.select(

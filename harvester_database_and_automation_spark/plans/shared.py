@@ -1,5 +1,6 @@
 """Helpers shared by the plan modules: scratch directories for replay
-queries, split-aware fan-out, and exact grouped quantiles.
+queries, split-aware fan-out, the portable sampling hash, and exact
+grouped quantiles.
 
 Intermediates that several queries consume (the mutation triple table,
 the shingle table, signature and index frames) are not cached here: they
@@ -17,6 +18,7 @@ import shutil
 import tempfile
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 _SCRATCH_DIRS: list[str] = []
 
@@ -85,6 +87,19 @@ def fanout(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)
+
+
+# Portable multiplicative hash (Knuth constant, mod a prime): identical
+# 64-bit integer arithmetic on both engines, no overflow for any id
+# (operands stay below 1e9 * 2.7e9 < 2^63). Used to draw FIXED-SIZE
+# pseudo-random samples — an `id % m` sample is corpus-PROPORTIONAL,
+# which turns any per-query linear scan into O(N^2) and any driver-side
+# query block into O(N) driver memory.
+QHASH_SQL = "((({id}) % 1000000007) * 2654435761) % 1000000007"
+
+
+def qhash(col):
+    return ((col % F.lit(1_000_000_007)) * F.lit(2_654_435_761)) % F.lit(1_000_000_007)
 
 
 def group_quantiles_exact(df: DataFrame, group_cols: list, value_col: str, qs: list):

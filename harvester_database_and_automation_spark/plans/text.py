@@ -964,10 +964,7 @@ def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "minhash_lsh_candidates",
-    survey_ref="dedup-minhash,J1,A4",
-    oracle=f"""
+_MINHASH_LSH_SQL = f"""
 WITH sh AS ({_SHINGLES_SQL}),
 based AS (
   SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS m FROM sh
@@ -987,8 +984,13 @@ bands AS (
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
 FROM bands a JOIN bands b
   ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
-""",
+"""
+
+
+@register(
+    "minhash_lsh_candidates_served", survey_ref="dedup-minhash,J1,A4", oracle=_MINHASH_LSH_SQL
 )
+@register("minhash_lsh_candidates", survey_ref="dedup-minhash,J1,A4", oracle=_MINHASH_LSH_SQL)
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash (16 universal-hash permutations over one md5-derived base
     hash) + LSH banding (4 bands x 4 rows): candidate pairs are docs
@@ -998,46 +1000,11 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode+agg, candidate generation an equi-join on (band, signature) —
     cost is proportional to collisions, not to |docs|^2. The signatures
     are read from the ``minhash_signatures`` derived table; the oracle
-    replays their derivation from raw text.
+    replays their derivation from raw text, so the publish + read
+    round-trip is hash-certified. ``minhash_lsh_candidates_served`` names
+    the same plan as the serving-layer entry of the bench panels (the MV
+    serving layer, refreshes.sql:3-36).
     """
-    return _lsh_candidates(read_derived(spark, sf_dir, "minhash_signatures"))
-
-
-@register(
-    "minhash_lsh_candidates_served",
-    survey_ref="dedup-minhash,J1,A4",
-    oracle=f"""
-WITH sh AS ({_SHINGLES_SQL}),
-based AS (
-  SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS m FROM sh
-),
-perms(h, a, b) AS (VALUES {_MINHASH_PERMS_SQL}),
-hashes AS (
-  SELECT doc_id, h, min((a * m + b) % {_MINHASH_P}) AS minhash
-  FROM based, perms
-  GROUP BY doc_id, h
-),
-bands AS (
-  SELECT doc_id, h // 4 AS band,
-         md5(string_agg(CAST(minhash AS VARCHAR), ',' ORDER BY h)) AS band_sig
-  FROM hashes
-  GROUP BY doc_id, h // 4
-)
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-FROM bands a JOIN bands b
-  ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id
-""",
-)
-def minhash_lsh_candidates_served(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH banding over the MAINTAINED ``minhash_signatures`` derived
-    table (pipelines/derived.py `read_derived`): the steady-state dedup
-    plan a signature service runs per ingest — published-parquet scan,
-    band explode (map-side), one equi-join on (band, band_sig), distinct.
-    Signature GENERATION (the shingle explode + 16-way min agg) moves to
-    ingest time, so this is the same plan as `minhash_lsh_candidates`.
-    The oracle replays the whole derivation from raw text, so the
-    publish + read round-trip is hash-certified. Reference analog: the
-    MV serving layer, refreshes.sql:3-36."""
     return _lsh_candidates(read_derived(spark, sf_dir, "minhash_signatures"))
 
 

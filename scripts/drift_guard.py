@@ -33,7 +33,6 @@ and exits non-zero on any violation.
 from __future__ import annotations
 
 import json
-import subprocess
 import sys
 import tempfile
 import time
@@ -49,6 +48,7 @@ from harvester_database_and_automation_spark.testing import (  # noqa: E402
     duckdb_connection,
     perturb_corpus,
 )
+from scripts.release_gate import git_head  # noqa: E402
 
 # Queries allowed to sit still under BOTH probes, each with the provable
 # reason (the probes never touch key/_id columns — integrity constraints
@@ -160,9 +160,7 @@ def main() -> int:
     clean_dir = sys.argv[1] if sys.argv[1:] else "/root/testdata/sf0.001"
     names = sys.argv[2:] or list(QUERIES)
     spark = get_spark("drift-guard")
-    head = subprocess.run(
-        ["git", "rev-parse", "HEAD"], capture_output=True, text=True, check=True
-    ).stdout.strip()
+    head = git_head()
 
     t0 = time.time()
     with tempfile.TemporaryDirectory(prefix="drift_pert_") as pert1_dir, \

@@ -24,7 +24,7 @@ opens only if some query misses it. ``ORACLE_CACHE=0`` disables the
 cache.
 
 ``--artifact FILE`` records one row per query, stamped with the full
-``git rev-parse HEAD``. A run with an explicit ``--queries`` subset
+commit hash of the checkout's HEAD. A run with an explicit ``--queries`` subset
 merges into the existing artifact (carried rows keep their
 ``measured_at``, valid only while the corpus is unchanged); any other
 run overwrites it. Exit 0 when every row passes, 1 on a failure, 2 on
@@ -36,7 +36,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 import time
 from pathlib import Path
@@ -45,6 +44,7 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 from __spark_entry__ import SMOKE_SF_DIR  # noqa: E402
+from scripts.release_gate import git_dirty, git_head  # noqa: E402
 from harvester_database_and_automation_spark.plans import QUERIES  # noqa: E402
 
 DEFAULT_SF = str(Path(SMOKE_SF_DIR).parent / "sf0.01")
@@ -84,22 +84,6 @@ SF1_PANEL = [
     "csv_typed_roundtrip",
     "chunked_export_roundtrip",
 ]
-
-
-def git_head() -> str:
-    return subprocess.run(
-        ["git", "-C", str(REPO), "rev-parse", "HEAD"],
-        capture_output=True, text=True, check=True,
-    ).stdout.strip()
-
-
-def git_dirty() -> bool:
-    return bool(
-        subprocess.run(
-            ["git", "-C", str(REPO), "status", "--porcelain"],
-            capture_output=True, text=True, check=True,
-        ).stdout.strip()
-    )
 
 
 def result_row(res, was_hit: bool, seconds: float, head: str) -> dict:

@@ -114,14 +114,16 @@ _INFRA_MARKERS = (
 )
 
 
-def _head() -> str:
+def git_head() -> str:
+    """HEAD of this checkout, whatever the caller's working directory —
+    the one provenance stamp every script's artifact carries."""
     return subprocess.run(
         ["git", "-C", str(REPO), "rev-parse", "HEAD"],
         capture_output=True, text=True, check=True,
     ).stdout.strip()
 
 
-def _dirty() -> bool:
+def git_dirty() -> bool:
     return bool(
         subprocess.run(
             ["git", "-C", str(REPO), "status", "--porcelain"],
@@ -240,7 +242,7 @@ def main() -> int:
     if unknown:
         raise SystemExit(f"unknown gate(s): {sorted(unknown)}; known: {list(GATES)}")
 
-    head0, dirty0 = _head(), _dirty()
+    head0, dirty0 = git_head(), git_dirty()
     prior_path = REPO / "RELEASE_GATE.json"
     prior = json.loads(prior_path.read_text()) if prior_path.exists() else None
 
@@ -273,7 +275,7 @@ def main() -> int:
     for name in names:
         results[name] = run_gate(name, head0)
 
-    head1 = _head()
+    head1 = git_head()
     for r in results.values():
         r["run_head"] = head0
     if retry_prior is not None:

@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 from pathlib import Path
 
@@ -38,6 +37,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from harvester_database_and_automation_spark.observe import measure  # noqa: E402
 from harvester_database_and_automation_spark.plans import QUERIES  # noqa: E402
 from harvester_database_and_automation_spark.session import get_spark  # noqa: E402
+from scripts.release_gate import git_head  # noqa: E402
 
 SHUFFLE_RATIO = 1.5
 MIN_FLAG_MB = 20.0
@@ -60,6 +60,7 @@ def main() -> int:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
 
+    head = git_head()
     spark = get_spark("shuffle-audit")
 
     def run(name: str) -> None:
@@ -89,9 +90,6 @@ def main() -> int:
                 print(f"[FLAG] {name}: {entry}")
         results[name] = entry
 
-    head = subprocess.run(
-        ["git", "rev-parse", "HEAD"], capture_output=True, text=True, check=True
-    ).stdout.strip()
     artifact = Path(__file__).resolve().parent.parent / "SHUFFLE_BYTES.json"
     queries = results
     if sys.argv[1:] and artifact.exists():

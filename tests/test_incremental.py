@@ -146,13 +146,111 @@ def test_derived_incremental_drops_vanished_partitions(spark, tmp_path):
     assert got == {("de", 9), ("it", 3)}
 
 
-def test_partition_leaves_formatting(spark):
+def _published_rows(spark, table_dir: str) -> list[str]:
+    df = read_published(spark, table_dir)
+    return sorted(repr(tuple(r)) for r in df.select(*sorted(df.columns)).collect())
+
+
+def _incremental_vs_full(spark, tmp_path, schema, partition_by, before, after, pred):
+    """Publish ``before``, rebuild incrementally over ``after`` with
+    ``pred`` as the churn predicate, and return (incremental, full
+    rebuild over ``after``) as sorted row lists of the one table."""
+    from harvester_database_and_automation_spark.pipelines.derived import DerivedLayer
+
+    layer = DerivedLayer()
+    layer.register("t", partition_by=partition_by)(
+        lambda spark, sf_dir, deps: spark.read.parquet(sf_dir)
+    )
+    src1, src2 = str(tmp_path / "src1"), str(tmp_path / "src2")
+    spark.createDataFrame(before, schema).write.parquet(src1)
+    spark.createDataFrame(after, schema).write.parquet(src2)
+    incr, full = str(tmp_path / "incr"), str(tmp_path / "full")
+    layer.rebuild(spark, src1, incr)
+    layer.rebuild_incremental(spark, src2, incr, {"t": pred})
+    layer.rebuild(spark, src2, full)
+    return _published_rows(spark, f"{incr}/t"), _published_rows(spark, f"{full}/t")
+
+
+def test_incremental_row_predicate_keeps_whole_partition(spark, tmp_path):
+    """A row-level predicate that matches only the PRIOR version's rows
+    (v == 2 is gone from the new build) still dirties the de partition:
+    it is rewritten from the new build, not dropped."""
+    incr, full = _incremental_vs_full(
+        spark, tmp_path, "lang string, v int", ("lang",),
+        [("de", 1), ("de", 2), ("fr", 5)],
+        [("de", 1), ("de", 3), ("fr", 5)],
+        F.col("v") == 2,
+    )
+    assert incr == full
+    assert len(full) == 3
+
+
+def test_incremental_rebuilds_null_partition_key(spark, tmp_path):
+    """A null partition key (the __HIVE_DEFAULT_PARTITION__ leaf) is a
+    dirty partition like any other: rewritten, never lost."""
+    incr, full = _incremental_vs_full(
+        spark, tmp_path, "lang string, v int", ("lang",),
+        [("de", 1), (None, 2)],
+        [("de", 1), (None, 3)],
+        F.lit(True),
+    )
+    assert incr == full
+    assert "(None, 3)" in full
+
+
+def test_incremental_two_column_keys_with_null_field(spark, tmp_path):
+    """Two partition columns, one null key field per dirty partition: the
+    struct key condition matches (null, 1) and ('fr', null); the clean
+    (de, 1) and (fr, 2) partitions carry over."""
+    incr, full = _incremental_vs_full(
+        spark, tmp_path, "lang string, d int, v int", ("lang", "d"),
+        [("de", 1, 10), (None, 1, 20), ("fr", None, 30), ("fr", 2, 40)],
+        [("de", 1, 10), (None, 1, 21), ("fr", None, 31), ("fr", 2, 40)],
+        F.col("lang").isNull() | F.col("d").isNull(),
+    )
+    assert incr == full
+    assert len(full) == 4
+
+
+@pytest.fixture(scope="module")
+def term_store(spark, tmp_path_factory):
+    """doc_term_projection (and its dep) published once at sf0.001."""
+    from harvester_database_and_automation_spark.pipelines.derived import LAYER
+
+    out = str(tmp_path_factory.mktemp("term_store"))
+    LAYER.rebuild(spark, "/root/testdata/sf0.001", out, only={"doc_term_projection"})
+    return out
+
+
+def test_incremental_rebuild_leaves_no_persisted_rdd(spark, term_store):
+    from harvester_database_and_automation_spark.pipelines.derived import LAYER
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    LAYER.rebuild_incremental(
+        spark, "/root/testdata/sf0.001", term_store,
+        {"doc_term_projection": F.col("lang").isin("de", "fr")},
+    )
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_single_column_rewrite_pushes_in_to_documents_scan(spark, term_store):
+    from harvester_database_and_automation_spark.pipelines.derived import LAYER, _key_in
+
+    full = LAYER._build(spark, "/root/testdata/sf0.001", term_store, "doc_term_projection")
+    plan = full.filter(_key_in(["lang"], [("de",), ("fr",)]))._jdf.queryExecution()
+    scans = [
+        line for line in plan.executedPlan().toString().splitlines()
+        if "documents.parquet" in line
+    ]
+    assert scans and all("PushedFilters: [In(lang, [de,fr])" in line for line in scans), scans
+
+
+def test_partition_leaves_formatting():
     from harvester_database_and_automation_spark.operators.publish import partition_leaves
 
-    df = spark.createDataFrame(
-        [("de", 1), ("a b", 2), (None, 3)], "lang string, d int"
-    )
-    assert partition_leaves(df, ["lang", "d"]) == [
+    keys = [("de", 1), ("a b", 2), (None, 3)]
+    assert partition_leaves(keys, ["lang", "d"]) == [
         "lang=__HIVE_DEFAULT_PARTITION__/d=3",
         "lang=a b/d=2",
         "lang=de/d=1",

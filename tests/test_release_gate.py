@@ -106,3 +106,12 @@ def test_every_gate_script_exists():
     the full gate runs; catch it here."""
     for name, spec in release_gate.GATES.items():
         assert (release_gate.REPO / spec["cmd"][1]).is_file(), name
+
+
+def test_one_head_stamp_for_every_script():
+    """Artifacts stamp the checkout's HEAD through release_gate.git_head,
+    which anchors git at the repo: a private `git rev-parse` copy would
+    read the caller's working directory instead."""
+    scripts = release_gate.REPO / "scripts"
+    stampers = [p.name for p in sorted(scripts.glob("*.py")) if "rev-parse" in p.read_text()]
+    assert stampers == ["release_gate.py"]
