@@ -146,7 +146,7 @@ class DerivedLayer:
         new version without rewriting it.
 
         Tables absent from ``predicates`` are untouched; listed tables must
-        have been registered with ``partition_by``.
+        have been registered with ``partition_by`` and published before.
 
         The predicate SELECTS DIRTY PARTITIONS, it does not filter rows: a
         partition is dirty when any row matching the predicate lands in it,
