@@ -4,10 +4,9 @@
 block's wall time, jobs, stages, tasks, slowest task and input, shuffle
 and spill bytes — the scan, shuffle and compute layers of one query or
 pipeline step. Jobs are attributed by job-id range (the scheduler's job
-counter before and after the block), so jobs that a pipeline's thread
-pool submits count too. The status API is served by the Spark UI, so the
-session needs ``SPARK_UI=1``. The arithmetic is :func:`summarize`, which
-needs no Spark.
+counter before and after the block). The status API is served by the
+Spark UI, so the session needs ``SPARK_UI=1``. The arithmetic is
+:func:`summarize`, which needs no Spark.
 """
 
 from __future__ import annotations

@@ -18,7 +18,6 @@ import functools
 import hashlib
 import os
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -81,32 +80,6 @@ class DerivedLayer:
             partition_by=list(self.tables[name].partition_by) or None,
         )
 
-    def _by_level(self, names: list[str], one: Callable[[str], int]) -> dict[str, int]:
-        """Run ``one(name) -> version`` over ``names`` in dependency LEVELS:
-        a table is ready once none of its dependencies is still remaining.
-        Tables in the same level are independent builds writing distinct
-        dirs, and Spark happily runs their jobs concurrently — the next
-        build's tasks back-fill executors idling in the previous build's
-        straggler tail and driver-side publish/listing gaps (guide on
-        overlapping independent jobs), so a level of several tables runs
-        on a small thread pool. Results are identical: each table still
-        builds from fully-published deps. Returns {table: version}."""
-        versions: dict[str, int] = {}
-        remaining = list(names)
-        while remaining:
-            ready = [
-                n for n in remaining if not any(d in remaining for d in self.tables[n].depends_on)
-            ]
-            if not ready:
-                raise ValueError(f"dependency cycle among {remaining!r}")
-            if len(ready) == 1:
-                versions[ready[0]] = one(ready[0])
-            else:
-                with ThreadPoolExecutor(max_workers=min(4, len(ready))) as pool:
-                    versions.update(zip(ready, pool.map(one, ready)))
-            remaining = [n for n in remaining if n not in versions]
-        return versions
-
     def rebuild(
         self,
         spark: SparkSession,
@@ -114,8 +87,9 @@ class DerivedLayer:
         out_root: str,
         only: set[str] | None = None,
     ) -> dict[str, int]:
-        """Build every derived table in registration (= dependency) order,
-        publishing each atomically. Returns {table: version}. ``only``
+        """Build every derived table in registration order, publishing each
+        atomically. ``register`` rejects a dependency registered later, so
+        that order is a dependency order. Returns {table: version}. ``only``
         scopes the walk to the named tables plus their transitive deps
         (a partial refresh — e.g. the parity certification rebuilds just
         the partitioned tables it compares)."""
@@ -130,10 +104,11 @@ class DerivedLayer:
                 wanted.add(n)
                 stack.extend(self.tables[n].depends_on)
 
-        return self._by_level(
-            [n for n in self.tables if wanted is None or n in wanted],
-            lambda name: self._publish(spark, sf_dir, out_root, name),
-        )
+        return {
+            name: self._publish(spark, sf_dir, out_root, name)
+            for name in self.tables
+            if wanted is None or name in wanted
+        }
 
     def rebuild_incremental(
         self, spark: SparkSession, sf_dir: str, out_root: str, predicates: dict[str, Column]
@@ -147,6 +122,8 @@ class DerivedLayer:
 
         Tables absent from ``predicates`` are untouched; listed tables must
         have been registered with ``partition_by`` and published before.
+        Listed tables rebuild in registration order, so a listed table
+        reads the fresh version of a listed dependency.
 
         The predicate SELECTS DIRTY PARTITIONS, it does not filter rows: a
         partition is dirty when any row matching the predicate lands in it,
@@ -159,7 +136,10 @@ class DerivedLayer:
             if not self.tables[name].partition_by:
                 raise ValueError(f"{name!r} has no partition_by; register one to rebuild incrementally")
 
-        def one(name: str) -> int:
+        versions: dict[str, int] = {}
+        for name in self.tables:
+            if name not in predicates:
+                continue
             table_dir = os.path.join(out_root, name)
             pcols = list(self.tables[name].partition_by)
             full = self._build(spark, sf_dir, out_root, name)
@@ -171,18 +151,13 @@ class DerivedLayer:
             # the prior version plus one per partition the new version writes,
             # the two sets publish_incremental lists on the driver anyway.
             dirty = [tuple(r) for r in keys.distinct().collect()]
-            return publish_incremental(
+            versions[name] = publish_incremental(
                 full.filter(_key_in(pcols, dirty)),
                 table_dir,
                 partition_by=pcols,
                 drop_partitions=partition_leaves(dirty, pcols),
             )
-
-        # Listed tables with no listed dependency between them are
-        # independent (each reads only PUBLISHED deps); a listed table that
-        # depends on another listed table still waits for that dep's fresh
-        # version, preserving the sequential walk's ordering.
-        return self._by_level([n for n in self.tables if n in predicates], one)
+        return versions
 
 
 def _key_in(pcols: list[str], keys: list[tuple]) -> Column:

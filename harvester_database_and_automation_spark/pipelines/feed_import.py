@@ -100,8 +100,9 @@ def run_feed_import(
     Broadcast gating is on MEASURED rows AND estimated bytes
     (``operators.merge.fits_broadcast``, round-9 ADVICE), both summed in
     the classification rollup that feeds the run report — no extra action.
-    Every cache the cycle fills is released on every exit, error paths
-    included.
+    Every Spark action runs in program order on the caller's thread, and
+    every cache the cycle fills is released in one ``finally``, error
+    paths included.
     """
     if required_fields:
         drift = check_field_drift(spark, feed_path, required=required_fields)
@@ -109,16 +110,11 @@ def run_feed_import(
             raise ValueError(f"feed schema drift: missing required {sorted(drift.missing_required)}")
 
     scan = read_jsonl(spark, feed_path, schema)
-    classified = annotated_cached = None
+    classified = annotated = None
     try:
         clean, quarantined = validate(scan.good, checks)
-        # First action ON PURPOSE: materializes the shared parse cache, so
-        # the quarantine count and the classification rollup below can run
-        # as overlapped actions over warm inputs (overlapping BEFORE the
-        # cache is filled would make each concurrent job recompute the whole
-        # parse — the in-flight-cache-fill trap measured in the release
-        # pipeline).
         n_corrupt = scan.corrupt.count()
+        n_quarantined = quarantined.count()
 
         first_run = current_version(table_dir) is None
         if first_run:
@@ -132,24 +128,15 @@ def run_feed_import(
         # every row's fate moves ~tens of bytes per row however wide the
         # genome column is (measured: WIDE_ROW_BYTES.json).
         classified = classify_changes(current, clean, keys, metadata_cols, payload_cols).cache()
-        # The quarantine count (parse cache, warm) and the classification
-        # rollup (fills the classified cache) touch disjoint caches with warm
-        # shared inputs — overlap them (guide on overlapping independent
-        # jobs; see the n_corrupt ordering note above).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as _pool:
-            _f_quar = _pool.submit(quarantined.count)
-            rollup = (
-                classified.groupBy(CHANGE_COL)
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(key_bytes(keys)).alias("key_bytes"),
-                    F.sum(key_bytes([*keys, *metadata_cols])).alias("row_bytes"),
-                )
-                .collect()
+        rollup = (
+            classified.groupBy(CHANGE_COL)
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(key_bytes(keys)).alias("key_bytes"),
+                F.sum(key_bytes([*keys, *metadata_cols])).alias("row_bytes"),
             )
-            n_quarantined = _f_quar.result()
+            .collect()
+        )
         by_type = {r[CHANGE_COL]: r["n"] for r in rollup}
         key_size = {r[CHANGE_COL]: r["key_bytes"] or 0 for r in rollup}
         row_size = {r[CHANGE_COL]: r["row_bytes"] or 0 for r in rollup}
@@ -176,15 +163,15 @@ def run_feed_import(
             if fits_broadcast(n_process, process_key_bytes):
                 process_keys = F.broadcast(process_keys)
             to_process = clean.join(process_keys, on=list(keys), how="left_semi")
-        n_tool_failed = 0
+        failed = F.lit(False)
         if annotate is not None:
-            # Cache the annotated frame: the count below would otherwise run
-            # the expensive annotation once, and the merge/publish a second
-            # time — doubling exactly the stage this route exists to minimize.
-            # (Keep the handle: unpersisting a FILTERED child later would be a
-            # CacheManager no-op and leak the cache.)
-            annotated_cached = annotate(to_process).cache()
-            to_process = annotated_cached
+            # Cached because operators.merge.merge_delta reads `updates` twice
+            # (its touched-key set, then the union): with a join-shaped
+            # annotate such as run_fasta_tool's, the uncached publish plan
+            # runs the external tool twice. (Keep the handle: unpersisting a
+            # FILTERED child later would be a CacheManager no-op and leak.)
+            annotated = annotate(to_process).cache()
+            to_process = annotated
             # S8 quarantine contract (operators/external.py): an annotate
             # stage built on run_fasta_tool(on_error="quarantine") marks rows
             # whose tool batch failed with a non-null _tool_error column.
@@ -193,12 +180,13 @@ def run_feed_import(
             # touched set), a failed insert simply waits for the next run —
             # and they count against the reference's <5% abort gate
             # (FeedImportReport.ok).
-            if TOOL_ERROR_COL in to_process.columns:
-                n_tool_failed = to_process.filter(F.col(TOOL_ERROR_COL).isNotNull()).count()
-                to_process = to_process.filter(F.col(TOOL_ERROR_COL).isNull()).drop(
-                    TOOL_ERROR_COL, TOOL_INPUT_NAME_COL
-                )
-        n_annotated = to_process.count()
+            if TOOL_ERROR_COL in annotated.columns:
+                failed = F.col(TOOL_ERROR_COL).isNotNull()
+        n_annotated, n_tool_failed = to_process.agg(
+            F.count(F.when(~failed, 1)), F.count(F.when(failed, 1))
+        ).first()
+        if TOOL_ERROR_COL in to_process.columns:
+            to_process = to_process.filter(~failed).drop(TOOL_ERROR_COL, TOOL_INPUT_NAME_COL)
 
         # Metadata-only changes take metadata from the feed but KEEP the stored
         # payload-derived columns (the feed carries them as nulls; recomputing
@@ -230,10 +218,9 @@ def run_feed_import(
         )
         version = publish_versioned(final, table_dir)
     finally:
-        if classified is not None:
-            classified.unpersist()
-        if annotated_cached is not None:
-            annotated_cached.unpersist()
+        for frame in (classified, annotated):
+            if frame is not None:
+                frame.unpersist()
         scan.release()  # drops the cached PARENT parse frame (unpersisting
         # the filtered `good` view would be a CacheManager no-op and leak
         # one full-feed cache per import cycle)

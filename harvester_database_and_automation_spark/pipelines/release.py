@@ -10,7 +10,6 @@ the aggregate-of-aggregate share (export_spsp_submission.R:308-329).
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -212,22 +211,14 @@ def run_release_cycle(
 
     comp = batch_completeness(expected, arrived, key, batch_col)
     # Cached: two in-cycle branches read this join — `proc` feeds the
-    # cascade (annotated -> decided, filled by the uniqueness-gate action
-    # below) and `held` feeds the manifest's held_back rows in the tail
-    # rollup; without the cache each re-runs the candidates scan +
-    # completeness broadcast. It is released before the cycle returns, so
-    # a caller re-reading the returned `held` re-derives it from one
-    # broadcast join. Dropping this cache (and decided's, below) was
-    # tried in round 11: it removed two AQE cache-fill cascades but made
-    # every overlapped tail leg recompute the shared subtrees
-    # concurrently, which regressed the 32-core driver bench 33% —
-    # re-measured round 12, the caches win (9.6 -> 6.8 s min-of-4 at
-    # local[32]).
+    # cascade and `held` feeds the manifest's held_back rows; without the
+    # cache each re-runs the candidates scan + completeness broadcast. It
+    # is released before the cycle returns, so a caller re-reading the
+    # returned `held` re-derives it from one broadcast join.
     flagged = candidates.join(
         F.broadcast(comp.select(batch_col, "is_complete")), batch_col, "left"
     ).cache()
-    cached = [flagged]  # released on every exit, error paths included
-    manifest = None  # caller-owned once returned
+    cached = [flagged]  # released in the one `finally` below
     try:
         held = flagged.filter(~F.coalesce("is_complete", F.lit(False))).drop("is_complete")
         proc = flagged.filter(F.coalesce("is_complete", F.lit(False))).drop("is_complete")
@@ -258,13 +249,10 @@ def run_release_cycle(
             released_cur = spark.createDataFrame([], candidates.select(*released_cols).schema)
         else:
             released_cur = read_published(spark, table_dir)
-        # Cached: three tail legs consume this frame (the merge under the
-        # publish write, the manifest rollup, and the gate aggregation that
-        # fills it) — uncached, the released-table read + best-attempt
-        # aggregate + broadcast join re-ran once per leg, and running those
-        # duplicated subtrees CONCURRENTLY in the overlapped tail was the
-        # round-11 32-core regression (the in-flight-cache-fill trap's
-        # sibling: overlap is only cheap over materialized inputs).
+        # Cached: the gate aggregation below fills it, and the merge under
+        # the publish write and the manifest rollup read it again — uncached,
+        # each re-runs the released-table read + best-attempt aggregate +
+        # broadcast join.
         decided = resequencing_decisions(released_cur, eligible, key, quality_col).cache()
         cached.append(decided)
 
@@ -304,7 +292,7 @@ def run_release_cycle(
             # candidate row missing its payload twin would silently DROP an
             # accepted release. Both are hard errors: the re-attach must be
             # exactly 1:1 with the gated accepted set. One delta-sized count
-            # against the cached join (the merge below re-reads it hot).
+            # against the cached join (the merge below re-reads it).
             n_attached = to_release.count()
             if n_attached != stats["n"]:
                 raise ValueError(
@@ -334,42 +322,19 @@ def run_release_cycle(
                 ),
                 allowMissingColumns=True,
             )
-        ).cache()  # the rollup below materializes it; callers re-read it hot
+        ).cache()  # the rollup below materializes it; callers re-read it
+        cached.append(manifest)
 
-        # The publish write, the manifest rollup, and the suspicious-batch
-        # alert are three independent actions whose shared inputs are ALREADY
-        # materialized (the uniqueness-gate action above computed through
-        # flagged -> annotated -> decided, filling all three caches) —
-        # overlap them so one job's straggler tail back-fills with the
-        # others' tasks (guide §2.6). NOTE the ordering constraint this
-        # relies on: overlapping actions over a NOT-yet-materialized cache
-        # duplicates the whole subtree (in-flight cache fills are not shared
-        # between concurrent jobs — measured 2x job time when this ran
-        # before the gate action, and the round-11 regression when the legs
-        # recomputed uncached subtrees concurrently).
-        def _publish() -> int:
-            v = publish_versioned(merged, table_dir)
-            if payload_cols:
-                to_release.unpersist()
-            return v
-
-        def _rollup() -> dict[str, int]:
-            # One rollup action covers every report count except the
-            # suspicious-batch alert (different grain); it also populates the
-            # manifest cache, so the intermediates can be released without
-            # the RETURNED frames recomputing the cascade.
-            return {
-                r["status"]: r["n"]
-                for r in manifest.groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_version = pool.submit(_publish)
-            f_by_status = pool.submit(_rollup)
-            f_susp = pool.submit(lambda: suspicious_batches(qc, batch_col).count())
-            version = f_version.result()
-            by_status = f_by_status.result()
-            n_susp = f_susp.result()
+        version = publish_versioned(merged, table_dir)
+        # One rollup action covers every report count except the
+        # suspicious-batch alert (different grain); it also fills the
+        # manifest cache, so the intermediates can be released without the
+        # RETURNED frames recomputing the cascade.
+        by_status = {
+            r["status"]: r["n"]
+            for r in manifest.groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+        n_susp = suspicious_batches(qc, batch_col).count()
         report = ReleaseCycleReport(
             version=version,
             n_candidates=sum(by_status.values()),
@@ -381,17 +346,12 @@ def run_release_cycle(
             n_tombstoned=by_status.get("tombstone", 0),
             n_suspicious_batches=n_susp,
         )
-    except BaseException:
-        if manifest is not None:
-            manifest.unpersist()
-        raise
+        # The returned manifest stays cached — one delta-sized skinny frame
+        # instead of three payload-bearing ones — and the CALLER unpersists
+        # it after consuming (release_export_replay does, after its TSV
+        # export).
+        cached.pop()
     finally:
-        # The rollup and suspicious count are the last actions that read
-        # the cascade cache (round-9 ADVICE: leaked caches outlive the
-        # cycle). The returned manifest stays cached — one delta-sized
-        # skinny frame instead of three payload-bearing ones — and the
-        # CALLER unpersists it after consuming (release_export_replay
-        # does, after its TSV export).
         for frame in reversed(cached):
             frame.unpersist()
     return manifest, held, report

@@ -740,15 +740,8 @@ def derived_rebuild_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return (t, diff["n_incr"], diff["n_div"])
 
-    # The two tables' diffs are independent single-aggregation jobs —
-    # overlap them so one job's straggler tail back-fills with the other's
-    # tasks (same rationale as the rebuild walk in pipelines/derived.py).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(targets)) as pool:
-        rows = list(pool.map(compare, targets))
     return spark.createDataFrame(
-        rows, "table_name string, n_rows bigint, n_divergent bigint"
+        [compare(t) for t in targets], "table_name string, n_rows bigint, n_divergent bigint"
     )
 
 
@@ -1206,14 +1199,8 @@ def feed_import_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    # The two spool writes are independent fixture jobs over the raw
-    # documents scan (no shared un-materialized cache) — overlap them.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f1 = _pool.submit(write_feed, base.filter(F.col("m0") != 0), "feed1")
-        _f2 = _pool.submit(write_feed, feed2_df, "feed2")
-        feed1, feed2 = _f1.result(), _f2.result()
+    feed1 = write_feed(base.filter(F.col("m0") != 0), "feed1")
+    feed2 = write_feed(feed2_df, "feed2")
 
     def parse_line(line: str):
         parts = line.split("\t")

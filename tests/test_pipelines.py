@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from harvester_database_and_automation_spark.operators.publish import read_published
+from harvester_database_and_automation_spark.operators.publish import current_version, read_published
 from harvester_database_and_automation_spark.pipelines import build_release_plan, run_feed_import
 from harvester_database_and_automation_spark.pipelines.release import suspicious_batches
 from harvester_database_and_automation_spark.sources.quarantine import not_null
@@ -92,6 +92,51 @@ def test_feed_import_two_cycles(spark, tmp_path):
     assert t2["d"]["n_mut"] == 3
 
 
+def test_feed_import_annotates_each_changed_row_once(spark, tmp_path):
+    """The skip-reprocessing contract, counted where the work happens: the
+    annotate stage sees each inserted or payload-changed row exactly once
+    per cycle. An opaque mapInPandas stage (the run_fasta_tool shape) runs
+    once per plan that reads it, so dropping the annotated cache would
+    count rows three times (report count, then merge_delta's touched keys
+    and union), and an action that races the cache fill can count rows
+    twice."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_g(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf.assign(n_mut=pdf["sequence"].str.count("G"))
+
+    def annotate(df):
+        return df.select(*FEED_SCHEMA.names).mapInPandas(count_g, FEED_SCHEMA)
+
+    def cycle(name, rows):
+        feed = str(tmp_path / name)
+        _write_feed(feed, rows)
+        before = seen.value
+        rep = run_feed_import(
+            spark, feed, str(tmp_path / "seq_table"), FEED_SCHEMA,
+            keys=["seq_id"], metadata_cols=["country"], payload_cols=["sequence"],
+            checks={"country_required": not_null("country")}, annotate=annotate,
+        )
+        return rep, seen.value - before
+
+    cycle("feed1.jsonl", [
+        {"seq_id": k, "country": "CH", "sequence": "ACGG"} for k in "abcde"
+    ])
+    rep2, n_seen = cycle("feed2.jsonl", [
+        {"seq_id": "a", "country": "CH", "sequence": "ACGG"},  # unchanged
+        {"seq_id": "b", "country": "FR", "sequence": "ACGG"},  # metadata only
+        {"seq_id": "c", "country": "CH", "sequence": "GGGG"},  # payload changed
+        {"seq_id": "d", "country": "CH", "sequence": "GGTT"},  # payload changed
+        {"seq_id": "f", "country": "IT", "sequence": "GAGA"},  # insert
+    ])  # e: delete
+    assert (rep2.n_insert, rep2.n_payload_changed, rep2.n_delete) == (1, 2, 1)
+    assert n_seen == rep2.n_insert + rep2.n_payload_changed == rep2.n_annotated
+    t2 = {r["seq_id"]: r["n_mut"] for r in read_published(spark, str(tmp_path / "seq_table")).collect()}
+    assert t2 == {"a": 2, "b": 2, "c": 4, "d": 2, "f": 2}
+
+
 def test_feed_import_drift_aborts(spark, tmp_path):
     feed = str(tmp_path / "feed.jsonl")
     _write_feed(feed, [{"seq_id": "a", "country": "CH"}])  # no 'sequence'
@@ -139,7 +184,7 @@ def test_release_cascade_single_reason_and_report(spark):
 
 
 def test_derived_layer_rebuild_dependency_order(spark, tmp_path):
-    from harvester_database_and_automation_spark.operators.publish import read_published
+    from harvester_database_and_automation_spark.operators.publish import current_version, read_published
     from harvester_database_and_automation_spark.pipelines.derived import LAYER, DerivedLayer
 
     out = str(tmp_path / "derived")
@@ -252,7 +297,7 @@ def test_dedup_hub_tables_match_query_plans(spark, tmp_path):
     out = str(tmp_path / "derived")
     LAYER.rebuild(spark, sf, out)
 
-    from harvester_database_and_automation_spark.operators.publish import read_published
+    from harvester_database_and_automation_spark.operators.publish import current_version, read_published
 
     pairs_tbl = {
         (r["doc_a"], r["doc_b"]): round(r["jaccard"], 6)
@@ -282,7 +327,7 @@ def test_copurchase_edges_table_feeds_graph_queries(spark, tmp_path):
     """The published edge table must equal the edge frame the graph
     queries derive inline (same prune), so production jobs can swap the
     recompute for a read."""
-    from harvester_database_and_automation_spark.operators.publish import read_published
+    from harvester_database_and_automation_spark.operators.publish import current_version, read_published
     from harvester_database_and_automation_spark.pipelines.derived import LAYER
 
     out = str(tmp_path / "derived")
@@ -521,7 +566,7 @@ def test_run_release_cycle_payload_cols(spark, tmp_path):
     payload (the accepted (key, tiebreak) pair, not an arbitrary one)."""
     from pyspark.sql import functions as F
 
-    from harvester_database_and_automation_spark.operators.publish import read_published
+    from harvester_database_and_automation_spark.operators.publish import current_version, read_published
     from harvester_database_and_automation_spark.pipelines.release import run_release_cycle
 
     table = str(tmp_path / "released")
@@ -626,48 +671,64 @@ def _persisted_rdds(spark) -> int:
 
 @pytest.mark.parametrize("path", ["duplicate_keys", "payload_reattach"])
 def test_run_release_cycle_error_paths_release_caches(spark, tmp_path, path):
-    """Both hard-error exits of run_release_cycle leave the session's
-    persisted-RDD count where it was: the cascade caches (flagged,
+    """Both hard-error exits of run_release_cycle leave the published
+    marker and the session's persisted-RDD count where they were: the
+    gates fail before the publish, and the cascade caches (flagged,
     annotated, decided and the payload re-attach) are released on the
     error path, not only on success."""
     from harvester_database_and_automation_spark.pipelines.release import run_release_cycle
 
-    expected = spark.createDataFrame([(1, 0)], "sample_id bigint, batch int")
+    table = str(tmp_path / "released")
+    # Sample 1 (batch 0) releases in the first cycle; sample 2 (batch 1)
+    # reaches the failing gate in the second.
+    expected = spark.createDataFrame([(1, 0), (2, 1)], "sample_id bigint, batch int")
+    dedup = [("duplicate", F.col("duplicate_idx") > 1)]
     if path == "duplicate_keys":
-        # No duplicate_idx rule: both attempts of sample 1 are accepted.
-        c1 = spark.createDataFrame(
-            [(1, 1, 0, 30), (1, 2, 0, 20)],
-            "sample_id bigint, attempt_id int, batch int, consensus_n int",
-        )
-        kwargs = {"rules": []}
+        schema = "sample_id bigint, attempt_id int, batch int, consensus_n int"
+        c0 = [(1, 1, 0, 30)]
+        # No duplicate_idx rule: both attempts of sample 2 are accepted.
+        c1, rules, kwargs = [(2, 1, 1, 30), (2, 2, 1, 20)], [], {}
     else:
+        schema = "sample_id bigint, attempt_id int, batch int, consensus_n int, payload string"
+        c0 = [(1, 1, 0, 30, "PAYLOAD-1")]
         # Duplicate (key, tiebreak) rows pass the gate, then inflate the
         # payload re-attach join.
-        c1 = spark.createDataFrame(
-            [(1, 1, 0, 30, "PAYLOAD-A"), (1, 1, 0, 30, "PAYLOAD-B")],
-            "sample_id bigint, attempt_id int, batch int, consensus_n int, payload string",
-        )
+        c1, rules = [(2, 1, 1, 30, "PAYLOAD-A"), (2, 1, 1, 30, "PAYLOAD-B")], dedup
         kwargs = {
-            "rules": [("duplicate", F.col("duplicate_idx") > 1)],
             "released_cols": ["sample_id", "consensus_n", "payload"],
             "payload_cols": ["payload"],
         }
-    before = _persisted_rdds(spark)
-    with pytest.raises(ValueError, match="duplicate" if path == "duplicate_keys" else "re-attach"):
-        run_release_cycle(
-            spark, c1, expected, c1.select("sample_id"), str(tmp_path / "released"),
+
+    def cycle(rows, rules):
+        cands = spark.createDataFrame(rows, schema)
+        return run_release_cycle(
+            spark, cands, expected, cands.select("sample_id"), table, rules,
             key="sample_id", quality_col="consensus_n", batch_col="batch",
             tiebreak_col="attempt_id", **kwargs,
         )
+
+    manifest, _, _ = cycle(c0, dedup)
+    manifest.unpersist()
+    version = current_version(table)
+    assert version is not None
+    before = _persisted_rdds(spark)
+    with pytest.raises(ValueError, match="duplicate" if path == "duplicate_keys" else "re-attach"):
+        cycle(c1, rules)
+    assert current_version(table) == version
     assert _persisted_rdds(spark) == before
 
 
 def test_run_feed_import_error_path_releases_caches(spark, tmp_path):
-    """An annotate stage that raises leaves the session's persisted-RDD
-    count where it was: the parse cache and the classified frame are
-    released on the error path, not only on success."""
-    feed = str(tmp_path / "feed.jsonl")
-    _write_feed(feed, [{"seq_id": "a", "country": "CH", "sequence": "ACGG"}])
+    """An annotate stage that raises leaves the published marker and the
+    session's persisted-RDD count where they were: nothing publishes, and
+    the parse cache and the classified frame are released on the error
+    path, not only on success."""
+    table = str(tmp_path / "seq_table")
+    feed1 = str(tmp_path / "feed1.jsonl")
+    _write_feed(feed1, [{"seq_id": "a", "country": "CH", "sequence": "ACGG"}])
+    assert _run(spark, feed1, table).version == 1
+    feed2 = str(tmp_path / "feed2.jsonl")
+    _write_feed(feed2, [{"seq_id": "a", "country": "CH", "sequence": "GGGG"}])
 
     def failing_annotate(df):
         raise RuntimeError("annotation tool crashed")
@@ -675,9 +736,40 @@ def test_run_feed_import_error_path_releases_caches(spark, tmp_path):
     before = _persisted_rdds(spark)
     with pytest.raises(RuntimeError, match="annotation tool crashed"):
         run_feed_import(
-            spark, feed, str(tmp_path / "seq_table"), FEED_SCHEMA,
+            spark, feed2, table, FEED_SCHEMA,
             keys=["seq_id"], metadata_cols=["country"], payload_cols=["sequence"],
             checks={"country_required": not_null("country")},
             annotate=failing_annotate,
         )
+    assert current_version(table) == 1
     assert _persisted_rdds(spark) == before
+
+
+def test_package_runs_no_thread_pool():
+    """Every pipeline runs its Spark actions in program order on the
+    caller's thread; no module under the package imports
+    ``concurrent.futures`` or constructs a ``ThreadPoolExecutor``. The
+    ROADMAP rule (aim 2) stands behind it: new concurrency needs a
+    measured win and a soak test. A thread that serves a loopback endpoint,
+    such as the ``http_fetch_roundtrip`` server thread, is not a pool and
+    stays allowed."""
+    import ast
+    from pathlib import Path
+
+    import harvester_database_and_automation_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    offenders = []
+    for p in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""]
+            elif isinstance(node, ast.Call):
+                names = [getattr(node.func, "id", getattr(node.func, "attr", ""))]
+            else:
+                continue
+            if any(n.startswith("concurrent") or n == "ThreadPoolExecutor" for n in names):
+                offenders.append(f"{p.relative_to(root)}:{node.lineno}")
+    assert offenders == []
