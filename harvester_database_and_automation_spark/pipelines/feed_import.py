@@ -40,8 +40,12 @@ from harvester_database_and_automation_spark.operators.publish import (
     publish_versioned,
     read_published,
 )
-from harvester_database_and_automation_spark.sources.jsonl import check_field_drift, read_jsonl
-from harvester_database_and_automation_spark.sources.quarantine import validate
+from harvester_database_and_automation_spark.sources.jsonl import (
+    CORRUPT_COL,
+    check_field_drift,
+    read_jsonl,
+)
+from harvester_database_and_automation_spark.sources.quarantine import FAILED_COL, validate
 
 
 @dataclass
@@ -112,9 +116,16 @@ def run_feed_import(
     scan = read_jsonl(spark, feed_path, schema)
     classified = annotated = None
     try:
-        clean, quarantined = validate(scan.good, checks)
-        n_corrupt = scan.corrupt.count()
-        n_quarantined = quarantined.count()
+        # An unparseable line is a row failing the "parse" check, so one
+        # aggregation over the quarantine counts both kinds of bad row.
+        clean, quarantined = validate(
+            scan.parsed, {"parse": F.col(CORRUPT_COL).isNull(), **checks}
+        )
+        clean = clean.drop(CORRUPT_COL)
+        unparsed = F.array_contains(FAILED_COL, "parse")
+        n_corrupt, n_quarantined = quarantined.agg(
+            F.count(F.when(unparsed, 1)), F.count(F.when(~unparsed, 1))
+        ).first()
 
         first_run = current_version(table_dir) is None
         if first_run:

@@ -57,20 +57,6 @@ def build_release_plan(
     return annotated, report
 
 
-def suspicious_batches(report: DataFrame, batch_col: str, threshold: float = 0.8) -> DataFrame:
-    """Batches releasing less than ``threshold`` of their rows — the
-    reference's <80% alert (export_spsp_submission.R:335-375)."""
-    released = report.filter(F.col("reason") == REASON_RELEASE)
-    return (
-        report.groupBy(batch_col)
-        .agg(F.sum("n").alias("n_total"))
-        .join(released.select(batch_col, F.col("n").alias("n_released")), batch_col, "left")
-        .fillna(0, ["n_released"])
-        .withColumn("release_rate", F.col("n_released") / F.col("n_total"))
-        .filter(F.col("release_rate") < threshold)
-    )
-
-
 def resequencing_decisions(
     released: DataFrame,
     incoming: DataFrame,
@@ -153,10 +139,12 @@ def run_release_cycle(
        reference stamps spsp_uploaded_at via record_spsp_submission.R).
 
     Returns ``(manifest, held_back, report)``. ``manifest`` is one row per
-    candidate with ``duplicate_idx`` and a final ``status`` — a fail
-    reason, a resequencing decision, or ``held_back`` (held rows carry a
-    NULL duplicate_idx: they never entered the window); ``held_back`` is
-    the raw candidate rows to re-enqueue next cycle.
+    candidate with ``duplicate_idx``, ``reason``, ``decision`` and a final
+    ``status`` — a fail reason, a resequencing decision, or ``held_back``.
+    Failed rows carry a NULL decision; held rows carry NULL
+    duplicate_idx, reason and decision (they never entered the window).
+    The manifest comes back cached: the caller unpersists it.
+    ``held_back`` is the raw candidate rows to re-enqueue next cycle.
 
     ``released_cols`` names the columns the released table carries
     (default ``[key, quality_col]`` — the minimal resequencing state; a
@@ -195,8 +183,10 @@ def run_release_cycle(
     the cascade is one window over (key) partitions plus a ``when`` chain;
     the resequencing gate joins against a key+metric aggregate of the
     released table — never its payloads; the merge streams the released
-    table map-side past the hinted delta key set. Nothing here is
-    driver-side except the bounded report counts.
+    table map-side past the hinted delta key set. The only driver-side
+    results are one-row aggregates whatever the data size: the gate's
+    stats, the re-attach count, and the report — a per-batch, then
+    over-batches rollup of the cached manifest that returns ONE row.
     """
     from harvester_database_and_automation_spark.operators.merge import (
         fits_broadcast,
@@ -210,53 +200,46 @@ def run_release_cycle(
     )
 
     comp = batch_completeness(expected, arrived, key, batch_col)
-    # Cached: two in-cycle branches read this join — `proc` feeds the
-    # cascade and `held` feeds the manifest's held_back rows; without the
-    # cache each re-runs the candidates scan + completeness broadcast. It
-    # is released before the cycle returns, so a caller re-reading the
-    # returned `held` re-derives it from one broadcast join.
     flagged = candidates.join(
         F.broadcast(comp.select(batch_col, "is_complete")), batch_col, "left"
-    ).cache()
-    cached = [flagged]  # released in the one `finally` below
+    )
+    complete = F.coalesce("is_complete", F.lit(False))
+    held = flagged.filter(~complete).drop("is_complete")
+    proc = flagged.filter(complete).drop("is_complete")
+    if payload_cols:
+        # Payload-skinny cascade: the duplicate_idx window shuffles on
+        # key — keep the wide columns out of that exchange (docstring;
+        # they re-attach to the accepted delta below).
+        proc = proc.drop(*payload_cols)
+    annotated, _ = build_release_plan(
+        proc, key, quality_col, batch_col, rules, tiebreak_col=tiebreak_col
+    )
+
+    if released_cols is None:
+        released_cols = [key, quality_col]
+    if current_version(table_dir) is None:
+        # Derive the empty table's schema from the candidates themselves
+        # (round-9 ADVICE): a hardcoded type string breaks string-keyed
+        # or differently-typed corpora on the first cycle's unionByName
+        # under ANSI.
+        released_cur = spark.createDataFrame([], candidates.select(*released_cols).schema)
+    else:
+        released_cur = read_published(spark, table_dir)
+
+    # The one cached frame of the cycle: every candidate with its single
+    # status. The gate, the merge and the report all read it; the gate's
+    # aggregation fills it. Failed rows keep their reason and get a NULL
+    # decision; held rows carry NULL duplicate_idx, reason and decision.
+    manifest = (
+        resequencing_decisions(released_cur, annotated, key, quality_col)
+        .withColumn("decision", F.when(F.col("reason") == REASON_RELEASE, F.col("decision")))
+        .withColumn("status", F.coalesce("decision", "reason"))
+        .unionByName(held.withColumn("status", F.lit("held_back")), allowMissingColumns=True)
+        .cache()
+    )
+    cached = [manifest]  # released in the one `finally` below, bar the manifest
     try:
-        held = flagged.filter(~F.coalesce("is_complete", F.lit(False))).drop("is_complete")
-        proc = flagged.filter(F.coalesce("is_complete", F.lit(False))).drop("is_complete")
-        if payload_cols:
-            # Payload-skinny cascade: the duplicate_idx window shuffles on
-            # key — keep the wide columns out of that exchange (docstring;
-            # they re-attach to the accepted delta below).
-            proc = proc.drop(*payload_cols)
-
-        annotated, qc = build_release_plan(
-            proc, key, quality_col, batch_col, rules, tiebreak_col=tiebreak_col
-        )
-        # Every downstream consumer (failed/eligible split, the resequencing
-        # gate, the uniqueness gate, the merge, the QC report, the manifest)
-        # derives from this frame; the uniqueness-gate action below fills it.
-        annotated = annotated.cache()
-        cached.append(annotated)
-        failed = annotated.filter(F.col("reason") != REASON_RELEASE)
-        eligible = annotated.filter(F.col("reason") == REASON_RELEASE)
-
-        if released_cols is None:
-            released_cols = [key, quality_col]
-        if current_version(table_dir) is None:
-            # Derive the empty table's schema from the candidates themselves
-            # (round-9 ADVICE): a hardcoded type string breaks string-keyed
-            # or differently-typed corpora on the first cycle's unionByName
-            # under ANSI.
-            released_cur = spark.createDataFrame([], candidates.select(*released_cols).schema)
-        else:
-            released_cur = read_published(spark, table_dir)
-        # Cached: the gate aggregation below fills it, and the merge under
-        # the publish write and the manifest rollup read it again — uncached,
-        # each re-runs the released-table read + best-attempt aggregate +
-        # broadcast join.
-        decided = resequencing_decisions(released_cur, eligible, key, quality_col).cache()
-        cached.append(decided)
-
-        accepted = decided.filter(F.col("decision").isin("submit_new", "submit_update"))
+        accepted = manifest.filter(F.col("decision").isin("submit_new", "submit_update"))
         # ONE delta-sized aggregation does three jobs: the loud uniqueness
         # gate (merge_delta doubles rows on duplicate keys — fail instead),
         # the measured delta count, and the delta's key-byte estimate that
@@ -280,6 +263,7 @@ def run_release_cycle(
             # payload frame streams map-side past the broadcast-hinted
             # accepted (key, tiebreak) pairs — the payload bytes' ONLY join
             # in the whole cycle, and it never enters an exchange.
+            accepted = accepted.drop(*payload_cols)  # NULL in the manifest
             payloads = candidates.select(key, tiebreak_col, *payload_cols)
             to_release = payloads.join(
                 F.broadcast(accepted) if hint else accepted,
@@ -312,45 +296,37 @@ def run_release_cycle(
             [key],
             broadcast_touched=hint,
         )
-
-        manifest = (
-            failed.withColumn("status", F.col("reason"))
-            .unionByName(decided.withColumn("status", F.col("decision")), allowMissingColumns=True)
-            .unionByName(
-                held.withColumn("duplicate_idx", F.lit(None).cast("int")).withColumn(
-                    "status", F.lit("held_back")
-                ),
-                allowMissingColumns=True,
-            )
-        ).cache()  # the rollup below materializes it; callers re-read it
-        cached.append(manifest)
-
         version = publish_versioned(merged, table_dir)
-        # One rollup action covers every report count except the
-        # suspicious-batch alert (different grain); it also fills the
-        # manifest cache, so the intermediates can be released without the
-        # RETURNED frames recomputing the cascade.
-        by_status = {
-            r["status"]: r["n"]
-            for r in manifest.groupBy("status").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        n_susp = suspicious_batches(qc, batch_col).count()
-        report = ReleaseCycleReport(
-            version=version,
-            n_candidates=sum(by_status.values()),
-            n_held_back=by_status.get("held_back", 0),
-            n_failed=sum(n for s, n in by_status.items() if s not in
-                         ("submit_new", "submit_update", "tombstone", "held_back")),
-            n_submit_new=by_status.get("submit_new", 0),
-            n_submit_update=by_status.get("submit_update", 0),
-            n_tombstoned=by_status.get("tombstone", 0),
-            n_suspicious_batches=n_susp,
+
+        # Every report field from one two-level rollup of the manifest: per
+        # batch, then over the batches — one row reaches the driver. Held
+        # rows carry a NULL reason, so a held batch (completeness is decided
+        # per batch) has no cascade rows and is never suspicious.
+        decision = F.col("decision")
+        per_batch = manifest.groupBy(batch_col).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count("reason").alias("n_cascade"),
+            F.count(decision).alias("n_decided"),  # submit_new/_update + tombstone
+            *[F.count(F.when(decision == d, 1)).alias(d)
+              for d in ("submit_new", "submit_update", "tombstone")],
         )
-        # The returned manifest stays cached — one delta-sized skinny frame
-        # instead of three payload-bearing ones — and the CALLER unpersists
-        # it after consuming (release_export_replay does, after its TSV
-        # export).
-        cached.pop()
+        rate = F.try_divide("n_decided", "n_cascade")
+        totals = per_batch.agg(
+            F.sum("n").alias("n_candidates"),
+            F.sum(F.col("n") - F.col("n_cascade")).alias("n_held_back"),
+            F.sum(F.col("n_cascade") - F.col("n_decided")).alias("n_failed"),
+            F.sum("submit_new").alias("n_submit_new"),
+            F.sum("submit_update").alias("n_submit_update"),
+            F.sum("tombstone").alias("n_tombstoned"),
+            # The reference's <80% alert (export_spsp_submission.R:335-375).
+            F.count(F.when(rate < 0.8, 1)).alias("n_suspicious_batches"),
+        ).first()
+        report = ReleaseCycleReport(
+            version=version, **{k: v or 0 for k, v in totals.asDict().items()}
+        )
+        # The returned manifest stays cached — the CALLER unpersists it
+        # after consuming (release_export_replay does, after its TSV export).
+        cached.remove(manifest)
     finally:
         for frame in reversed(cached):
             frame.unpersist()

@@ -11,7 +11,6 @@ from pyspark.sql import types as T
 
 from harvester_database_and_automation_spark.operators.publish import current_version, read_published
 from harvester_database_and_automation_spark.pipelines import build_release_plan, run_feed_import
-from harvester_database_and_automation_spark.pipelines.release import suspicious_batches
 from harvester_database_and_automation_spark.sources.quarantine import not_null
 
 FEED_SCHEMA = T.StructType(
@@ -178,9 +177,6 @@ def test_release_cascade_single_reason_and_report(spark):
     rep = {(r["batch"], r["reason"]): r["frac_batch"] for r in report.collect()}
     assert rep[("b1", "release")] == pytest.approx(1 / 3)
     assert rep[("b2", "too_many_n")] == pytest.approx(0.5)
-
-    sus = suspicious_batches(report, "batch", threshold=0.8).collect()
-    assert {r["batch"] for r in sus} == {"b1", "b2"}
 
 
 def test_derived_layer_rebuild_dependency_order(spark, tmp_path):
@@ -527,9 +523,16 @@ def test_run_release_cycle_two_cycles(spark, tmp_path):
         key="sample_id", quality_col="consensus_n", batch_col="batch",
         tiebreak_col="attempt_id",
     )
-    s1 = {(r["sample_id"], r["attempt_id"]): r["status"] for r in man1.collect()}
+    rows1 = man1.collect()
+    s1 = {(r["sample_id"], r["attempt_id"]): r["status"] for r in rows1}
     assert s1 == {(1, 1): "submit_new", (1, 2): "duplicate", (2, 1): "too_many_n",
                   (3, 1): "held_back", (10, 1): "submit_new", (11, 1): "submit_new"}
+    # Failed rows keep their reason and carry no decision; decided rows
+    # carry reason 'release' and their decision; held rows carry neither.
+    rd1 = {(r["sample_id"], r["attempt_id"]): (r["reason"], r["decision"]) for r in rows1}
+    assert rd1 == {(1, 1): ("release", "submit_new"), (1, 2): ("duplicate", None),
+                   (2, 1): ("too_many_n", None), (3, 1): (None, None),
+                   (10, 1): ("release", "submit_new"), (11, 1): ("release", "submit_new")}
     assert {r["duplicate_idx"] for r in man1.filter("status = 'held_back'").collect()} == {None}
     assert [r["sample_id"] for r in held1.collect()] == [3]
     assert rep1.version == 1 and rep1.n_held_back == 1 and rep1.n_submit_new == 3
@@ -549,15 +552,62 @@ def test_run_release_cycle_two_cycles(spark, tmp_path):
         key="sample_id", quality_col="consensus_n", batch_col="batch",
         tiebreak_col="attempt_id",
     )
-    s2 = {r["sample_id"]: r["status"] for r in man2.collect()}
-    assert s2 == {4: "submit_new", 3: "submit_new", 1: "submit_update",
-                  10: "tombstone", 11: "submit_update"}
+    s2 = {r["sample_id"]: (r["status"], r["reason"], r["decision"]) for r in man2.collect()}
+    assert s2 == {4: ("submit_new", "release", "submit_new"),
+                  3: ("submit_new", "release", "submit_new"),
+                  1: ("submit_update", "release", "submit_update"),
+                  10: ("tombstone", "release", "tombstone"),
+                  11: ("submit_update", "release", "submit_update")}
     assert held2.count() == 0
     assert rep2.version == 2 and rep2.n_tombstoned == 1 and rep2.n_submit_update == 2
 
     # The published table carries the updated metric, never tombstoned ones.
     final = {r["sample_id"]: r["consensus_n"] for r in read_published(spark, table).collect()}
     assert final == {1: 26, 3: 20, 4: 50, 10: 10, 11: 8}
+
+
+def test_run_release_cycle_suspicious_batch_boundary(spark, tmp_path):
+    """The report's <80% alert (export_spsp_submission.R:335-375): a batch
+    releasing exactly 80% of its rows is not suspicious, one below is, and
+    a held batch is never counted, however few of its rows would release.
+    Tombstoned rows count as released."""
+    from harvester_database_and_automation_spark.pipelines.release import run_release_cycle
+
+    table = str(tmp_path / "released")
+    # Batch 0: samples 1-5; batch 1: samples 6-7; batch 2: samples 8-9,
+    # and sample 9 never arrives, so batch 2 is held.
+    expected = spark.createDataFrame(
+        [(s, 0) for s in range(1, 6)] + [(6, 1), (7, 1), (8, 2), (9, 2)],
+        "sample_id bigint, batch int",
+    )
+    rules = [("duplicate", F.col("duplicate_idx") > 1), ("too_many_n", F.col("consensus_n") > 90)]
+    schema = "sample_id bigint, attempt_id int, batch int, consensus_n int"
+
+    arrived = expected.filter("sample_id <> 9").select("sample_id")
+
+    def cycle(rows):
+        cands = spark.createDataFrame(rows, schema)
+        manifest, _held, report = run_release_cycle(
+            spark, cands, expected, arrived, table, rules,
+            key="sample_id", quality_col="consensus_n", batch_col="batch",
+            tiebreak_col="attempt_id",
+        )
+        manifest.unpersist()
+        return report
+
+    # Batch 0 releases 4 of 5 rows (exactly 80%), batch 1 releases 1 of 2,
+    # and held batch 2's only row would fail.
+    rep1 = cycle(
+        [(s, 1, 0, 10) for s in range(1, 5)]
+        + [(5, 1, 0, 95), (6, 1, 1, 10), (7, 1, 1, 95), (8, 1, 2, 95)]
+    )
+    assert (rep1.n_candidates, rep1.n_held_back, rep1.n_failed, rep1.n_submit_new) == (8, 1, 2, 5)
+    assert rep1.n_suspicious_batches == 1
+
+    # Batch 0's released samples re-arrive no better: all four tombstone,
+    # and a batch whose rows all tombstone is not suspicious.
+    rep2 = cycle([(s, 2, 0, 10) for s in range(1, 5)])
+    assert (rep2.n_tombstoned, rep2.n_suspicious_batches) == (4, 0)
 
 
 def test_run_release_cycle_payload_cols(spark, tmp_path):
@@ -673,9 +723,9 @@ def _persisted_rdds(spark) -> int:
 def test_run_release_cycle_error_paths_release_caches(spark, tmp_path, path):
     """Both hard-error exits of run_release_cycle leave the published
     marker and the session's persisted-RDD count where they were: the
-    gates fail before the publish, and the cascade caches (flagged,
-    annotated, decided and the payload re-attach) are released on the
-    error path, not only on success."""
+    gates fail before the publish, and the cycle's caches (the manifest
+    and the payload re-attach) are released on the error path, not only
+    on success."""
     from harvester_database_and_automation_spark.pipelines.release import run_release_cycle
 
     table = str(tmp_path / "released")
@@ -716,6 +766,59 @@ def test_run_release_cycle_error_paths_release_caches(spark, tmp_path, path):
         cycle(c1, rules)
     assert current_version(table) == version
     assert _persisted_rdds(spark) == before
+
+
+def _persisted_ids(spark) -> set[int]:
+    """Persisted RDD ids — compared as sets, not counts: the ContextCleaner
+    may drop earlier tests' RDDs meanwhile."""
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def test_run_release_cycle_success_leaves_only_the_manifest(spark, tmp_path):
+    """A successful cycle leaves exactly one more persisted RDD, the
+    returned manifest, and none once the caller unpersists it: every other
+    cache, the payload re-attach included, is released before the return.
+    Two cycles, so the second reads a published released table."""
+    from harvester_database_and_automation_spark.pipelines.release import run_release_cycle
+
+    table = str(tmp_path / "released")
+    expected = spark.createDataFrame([(1, 0), (2, 0)], "sample_id bigint, batch int")
+    schema = "sample_id bigint, attempt_id int, batch int, consensus_n int, payload string"
+    for rows in ([(1, 1, 0, 30, "P-1"), (2, 1, 0, 50, "P-2")], [(1, 2, 0, 10, "P-1b")]):
+        cands = spark.createDataFrame(rows, schema)
+        before = _persisted_ids(spark)
+        manifest, _held, _rep = run_release_cycle(
+            spark, cands, expected, expected.select("sample_id"), table,
+            [("duplicate", F.col("duplicate_idx") > 1)],
+            key="sample_id", quality_col="consensus_n", batch_col="batch",
+            tiebreak_col="attempt_id",
+            released_cols=["sample_id", "consensus_n", "payload"],
+            payload_cols=["payload"],
+        )
+        assert len(_persisted_ids(spark) - before) == 1
+        manifest.unpersist()
+        assert _persisted_ids(spark) - before == set()
+
+
+def test_run_feed_import_success_leaves_no_persisted_rdd(spark, tmp_path):
+    """A successful import, the first and a later one, leaves no persisted
+    RDD behind: the parse, classified and annotated caches are all
+    released before it returns."""
+    table = str(tmp_path / "seq_table")
+    feeds = [
+        [{"seq_id": "a", "country": "CH", "sequence": "ACGG"}, {"seq_id": "b"}],
+        [{"seq_id": "a", "country": "DE", "sequence": "GGGG"}, {"seq_id": "c", "country": "CH",
+                                                              "sequence": "AC"}],
+    ]
+    for i, rows in enumerate(feeds):
+        feed = str(tmp_path / f"feed{i}.jsonl")
+        _write_feed(feed, rows)
+        with open(feed, "a", encoding="utf-8") as fh:
+            fh.write("{not json\n")
+        before = _persisted_ids(spark)
+        rep = _run(spark, feed, table)
+        assert (rep.version, rep.n_corrupt, rep.n_quarantined) == (i + 1, 1, 1 - i)
+        assert _persisted_ids(spark) - before == set()
 
 
 def test_run_feed_import_error_path_releases_caches(spark, tmp_path):
