@@ -715,8 +715,10 @@ def test_run_release_cycle_rejects_duplicate_accepted_keys(spark, tmp_path):
         )
 
 
-def _persisted_rdds(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persisted_ids(spark) -> set[int]:
+    """Persisted RDD ids — compared as sets, not counts: the ContextCleaner
+    may drop earlier tests' RDDs meanwhile."""
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
 
 
 @pytest.mark.parametrize("path", ["duplicate_keys", "payload_reattach"])
@@ -761,17 +763,11 @@ def test_run_release_cycle_error_paths_release_caches(spark, tmp_path, path):
     manifest.unpersist()
     version = current_version(table)
     assert version is not None
-    before = _persisted_rdds(spark)
+    before = _persisted_ids(spark)
     with pytest.raises(ValueError, match="duplicate" if path == "duplicate_keys" else "re-attach"):
         cycle(c1, rules)
     assert current_version(table) == version
-    assert _persisted_rdds(spark) == before
-
-
-def _persisted_ids(spark) -> set[int]:
-    """Persisted RDD ids — compared as sets, not counts: the ContextCleaner
-    may drop earlier tests' RDDs meanwhile."""
-    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+    assert _persisted_ids(spark) - before == set()
 
 
 def test_run_release_cycle_success_leaves_only_the_manifest(spark, tmp_path):
@@ -807,8 +803,8 @@ def test_run_feed_import_success_leaves_no_persisted_rdd(spark, tmp_path):
     table = str(tmp_path / "seq_table")
     feeds = [
         [{"seq_id": "a", "country": "CH", "sequence": "ACGG"}, {"seq_id": "b"}],
-        [{"seq_id": "a", "country": "DE", "sequence": "GGGG"}, {"seq_id": "c", "country": "CH",
-                                                              "sequence": "AC"}],
+        [{"seq_id": "a", "country": "DE", "sequence": "GGGG"},
+         {"seq_id": "c", "country": "CH", "sequence": "AC"}],
     ]
     for i, rows in enumerate(feeds):
         feed = str(tmp_path / f"feed{i}.jsonl")
@@ -836,7 +832,7 @@ def test_run_feed_import_error_path_releases_caches(spark, tmp_path):
     def failing_annotate(df):
         raise RuntimeError("annotation tool crashed")
 
-    before = _persisted_rdds(spark)
+    before = _persisted_ids(spark)
     with pytest.raises(RuntimeError, match="annotation tool crashed"):
         run_feed_import(
             spark, feed2, table, FEED_SCHEMA,
@@ -845,7 +841,7 @@ def test_run_feed_import_error_path_releases_caches(spark, tmp_path):
             annotate=failing_annotate,
         )
     assert current_version(table) == 1
-    assert _persisted_rdds(spark) == before
+    assert _persisted_ids(spark) - before == set()
 
 
 def test_package_runs_no_thread_pool():
