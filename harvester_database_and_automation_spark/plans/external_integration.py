@@ -935,8 +935,9 @@ def release_export_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
       ``n - 1`` (better but <10% → **tombstone**); samples whose cycle-1
       attempt FAILED the cascade re-enter as submit_new (best_old is
       NULL) — the accept/reject gate `new < 0.9 × best_old`
-      (pipelines/release.py:72) is certified on both sides of the
-      boundary, including exact-boundary rows (old = 10 → new = 9);
+      (`pipelines/release.resequencing_decisions`) is certified on both
+      sides of the boundary, including exact-boundary rows (old = 10 →
+      new = 9);
     - ``m == 7`` also arrives twice in cycle 2 (attempt 2 is 3 worse), so
       the duplicate window is exercised in the same cycle as the gate;
     - the fail cascade (n_discrepancy on |consensus_n − diagnostic_n|,
