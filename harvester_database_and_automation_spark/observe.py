@@ -144,3 +144,23 @@ def measure(spark, label: str):
         sc.setLocalProperty(_DESC, prev)
     jobs, stages = _finished_jobs(base, job0, job1), _get(f"{base}/stages")
     out.update(summarize(jobs, stages, t0, t1, lambda s: _max_task_ms(base, s)))
+
+
+@contextlib.contextmanager
+def py4j_calls(spark):
+    """Count the py4j commands the block sends to the JVM, each one a
+    driver round trip; the yielded dict's ``calls`` is filled on exit.
+    Plan construction is paid in these, not in Spark jobs."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    out = {"calls": 0}
+
+    def counted(*args, **kwargs):
+        out["calls"] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield out
+    finally:
+        client.send_command = send

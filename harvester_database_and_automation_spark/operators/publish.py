@@ -8,6 +8,12 @@ Without a transactional table format, the Spark equivalent is: write the
 new snapshot to ``<table>/v<n+1>/`` and then atomically repoint a tiny
 ``_CURRENT`` marker file. Readers resolve the marker first, so they see
 either the old or the new version, never a half-written directory.
+
+Each version directory also carries ``_schema.json``, the schema a
+parquet read of it produces, written before the marker swap. Readers
+pass it to ``spark.read.schema``, so resolving a version is a file
+listing and never a footer-inference job; Spark skips ``_``-files when
+it lists a table.
 """
 
 from __future__ import annotations
@@ -18,8 +24,10 @@ import tempfile
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _MARKER = "_CURRENT"
+_SCHEMA = "_schema.json"
 
 
 def current_version(table_dir: str) -> int | None:
@@ -48,6 +56,61 @@ def _next_version(table_dir: str) -> int:
     return max(current_version(table_dir) or 0, versions[-1] if versions else 0) + 1
 
 
+def _nullable(t):
+    """A ``DataType.jsonValue()`` with every struct field, array element
+    and map value nullable."""
+    if not isinstance(t, dict):
+        return t
+    if t["type"] == "struct":
+        fields = [{**f, "nullable": True, "type": _nullable(f["type"])} for f in t["fields"]]
+        return {**t, "fields": fields}
+    if t["type"] == "array":
+        return {**t, "containsNull": True, "elementType": _nullable(t["elementType"])}
+    if t["type"] == "map":
+        return {
+            **t,
+            "valueContainsNull": True,
+            "keyType": _nullable(t["keyType"]),
+            "valueType": _nullable(t["valueType"]),
+        }
+    return t
+
+
+def parquet_schema(schema: StructType, partition_by: Iterable[str] = ()) -> StructType:
+    """The schema a parquet read produces for a frame of ``schema`` written
+    partitioned by ``partition_by``: the data columns in order, then the
+    partition columns in their written types (not the types path
+    inference would guess), everything nullable."""
+    pcols = list(partition_by)
+    by_name = {f.name: f for f in schema.fields}
+    fields = [f for f in schema.fields if f.name not in pcols] + [by_name[c] for c in pcols]
+    return StructType.fromJson(_nullable(StructType(fields).jsonValue()))
+
+
+def _write_schema(df: DataFrame, vdir: str, partition_by: list[str] | None) -> None:
+    """Store the schema a parquet read of ``vdir`` produces inside it.
+    Called after the write and before the marker swap, so a published
+    version always carries its schema."""
+    with open(os.path.join(vdir, _SCHEMA), "w", encoding="utf-8") as fh:
+        json.dump(parquet_schema(df.schema, partition_by or ()).jsonValue(), fh)
+
+
+def _read_version(spark: SparkSession, vdir: str, leaves: Iterable[str] = ()) -> DataFrame:
+    """Read a published version directory (or only its ``leaves``, relative
+    partition paths) with the schema stored at publish time, so no
+    footer-inference job runs. A version published before versions
+    carried a schema is inferred."""
+    try:
+        with open(os.path.join(vdir, _SCHEMA), encoding="utf-8") as fh:
+            reader = spark.read.schema(StructType.fromJson(json.load(fh)))
+    except FileNotFoundError:
+        reader = spark.read
+    paths = [os.path.join(vdir, leaf) for leaf in leaves]
+    if paths:
+        return reader.option("basePath", vdir).parquet(*paths)
+    return reader.parquet(vdir)
+
+
 def publish_versioned(
     df: DataFrame,
     table_dir: str,
@@ -70,6 +133,7 @@ def publish_versioned(
     if max_records_per_file is not None:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.parquet(os.path.join(table_dir, f"v{version}"))
+    _write_schema(df, os.path.join(table_dir, f"v{version}"), partition_by)
     if metadata is not None:
         # Written INSIDE the version dir before the marker swap, so the
         # atomic pointer move carries data + metadata together — a crash
@@ -206,6 +270,7 @@ def publish_incremental(
             spath = os.path.join(src, fname)
             if os.path.isfile(spath) and not fname.startswith(("_", ".")):
                 os.link(spath, os.path.join(dst, fname))
+    _write_schema(df_partial, new_dir, partition_by)
     _swap_marker(table_dir, version)
     return version
 
@@ -214,7 +279,7 @@ def read_published(spark: SparkSession, table_dir: str) -> DataFrame:
     version = current_version(table_dir)
     if version is None:
         raise FileNotFoundError(f"no published version in {table_dir}")
-    return spark.read.parquet(os.path.join(table_dir, f"v{version}"))
+    return _read_version(spark, os.path.join(table_dir, f"v{version}"))
 
 
 def vacuum(table_dir: str, keep: int = 2, drop_failed: bool = False) -> list[int]:
@@ -287,11 +352,7 @@ def compact_small_files(
     if not to_compact:
         return cur, []
 
-    df = (
-        spark.read.option("basePath", cur_dir)
-        .parquet(*(os.path.join(cur_dir, leaf) for leaf in to_compact))
-        .repartition(*partition_by)
-    )
+    df = _read_version(spark, cur_dir, to_compact).repartition(*partition_by)
     # Honor target_bytes on the write side: repartition(partition_by)
     # funnels each partition key into ONE task, so without a record cap a
     # big leaf would compact into a single target-busting file. Estimate
@@ -338,6 +399,7 @@ def publish_group(
         if pb:
             writer = writer.partitionBy(*pb)
         writer.parquet(os.path.join(vdir, name))
+        _write_schema(df, os.path.join(vdir, name), pb)
     _swap_marker(group_dir, version)
     return version
 
@@ -346,7 +408,7 @@ def read_group_table(spark: SparkSession, group_dir: str, table: str) -> DataFra
     version = current_version(group_dir)
     if version is None:
         raise FileNotFoundError(f"no published version in {group_dir}")
-    return spark.read.parquet(os.path.join(group_dir, f"v{version}", table))
+    return _read_version(spark, os.path.join(group_dir, f"v{version}", table))
 
 
 def rollback(table_dir: str) -> int:

@@ -3353,31 +3353,19 @@ def part_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape (`dup_connected_components` is the undirected one, and this one
     carries path depth, which contraction deliberately destroys).
 
-    Spark walks the chain by pointer doubling-style iteration: a bounded
-    loop (log10 of the key space, 4 rounds here) of self-joins that
-    rewrite each node's current ancestor to its parent until every chain
-    hits a root — no recursion needed because depth is bounded by the
-    key width, the same bounded-iteration argument as the contraction
-    rounds. Revenue aggregates per part FIRST (integer cents), so the
-    closure join touches (part, root, depth) triples, never lineitem."""
-    p = load_table(spark, sf_dir, "part").select(F.col("p_partkey").alias("part"))
-    # Walk ancestor = part, then repeatedly div 10 until < 10 (root).
-    cur = p.select("part", F.col("part").alias("ancestor"), F.lit(0).alias("depth"))
-    # Rounds bound the walk at 10^9 keys (9 hops); converged rows are
-    # no-ops, so over-provisioning costs a few cheap map stages, while
-    # under-provisioning (e.g. 4 rounds on 6-digit sf>=1 keys) would
-    # silently leave chains un-rooted.
-    for _ in range(9):
-        cur = cur.select(
-            "part",
-            F.when(F.col("ancestor") >= 10, F.expr("ancestor div 10")).otherwise(
-                F.col("ancestor")
-            ).alias("ancestor"),
-            F.when(F.col("ancestor") >= 10, F.col("depth") + 1).otherwise(F.col("depth")).alias(
-                "depth"
-            ),
-        )
-    roots = cur.select("part", F.col("ancestor").alias("root"), "depth")
+    The chain has a closed form, so Spark needs no iteration: a key of
+    ``d`` digits (``d >= 2``, i.e. ``key >= 10``) takes ``d - 1`` hops of
+    ``div 10`` to reach its root, the leading digit ``key div 10^(d-1)``;
+    a key below 10 is its own root at depth 0. One projection computes
+    every (part, root, depth) triple, for any key width. The oracle keeps
+    the recursive CTE, so the hash match certifies the closed form
+    against the closure it replaces. Revenue aggregates per part FIRST
+    (integer cents), so the closure join touches (part, root, depth)
+    triples, never lineitem."""
+    depth = "CASE WHEN part >= 10 THEN length(CAST(part AS STRING)) - 1 ELSE 0 END"
+    roots = load_table(spark, sf_dir, "part").selectExpr("p_partkey AS part").selectExpr(
+        "part", f"part div CAST(power(10, {depth}) AS BIGINT) AS root", f"{depth} AS depth"
+    )
     li = load_table(spark, sf_dir, "lineitem")
     rev = li.groupBy(F.col("l_partkey").alias("part")).agg(
         F.sum(F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long")).alias("cents")

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from harvester_database_and_automation_spark.catalog import load_table
+from harvester_database_and_automation_spark.operators.publish import parquet_schema
 from harvester_database_and_automation_spark.plans.registry import register
 from harvester_database_and_automation_spark.plans.shared import scratch_dir
 from harvester_database_and_automation_spark.streaming.ingest import spool_batches
@@ -80,7 +81,8 @@ def _replay(
     """Replay ``batches`` (all filtered from ``parent``) as a
     ``maxFilesPerTrigger=1`` JSON file stream with ``schema`` through
     ``transform`` under one ``availableNow`` trigger, and return the
-    ledger of every row it emitted."""
+    ledger of every row it emitted, read with the transformed stream's
+    own schema (no footer-inference job)."""
     with _replay_dirs(spark, batches, parent) as (feed, ckpt, out):
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -96,16 +98,16 @@ def _replay(
             batch_df.write.mode("append").parquet(out)
 
         stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(feed)
+        emitted = transform(stream)
         (
-            transform(stream)
-            .writeStream.foreachBatch(sink)
+            emitted.writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt)
             .outputMode(output_mode)
             .trigger(availableNow=True)
             .start()
             .awaitTermination()
         )
-    return spark.read.parquet(out)
+    return spark.read.schema(parquet_schema(emitted.schema)).parquet(out)
 
 
 @register(

@@ -55,6 +55,8 @@ def get_spark(
             else "false"
         ),
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
+        # Off: capturing each Column/DataFrame call site costs ~10 py4j round trips per call.
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     if extra_conf:
         conf.update(extra_conf)

@@ -48,7 +48,7 @@ from harvester_database_and_automation_spark.testing import (  # noqa: E402
     duckdb_connection,
     perturb_corpus,
 )
-from scripts.release_gate import git_head  # noqa: E402
+from scripts.release_gate import git_dirty, git_head  # noqa: E402
 
 # Queries allowed to sit still under BOTH probes, each with the provable
 # reason (the probes never touch key/_id columns — integrity constraints
@@ -160,7 +160,7 @@ def main() -> int:
     clean_dir = sys.argv[1] if sys.argv[1:] else "/root/testdata/sf0.001"
     names = sys.argv[2:] or list(QUERIES)
     spark = get_spark("drift-guard")
-    head = git_head()
+    head, dirty = git_head(), git_dirty()
 
     t0 = time.time()
     with tempfile.TemporaryDirectory(prefix="drift_pert_") as pert1_dir, \
@@ -219,6 +219,7 @@ def main() -> int:
     n_reasoned = sum(1 for r in rows.values() if "no_move_reason" in r)
     out = {
         "git_head": head,
+        "git_dirty": dirty,
         "clean_dir": clean_dir,
         "n_queries": len(rows),
         "n_moved_stage1_single_row": n_moved1,

@@ -37,7 +37,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from harvester_database_and_automation_spark.observe import measure  # noqa: E402
 from harvester_database_and_automation_spark.plans import QUERIES  # noqa: E402
 from harvester_database_and_automation_spark.session import get_spark  # noqa: E402
-from scripts.release_gate import git_head  # noqa: E402
+from scripts.release_gate import git_dirty, git_head  # noqa: E402
 
 SHUFFLE_RATIO = 1.5
 MIN_FLAG_MB = 20.0
@@ -60,7 +60,7 @@ def main() -> int:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
 
-    head = git_head()
+    head, dirty = git_head(), git_dirty()
     spark = get_spark("shuffle-audit")
 
     def run(name: str) -> None:
@@ -111,6 +111,7 @@ def main() -> int:
     total_sh = round(sum(e["shuffle_write_mb"] for e in queries.values()), 1)
     out = {
         "git_head": head,
+        "git_dirty": dirty,
         "sf_dir": sf_dir,
         "n_queries": len(queries),
         "total_input_mb": total_in,

@@ -64,7 +64,7 @@ from harvester_database_and_automation_spark.pipelines.release import run_releas
 from harvester_database_and_automation_spark.plans.shared import cleanup_scratch, scratch_dir  # noqa: E402
 from harvester_database_and_automation_spark.session import get_spark  # noqa: E402
 from harvester_database_and_automation_spark.sources.quarantine import not_null  # noqa: E402
-from scripts.release_gate import git_head  # noqa: E402
+from scripts.release_gate import git_dirty, git_head  # noqa: E402
 
 WIDE_BYTES = 30 * 1024
 # Gates on the steady-state cycle, both relative to the payload volume
@@ -80,7 +80,7 @@ GATE_EXCESS_FRAC = 0.005    # (wide - narrow cycle-2 shuffle) / payload volume
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("wide-row-audit")
-    head = git_head()
+    head, dirty = git_head(), git_dirty()
 
     def measure(label: str, fn) -> dict:
         with observe.measure(spark, f"wide_row_audit:{label}") as m:
@@ -303,6 +303,7 @@ def main() -> int:
 
     out = {
         "git_head": head,
+        "git_dirty": dirty,
         "sf_dir": sf_dir,
         "wide_payload_bytes_per_row": WIDE_BYTES,
         "gates": {

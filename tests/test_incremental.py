@@ -7,10 +7,13 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from harvester_database_and_automation_spark.operators.publish import (
+    publish_group,
     publish_incremental,
     publish_versioned,
+    read_group_table,
     read_published,
 )
 
@@ -387,3 +390,114 @@ def test_vacuum_protects_unmarked_tables(spark, tmp_path):
     assert vacuum(table, keep=0) == []
     assert os.path.exists(os.path.join(table, "v1"))
     assert vacuum(table, keep=0, drop_failed=True) == [1]
+
+
+# ---------------------------------------------------------------------------
+# Schema-carrying versions: every publish stores the schema a parquet read
+# of the version produces, and reads pass it instead of inferring it.
+# ---------------------------------------------------------------------------
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def _inferred(spark, vdir: str) -> T.StructType:
+    return spark.read.parquet(vdir).schema
+
+
+def test_reads_of_published_versions_launch_no_job(spark, tmp_path):
+    table, group = str(tmp_path / "t"), str(tmp_path / "g")
+    df = _rows(spark, [("a", 1), ("b", 2)])
+    publish_versioned(df, table, partition_by=["k"])
+    publish_group({"t": df}, group)
+    j0 = _jobs(spark)
+    read_published(spark, table)
+    read_group_table(spark, group, "t")
+    assert _jobs(spark) == j0
+
+
+def test_stored_schema_matches_inference_with_nested_non_null_fields(spark, tmp_path):
+    table = str(tmp_path / "t")
+    inner = T.StructType([T.StructField("c", T.StringType(), False)])
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), False),
+            T.StructField("tags", T.ArrayType(T.StringType(), False), False),
+            T.StructField("attrs", T.MapType(T.StringType(), T.IntegerType(), False)),
+            T.StructField(
+                "s",
+                T.StructType(
+                    [
+                        T.StructField("a", T.IntegerType(), False),
+                        T.StructField("b", T.ArrayType(inner, False)),
+                    ]
+                ),
+                False,
+            ),
+        ]
+    )
+    df = spark.createDataFrame([(1, ["x"], {"m": 1}, (2, [("y",)]))], schema)
+    v = publish_versioned(df, table)
+    got = read_published(spark, table)
+    assert got.schema == _inferred(spark, os.path.join(table, f"v{v}"))
+    assert got.collect() == df.collect()
+
+
+@pytest.mark.parametrize("ktype, keys", [("string", ("a", "b", "c")), ("int", (1, 2, 3))])
+def test_stored_schema_matches_inference_for_partitioned_tables(spark, tmp_path, ktype, keys):
+    table = str(tmp_path / "t")
+    a, b, c = keys
+    data = f"v bigint, k {ktype}, w double"
+    publish_versioned(
+        spark.createDataFrame([(1, a, 0.5), (2, b, 1.5), (3, c, 2.5)], data),
+        table,
+        partition_by=["k"],
+    )
+    v2 = publish_incremental(spark.createDataFrame([(9, a, 9.5)], data), table, partition_by=["k"])
+    leaf = f"k={b}"
+    assert _inodes(table, 2, leaf) == _inodes(table, 1, leaf)  # hard-linked forward
+    for v in (1, v2):
+        assert read_published(spark, table).schema == _inferred(spark, os.path.join(table, f"v{v}"))
+    got = {(r["v"], r["k"]) for r in read_published(spark, table).collect()}
+    assert got == {(9, a), (2, b), (3, c)}
+
+
+def test_stored_schema_matches_inference_for_group_members(spark, tmp_path):
+    group = str(tmp_path / "g")
+    tables = {
+        "plain": _rows(spark, [("a", 1)]),
+        "parted": spark.createDataFrame([(1, "x", 3)], "id int, k string, n int"),
+    }
+    v = publish_group(tables, group, partition_by={"parted": ["k"]})
+    for name in tables:
+        got = read_group_table(spark, group, name)
+        assert got.schema == _inferred(spark, os.path.join(group, f"v{v}", name))
+    assert read_group_table(spark, group, "parted").columns == ["id", "n", "k"]
+
+
+def test_version_without_stored_schema_reads_by_inference(spark, tmp_path):
+    """Versions published before versions carried their schema still read."""
+    table = str(tmp_path / "t")
+    v = publish_versioned(_rows(spark, [("a", 1), ("b", 2)]), table, partition_by=["k"])
+    os.remove(os.path.join(table, f"v{v}", "_schema.json"))
+    j0 = _jobs(spark)
+    got = read_published(spark, table)
+    assert _jobs(spark) > j0  # the footer-inference job
+    assert {(r["k"], r["v"]) for r in got.collect()} == {("a", 1), ("b", 2)}
+
+
+def test_date_like_string_partition_reads_back_as_string(spark, tmp_path):
+    """The stored schema keeps the written type, also through compaction;
+    path inference would turn a date-shaped string partition value into
+    a DATE."""
+    from harvester_database_and_automation_spark.operators.publish import compact_small_files
+
+    table = str(tmp_path / "t")
+    rows = _rows(spark, [("2024-03-01", 1), ("2024-03-01", 2)]).repartition(2)
+    v = publish_versioned(rows, table, partition_by=["k"])
+    assert _inferred(spark, os.path.join(table, f"v{v}"))["k"].dataType == T.DateType()
+    assert read_published(spark, table).schema["k"].dataType == T.StringType()
+    v2, compacted = compact_small_files(spark, table, ["k"])
+    assert (v2, compacted) == (v + 1, ["k=2024-03-01"])
+    got = read_published(spark, table)
+    assert got.schema["k"].dataType == T.StringType()
+    assert sorted(tuple(r) for r in got.collect()) == [(1, "2024-03-01"), (2, "2024-03-01")]

@@ -1157,3 +1157,20 @@ def test_salted_self_pairs_validates_args(spark):
         salted_self_pairs(df, ["k"], "rid", hot_threshold=0)
     with _pytest.raises(ValueError, match="id_col"):
         salted_self_pairs(df, ["k"], "k")
+
+
+def test_sessions_skip_call_site_capture(spark):
+    """get_spark turns PySpark's per-call call-site capture off: with it
+    on, this 10-select chain costs about 410 py4j round trips; off,
+    about 115."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    from harvester_database_and_automation_spark.observe import py4j_calls
+
+    assert is_debugging_enabled() is False
+    df = spark.range(10)
+    with py4j_calls(spark) as calls:
+        for i in range(10):
+            df = df.select((F.col("id") + i).alias("id"))
+    assert calls["calls"] < 200
+    assert df.first()["id"] == 45

@@ -111,7 +111,11 @@ def test_every_gate_script_exists():
 def test_one_head_stamp_for_every_script():
     """Artifacts stamp the checkout's HEAD through release_gate.git_head,
     which anchors git at the repo: a private `git rev-parse` copy would
-    read the caller's working directory instead."""
-    scripts = release_gate.REPO / "scripts"
-    stampers = [p.name for p in sorted(scripts.glob("*.py")) if "rev-parse" in p.read_text()]
-    assert stampers == ["release_gate.py"]
+    read the caller's working directory instead. A HEAD stamp alone does
+    not say which code ran when the tree was dirty, so every artifact
+    that carries ``git_head`` also carries ``git_dirty``."""
+    texts = {p.name: p.read_text() for p in sorted((release_gate.REPO / "scripts").glob("*.py"))}
+    assert [n for n, t in texts.items() if "rev-parse" in t] == ["release_gate.py"]
+    stamped = [n for n, t in texts.items() if '"git_head":' in t]
+    assert "wide_row_audit.py" in stamped
+    assert [n for n in stamped if '"git_dirty":' not in texts[n]] == []
