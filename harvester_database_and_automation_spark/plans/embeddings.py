@@ -35,10 +35,6 @@ def _dot(a, b):
 _fanout = fanout  # shared split-aware repartition (plans/shared.py)
 
 
-def _cosine(a, b):
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
-
-
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings").withColumn(
         "vec", F.col("embedding").cast("array<double>")

@@ -187,12 +187,7 @@ def k1_mutation_finder(spark: SparkSession, sf_dir: str) -> DataFrame:
     return muts.groupBy("pos", "base").agg(F.count(F.lit(1)).alias("n_seqs"))
 
 
-@register(
-    "k3_origin_estimator",
-    survey_ref="K3,J8,W2,A1",
-    oracle=f"""
-WITH {_MUTS_CTES},
-qsample AS ({_doc_sample_sql(60)}),
+_K3_VOTES_SQL = """
 pairs AS (
   SELECT q.doc_id AS qid, r.doc_id AS rid, r.lang, r.doc_id % 5 AS fold,
          sq.sz + sr.sz - 2 * coalesce(i.n_common, 0) AS dist
@@ -214,7 +209,17 @@ nn AS (
          row_number() OVER (PARTITION BY qid, fold ORDER BY dist, rid) AS rk
   FROM pairs
 ),
-votes AS (SELECT qid, lang, count(*) AS n_votes FROM nn WHERE rk = 1 GROUP BY 1, 2),
+votes AS (SELECT qid, lang, count(*) AS n_votes FROM nn WHERE rk = 1 GROUP BY 1, 2)
+"""
+
+
+@register(
+    "k3_origin_estimator",
+    survey_ref="K3,J8,W2,A1",
+    oracle=f"""
+WITH {_MUTS_CTES},
+qsample AS ({_doc_sample_sql(60)}),
+{_K3_VOTES_SQL.strip()},
 best AS (
   SELECT qid, lang, n_votes,
          row_number() OVER (PARTITION BY qid ORDER BY n_votes DESC, lang) AS rk
@@ -261,32 +266,6 @@ def _k3_fold_votes(spark: SparkSession, sf_dir: str):
     w = Window.partitionBy("qid", "fold").orderBy("dist", "rid")
     nn = pairs.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1)
     return nn.groupBy("qid", "lang").agg(F.count(F.lit(1)).alias("n_votes"))
-
-
-_K3_VOTES_SQL = """
-pairs AS (
-  SELECT q.doc_id AS qid, r.doc_id AS rid, r.lang, r.doc_id % 5 AS fold,
-         sq.sz + sr.sz - 2 * coalesce(i.n_common, 0) AS dist
-  FROM qsample q
-  CROSS JOIN (SELECT doc_id, lang FROM documents
-              WHERE doc_id NOT IN (SELECT doc_id FROM qsample)) r
-  JOIN mut_sizes sq ON sq.doc_id = q.doc_id
-  JOIN mut_sizes sr ON sr.doc_id = r.doc_id
-  LEFT JOIN (
-    SELECT a.doc_id AS qid, b.doc_id AS rid, count(*) AS n_common
-    FROM muts a JOIN muts b ON a.pos = b.pos AND a.base = b.base
-    WHERE a.doc_id IN (SELECT doc_id FROM qsample)
-      AND b.doc_id NOT IN (SELECT doc_id FROM qsample)
-    GROUP BY 1, 2
-  ) i ON i.qid = q.doc_id AND i.rid = r.doc_id
-),
-nn AS (
-  SELECT qid, fold, lang,
-         row_number() OVER (PARTITION BY qid, fold ORDER BY dist, rid) AS rk
-  FROM pairs
-),
-votes AS (SELECT qid, lang, count(*) AS n_votes FROM nn WHERE rk = 1 GROUP BY 1, 2)
-"""
 
 
 @register(

@@ -30,11 +30,11 @@ from harvester_database_and_automation_spark.streaming.ingest import spool_batch
 
 
 @contextmanager
-def _replay_dirs(spark: SparkSession, batches: Sequence[DataFrame], parent: DataFrame):
+def _replay_dirs(spark: SparkSession, batches: Sequence[DataFrame]):
     """Scratch dir, spool and state-partition scope of one replay: spools
-    ``batches`` (``parent`` persisted for the writes, see
-    ``spool_batches``) and yields ``(feed, checkpoint, out)`` paths with
-    the session at 4 shuffle/state partitions.
+    ``batches`` in one Spark write with no cache (see ``spool_batches``)
+    and yields ``(feed, checkpoint, out)`` paths with the session at 4
+    shuffle/state partitions.
 
     Determinism contract: each key appears AT MOST ONCE per micro-batch
     file, so the per-batch state transition is independent of row order
@@ -61,7 +61,7 @@ def _replay_dirs(spark: SparkSession, batches: Sequence[DataFrame], parent: Data
     """
     root = scratch_dir(prefix="stream_replay_")
     feed = os.path.join(root, "feed")
-    spool_batches(feed, batches, parent=parent)
+    spool_batches(feed, batches)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
@@ -75,15 +75,13 @@ def _replay(
     batches: Sequence[DataFrame],
     schema: str,
     transform: Callable[[DataFrame], DataFrame],
-    parent: DataFrame,
     output_mode: str = "append",
 ) -> DataFrame:
-    """Replay ``batches`` (all filtered from ``parent``) as a
-    ``maxFilesPerTrigger=1`` JSON file stream with ``schema`` through
-    ``transform`` under one ``availableNow`` trigger, and return the
-    ledger of every row it emitted, read with the transformed stream's
-    own schema (no footer-inference job)."""
-    with _replay_dirs(spark, batches, parent) as (feed, ckpt, out):
+    """Replay ``batches`` as a ``maxFilesPerTrigger=1`` JSON file stream
+    with ``schema`` through ``transform`` under one ``availableNow``
+    trigger, and return the ledger of every row it emitted, read with the
+    transformed stream's own schema (no footer-inference job)."""
+    with _replay_dirs(spark, batches) as (feed, ckpt, out):
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
             # Plain append parquet per micro-batch: skips the streaming
@@ -142,8 +140,8 @@ def streaming_change_router_replay(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale shape: the router's state is one hash per key in the state
     store (sharded across executors); each micro-batch shuffles only
-    (id, hash) pairs. The spool is Spark-written (`spool_batches`:
-    repartition(1) + rename, proper JSON encoding) — no driver-side row
+    (id, hash) pairs. The spool is Spark-written (`spool_batches`: one
+    partitioned write + rename, proper JSON encoding) — no driver-side row
     collection at any corpus size; production feeds land as files from
     the fetchers and the stream is unchanged."""
     from harvester_database_and_automation_spark.streaming.changefeed import (
@@ -166,7 +164,7 @@ def streaming_change_router_replay(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     routed = _replay(
-        spark, [firsts, lasts], "id string, content_hash string", streaming_change_router, parent=fe
+        spark, [firsts, lasts], "id string, content_hash string", streaming_change_router
     )
     return routed.select("id", "content_hash", "change_kind")
 
@@ -231,7 +229,7 @@ def streaming_watermark_window_replay(spark: SparkSession, sf_dir: str) -> DataF
     and unemitted even at stream end).
 
     Scale shape: state is one row per (window, key) bounded by the
-    watermark horizon; the spool is Spark-written (repartition(1)+rename), no
+    watermark horizon; the spool is Spark-written (one write + rename), no
     driver collection at any corpus size. The event-time column travels
     as INTEGER seconds-since-2024 and converts to an instant with
     ``timestamp_seconds`` (withWatermark requires TIMESTAMP, not NTZ);
@@ -263,7 +261,6 @@ def streaming_watermark_window_replay(spark: SparkSession, sf_dir: str) -> DataF
             ts_col="ts", key_col="event_type", window="1 hour",
             watermark="2 hours", value_col="cents",
         ),
-        parent=e,
     )
     return windows.select(
         (F.unix_timestamp("window_start") - epoch_2024).cast("bigint").alias("window_start_s"),
@@ -334,7 +331,6 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream.withColumn("ts", F.timestamp_seconds(F.col("s") + 1_704_067_200)),
             ["user_id"], ts_col="ts", watermark="2 hours",
         ).select("user_id", "first_type"),
-        parent=canonical,
     )
 
 
@@ -413,7 +409,7 @@ def streaming_upsert_publish_replay(spark: SparkSession, sf_dir: str) -> DataFra
             T.StructField("cents", T.LongType()),
         ]
     )
-    with _replay_dirs(spark, [b0, b1], parent=fe) as (feed, ckpt, table):
+    with _replay_dirs(spark, [b0, b1]) as (feed, ckpt, table):
         stream_upsert_into_published(
             spark,
             feed,
@@ -482,7 +478,7 @@ def streaming_session_window_replay(spark: SparkSession, sf_dir: str) -> DataFra
 
     Scale shape: state is one open session per (user, gap-island),
     evicted at the watermark; corpus-sized exchanges ship (user, s,
-    cents) triples; the spool is Spark-written (repartition(1) + rename) — no
+    cents) triples; the spool is Spark-written (one write + rename) — no
     driver-side collection at any corpus size. The event-time column
     travels as INTEGER seconds and converts via ``timestamp_seconds``
     (withWatermark requires TIMESTAMP); session bounds come back out as
@@ -512,7 +508,6 @@ def streaming_session_window_replay(spark: SparkSession, sf_dir: str) -> DataFra
             ts_col="ts", key_col="user_id", gap="30 minutes",
             watermark="2 hours", value_col="cents",
         ),
-        parent=e,
     )
     return sessions.select(
         (F.unix_timestamp("session_start") - epoch_2024).cast("bigint").alias("start_s"),
@@ -586,7 +581,6 @@ def streaming_stateful_ledger_replay(spark: SparkSession, sf_dir: str) -> DataFr
         [b0, b1],
         "key string",
         lambda stream: running_dedup_counts(stream, key_col="key"),
-        parent=e,
         output_mode="update",
     )
     return ledger.select("key", "total_seen", "new_in_batch")
@@ -665,7 +659,7 @@ def streaming_cms_sink_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     b0 = e.filter(F.col("s") < 1_296_000).select("k")
     b1 = e.filter(F.col("s") >= 1_296_000).select("k")
 
-    with _replay_dirs(spark, [b0, b1], parent=e) as (feed, ckpt, table_dir):
+    with _replay_dirs(spark, [b0, b1]) as (feed, ckpt, table_dir):
         stream_cms_into_published(
             spark,
             feed,

@@ -236,7 +236,8 @@ def test_stream_static_broadcast_enrichment(spark, tmp_path):
 
 def test_stream_upsert_into_published(spark, tmp_path):
     """foreachBatch upsert sink: arriving files merge into the published
-    table through the same merge_upsert as batch ingest, one atomic
+    table through the same ``operators.merge.merge_delta`` as batch
+    ingest, one atomic
     version per poll, with the checkpoint as the processed-file ledger."""
     from harvester_database_and_automation_spark.operators.publish import (
         current_version,
@@ -577,10 +578,56 @@ def test_spool_batches_appends_after_existing_files(spark, tmp_path):
     assert spark.read.json(feed).count() == 6
 
 
+def test_spool_batches_one_write_for_any_batch_count(spark, tmp_path):
+    """All batches of one spool call land in one Spark write: spooling
+    three batches launches no more jobs than spooling one."""
+    from harvester_database_and_automation_spark.streaming import spool_batches
+
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(feed: str, batches) -> int:
+        before = scheduler.numTotalJobs()
+        spool_batches(str(tmp_path / feed), batches)
+        return scheduler.numTotalJobs() - before
+
+    df = spark.range(30)
+    one = jobs("one", [df])
+    three = jobs("three", [df.filter("id < 10"), df.filter("id >= 10"), df.filter("id < 5")])
+    assert three <= one
+
+
+def test_spool_batches_empty_batch_is_an_empty_file(spark, tmp_path):
+    """An empty batch writes no partition but still gets its (empty) file
+    in mtime order, so a file stream runs one micro-batch per batch."""
+    import os
+
+    from harvester_database_and_automation_spark.streaming import spool_batches
+
+    feed = str(tmp_path / "feed")
+    spool_batches(feed, [spark.range(2), spark.range(0), spark.range(1)])
+    names = ["batch_0.json", "batch_1.json", "batch_2.json"]
+    assert sorted(os.listdir(feed)) == names
+    paths = [os.path.join(feed, n) for n in names]
+    mtimes = [os.stat(p).st_mtime for p in paths]
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == 3
+    assert os.path.getsize(paths[1]) == 0 < os.path.getsize(paths[0])
+
+    seen: list[int] = []
+    (
+        spark.readStream.schema("id long").option("maxFilesPerTrigger", 1).json(feed)
+        .writeStream.foreachBatch(lambda df, batch_id: seen.append(df.count()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    assert seen == [2, 0, 1]
+
+
 def test_replay_harness_error_path_restores_session(spark):
     """A replay whose stream raises inside a micro-batch leaves the session
-    as it found it: shuffle partitions restored and the ``parent`` frame's
-    spool persist released."""
+    as it found it: shuffle partitions restored and no RDD left
+    persisted."""
     import pytest
 
     from pyspark.errors import StreamingQueryException
@@ -599,7 +646,6 @@ def test_replay_harness_error_path_restores_session(spark):
             [parent.filter("key < '2'"), parent.filter("key >= '2'")],
             "key string",
             lambda s: s.select(F.coalesce(F.raise_error(F.lit("replay boom")), "key").alias("key")),
-            parent=parent,
         )
     assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
     assert persisted_rdds() == before
@@ -613,14 +659,16 @@ def test_replays_share_one_harness():
     from pathlib import Path
 
     from harvester_database_and_automation_spark.plans import QUERIES, streaming_replay
+    from harvester_database_and_automation_spark.streaming import spool_batches
 
     fns = [s.fn for s in QUERIES.values() if s.fn.__module__ == streaming_replay.__name__]
     assert len(fns) == 7
     banned = ("readStream", "writeStream", "awaitTermination", "scratch_dir",
-              "_stream_state_partitions")
+              "_stream_state_partitions", "persist(", ".cache(")
     offenders = [
         (fn.__name__, word) for fn in fns for word in banned if word in inspect.getsource(fn)
     ]
     assert offenders == []
+    assert "parent" not in inspect.signature(spool_batches).parameters
     audit = Path(__file__).resolve().parent.parent / "scripts" / "wide_row_audit.py"
     assert "part-*" not in audit.read_text(encoding="utf-8")
