@@ -91,7 +91,10 @@ def main() -> None:
 
     spark = get_spark("harvester-bench")
     # Full untimed warmup pass: JIT/codegen for every plan shape, parquet
-    # footers cached. The timed passes then measure steady-state execution —
+    # footers cached. The generated classes stay compiled for the timed
+    # passes only because get_spark sizes spark.sql.codegen.cache.maxEntries
+    # past the sweep's ~2,700 classes (Spark's 100-entry default evicts each
+    # before reuse). The timed passes then measure steady-state execution —
     # first-call numbers were dominated by JIT compilation (≈5x on the
     # widest plans), which a long-lived cluster never pays per query.
     for spec in QUERIES.values():

@@ -164,3 +164,20 @@ def py4j_calls(spark):
         yield out
     finally:
         client.send_command = send
+
+
+@contextlib.contextmanager
+def codegen_compiles(spark):
+    """Count the generated-code classes the block compiles; the yielded
+    dict's ``compiles`` is filled on exit. A plan whose generated source
+    is still in Spark's codegen cache (``spark.sql.codegen.cache.maxEntries``)
+    compiles nothing. The count is Spark's ``CodegenMetrics`` compilation
+    count, kept per JVM: in local mode it covers the executor threads too,
+    on a cluster it counts the driver's compiles only."""
+    timer = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    out = {"compiles": 0}
+    n0 = timer.getCount()
+    try:
+        yield out
+    finally:
+        out["compiles"] = timer.getCount() - n0

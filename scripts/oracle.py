@@ -16,7 +16,9 @@ everywhere else it is the whole registry, in registration order.
 
 ``--vanilla`` runs under a session with none of session.py's confs —
 default 200 shuffle partitions, a non-UTC timezone, fewer cores — so a
-query that only passes under our tuning fails here first.
+query that only passes under our tuning fails here first. It keeps
+Spark's 100-entry codegen cache on purpose: a sweep then recompiles every
+plan, as an outside session with default confs does.
 
 Oracle results are served from the persistent cache (.oracle_cache/,
 keyed by SQL digest x corpus fingerprint — oracle_cache.py); DuckDB

@@ -8,9 +8,10 @@ Usage:
 Timing methodology matches bench.py (untimed warm pass, then N timed
 passes, report min + all) so numbers are comparable to BENCH_FULL.json.
 Each run's plan build (the `spec.fn(...)` call, before any action) is
-timed and its py4j round trips counted apart from execution. After the
-last run it prints that run's `observe.measure` summary and one line per
-Spark job (duration, gap since the previous job, tasks) — the local-mode
+timed and its py4j round trips counted apart from execution, and the
+run's generated-code compiles are counted. After the last run it prints
+that run's `observe.measure` summary and one line per Spark job
+(duration, gap since the previous job, tasks) — the local-mode
 substitute for clicking through the Spark UI.
 
 Not named profile.py: that would shadow the stdlib module pyspark imports.
@@ -30,7 +31,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 os.environ.setdefault("SPARK_UI", "1")
 
-from harvester_database_and_automation_spark.observe import measure, py4j_calls  # noqa: E402
+from harvester_database_and_automation_spark.observe import codegen_compiles, measure, py4j_calls  # noqa: E402
 from harvester_database_and_automation_spark.plans import QUERIES  # noqa: E402
 from harvester_database_and_automation_spark.plans.shared import cleanup_scratch  # noqa: E402
 from harvester_database_and_automation_spark.session import get_spark  # noqa: E402
@@ -60,9 +61,9 @@ def main() -> None:
         # warm
         spec.fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
         cleanup_scratch()
-        times, builds, calls = [], [], []
+        times, builds, calls, compiles = [], [], [], []
         for _ in range(args.runs):
-            with measure(spark, f"profile:{name}") as m:
+            with measure(spark, f"profile:{name}") as m, codegen_compiles(spark) as cg:
                 t0 = time.perf_counter()
                 with py4j_calls(spark) as c:
                     df = spec.fn(spark, args.sf_dir)
@@ -70,10 +71,11 @@ def main() -> None:
                 calls.append(c["calls"])
                 df.write.mode("overwrite").format("noop").save()
             cleanup_scratch()
+            compiles.append(cg["compiles"])
             times.append(round(m["wall_s"], 3))
         execs = [round(t - b, 3) for t, b in zip(times, builds)]
         print(f"{name}: min={min(times)} runs={times}")
-        print(f"  build: min={min(builds)}s runs={builds} py4j={calls}; execute: runs={execs}")
+        print(f"  build: min={min(builds)}s runs={builds} py4j={calls} compiles={compiles}; execute: runs={execs}")
         summary = {k: round(v, 3) for k, v in m.items() if k != "jobs"}
         print(f"  last run: jobs={len(m['jobs'])} {summary}")
         for j in m["jobs"]:

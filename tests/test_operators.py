@@ -1174,3 +1174,19 @@ def test_sessions_skip_call_site_capture(spark):
             df = df.select((F.col("id") + i).alias("id"))
     assert calls["calls"] < 200
     assert df.first()["id"] == 45
+
+
+def test_sessions_reuse_generated_code(spark):
+    """get_spark sizes the codegen cache past the engine's working set: 100
+    plans, each inlining its own literal (two classes each, 200 in all), run
+    twice compile nothing the second time. Spark's 100-entry default evicts
+    every class before its reuse and recompiles all 200."""
+    from harvester_database_and_automation_spark.observe import codegen_compiles
+
+    def sweep():
+        return [spark.range(1).select((F.col("id") + i).alias("v")).collect()[0]["v"] for i in range(100)]
+
+    sweep()
+    with codegen_compiles(spark) as c:
+        assert sweep() == list(range(100))
+    assert c["compiles"] == 0
