@@ -213,11 +213,3 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every corpus table as a temp view (for the SQL API)."""
-    dfs = load_all(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -28,7 +28,6 @@ import pandas as pd
 GeoTuple = tuple[str, str, str, str]
 
 MAX_ITERATIONS = 1000
-_FIELDS = 4
 
 
 @dataclass(frozen=True)
@@ -39,27 +38,6 @@ class GeoRule:
     @property
     def specificity(self) -> int:
         return sum(1 for f in self.src if f != "*")
-
-
-def parse_rules(lines: list[str]) -> list[GeoRule]:
-    """Parse TSV rule lines ``region/country/division/location<TAB>...``
-    (the geoLocationRules.tsv format). Blank lines and ``#`` comments are
-    skipped; malformed lines raise."""
-    rules: list[GeoRule] = []
-    for line in lines:
-        line = line.strip()
-        if not line or line.startswith("#"):
-            continue
-        try:
-            raw_src, raw_dst = line.split("\t")
-            src = tuple(raw_src.split("/"))
-            dst = tuple(raw_dst.split("/"))
-        except ValueError as exc:
-            raise ValueError(f"malformed geo rule line: {line!r}") from exc
-        if len(src) != _FIELDS or len(dst) != _FIELDS:
-            raise ValueError(f"geo rule must have {_FIELDS} fields per side: {line!r}")
-        rules.append(GeoRule(src, dst))  # type: ignore[arg-type]
-    return rules
 
 
 def _matches(rule: GeoRule, value: GeoTuple) -> bool:

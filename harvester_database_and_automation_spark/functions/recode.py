@@ -1,8 +1,9 @@
 """Recode/lookup helpers (SURVEY.md §2.8 lookup family, §2.2 P4).
 
-Age-group binning (init.sql:787-867 dashboard view) and enum code->label
-maps (import_bag_meldeformular.R:26-92). The R coalesce_join
-(utility.R:324-357) is ``operators.joins.coalesce_join``.
+Age-group binning (init.sql:787-867 dashboard view). Enum code->label
+maps (import_bag_meldeformular.R:26-92) and the R coalesce_join
+(utility.R:324-357) are certified as the ``null_safe_recode_join``
+query (plans/relational.py).
 """
 
 from __future__ import annotations
@@ -21,16 +22,3 @@ def age_group(col: Column | str, width: int = 10, top: int = 80) -> Column:
         .when(c >= top, f"{top}+")
         .otherwise(F.concat(lo.cast("string"), F.lit("-"), (lo + width - 1).cast("string")))
     )
-
-
-def recode_map(col: Column | str, mapping: dict, default: Column | str | None = None) -> Column:
-    """Enum code -> label via a literal CASE chain (small maps; for large
-    maps broadcast-join a dim table instead — SURVEY §2.8 lookup row)."""
-    c = F.col(col) if isinstance(col, str) else col
-    expr = None
-    for k, v in mapping.items():
-        expr = F.when(c == k, v) if expr is None else expr.when(c == k, v)
-    if expr is None:
-        raise ValueError("empty mapping")
-    return expr.otherwise(default if default is not None else F.lit(None))
-

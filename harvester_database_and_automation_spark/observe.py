@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import contextlib
 import json
+import threading
 import time
 import urllib.error
 import urllib.request
@@ -150,13 +151,18 @@ def measure(spark, label: str):
 def py4j_calls(spark):
     """Count the py4j commands the block sends to the JVM, each one a
     driver round trip; the yielded dict's ``calls`` is filled on exit.
-    Plan construction is paid in these, not in Spark jobs."""
+    Plan construction is paid in these, not in Spark jobs. Only the
+    calling thread's commands count: py4j's finalizer thread sends the
+    deletes of garbage-collected JavaObjects through the same client,
+    whenever the collector frees them, and those are not the block's."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
+    caller = threading.get_ident()
     out = {"calls": 0}
 
     def counted(*args, **kwargs):
-        out["calls"] += 1
+        if threading.get_ident() == caller:
+            out["calls"] += 1
         return send(*args, **kwargs)
 
     client.send_command = counted

@@ -4,26 +4,20 @@ M1-M6 and the beyond-reference families in ARCHITECTURE.md)."""
 from harvester_database_and_automation_spark.operators.asof import asof_join
 from harvester_database_and_automation_spark.operators.bloom import (
     bloom_might_contain,
-    bloom_semi_join,
     build_bloom,
 )
-from harvester_database_and_automation_spark.operators.dedup import keep_best
 from harvester_database_and_automation_spark.operators.fuzzy import fuzzy_join
 from harvester_database_and_automation_spark.operators.rangejoin import bucketed_range_join
 from harvester_database_and_automation_spark.operators.rollup_cascade import cascade_rollup
-from harvester_database_and_automation_spark.operators.scd import scd2_as_of, scd2_init, scd2_merge
+from harvester_database_and_automation_spark.operators.scd import scd2_init, scd2_merge
 from harvester_database_and_automation_spark.operators.sketches import heavy_hitters_exact
-from harvester_database_and_automation_spark.operators.joins import coalesce_join
-from harvester_database_and_automation_spark.operators.layout import cluster_for_write
 from harvester_database_and_automation_spark.operators.merge import (
     apply_deletes,
     classify_changes,
     merge_delta,
-    merge_upsert,
 )
 from harvester_database_and_automation_spark.operators.skew import (
     salted_aggregate,
-    salted_count_distinct,
     salted_join,
     salted_self_pairs,
 )
@@ -38,15 +32,12 @@ __all__ = [
     "asof_join",
     "bucketed_range_join",
     "bloom_might_contain",
-    "bloom_semi_join",
     "build_bloom",
     "cascade_rollup",
     "fuzzy_join",
     "heavy_hitters_exact",
     "scd2_init",
     "scd2_merge",
-    "scd2_as_of",
-    "merge_upsert",
     "merge_delta",
     "classify_changes",
     "apply_deletes",
@@ -54,11 +45,7 @@ __all__ = [
     "read_published",
     "current_version",
     "JobState",
-    "keep_best",
-    "coalesce_join",
-    "cluster_for_write",
     "salted_join",
     "salted_aggregate",
-    "salted_count_distinct",
     "salted_self_pairs",
 ]

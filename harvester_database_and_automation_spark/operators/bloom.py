@@ -116,31 +116,3 @@ def bloom_might_contain(
         out = term if out is None else out & term
     assert out is not None
     return out
-
-
-def bloom_semi_join(
-    probe: DataFrame,
-    keys: DataFrame,
-    probe_col: str,
-    key_col: str,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """Exact semi-join with Bloom pre-reduction: probe rows are first
-    thinned by the broadcast filter (map-side, no shuffle), and only the
-    surviving candidates — true hits plus the small fp fraction — enter
-    the real semi-join. Same rows as ``probe.join(keys, ..., 'left_semi')``,
-    a fraction of the shuffle."""
-    if "_bloom_bits" in probe.columns:
-        raise ValueError("probe frame already has a _bloom_bits column; rename it")
-    bloom = build_bloom(keys, key_col, m_bits, k).select(F.col("bits").alias("_bloom_bits"))
-    thinned = (
-        probe.crossJoin(F.broadcast(bloom))
-        .filter(bloom_might_contain(F.col("_bloom_bits"), probe_col, m_bits, k))
-        .drop("_bloom_bits")
-    )
-    # left_semi ignores duplicate build-side keys by itself — a distinct
-    # here would re-shuffle the whole key set for nothing.
-    return thinned.join(
-        keys.select(F.col(key_col).alias(probe_col)), probe_col, "left_semi"
-    )

@@ -1,17 +1,12 @@
-"""Referential-integrity and uniqueness checks.
+"""Referential-integrity check.
 
-Spark enforces no PRIMARY KEY / FOREIGN KEY constraints, so the
-reference's declarative guarantees become procedural checks (SURVEY.md
-§1.2): composite PKs (init.sql:246, :523, :569) → uniqueness assertions;
-FKs with cascade (init.sql:258-259, :341-342) → anti-join orphan scans;
-the R importers' hard-stop duplicate checks
-(database/R/export_spsp_submission.R qc_sample_metadata) → the same
-assertions promoted to pipeline gates.
+Spark enforces no FOREIGN KEY constraints, so the reference's declarative
+guarantee becomes a procedural check (SURVEY.md §1.2): FKs with cascade
+(init.sql:258-259, :341-342) → anti-join orphan scans.
 
-Both checks return the VIOLATING rows (not booleans) so callers can
+``orphans`` returns the VIOLATING rows (not booleans) so callers can
 quarantine, alert, or hard-stop with evidence — the reference's pattern of
-emailing the offending sample list. Each is a single shuffle: a hash
-aggregation for duplicates, a left-anti hash join for orphans.
+emailing the offending sample list — in one left-anti hash join.
 """
 
 from __future__ import annotations
@@ -19,17 +14,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def duplicate_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Rows of ``keys`` appearing more than once, with their multiplicity —
-    the composite-PK uniqueness assertion. Empty result = constraint holds."""
-    return (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .filter(F.col("n_rows") > 1)
-    )
 
 
 def orphans(

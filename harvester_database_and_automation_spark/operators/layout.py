@@ -1,83 +1,19 @@
-"""Table layout for scale: partitioning + clustering replace indexes.
+"""Table layout for scale: clustering replaces indexes.
 
 The reference leans on ~90 PostgreSQL b-tree indexes
 (database/init.sql:196-238, 1095-1109). Spark tables get the same read
-selectivity from physical layout instead (SURVEY.md §4): directory
-partitioning prunes whole partitions at planning time, and sorting within
-partitions tightens parquet row-group min/max stats so scans skip pages
-for clustered predicates — the moral equivalent of a composite index like
-``(position, mutation)`` on the mutation tables.
-
-``cluster_for_write`` produces the write-ready DataFrame; pass its result
-(plus the same ``partition_by`` and a ``max_records_per_file``) to
-``publish_versioned`` for an atomic, well-laid-out partitioned publish.
+selectivity from physical layout instead (SURVEY.md §4): sorting a write
+tightens parquet row-group min/max stats so scans skip pages for
+clustered predicates — the moral equivalent of a composite index like
+``(position, mutation)`` on the mutation tables. ``zorder_value`` is the
+multi-column form; ``zorder_cell_stats`` certifies it against DuckDB.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def cluster_for_write(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    cluster_by: Sequence[str] = (),
-) -> DataFrame:
-    """Arrange ``df`` so a partitioned write produces a healthy layout.
-
-    - ``repartition(partition_by)``: every output directory is written by
-      as few tasks as hold its data — no small-file explosion of
-      (tasks × partitions) files.
-    - ``sortWithinPartitions(partition_by + cluster_by)``: rows for one
-      directory are contiguous within the task, and clustered columns get
-      tight row-group min/max bounds (index-like page skipping for
-      range/equality predicates on them).
-
-    Skew note: one hot partition value still lands in one task here; for
-    a hot-date/hot-lineage table add a salt column to the repartition
-    keys at write time or let AQE rebalance — correctness is unaffected,
-    the layout just gets more files.
-    """
-    cols = [*partition_by, *cluster_by]
-    if not cols:
-        raise ValueError("need at least one partition or cluster column")
-    out = df.repartition(*partition_by) if partition_by else df
-    return out.sortWithinPartitions(*cols)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    path: str,
-    keys: Sequence[str],
-    n_buckets: int = 32,
-    sort_cols: Sequence[str] | None = None,
-) -> None:
-    """Hash-bucketed + sorted external parquet table.
-
-    Two tables bucketed on their join keys with the SAME bucket count
-    join with NO shuffle on either side — the co-located join strategy for
-    the hub tables the reference serves with b-tree-indexed FK joins
-    (test/plate bridges, sequence/mutation children). Pre-paying one
-    clustered write removes the dominant exchange from every subsequent
-    join and aggregation on those keys; repeated daily joins at 100 TB are
-    exactly where this wins.
-
-    Spark only honors bucket metadata through the catalog, so this writes
-    an EXTERNAL table (explicit ``path``); read it back with
-    ``spark.table(table_name)``, not ``spark.read.parquet``.
-    """
-    (
-        df.write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(n_buckets, *keys)
-        .sortBy(*(sort_cols or keys))
-        .option("path", path)
-        .saveAsTable(table_name)
-    )
 
 
 def zorder_value(cols: Sequence[str], bits: int = 16) -> F.Column:
@@ -99,25 +35,3 @@ def zorder_value(cols: Sequence[str], bits: int = 16) -> F.Column:
             bit = F.shiftright(F.col(c).cast("long"), b).bitwiseAND(F.lit(1))
             z = z.bitwiseOR(F.shiftleft(bit, b * n + i))
     return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: Sequence[str],
-    bits: int = 16,
-    target_files: int = 32,
-) -> None:
-    """Write parquet clustered by the Z-order of ``zorder_cols`` (already
-    non-negative ints): a range repartition on the z-value spreads files
-    evenly, sortWithinPartitions gives each row group a tight min/max box
-    in every dimension."""
-    z = zorder_value(zorder_cols, bits=bits)
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(target_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

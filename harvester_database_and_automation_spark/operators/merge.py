@@ -7,8 +7,8 @@ unchanged / metadata-changed / sequence-changed by field-wise comparison
 disappeared from the feed (gisaid/GisaidApiImporter.java:374-381).
 
 Spark-first: content hashing with xxhash64 over column structs replaces
-field-by-field comparison (one pass, no row-wise Java), the upsert is a
-full-outer join + coalesce rewrite (the MERGE equivalent without a
+field-by-field comparison (one pass, no row-wise Java), the upsert is an
+anti-join of the touched keys plus a union (the MERGE equivalent without a
 transactional table format), deletes are an anti-join.
 """
 
@@ -43,35 +43,6 @@ def fits_broadcast(n_rows: int, n_bytes: int) -> bool:
     return n_rows <= BROADCAST_MAX_ROWS and n_bytes <= BROADCAST_MAX_BYTES
 
 
-def merge_upsert(current: DataFrame, updates: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """M1 — upsert ``updates`` into ``current`` on ``keys``.
-
-    Matched rows take every non-key column from ``updates``; unmatched
-    current rows are kept; unmatched update rows are inserted. Equivalent
-    to Delta's MERGE whenMatchedUpdateAll/whenNotMatchedInsertAll,
-    expressed as a full-outer join + per-column coalesce so it runs on
-    plain parquet tables.
-    """
-    if set(current.columns) != set(updates.columns):
-        raise ValueError(
-            f"schema mismatch: current={sorted(current.columns)} updates={sorted(updates.columns)}"
-        )
-    value_cols = [c for c in current.columns if c not in keys]
-    cur = current.alias("cur")
-    # Presence flag instead of coalesce-per-column: an update row that
-    # carries a legitimate NULL must still overwrite the current value.
-    upd = updates.withColumn("_upd", F.lit(True)).alias("upd")
-    joined = cur.join(upd, on=list(keys), how="full_outer")
-    take_upd = F.col("upd._upd").isNotNull()
-    return joined.select(
-        *[F.col(k) for k in keys],
-        *[
-            F.when(take_upd, F.col(f"upd.{c}")).otherwise(F.col(f"cur.{c}")).alias(c)
-            for c in value_cols
-        ],
-    )
-
-
 def merge_delta(
     current: DataFrame,
     updates: DataFrame,
@@ -82,8 +53,8 @@ def merge_delta(
     """M1 at 100 TB — upsert ``updates`` and drop ``delete_keys`` WITHOUT
     shuffling ``current``.
 
-    :func:`merge_upsert`'s full-outer join cannot broadcast (Spark has no
-    broadcast full-outer), so it shuffles BOTH sides on the key — for a
+    A full-outer upsert join cannot broadcast (Spark has no broadcast
+    full-outer), so it shuffles BOTH sides on the key — for a
     daily feed against a 100 TB published table that moves every stored
     payload through an exchange every cycle, which is exactly the shuffle
     the reference's risk register forbids (SURVEY §7: never shuffle
@@ -97,7 +68,7 @@ def merge_delta(
     The touched-key frame is delta-sized, so the anti-join broadcasts it
     and ``current`` streams map-side — zero exchanges of stored rows; the
     bulk-load first run (everything is an update) degrades to one sorted
-    shuffle, same as merge_upsert, never worse.
+    shuffle, same as the full-outer join, never worse.
 
     ``broadcast_touched``: AQE decides broadcast-vs-shuffle from runtime
     shuffle statistics — which means the BIG side's map stage has already
@@ -114,11 +85,11 @@ def merge_delta(
     rows survive verbatim; unmatched update rows insert; ``delete_keys``
     rows vanish (tombstones, M3). **Deletes win over updates**: a key
     present in BOTH ``updates`` and ``delete_keys`` is removed, matching
-    the ``apply_deletes(merge_upsert(...))`` pair this operator replaces
-    (deletes ran last there, so they won; the updates side is anti-joined
-    against the tombstones to preserve that precedence). Duplicate update
-    keys would silently double rows here (merge_upsert's full-outer
-    multiplies them just as silently) — callers own key uniqueness.
+    an upsert followed by :func:`apply_deletes` (deletes run last there,
+    so they win; the updates side is anti-joined against the tombstones
+    to preserve that precedence). Duplicate update keys would silently
+    double rows here (a full-outer upsert multiplies them just as
+    silently) — callers own key uniqueness.
     """
     if set(current.columns) != set(updates.columns):
         raise ValueError(
@@ -131,7 +102,7 @@ def merge_delta(
         # Delete precedence: without this anti-join, a key in both sets
         # would be dropped from `current` but re-inserted by the union —
         # the update would silently win, the opposite of the classic
-        # merge_upsert+apply_deletes ordering. The tombstone frame is the
+        # upsert-then-apply_deletes ordering. The tombstone frame is the
         # same delta-sized set the anti-join below broadcasts.
         updates = updates.join(
             F.broadcast(tombs) if broadcast_touched else tombs,
@@ -227,7 +198,7 @@ def update_from(
     keys match`` (the reference flips flags from an inline VALUES frame,
     database/sql/viollier_test.sql:98-112).
 
-    Unlike :func:`merge_upsert`: unmatched SOURCE rows are dropped (an
+    Unlike :func:`merge_delta`: unmatched SOURCE rows are dropped (an
     UPDATE never inserts), unmatched current rows are untouched, and only
     ``set_cols`` change — every other column survives verbatim. Source
     keys must be unique (SQL UPDATE..FROM semantics are undefined on

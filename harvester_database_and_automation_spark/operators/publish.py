@@ -7,7 +7,9 @@ at database/sql/spectrum/sequences_gisaid_api_based.sql:506-521).
 Without a transactional table format, the Spark equivalent is: write the
 new snapshot to ``<table>/v<n+1>/`` and then atomically repoint a tiny
 ``_CURRENT`` marker file. Readers resolve the marker first, so they see
-either the old or the new version, never a half-written directory.
+either the old or the new version, never a half-written directory. The
+marker swap is the commit point, the role the reference's transactional
+import gives its COMMIT (database/R/utility.R's dbWithTransaction).
 
 Each version directory also carries ``_schema.json``, the schema a
 parquet read of it produces, written before the marker swap. Readers
@@ -95,43 +97,24 @@ def _write_schema(df: DataFrame, vdir: str, partition_by: list[str] | None) -> N
         json.dump(parquet_schema(df.schema, partition_by or ()).jsonValue(), fh)
 
 
-def _read_version(spark: SparkSession, vdir: str, leaves: Iterable[str] = ()) -> DataFrame:
-    """Read a published version directory (or only its ``leaves``, relative
-    partition paths) with the schema stored at publish time, so no
-    footer-inference job runs. A version published before versions
-    carried a schema is inferred."""
-    try:
-        with open(os.path.join(vdir, _SCHEMA), encoding="utf-8") as fh:
-            reader = spark.read.schema(StructType.fromJson(json.load(fh)))
-    except FileNotFoundError:
-        reader = spark.read
-    paths = [os.path.join(vdir, leaf) for leaf in leaves]
-    if paths:
-        return reader.option("basePath", vdir).parquet(*paths)
-    return reader.parquet(vdir)
-
-
 def publish_versioned(
     df: DataFrame,
     table_dir: str,
     partition_by: list[str] | None = None,
-    max_records_per_file: int | None = None,
     metadata: dict | None = None,
 ) -> int:
     """Write ``df`` as the next version of ``table_dir`` and repoint the
     marker atomically (os.replace). Returns the new version number.
     Old versions remain for time-travel/rollback until vacuumed.
 
-    ``max_records_per_file`` bounds output file size (the chunked-export
-    contract, pangolin_lineage_exporter.py:26 generalized); combine with
-    operators.layout.cluster_for_write for index-like clustering."""
+    A failure before the marker swap leaves the table on its previous
+    version with an orphan version directory, which
+    ``vacuum(drop_failed=True)`` reclaims."""
     os.makedirs(table_dir, exist_ok=True)
     version = _next_version(table_dir)
     writer = df.write.mode("errorifexists")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.parquet(os.path.join(table_dir, f"v{version}"))
     _write_schema(df, os.path.join(table_dir, f"v{version}"), partition_by)
     if metadata is not None:
@@ -227,7 +210,6 @@ def publish_incremental(
     table_dir: str,
     partition_by: list[str],
     drop_partitions: list[str] | None = None,
-    max_records_per_file: int | None = None,
 ) -> int:
     """Partition-overwrite publish: ``df_partial`` holds ONLY the rows of
     the partitions being replaced. The next version directory gets those
@@ -248,15 +230,10 @@ def publish_incremental(
     """
     prev = current_version(table_dir)
     if prev is None:
-        return publish_versioned(
-            df_partial, table_dir, partition_by=partition_by, max_records_per_file=max_records_per_file
-        )
+        return publish_versioned(df_partial, table_dir, partition_by=partition_by)
     version = _next_version(table_dir)
     new_dir = os.path.join(table_dir, f"v{version}")
-    writer = df_partial.write.mode("errorifexists").partitionBy(*partition_by)
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(new_dir)
+    df_partial.write.mode("errorifexists").partitionBy(*partition_by).parquet(new_dir)
 
     skip = set(_leaf_partition_dirs(new_dir, len(partition_by))) | set(drop_partitions or ())
     old_dir = os.path.join(table_dir, f"v{prev}")
@@ -276,10 +253,19 @@ def publish_incremental(
 
 
 def read_published(spark: SparkSession, table_dir: str) -> DataFrame:
+    """Read the current version with the schema stored at publish time, so
+    no footer-inference job runs. A version published before versions
+    carried a schema is inferred."""
     version = current_version(table_dir)
     if version is None:
         raise FileNotFoundError(f"no published version in {table_dir}")
-    return _read_version(spark, os.path.join(table_dir, f"v{version}"))
+    vdir = os.path.join(table_dir, f"v{version}")
+    try:
+        with open(os.path.join(vdir, _SCHEMA), encoding="utf-8") as fh:
+            reader = spark.read.schema(StructType.fromJson(json.load(fh)))
+    except FileNotFoundError:
+        reader = spark.read
+    return reader.parquet(vdir)
 
 
 def vacuum(table_dir: str, keep: int = 2, drop_failed: bool = False) -> list[int]:
@@ -304,117 +290,10 @@ def vacuum(table_dir: str, keep: int = 2, drop_failed: bool = False) -> list[int
     return to_drop
 
 
-def compact_small_files(
-    spark: SparkSession,
-    table_dir: str,
-    partition_by: list[str],
-    target_bytes: int = 128 << 20,
-    min_files: int = 2,
-) -> tuple[int, list[str]]:
-    """Small-file compaction as a maintenance publish: find leaf
-    partitions of the CURRENT version holding more (and smaller) files
-    than ``target_bytes`` warrants, rewrite ONLY those partitions
-    coalesced, and hard-link everything else forward — an atomic new
-    version via the same marker swap, so readers never see a half-
-    compacted table and rollback stays one marker write away.
-
-    Incremental ingests (streaming micro-batches, per-feed partition
-    overwrites) accrete files per partition; scan cost at 100 TB is
-    dominated by file count (footer reads + task scheduling), so
-    compaction is the OPTIMIZE half of the maintenance pair whose other
-    half is :func:`vacuum`. Cost is proportional to the bytes in
-    under-sized partitions, never the table.
-
-    Returns ``(version, compacted_leaves)`` — the current version is
-    returned unchanged (no new publish) when nothing needs compacting.
-    """
-    import math
-
-    cur = current_version(table_dir)
-    if cur is None:
-        raise FileNotFoundError(f"no published version in {table_dir}")
-    cur_dir = os.path.join(table_dir, f"v{cur}")
-
-    to_compact: list[str] = []
-    leaf_bytes: dict[str, int] = {}
-    for leaf in _leaf_partition_dirs(cur_dir, len(partition_by)):
-        leaf_dir = os.path.join(cur_dir, leaf)
-        sizes = [
-            os.path.getsize(os.path.join(leaf_dir, f))
-            for f in os.listdir(leaf_dir)
-            if not f.startswith(("_", ".")) and os.path.isfile(os.path.join(leaf_dir, f))
-        ]
-        leaf_bytes[leaf] = sum(sizes)
-        needed = max(1, math.ceil(sum(sizes) / target_bytes))
-        if len(sizes) >= min_files and len(sizes) > needed:
-            to_compact.append(leaf)
-
-    if not to_compact:
-        return cur, []
-
-    df = _read_version(spark, cur_dir, to_compact).repartition(*partition_by)
-    # Honor target_bytes on the write side: repartition(partition_by)
-    # funnels each partition key into ONE task, so without a record cap a
-    # big leaf would compact into a single target-busting file. Estimate
-    # records-per-target from the leaves' own bytes/row ratio (sizes were
-    # collected by the selection pass; count() reads parquet footers, not
-    # data pages).
-    total_bytes = sum(leaf_bytes[leaf] for leaf in to_compact)
-    total_rows = df.count()
-    max_records = None
-    if total_rows and total_bytes:
-        max_records = max(1, int(target_bytes * total_rows / total_bytes))
-    version = publish_incremental(
-        df, table_dir, partition_by, max_records_per_file=max_records
-    )
-    return version, to_compact
-
-
-def publish_group(
-    tables: dict[str, DataFrame],
-    group_dir: str,
-    partition_by: dict[str, list[str]] | None = None,
-) -> int:
-    """Cross-table transactional publish: write EVERY table of a group
-    into one new version directory (``<group>/v<n>/<table>/``), then
-    swap the single group marker. Readers resolve the group version
-    first, so they always see a CONSISTENT SET — never table A from
-    this ingest joined to table B from the previous one.
-
-    This is the Spark stand-in for the reference's multi-table
-    transaction (one Postgres COMMIT covers the test + plate + sequence
-    tables of an import batch — database/R/utility.R's dbWithTransaction
-    wrapper); the per-table :func:`publish_versioned` protocol cannot
-    give that guarantee because each table swaps independently.
-    Failures before the marker swap leave the group on the old version
-    with a dead v-directory to vacuum."""
-    if not tables:
-        raise ValueError("publish_group needs at least one table")
-    os.makedirs(group_dir, exist_ok=True)
-    version = _next_version(group_dir)
-    vdir = os.path.join(group_dir, f"v{version}")
-    for name, df in tables.items():
-        writer = df.write.mode("errorifexists")
-        pb = (partition_by or {}).get(name)
-        if pb:
-            writer = writer.partitionBy(*pb)
-        writer.parquet(os.path.join(vdir, name))
-        _write_schema(df, os.path.join(vdir, name), pb)
-    _swap_marker(group_dir, version)
-    return version
-
-
-def read_group_table(spark: SparkSession, group_dir: str, table: str) -> DataFrame:
-    version = current_version(group_dir)
-    if version is None:
-        raise FileNotFoundError(f"no published version in {group_dir}")
-    return _read_version(spark, os.path.join(group_dir, f"v{version}", table))
-
-
 def rollback(table_dir: str) -> int:
     """Repoint the marker at the previous version (one marker write —
     the whole point of the versioned-directory protocol). Raises if no
-    earlier version exists on disk. Works for single tables and groups."""
+    earlier version exists on disk."""
     cur = current_version(table_dir)
     if cur is None:
         raise FileNotFoundError(f"no published version in {table_dir}")

@@ -93,11 +93,3 @@ def scd2_merge(
         F.lit(True).alias(IS_CURRENT),
     )
     return closed.unionByName(carried).unionByName(opened)
-
-
-def scd2_as_of(history: DataFrame, ts) -> DataFrame:
-    """Point-in-time read: the attribute values in force at ``ts``."""
-    t = F.lit(ts).cast("timestamp_ntz")
-    return history.filter(
-        (F.col(VALID_FROM) <= t) & (F.col(VALID_TO).isNull() | (F.col(VALID_TO) > t))
-    ).drop(*_SCD_COLS)

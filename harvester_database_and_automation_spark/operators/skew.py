@@ -90,24 +90,6 @@ def salted_aggregate(
     )
 
 
-def salted_count_distinct(
-    df: DataFrame, keys: list[str], value: str, *, num_salts: int = 8
-) -> DataFrame:
-    """count(DISTINCT value) per key without one reducer holding a hot
-    key's whole distinct set: dedupe on (keys, value) first — the salt is
-    the value itself, which is exactly what distinct needs — then count.
-    NULL values are excluded (count(value) skips them) but keys whose
-    values are all NULL still appear with 0, matching
-    ``count(DISTINCT value)`` over a groupBy exactly.
-    Output column: ``n_distinct``."""
-    return (
-        df.select(*keys, value)
-        .distinct()
-        .groupBy(*keys)
-        .agg(F.count(F.col(value)).alias("n_distinct"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Self-join pair salting: a banded candidate join is a SELF-join on a
 # bucket key, and a hot bucket's quadratic pair product lands in one task

@@ -123,10 +123,11 @@ FROM orders
 def csv_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 source round-trip, driver-hash-certified: export the orders
     table as quoted CSV, read it back through the mandatory-explicit-
-    schema reader (`sources/tabular.read_csv` — no inference, ever,
-    SURVEY §1.3), and hash-compare against the source: delimiter/quote
-    handling, typed parsing of bigint/date/price columns, and the
-    quarantine split (which must be EMPTY on clean data) all certified.
+    schema reader (`sources/tabular.read_csv_strict` — no inference,
+    ever, SURVEY §1.3), and hash-compare against the source:
+    delimiter/quote handling, typed parsing of bigint/date/price columns,
+    and the corrupt-row tripwire (which must stay silent on clean data)
+    all certified.
     Money round-trips as exact cents; dates render as ISO strings on
     both engines (the date-dtype hash gotcha). Cleanliness is asserted
     by `read_csv_strict`'s in-plan tripwire — ONE distributed parse
@@ -284,11 +285,13 @@ def xz_feed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan = read_jsonl_xz(
         spark, xz_path, schema, os.path.join(root, "spool"), chunk_bytes=64 * 1024
     )
-    n_corrupt = scan.corrupt.count()
-    if n_corrupt:
-        raise ValueError(f"clean feed must re-read clean; {n_corrupt} corrupt lines")
-    out_df = scan.good.select("doc_id", "lang", "n_chars")
-    scan.release()
+    try:
+        n_corrupt = scan.corrupt.count()
+        if n_corrupt:
+            raise ValueError(f"clean feed must re-read clean; {n_corrupt} corrupt lines")
+        out_df = scan.good.select("doc_id", "lang", "n_chars")
+    finally:
+        scan.release()
     return out_df
 
 
@@ -491,12 +494,14 @@ def http_fetch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         [T.StructField("r_regionkey", T.LongType()), T.StructField("r_name", T.StringType())]
     )
     scan = read_jsonl(spark, os.path.dirname(dest), schema)
-    n_corrupt = scan.corrupt.count()
-    if n_corrupt:
-        raise ValueError(f"fetched feed must parse clean; {n_corrupt} corrupt lines")
-    out = scan.good.select("r_regionkey", "r_name")
-    out = spark.createDataFrame(out.collect(), schema)  # detach from the cache before release
-    scan.release()
+    try:
+        n_corrupt = scan.corrupt.count()
+        if n_corrupt:
+            raise ValueError(f"fetched feed must parse clean; {n_corrupt} corrupt lines")
+        out = scan.good.select("r_regionkey", "r_name")
+        out = spark.createDataFrame(out.collect(), schema)  # detach from the cache before release
+    finally:
+        scan.release()
     return out
 
 

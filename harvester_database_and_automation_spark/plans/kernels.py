@@ -2,8 +2,8 @@
 queries. The genomics kernels operate on a deterministic pseudo-sequence
 derived from each document (its ACGT letters), so the SAME algorithm the
 reference runs on genomes is verified end-to-end against the SQL oracle on
-the shared corpus. The reusable implementations live in
-harvester_database_and_automation_spark/functions/kernels.py.
+the shared corpus. The reusable column functions live in
+``functions/genomics.py`` and the K6 rule rewriter in ``functions/geo.py``.
 """
 
 from __future__ import annotations

@@ -1,16 +1,10 @@
 """Typed readers/writers and row-validation (SURVEY.md §2.1, §2.2 P6)."""
 
 from harvester_database_and_automation_spark.sources.fasta import read_fasta, write_fasta
-from harvester_database_and_automation_spark.sources.http import (
-    fetch_if_changed,
-    fetch_paginated_jsonl,
-    fetch_to_file,
-    iter_pages,
-)
+from harvester_database_and_automation_spark.sources.http import fetch_to_file
 from harvester_database_and_automation_spark.sources.excel import read_xlsx
 from harvester_database_and_automation_spark.sources.jsonl import ParsedScan, check_field_drift, read_jsonl
 from harvester_database_and_automation_spark.sources.quarantine import validate
-from harvester_database_and_automation_spark.sources.tabular import read_csv
 
 __all__ = [
     "read_fasta",
@@ -20,9 +14,5 @@ __all__ = [
     "read_xlsx",
     "check_field_drift",
     "validate",
-    "read_csv",
     "fetch_to_file",
-    "fetch_paginated_jsonl",
-    "fetch_if_changed",
-    "iter_pages",
 ]

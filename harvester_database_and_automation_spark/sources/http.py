@@ -17,9 +17,9 @@ injectable callable so tests (and air-gapped runs) never touch a socket;
 the default uses urllib from the standard library.
 
 Retry/backoff mirrors the reference's operational posture (the GISAID
-download is retried by the outer poll loop; here it is explicit), and
-``fetch_if_changed`` composes with operators.state.JobState to give the
-same read-compare-skip idempotency as M6 (import_bag_meldeformular.R:106-113).
+download is retried by the outer poll loop; here it is explicit).
+``http_fetch_roundtrip`` certifies the fetch-to-spool-to-read path against
+a loopback server.
 """
 
 from __future__ import annotations
@@ -29,10 +29,8 @@ import os
 import tempfile
 import time
 import urllib.request
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from dataclasses import dataclass
-
-from harvester_database_and_automation_spark.operators.state import JobState
 
 # A transport maps a URL (plus optional headers) to response bytes.
 Transport = Callable[[str, dict[str, str]], bytes]
@@ -86,104 +84,3 @@ def fetch_to_file(
             if attempt < retries:
                 sleep(backoff_s * (2 ** (attempt - 1)))
     raise RuntimeError(f"fetch of {url} failed after {retries} attempts") from last
-
-
-def fetch_paginated_jsonl(
-    url_for_page: Callable[[int], str],
-    dest: str,
-    *,
-    transport: Transport = urllib_transport,
-    headers: dict[str, str] | None = None,
-    extract_lines: Callable[[bytes], list[str]],
-    max_pages: int = 10_000,
-) -> FetchResult:
-    """Walk a paginated API page-by-page into ONE local JSON-lines file.
-
-    ``extract_lines`` turns a page payload into JSON-line strings; an empty
-    list ends the walk (the Rxiv downloader's "collection empty" stop,
-    rxiv/RxivDownloader.java:56-80). One spool file means one spark.read —
-    Spark then splits it by partition, so pagination never shows up in the
-    plan.
-    """
-    sha = hashlib.sha256()
-    n_bytes = 0
-    d = os.path.dirname(dest) or "."
-    os.makedirs(d, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=d, prefix=".fetch-")
-    pages = 0
-    with os.fdopen(fd, "w", encoding="utf-8") as fh:
-        for page in range(max_pages):
-            payload = transport(url_for_page(page), headers or {})
-            lines = extract_lines(payload)
-            if not lines:
-                break
-            pages += 1
-            for line in lines:
-                if "\n" in line:
-                    raise ValueError("extract_lines must yield single-line JSON strings")
-                fh.write(line + "\n")
-                raw = (line + "\n").encode("utf-8")
-                sha.update(raw)
-                n_bytes += len(raw)
-        else:
-            raise RuntimeError(f"pagination did not terminate within {max_pages} pages")
-    os.replace(tmp, dest)
-    return FetchResult(dest, n_bytes, sha.hexdigest(), pages)
-
-
-def fetch_if_changed(
-    url: str,
-    dest: str,
-    state: JobState,
-    *,
-    state_key: str | None = None,
-    transport: Transport = urllib_transport,
-    commit: bool = True,
-    **kwargs,
-) -> tuple[FetchResult, bool]:
-    """Fetch, then report whether the content changed since the last run.
-
-    Returns ``(result, changed)``. The caller re-imports only when
-    ``changed`` — the content-hash variant of the reference's file-count
-    state gate (import_bag_meldeformular.R:106-113).
-
-    With ``commit=True`` (default) the hash is recorded immediately, which
-    is correct only when the import is itself retry-safe under a separate
-    ``JobState.run_if_changed`` key. When the fetch's ``changed`` flag IS
-    the import gate, pass ``commit=False`` and call the returned result's
-    hash into ``state.set`` after the import succeeds — otherwise a crash
-    between fetch and import would skip the feed forever (the state would
-    already claim this content was handled).
-    """
-    res = fetch_to_file(url, dest, transport=transport, **kwargs)
-    key = state_key or f"fetch::{url}"
-    changed = state.get(key) != res.sha256
-    if commit:
-        state.set(key, res.sha256)
-    return res, changed
-
-
-def iter_pages(
-    first_url: str,
-    next_url: Callable[[bytes], str | None],
-    *,
-    transport: Transport = urllib_transport,
-    headers: dict[str, str] | None = None,
-    max_pages: int = 10_000,
-) -> Iterator[bytes]:
-    """Cursor-style pagination: each payload yields the next URL (or None).
-
-    For APIs that return an explicit continuation token rather than
-    numbered pages.
-    """
-    url: str | None = first_url
-    for _ in range(max_pages):
-        if url is None:
-            return
-        payload = transport(url, headers or {})
-        yield payload
-        url = next_url(payload)
-    if url is None:
-        # the cursor legitimately terminated on exactly the max_pages-th page
-        return
-    raise RuntimeError(f"pagination did not terminate within {max_pages} pages")

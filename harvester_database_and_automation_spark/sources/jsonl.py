@@ -111,8 +111,8 @@ def read_jsonl_xz(
 
 
 class ParsedScan(NamedTuple):
-    """(good, corrupt) views over one cached parse of a JSON-lines or
-    delimited feed (``read_jsonl``, ``sources.tabular.read_csv``).
+    """(good, corrupt) views over one cached parse of a JSON-lines feed
+    (``read_jsonl``).
 
     Both views filter the same cached parent frame; call ``release()``
     once both are consumed. Unpersisting ``good`` or ``corrupt`` directly

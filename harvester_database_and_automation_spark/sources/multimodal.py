@@ -6,7 +6,7 @@ bytes, partition sizing keeps blobs off the driver, and all per-item
 compute runs as Arrow-batched ``mapInPandas`` stages.
 
 Codec availability is probed at import (``PIL_AVAILABLE``): where Pillow
-is importable, ``fake=False`` runs a REAL image decode/resize through
+is importable, ``fake=False`` runs a REAL image decode through
 the same Arrow-batched stages; where it is not (this container),
 ``fake=False`` raises NotImplementedError and ``fake=True`` selects the
 deterministic fake decoder (byte statistics standing in for
@@ -29,11 +29,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 try:  # optional image codec (environment rule: import-try, never install)
-    from PIL import Image as _PILImage
+    from PIL import Image  # noqa: F401
 
     PIL_AVAILABLE = True
 except ImportError:
-    _PILImage = None
     PIL_AVAILABLE = False
 
 MEDIA_SCHEMA = T.StructType(
@@ -164,84 +163,3 @@ def sample_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
             ).alias("frame_idx"),
         )
     )
-
-
-def resize_images(df: DataFrame, width: int, height: int, fake: bool = False) -> DataFrame:
-    """Resize image rows to ``width`` x ``height``: same schema out,
-    ``content`` replaced by the resized bytes, meta.width/height updated,
-    non-image rows passed through untouched.
-
-    ``fake=False`` + Pillow importable: REAL resampling — decode, PIL
-    ``resize((width, height))``, re-encode in the source format (PNG
-    fallback when the container format is unknown to PIL). Without
-    Pillow, ``fake=False`` raises NotImplementedError and ``fake=True``
-    runs a deterministic stand-in (stride-sampling the source bytes to
-    width*height) through the SAME Arrow-batched mapInPandas stage,
-    nested meta struct and all, so the plumbing is fully exercised.
-    """
-    if not fake and not PIL_AVAILABLE:
-        raise NotImplementedError(
-            "image resize requires PIL/opencv, which are not available in "
-            "this environment; pass fake=True for the deterministic stand-in"
-        )
-    if not fake:
-
-        def _resize_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from PIL import Image  # executor-side import
-
-            def one(b: bytes) -> bytes:
-                img = Image.open(io.BytesIO(b))
-                fmt = img.format or "PNG"
-                buf = io.BytesIO()
-                img.resize((width, height)).save(buf, format=fmt)
-                return buf.getvalue()
-
-            for pdf in batches:
-                is_img = pdf["kind"] == "image"
-                content = [
-                    one(b) if (img and b) else b for img, b in zip(is_img, pdf["content"])
-                ]
-                meta = [
-                    {**m, "width": width, "height": height} if (img and m is not None) else m
-                    for img, m in zip(is_img, pdf["meta"])
-                ]
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["media_id"],
-                        "kind": pdf["kind"],
-                        "content": content,
-                        "meta": meta,
-                    }
-                )
-
-        return df.mapInPandas(_resize_real, schema=MEDIA_SCHEMA)
-
-    n_out = width * height
-
-    def _stride_sample(b: bytes) -> bytes:
-        if not b:
-            return b""
-        step = max(len(b) // n_out, 1)
-        return bytes(b[(i * step) % len(b)] for i in range(n_out))
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            is_img = pdf["kind"] == "image"
-            content = [
-                _stride_sample(b or b"") if img else b
-                for img, b in zip(is_img, pdf["content"])
-            ]
-            meta = [
-                {**m, "width": width, "height": height} if (img and m is not None) else m
-                for img, m in zip(is_img, pdf["meta"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "content": content,
-                    "meta": meta,
-                }
-            )
-
-    return df.mapInPandas(_resize, schema=MEDIA_SCHEMA)

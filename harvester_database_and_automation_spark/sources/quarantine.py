@@ -40,17 +40,5 @@ def validate(df: DataFrame, checks: dict[str, Column]) -> tuple[DataFrame, DataF
     return good, quarantined
 
 
-def enum_check(col: str, allowed: list[str]) -> Column:
-    """Enum-domain check (nulls allowed — pair with not_null for required)."""
-    return F.col(col).isNull() | F.col(col).isin(allowed)
-
-
 def not_null(col: str) -> Column:
     return F.col(col).isNotNull()
-
-
-def date_between(col: str, lo: str, hi_col: Column | None = None) -> Column:
-    """Date-range sanity: within [lo, hi] where hi defaults to today
-    (utility.R:933-955 rejects dates outside [2020-02-24, now])."""
-    hi = hi_col if hi_col is not None else F.current_date()
-    return (F.col(col) >= F.lit(lo).cast("date")) & (F.col(col) <= hi)

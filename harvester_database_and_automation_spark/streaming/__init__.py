@@ -5,11 +5,7 @@ from harvester_database_and_automation_spark.streaming.changefeed import (
     streaming_change_router,
 )
 from harvester_database_and_automation_spark.streaming.dedup import dedup_within_watermark
-from harvester_database_and_automation_spark.streaming.ingest import (
-    incremental_file_ingest,
-    spool_batches,
-)
-from harvester_database_and_automation_spark.streaming.joins import interval_join
+from harvester_database_and_automation_spark.streaming.ingest import spool_batches
 from harvester_database_and_automation_spark.streaming.sketch_sink import (
     stream_cms_into_published,
 )
@@ -24,9 +20,7 @@ from harvester_database_and_automation_spark.streaming.windows import (
 
 __all__ = [
     "streaming_change_router",
-    "incremental_file_ingest",
     "spool_batches",
-    "interval_join",
     "session_windowed_counts",
     "windowed_event_counts",
     "running_dedup_counts",

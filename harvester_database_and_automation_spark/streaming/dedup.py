@@ -1,7 +1,7 @@
 """Streaming deduplication with bounded state.
 
 The batch engine dedupes with hash-groupBy / argmin windows
-(operators/dedup.py, plans/text.py); the streaming face of the same
+(plans/text.py); the streaming face of the same
 requirement is ``dropDuplicatesWithinWatermark``: duplicates arriving
 within the watermark horizon are suppressed, and state for keys older
 than the horizon is evicted — so state size tracks the duplicate-arrival

@@ -1,4 +1,4 @@
-"""File-arrival incremental ingest.
+"""File-arrival spool for the streaming replays.
 
 The reference's importers poll a directory, keep a processed-file ledger in
 ``automation_state``, and re-run on an interval
@@ -8,8 +8,9 @@ database/R/automation/automation_base.R:15-25 and core/Looper.java:12-27).
 
 Structured Streaming's file source IS that contract: the checkpoint
 records which files were seen, ``Trigger.AvailableNow`` processes exactly
-the backlog and stops (the cron/poll cadence stays external, as in the
-reference), and restarts resume from the ledger. No custom state needed.
+the backlog and stops, and restarts resume from the ledger.
+``spool_batches`` lays down the arriving files, one per micro-batch, that
+the replays in ``plans/streaming_replay.py`` stream through that source.
 """
 
 from __future__ import annotations
@@ -17,41 +18,11 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def incremental_file_ingest(
-    spark: SparkSession,
-    src_dir: str,
-    schema: T.StructType,
-    checkpoint_dir: str,
-    out_dir: str,
-    fmt: str = "csv",
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    reader_options: dict[str, str] | None = None,
-) -> None:
-    """Process all not-yet-seen files under ``src_dir`` into ``out_dir``
-    (parquet, append) and stop. Each call is one poll iteration; the
-    checkpoint is the processed-file ledger."""
-    reader = spark.readStream.format(fmt).schema(schema)
-    for k, v in (reader_options or {}).items():
-        reader = reader.option(k, v)
-    df = reader.load(src_dir)
-    if transform is not None:
-        df = transform(df)
-    (
-        df.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
 
 
 def spool_batches(feed_dir: str, batches: Sequence[DataFrame]) -> None:

@@ -51,8 +51,7 @@ def stream_cms_into_published(
     """One ``Trigger.AvailableNow`` poll: sketch every newly arrived file's
     ``col`` values and merge the delta grid into the published table at
     ``table_dir`` (versioned, atomic pointer swap). The file-source
-    checkpoint is the processed-file ledger, exactly like
-    ``incremental_file_ingest``."""
+    checkpoint is the processed-file ledger."""
     reader = spark.readStream.format(fmt).schema(schema)
     for k, v in (reader_options or {}).items():
         reader = reader.option(k, v)

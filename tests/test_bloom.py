@@ -1,5 +1,6 @@
-"""Bloom-filter semi-join reduction: exactness, the no-false-negative
-guarantee, and the bitset construction itself."""
+"""Bloom-filter semi-join reduction through ``build_bloom`` +
+``bloom_might_contain`` (the pair ``bloom_decontamination`` runs): the
+no-false-negative guarantee and the bitset construction itself."""
 
 from __future__ import annotations
 
@@ -7,7 +8,6 @@ from pyspark.sql import functions as F
 
 from harvester_database_and_automation_spark.operators import (
     bloom_might_contain,
-    bloom_semi_join,
     build_bloom,
 )
 
@@ -16,15 +16,22 @@ def _keys(spark, values):
     return spark.createDataFrame([(v,) for v in values], "key string")
 
 
+def _candidates(probe, keys):
+    """Probe rows the filter built from ``keys`` lets through."""
+    bloom = build_bloom(keys, "key")
+    return (
+        probe.crossJoin(F.broadcast(bloom))
+        .filter(bloom_might_contain(F.col("bits"), "key"))
+        .drop("bits")
+    )
+
+
 def test_bloom_semi_join_matches_exact_semi_join(spark):
     probe = _keys(spark, [f"probe-{i}" for i in range(500)] + ["hit-a", "hit-b", "hit-a"])
     keys = _keys(spark, ["hit-a", "hit-b", "hit-never-probed"])
-    got = sorted(
-        r["key"] for r in bloom_semi_join(probe, keys, "key", "key").collect()
-    )
-    want = sorted(
-        r["key"] for r in probe.join(keys, "key", "left_semi").collect()
-    )
+    cand = _candidates(probe, keys)
+    want = sorted(r["key"] for r in probe.join(keys, "key", "left_semi").collect())
+    got = sorted(r["key"] for r in cand.join(keys, "key", "left_semi").collect())
     assert got == want == ["hit-a", "hit-a", "hit-b"]
 
 
@@ -76,8 +83,11 @@ def test_empty_key_set_rejects_everything(spark):
 
 def test_null_keys_are_ignored_like_left_semi(spark):
     keys = spark.createDataFrame([("hit",), (None,)], "key string")
-    probe = _keys(spark, ["hit", "miss"])
-    got = sorted(r["key"] for r in bloom_semi_join(probe, keys, "key", "key").collect())
+    probe = spark.createDataFrame([("hit",), ("miss",), (None,)], "key string")
+    assert build_bloom(keys, "key").first() == build_bloom(_keys(spark, ["hit"]), "key").first()
+    cand = _candidates(probe, keys)
+    assert None not in {r["key"] for r in cand.collect()}
+    got = sorted(r["key"] for r in cand.join(keys, "key", "left_semi").collect())
     want = sorted(r["key"] for r in probe.join(keys, "key", "left_semi").collect())
     assert got == want == ["hit"]
 

@@ -1,99 +1,12 @@
-"""Bucketed co-located joins: same-bucketed tables join without a shuffle."""
+"""operators/layout.py — Z-order clustering."""
 
 from __future__ import annotations
 
-import re
-from pathlib import Path
-
-from harvester_database_and_automation_spark.operators.layout import write_bucketed
+from harvester_database_and_automation_spark.operators.layout import zorder_value
 
 
-def _exchanges(df) -> int:
-    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    plan = df._jdf.queryExecution().explainString(mode)
-    return len(re.findall(r"^\(\d+\) Exchange", plan, flags=re.MULTILINE))
-
-
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    spark.sql("DROP TABLE IF EXISTS bt_orders")
-    spark.sql("DROP TABLE IF EXISTS bt_lines")
-    orders = spark.range(200).selectExpr("id AS okey", "id % 7 AS prio")
-    lines = spark.range(600).selectExpr("id % 200 AS okey", "id AS line_id")
-    write_bucketed(orders, "bt_orders", str(tmp_path / "bt_orders"), ["okey"], n_buckets=4)
-    write_bucketed(lines, "bt_lines", str(tmp_path / "bt_lines"), ["okey"], n_buckets=4)
-    try:
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = spark.table("bt_orders").join(spark.table("bt_lines"), "okey")
-            assert _exchanges(joined) == 0  # co-located: no shuffle either side
-            assert joined.count() == 600
-            # The same join on plain (unbucketed) frames shuffles both sides.
-            plain = orders.join(lines, "okey")
-            assert _exchanges(plain) >= 2
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bt_orders")
-        spark.sql("DROP TABLE IF EXISTS bt_lines")
-
-
-# ---------------------------------------------------------------------------
-# operators/layout.py — Z-order clustering
-# ---------------------------------------------------------------------------
 def test_zorder_value_interleaves_bits(spark):
-    from harvester_database_and_automation_spark.operators.layout import zorder_value
-
     df = spark.createDataFrame([(0b101, 0b011)], "a long, b long")
     z = df.select(zorder_value(["a", "b"], bits=3).alias("z")).first()["z"]
     # interleave a=101, b=011 -> bit layout (b2 a2 b1 a1 b0 a0) = 0 1 1 0 1 1
     assert z == 0b011011
-
-
-def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
-    """Row-group min/max boxes must be tight in BOTH dims under Z-order,
-    vs a single-column sort which is tight in one and useless in the other.
-    Measured directly from parquet footer statistics via pyarrow."""
-    import pyarrow.parquet as pq
-
-    from harvester_database_and_automation_spark.operators.layout import write_zordered
-
-    n = 1 << 14
-    side = 1 << 7
-    df = spark.range(n).selectExpr(
-        f"id % {side} AS x", f"CAST(id / {side} AS LONG) AS y", "id AS payload"
-    )
-    zpath, spath = str(tmp_path / "zorder"), str(tmp_path / "sorted_x")
-    write_zordered(df, zpath, ["x", "y"], bits=7, target_files=16)
-    (
-        df.repartitionByRange(16, "x")
-        .sortWithinPartitions("x")
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
-
-    def boxes(path: str) -> list[dict]:
-        out = []
-        for f in Path(path).glob("*.parquet"):
-            md = pq.ParquetFile(str(f)).metadata
-            cols = {md.row_group(0).column(i).path_in_schema: i for i in range(md.num_columns)}
-            for rg in range(md.num_row_groups):
-                sx = md.row_group(rg).column(cols["x"]).statistics
-                sy = md.row_group(rg).column(cols["y"]).statistics
-                out.append({"x": (sx.min, sx.max), "y": (sy.min, sy.max)})
-        return out
-
-    def overlapping(path: str, dim: str, lo: int, hi: int) -> float:
-        bs = boxes(path)
-        hit = sum(1 for b in bs if not (b[dim][1] < lo or b[dim][0] > hi))
-        return hit / len(bs)
-
-    # Range predicate on the dimension the single-column sort does NOT
-    # order: every x-sorted row group spans the full y range (no pruning);
-    # Z-order boxes are tight in both dims, so most groups are skipped.
-    assert overlapping(spath, "y", 0, 7) == 1.0
-    assert overlapping(zpath, "y", 0, 7) <= 0.5
-    # And the worst case over both dims stays better under Z-order.
-    z_worst = max(overlapping(zpath, d, 0, 7) for d in ("x", "y"))
-    x_worst = max(overlapping(spath, d, 0, 7) for d in ("x", "y"))
-    assert z_worst < x_worst

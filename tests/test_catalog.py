@@ -4,7 +4,6 @@ from harvester_database_and_automation_spark.catalog import (
     SCHEMAS,
     TABLES,
     load_table,
-    register_views,
 )
 
 
@@ -25,43 +24,3 @@ def test_entry_contract(spark):
     o = e.oracle_sql()
     assert set(o) <= set(q)
     assert len(q) >= 30
-
-
-def test_register_views_enables_reference_style_sql(spark, sf_dir):
-    """Reference users write raw SQL; the views must support the §2 shapes
-    directly through spark.sql. Exercise a join + rollup + ordered
-    string_agg in one statement and cross-check against the DataFrame API."""
-    from pyspark.sql import functions as F
-
-    register_views(spark, sf_dir)
-    got = spark.sql(
-        """
-        SELECT r.r_name AS region,
-               count(*) AS n_nations,
-               concat_ws(',', sort_array(collect_list(n.n_name))) AS nations
-        FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey
-        GROUP BY ROLLUP (r.r_name)
-        ORDER BY region NULLS FIRST
-        """
-    ).collect()
-    assert got[0]["region"] is None and got[0]["n_nations"] == 25  # grand total
-    per_region = {r["region"]: r for r in got[1:]}
-    assert len(per_region) == 5
-    nat = load_table(spark, sf_dir, "nation")
-    reg = load_table(spark, sf_dir, "region")
-    want = {
-        r["r_name"]: r["n"]
-        for r in nat.join(reg, nat["n_regionkey"] == reg["r_regionkey"])
-        .groupBy("r_name")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    for region, row in per_region.items():
-        assert row["n_nations"] == want[region]
-        assert len(row["nations"].split(",")) == want[region]
-
-
-def test_registered_views_cover_every_corpus_table(spark, sf_dir):
-    register_views(spark, sf_dir)
-    views = {r["viewName"] for r in spark.sql("SHOW VIEWS").collect()}
-    assert set(TABLES) <= views

@@ -8,31 +8,12 @@ import pytest
 from harvester_database_and_automation_spark.functions.geo import (
     GeoRule,
     geo_rewrite_udf,
-    parse_rules,
     resolve_geo,
 )
 
 R_EXACT = GeoRule(("Europe", "Suisse", "*", "*"), ("Europe", "Switzerland", "*", "*"))
 R_CANTON = GeoRule(("Europe", "Switzerland", "Zuerich", "*"), ("Europe", "Switzerland", "Zurich", "*"))
 R_WILDCARD = GeoRule(("*", "*", "*", "Basel Stadt"), ("*", "*", "*", "Basel-Stadt"))
-
-
-def test_parse_rules_tsv():
-    rules = parse_rules(
-        [
-            "# comment",
-            "",
-            "Europe/Suisse/*/*\tEurope/Switzerland/*/*",
-            "*/*/*/Basel Stadt\t*/*/*/Basel-Stadt",
-        ]
-    )
-    assert rules == [R_EXACT, R_WILDCARD]
-
-
-@pytest.mark.parametrize("bad", ["Europe/Suisse\tEurope/Switzerland", "no-tabs-here"])
-def test_parse_rules_malformed(bad):
-    with pytest.raises(ValueError):
-        parse_rules([bad])
 
 
 def test_no_matching_rule_is_identity():

@@ -2,17 +2,9 @@
 
 from __future__ import annotations
 
-import json
-
 import pytest
 
-from harvester_database_and_automation_spark.operators import JobState
-from harvester_database_and_automation_spark.sources import (
-    fetch_if_changed,
-    fetch_paginated_jsonl,
-    fetch_to_file,
-    iter_pages,
-)
+from harvester_database_and_automation_spark.sources import fetch_to_file
 
 
 def make_transport(responses):
@@ -54,43 +46,3 @@ def test_fetch_exhausted_retries_raises(tmp_path):
     with pytest.raises(RuntimeError, match="failed after 2 attempts"):
         fetch_to_file("http://x/f", str(tmp_path / "f"), transport=t, retries=2, sleep=lambda s: None)
     assert not (tmp_path / "f").exists()  # failed fetch leaves no partial file
-
-
-def test_fetch_paginated_jsonl_spools_one_file(tmp_path, spark):
-    pages = {
-        "http://api/p0": json.dumps({"items": [{"id": 1}, {"id": 2}]}).encode(),
-        "http://api/p1": json.dumps({"items": [{"id": 3}]}).encode(),
-        "http://api/p2": json.dumps({"items": []}).encode(),
-    }
-    res = fetch_paginated_jsonl(
-        lambda p: f"http://api/p{p}",
-        str(tmp_path / "feed.jsonl"),
-        transport=make_transport(pages),
-        extract_lines=lambda b: [json.dumps(r) for r in json.loads(b)["items"]],
-    )
-    assert res.attempts == 2  # two non-empty pages
-    df = spark.read.schema("id long").json(str(tmp_path / "feed.jsonl"))
-    assert sorted(r["id"] for r in df.collect()) == [1, 2, 3]
-
-
-def test_fetch_if_changed_state_gate(tmp_path):
-    t = make_transport({"http://x/alias.json": b'{"BA": "B.1.1.529"}'})
-    state = JobState(str(tmp_path / "state.json"))
-    _, changed1 = fetch_if_changed("http://x/alias.json", str(tmp_path / "a.json"), state, transport=t)
-    _, changed2 = fetch_if_changed("http://x/alias.json", str(tmp_path / "a.json"), state, transport=t)
-    assert changed1 is True and changed2 is False
-
-
-def test_iter_pages_cursor_walk():
-    pages = {
-        "http://api/start": b'{"next": "http://api/c2", "v": 1}',
-        "http://api/c2": b'{"next": null, "v": 2}',
-    }
-    got = list(
-        iter_pages(
-            "http://api/start",
-            lambda b: json.loads(b)["next"],
-            transport=make_transport(pages),
-        )
-    )
-    assert [json.loads(p)["v"] for p in got] == [1, 2]

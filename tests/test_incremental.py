@@ -10,10 +10,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from harvester_database_and_automation_spark.operators.publish import (
-    publish_group,
     publish_incremental,
     publish_versioned,
-    read_group_table,
     read_published,
 )
 
@@ -274,78 +272,27 @@ def test_vacuum_after_incremental_keeps_linked_partitions_readable(spark, tmp_pa
     assert got == {("a", 2), ("b", 10)}
 
 
-def test_compaction_rewrites_only_fragmented_partitions(spark, tmp_path):
-    from harvester_database_and_automation_spark.operators.publish import (
-        compact_small_files,
-    )
+def test_rollback_repoints_the_marker(spark, tmp_path):
+    from harvester_database_and_automation_spark.operators.publish import rollback
 
     table = str(tmp_path / "t")
-    # Partition a: fragmented into ~5 files; partition b: already 1 file.
-    frag = _rows(spark, [("a", i) for i in range(50)]).repartition(5)
-    one = _rows(spark, [("b", 100)]).coalesce(1)
-    publish_versioned(frag.unionByName(one), table, partition_by=["k"])
+    assert publish_versioned(_rows(spark, [("a", 1)]), table) == 1
+    assert publish_versioned(_rows(spark, [("a", 2)]), table) == 2
+    assert [r["v"] for r in read_published(spark, table).collect()] == [2]
 
-    before = read_published(spark, table)
-    n_files_a = len(
-        [f for f in os.listdir(os.path.join(table, "v1", "k=a")) if not f.startswith(("_", "."))]
-    )
-    assert n_files_a >= 2
-    b_inodes = _inodes(table, 1, "k=b")
-    expect = {(r["k"], r["v"]) for r in before.collect()}
-
-    version, compacted = compact_small_files(spark, table, ["k"], target_bytes=1 << 30)
-    assert version == 2
-    assert compacted == ["k=a"]
-    after = read_published(spark, table)
-    assert {(r["k"], r["v"]) for r in after.collect()} == expect
-    # a is rewritten down to one file; b carried forward by hard link.
-    n_files_a2 = len(
-        [f for f in os.listdir(os.path.join(table, "v2", "k=a")) if not f.startswith(("_", "."))]
-    )
-    assert n_files_a2 == 1
-    assert _inodes(table, 2, "k=b") == b_inodes
-
-    # Idempotent: nothing left to compact, no new version published.
-    version3, compacted3 = compact_small_files(spark, table, ["k"], target_bytes=1 << 30)
-    assert (version3, compacted3) == (2, [])
-
-
-def test_publish_group_is_atomic_and_rollbackable(spark, tmp_path):
-    from harvester_database_and_automation_spark.operators.publish import (
-        publish_group,
-        read_group_table,
-        rollback,
-    )
-
-    group = str(tmp_path / "g")
-    a1 = _rows(spark, [("a", 1)])
-    b1 = _rows(spark, [("b", 10)])
-    assert publish_group({"t1": a1, "t2": b1}, group) == 1
-
-    a2 = _rows(spark, [("a", 2)])
-    b2 = _rows(spark, [("b", 20)])
-    assert publish_group({"t1": a2, "t2": b2}, group) == 2
-
-    # Both tables resolve through the same group version — consistent set.
-    assert [r["v"] for r in read_group_table(spark, group, "t1").collect()] == [2]
-    assert [r["v"] for r in read_group_table(spark, group, "t2").collect()] == [20]
-
-    # Rollback is one marker write and flips BOTH tables together.
-    assert rollback(group) == 1
-    assert [r["v"] for r in read_group_table(spark, group, "t1").collect()] == [1]
-    assert [r["v"] for r in read_group_table(spark, group, "t2").collect()] == [10]
+    # Rollback is one marker write; the newer version stays on disk.
+    assert rollback(table) == 1
+    assert [r["v"] for r in read_published(spark, table).collect()] == [1]
+    assert os.path.isdir(os.path.join(table, "v2"))
 
 
 def test_rollback_requires_a_predecessor(spark, tmp_path):
-    from harvester_database_and_automation_spark.operators.publish import (
-        publish_group,
-        rollback,
-    )
+    from harvester_database_and_automation_spark.operators.publish import rollback
 
-    group = str(tmp_path / "g")
-    publish_group({"t": _rows(spark, [("a", 1)])}, group)
+    table = str(tmp_path / "t")
+    publish_versioned(_rows(spark, [("a", 1)]), table)
     with pytest.raises(ValueError):
-        rollback(group)
+        rollback(table)
 
 
 def test_crashed_publish_attempt_does_not_block_the_next(spark, tmp_path):
@@ -405,13 +352,10 @@ def _inferred(spark, vdir: str) -> T.StructType:
 
 
 def test_reads_of_published_versions_launch_no_job(spark, tmp_path):
-    table, group = str(tmp_path / "t"), str(tmp_path / "g")
-    df = _rows(spark, [("a", 1), ("b", 2)])
-    publish_versioned(df, table, partition_by=["k"])
-    publish_group({"t": df}, group)
+    table = str(tmp_path / "t")
+    publish_versioned(_rows(spark, [("a", 1), ("b", 2)]), table, partition_by=["k"])
     j0 = _jobs(spark)
     read_published(spark, table)
-    read_group_table(spark, group, "t")
     assert _jobs(spark) == j0
 
 
@@ -461,19 +405,6 @@ def test_stored_schema_matches_inference_for_partitioned_tables(spark, tmp_path,
     assert got == {(9, a), (2, b), (3, c)}
 
 
-def test_stored_schema_matches_inference_for_group_members(spark, tmp_path):
-    group = str(tmp_path / "g")
-    tables = {
-        "plain": _rows(spark, [("a", 1)]),
-        "parted": spark.createDataFrame([(1, "x", 3)], "id int, k string, n int"),
-    }
-    v = publish_group(tables, group, partition_by={"parted": ["k"]})
-    for name in tables:
-        got = read_group_table(spark, group, name)
-        assert got.schema == _inferred(spark, os.path.join(group, f"v{v}", name))
-    assert read_group_table(spark, group, "parted").columns == ["id", "n", "k"]
-
-
 def test_version_without_stored_schema_reads_by_inference(spark, tmp_path):
     """Versions published before versions carried their schema still read."""
     table = str(tmp_path / "t")
@@ -486,18 +417,20 @@ def test_version_without_stored_schema_reads_by_inference(spark, tmp_path):
 
 
 def test_date_like_string_partition_reads_back_as_string(spark, tmp_path):
-    """The stored schema keeps the written type, also through compaction;
-    path inference would turn a date-shaped string partition value into
-    a DATE."""
-    from harvester_database_and_automation_spark.operators.publish import compact_small_files
-
+    """The stored schema keeps the written type, also through an
+    incremental publish; path inference would turn a date-shaped string
+    partition value into a DATE."""
     table = str(tmp_path / "t")
     rows = _rows(spark, [("2024-03-01", 1), ("2024-03-01", 2)]).repartition(2)
     v = publish_versioned(rows, table, partition_by=["k"])
     assert _inferred(spark, os.path.join(table, f"v{v}"))["k"].dataType == T.DateType()
     assert read_published(spark, table).schema["k"].dataType == T.StringType()
-    v2, compacted = compact_small_files(spark, table, ["k"])
-    assert (v2, compacted) == (v + 1, ["k=2024-03-01"])
+    v2 = publish_incremental(_rows(spark, [("2024-03-02", 3)]), table, partition_by=["k"])
+    assert v2 == v + 1
     got = read_published(spark, table)
     assert got.schema["k"].dataType == T.StringType()
-    assert sorted(tuple(r) for r in got.collect()) == [(1, "2024-03-01"), (2, "2024-03-01")]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, "2024-03-01"),
+        (2, "2024-03-01"),
+        (3, "2024-03-02"),
+    ]

@@ -1,20 +1,8 @@
-"""Uniqueness + FK orphan checks (operators/integrity.py)."""
+"""FK orphan checks (operators/integrity.py)."""
 
 from __future__ import annotations
 
-from harvester_database_and_automation_spark.operators.integrity import (
-    duplicate_keys,
-    orphans,
-)
-
-
-def test_duplicate_keys(spark):
-    df = spark.createDataFrame(
-        [(1, "a", 1), (1, "a", 2), (2, "b", 3), (1, "b", 4)], "k int, s string, v int"
-    )
-    dups = {(r["k"], r["s"], r["n_rows"]) for r in duplicate_keys(df, ["k", "s"]).collect()}
-    assert dups == {(1, "a", 2)}
-    assert duplicate_keys(df, ["v"]).count() == 0
+from harvester_database_and_automation_spark.operators.integrity import orphans
 
 
 def test_orphans_with_mapping_and_nulls(spark):

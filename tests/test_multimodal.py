@@ -12,7 +12,6 @@ from harvester_database_and_automation_spark.sources.multimodal import (
     PIL_AVAILABLE,
     decode_media,
     extract_features,
-    resize_images,
     sample_frames,
 )
 
@@ -45,14 +44,12 @@ def test_decode_requires_explicit_fake(media):
         return
     with pytest.raises(NotImplementedError, match="fake=True"):
         decode_media(media)
-    with pytest.raises(NotImplementedError):
-        resize_images(media, 100, 100)
 
 
 def test_real_decode_parity_where_pillow_exists(spark, media):
     """Fallback-free coverage of the real path: where Pillow imports, a
-    genuine 2x2 PNG decodes to its known pixel bytes and resize
-    re-encodes at the target size; non-image rows must take the SAME
+    genuine 2x2 PNG decodes to its known pixel bytes; non-image rows
+    must take the SAME
     byte-stat path the fake decoder defines (real ≡ fake on them).
     Where Pillow is absent, the gate itself is the asserted behavior."""
     if not PIL_AVAILABLE:
@@ -79,12 +76,6 @@ def test_real_decode_parity_where_pillow_exists(spark, media):
     # audio rows: real path == fake path (codec stubbed, byte stats)
     fake = {r["media_id"]: r for r in decode_media(df, fake=True).collect()}
     assert real[2] == fake[2]
-    # real resize: decoded size honours the target, format survives
-    resized = {r["media_id"]: r for r in resize_images(df, 4, 4).collect()}
-    out = Image.open(io.BytesIO(resized[1]["content"]))
-    assert out.size == (4, 4) and out.format == "PNG"
-    assert resized[1]["meta"]["width"] == 4
-    assert resized[2]["content"] == b"\xff" * 8
 
 
 def test_fake_decode_deterministic(media):
@@ -121,37 +112,12 @@ def test_sample_frames_plan(media):
     assert got == {(3, 0), (3, 10), (3, 20), (4, 0)}
 
 
-def test_resize_requires_explicit_fake(media):
-    if PIL_AVAILABLE:
-        assert resize_images(media, 4, 4) is not None
-        return
-    with pytest.raises(NotImplementedError):
-        resize_images(media, 4, 4)
-
-
-def test_fake_resize_updates_images_only(media):
-    out = resize_images(media, 4, 4, fake=True)
-    assert out.schema == MEDIA_SCHEMA  # full schema preserved, meta struct included
-    rows = {r["media_id"]: r for r in out.collect()}
-    img = rows[1]
-    assert len(img["content"]) == 16  # stride-sampled to width*height bytes
-    assert img["meta"]["width"] == 4 and img["meta"]["height"] == 4
-    assert img["meta"]["format"] == "png"  # untouched meta fields carried
-    # non-image rows pass through bit-identical
-    assert rows[2]["content"] == b"\xff" * 8 and rows[2]["meta"]["sample_rate"] == 16000
-    assert rows[3]["meta"]["width"] == 640
-    # deterministic: second run produces identical bytes
-    again = {r["media_id"]: r["content"] for r in resize_images(media, 4, 4, fake=True).collect()}
-    assert again[1] == img["content"]
-
-
 def test_media_stages_tolerate_null_payload_and_meta(spark):
     """One dirty row (null content/meta) must not kill the stage."""
     from harvester_database_and_automation_spark.sources.multimodal import (
         MEDIA_SCHEMA,
         decode_media,
         extract_features,
-        resize_images,
     )
 
     rows = [
@@ -163,5 +129,3 @@ def test_media_stages_tolerate_null_payload_and_meta(spark):
     assert decoded == {1: 3, 2: 0}
     feats = extract_features(df).collect()
     assert len(feats) == 2 and all(len(r["features"]) > 0 for r in feats)
-    resized = {r["media_id"]: r["meta"] for r in resize_images(df, 2, 2, fake=True).collect()}
-    assert resized[1]["width"] == 2 and resized[2] is None

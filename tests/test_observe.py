@@ -92,6 +92,28 @@ def test_measure_without_ui_names_spark_ui(spark):
     assert not ran  # fails before running the block
 
 
+def test_py4j_calls_counts_only_the_calling_thread(spark):
+    """Commands another thread sends through the same gateway client, such
+    as py4j's finalizer thread deleting garbage-collected JavaObjects, are
+    not the block's round trips."""
+    import threading
+
+    from harvester_database_and_automation_spark.observe import py4j_calls
+
+    jvm = spark.sparkContext._jvm
+
+    def other_thread():
+        for _ in range(50):
+            jvm.java.lang.System.currentTimeMillis()
+
+    with py4j_calls(spark) as calls:
+        jvm.java.lang.System.currentTimeMillis()
+        t = threading.Thread(target=other_thread)
+        t.start()
+        t.join()
+    assert 1 <= calls["calls"] < 10
+
+
 def test_only_observe_reads_the_status_rest_api():
     """Outside perfbench/ (frozen with the benchmark), Spark REST reads go
     through observe.py; a private scraper elsewhere is a regression."""

@@ -1,4 +1,4 @@
-"""Tests for the write-path operators (M1-M6) and keep_best dedup."""
+"""Tests for the write-path operators (M1-M6)."""
 
 from __future__ import annotations
 
@@ -10,8 +10,6 @@ from harvester_database_and_automation_spark.operators import (
     apply_deletes,
     classify_changes,
     current_version,
-    keep_best,
-    merge_upsert,
     publish_versioned,
     read_published,
 )
@@ -28,27 +26,10 @@ def current(spark):
     )
 
 
-def test_merge_upsert(spark, current):
-    updates = spark.createDataFrame([(2, "m2-new", "CCC"), (4, "m4", "TTT")], SCHEMA)
-    got = {r["id"]: (r["meta"], r["seq"]) for r in merge_upsert(current, updates, ["id"]).collect()}
-    assert got == {
-        1: ("m1", "AAA"),
-        2: ("m2-new", "CCC"),
-        3: ("m3", "GGG"),
-        4: ("m4", "TTT"),
-    }
-
-
-def test_merge_upsert_schema_mismatch(spark, current):
-    bad = spark.createDataFrame([(1, "x")], "id int, meta string")
-    with pytest.raises(ValueError, match="schema mismatch"):
-        merge_upsert(current, bad, ["id"])
-
-
 def test_merge_delta_matches_upsert_plus_deletes(spark, current):
-    """merge_delta == merge_upsert + apply_deletes for unique-key deltas,
-    WITHOUT the full-outer exchange of `current` (the 100 TB write path:
-    stored payloads anti-join a broadcastable touched-key set)."""
+    """merge_delta upserts and deletes for unique-key deltas WITHOUT a
+    full-outer exchange of `current` (the 100 TB write path: stored
+    payloads anti-join a broadcastable touched-key set)."""
     from harvester_database_and_automation_spark.operators.merge import merge_delta
 
     updates = spark.createDataFrame([(2, "m2-new", "CCC"), (4, "m4", "TTT")], SCHEMA)
@@ -56,10 +37,6 @@ def test_merge_delta_matches_upsert_plus_deletes(spark, current):
     got = {r["id"]: (r["meta"], r["seq"])
            for r in merge_delta(current, updates, ["id"], delete_keys=tombs).collect()}
     assert got == {1: ("m1", "AAA"), 2: ("m2-new", "CCC"), 4: ("m4", "TTT")}
-
-    # Same result as the classic pair on the same inputs.
-    classic = apply_deletes(merge_upsert(current, updates, ["id"]), tombs, ["id"])
-    assert got == {r["id"]: (r["meta"], r["seq"]) for r in classic.collect()}
 
     # No deletes; a NULL in the update row must still overwrite.
     upd2 = spark.createDataFrame([(1, None, "AAA")], SCHEMA)
@@ -69,7 +46,7 @@ def test_merge_delta_matches_upsert_plus_deletes(spark, current):
 
 def test_merge_delta_delete_wins_on_overlap(spark, current):
     """A key in BOTH updates and delete_keys is deleted — the precedence
-    of the apply_deletes(merge_upsert(...)) pair merge_delta replaces
+    of an upsert followed by apply_deletes, the pair merge_delta replaces
     (round-9 ADVICE: the naive anti-join+union re-inserted the update)."""
     from harvester_database_and_automation_spark.operators.merge import merge_delta
 
@@ -80,8 +57,6 @@ def test_merge_delta_delete_wins_on_overlap(spark, current):
                for r in merge_delta(current, updates, ["id"], delete_keys=tombs,
                                     broadcast_touched=hint).collect()}
         assert got == {1: "m1", 4: "m4"}
-        classic = apply_deletes(merge_upsert(current, updates, ["id"]), tombs, ["id"])
-        assert got == {r["id"]: r["meta"] for r in classic.collect()}
 
 
 def test_merge_delta_schema_mismatch(spark, current):
@@ -97,7 +72,7 @@ def test_merge_delta_current_never_shuffles(spark, current):
     the PLAN-TIME join is already a broadcast — `current` flows map-side
     and never touches shuffle storage (AQE's stats-based flip would come
     only after current's map stage had written its shuffle output). A
-    full-outer merge_upsert plan exchanges current by key."""
+    full-outer upsert plan exchanges current by key."""
     from harvester_database_and_automation_spark.operators.merge import merge_delta
 
     updates = spark.createDataFrame([(2, "m2-new", "CCC")], SCHEMA)
@@ -264,23 +239,6 @@ def test_job_state_run_if_changed(tmp_path):
     assert state.get("files") == "4"
 
 
-def test_keep_best_deterministic_tiebreak(spark):
-    df = spark.createDataFrame(
-        [("e1", 5, "b"), ("e1", 5, "a"), ("e1", 9, "c"), ("e2", 1, "z")],
-        "ethid string, number_n int, sample_name string",
-    )
-    got = keep_best(df, ["ethid"], [F.col("number_n"), F.col("sample_name")]).collect()
-    by_key = {r["ethid"]: r["sample_name"] for r in got}
-    assert by_key == {"e1": "a", "e2": "z"}
-
-
-def test_merge_upsert_null_overwrites(spark, current):
-    updates = spark.createDataFrame([(1, None, "AAA")], SCHEMA)
-    got = {r["id"]: r["meta"] for r in merge_upsert(current, updates, ["id"]).collect()}
-    # A NULL carried by the update must overwrite, not fall back to current.
-    assert got[1] is None and got[2] == "m2"
-
-
 def test_assign_global_ids_matches_window(spark):
     from pyspark.sql import Window
 
@@ -351,109 +309,12 @@ def test_salted_aggregate_matches_plain(spark, skewed_facts):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, plain.collect()))
 
 
-def test_salted_count_distinct_matches(spark, skewed_facts):
-    from harvester_database_and_automation_spark.operators import salted_count_distinct
-
-    df = skewed_facts.withColumn("v", (F.col("x") % 50).cast("int"))
-    got = salted_count_distinct(df, ["k"], "v")
-    plain = df.groupBy("k").agg(F.countDistinct("v").alias("n_distinct"))
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_salted_count_distinct_ignores_nulls(spark, skewed_facts):
-    from harvester_database_and_automation_spark.operators import salted_count_distinct
-
-    # count(DISTINCT v) ignores NULLs; the salted formulation must too.
-    df = skewed_facts.withColumn(
-        "v", F.when(F.col("x") % 3 == 0, (F.col("x") % 50).cast("int"))
-    )
-    got = salted_count_distinct(df, ["k"], "v")
-    plain = df.groupBy("k").agg(F.countDistinct("v").alias("n_distinct"))
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, plain.collect()))
-
-
 def test_salt_col_collision_rejected(spark, skewed_facts):
     from harvester_database_and_automation_spark.operators import salted_join
 
     bad = skewed_facts.withColumn("__salt", F.lit(1))
     with pytest.raises(ValueError, match="__salt"):
         salted_join(bad, skewed_facts, ["k"])
-
-
-# ---------------------------------------------------------------------------
-# coalesce_join (J9; database/R/utility.R:324-357)
-# ---------------------------------------------------------------------------
-def test_coalesce_join_fills_gaps_left_wins(spark):
-    from harvester_database_and_automation_spark.operators import coalesce_join
-
-    left = spark.createDataFrame(
-        [(1, "ZH", None), (2, None, "f"), (3, "BE", "m")],
-        "id int, canton string, sex string",
-    )
-    right = spark.createDataFrame(
-        [(1, "GE", "m", "viollier"), (2, "VD", "x", "imv")],
-        "id int, canton string, sex string, lab string",
-    )
-    got = {r["id"]: (r["canton"], r["sex"], r["lab"]) for r in coalesce_join(left, right, ["id"]).collect()}
-    # Existing values win; NULLs fill from the right; right-only cols appended.
-    assert got == {1: ("ZH", "m", "viollier"), 2: ("VD", "f", "imv"), 3: ("BE", "m", None)}
-
-
-def test_coalesce_join_prefer_right(spark):
-    from harvester_database_and_automation_spark.operators import coalesce_join
-
-    left = spark.createDataFrame([(1, "old")], "id int, v string")
-    right = spark.createDataFrame([(1, "new")], "id int, v string")
-    assert coalesce_join(left, right, ["id"], prefer="right").collect()[0]["v"] == "new"
-
-
-# ---------------------------------------------------------------------------
-# Table layout: partitioning + clustering + bounded files (index replacement)
-# ---------------------------------------------------------------------------
-def test_cluster_for_write_layout(spark, tmp_path):
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    from harvester_database_and_automation_spark.operators import (
-        cluster_for_write,
-        publish_versioned,
-        read_published,
-    )
-
-    df = spark.createDataFrame(
-        [(i % 4, (i * 37) % 1000, f"p{i}") for i in range(4000)],
-        "part int, pos int, payload string",
-    ).repartition(16)
-    out = str(tmp_path / "muts")
-    v = publish_versioned(
-        cluster_for_write(df, ["part"], ["pos"]),
-        out,
-        partition_by=["part"],
-        max_records_per_file=400,
-    )
-    assert v == 1
-    # Directory partitioning exists and round-trips.
-    part_dirs = sorted(os.path.basename(p) for p in glob.glob(f"{out}/v1/part=*"))
-    assert part_dirs == ["part=0", "part=1", "part=2", "part=3"]
-    assert read_published(spark, out).count() == 4000
-    # File sizes are bounded: 1000 rows per partition / 400 -> >= 3 files each.
-    for d in glob.glob(f"{out}/v1/part=*"):
-        files = glob.glob(f"{d}/*.parquet")
-        assert len(files) >= 3
-        for f in files:
-            assert pq.ParquetFile(f).metadata.num_rows <= 400
-    # Clustering: within a partition, file pos-ranges are disjoint-ish —
-    # each file's min/max span is far tighter than the full 0..999 domain,
-    # which is what gives row-group skipping its selectivity.
-    for d in glob.glob(f"{out}/v1/part=*"):
-        spans = []
-        for f in glob.glob(f"{d}/*.parquet"):
-            meta = pq.ParquetFile(f).metadata
-            stats = meta.row_group(0).column(0).statistics
-            spans.append(stats.max - stats.min)
-        assert sum(spans) / len(spans) < 600  # unsorted would be ~999 each
 
 
 # ---------------------------------------------------------------------------
@@ -648,11 +509,7 @@ def test_fanout_reads_max_partition_bytes_with_unit(spark, tmp_path):
 # operators/scd.py — SCD2 historization
 # ---------------------------------------------------------------------------
 def test_scd2_merge_lifecycle(spark):
-    from harvester_database_and_automation_spark.operators.scd import (
-        scd2_as_of,
-        scd2_init,
-        scd2_merge,
-    )
+    from harvester_database_and_automation_spark.operators.scd import scd2_init, scd2_merge
 
     snap = spark.createDataFrame(
         [(1, "lab_a", "good"), (2, "lab_b", "poor")], "sample_id long, lab string, q string"
@@ -689,12 +546,6 @@ def test_scd2_merge_lifecycle(spark):
     )
     k3 = [r for r in h2.collect() if r["sample_id"] == 3]
     assert len(k3) == 2 and {r["is_current"] for r in k3} == {True, False}
-
-    # point-in-time reads
-    as_of_jan = {r["sample_id"]: r["q"] for r in scd2_as_of(h2, "2024-01-15 00:00:00").collect()}
-    assert as_of_jan == {1: "good", 2: "poor"}
-    as_of_now = {r["sample_id"]: r["q"] for r in scd2_as_of(h2, "2024-03-15 00:00:00").collect()}
-    assert as_of_now == {1: "good", 2: "good", 3: "ok"}
 
 
 def test_scd2_merge_rejects_schema_drift(spark):
@@ -952,16 +803,6 @@ def test_fuzzy_join_preserves_duplicate_input_rows(spark):
     right = spark.createDataFrame([("abd",)], "rname string")
     out = fuzzy_join(left, right, "lname", "rname", max_dist=1)
     assert out.count() == 2
-
-
-def test_bloom_semi_join_tolerates_probe_bits_column(spark):
-    from harvester_database_and_automation_spark.operators.bloom import bloom_semi_join
-
-    probe = spark.createDataFrame([(1, "x"), (2, "y")], "bits int, k string")
-    keys = spark.createDataFrame([("x",)], "key string")
-    out = bloom_semi_join(probe, keys, "k", "key")
-    rows = out.collect()
-    assert [(r["bits"], r["k"]) for r in rows] == [(1, "x")]
 
 
 def test_running_total_decimal_column(spark):

@@ -844,6 +844,52 @@ def test_run_feed_import_error_path_releases_caches(spark, tmp_path):
     assert _persisted_ids(spark) - before == set()
 
 
+def test_xz_feed_roundtrip_releases_parse_cache_on_corrupt_line(spark, sf_dir, monkeypatch):
+    """A corrupt line in the spool makes ``xz_feed_roundtrip`` raise, and
+    the cached parse is released on that error path too."""
+    from harvester_database_and_automation_spark.plans.external_integration import (
+        xz_feed_roundtrip,
+    )
+    from harvester_database_and_automation_spark.sources import jsonl
+
+    spool = jsonl.spool_xz_jsonl
+
+    def spool_with_corrupt_line(xz_path, spool_dir, **kw):
+        paths = spool(xz_path, spool_dir, **kw)
+        with open(paths[-1], "ab") as fh:
+            fh.write(b"{not json\n")
+        return paths
+
+    monkeypatch.setattr(jsonl, "spool_xz_jsonl", spool_with_corrupt_line)
+    before = _persisted_ids(spark)
+    with pytest.raises(ValueError, match="1 corrupt lines"):
+        xz_feed_roundtrip(spark, sf_dir)
+    assert _persisted_ids(spark) - before == set()
+
+
+def test_http_fetch_roundtrip_releases_parse_cache_on_corrupt_line(spark, sf_dir, monkeypatch):
+    """A corrupt line in the fetched file makes ``http_fetch_roundtrip``
+    raise, and the cached parse is released on that error path too."""
+    from harvester_database_and_automation_spark.plans.external_integration import (
+        http_fetch_roundtrip,
+    )
+    from harvester_database_and_automation_spark.sources import http
+
+    fetch = http.fetch_to_file
+
+    def fetch_with_corrupt_line(url, dest, **kw):
+        result = fetch(url, dest, **kw)
+        with open(dest, "ab") as fh:
+            fh.write(b"{not json\n")
+        return result
+
+    monkeypatch.setattr(http, "fetch_to_file", fetch_with_corrupt_line)
+    before = _persisted_ids(spark)
+    with pytest.raises(ValueError, match="1 corrupt lines"):
+        http_fetch_roundtrip(spark, sf_dir)
+    assert _persisted_ids(spark) - before == set()
+
+
 def test_package_runs_no_thread_pool():
     """Every pipeline runs its Spark actions in program order on the
     caller's thread; no module under the package imports
@@ -872,3 +918,77 @@ def test_package_runs_no_thread_pool():
             if any(n.startswith("concurrent") or n == "ThreadPoolExecutor" for n in names):
                 offenders.append(f"{p.relative_to(root)}:{node.lineno}")
     assert offenders == []
+
+
+def test_package_has_no_test_only_definitions():
+    """Every top-level ``def``/``class`` in the package is used by name
+    from non-test code: the package, ``scripts/``, ``perfbench/`` outside
+    its tests, ``bench.py`` or ``__spark_entry__.py``. Registry entries
+    (``@register``, ``@LAYER.register``) are the roots. A use inside the
+    definition's own body does not count, and neither does a use inside
+    another definition that fails the rule, so the scan repeats until it
+    finds nothing new. Imports, ``__init__`` re-exports (``__all__``
+    strings) and docstrings are not uses. ROADMAP aim 2: an operator that
+    no certified path runs has no oracle behind it, so it is deleted
+    rather than kept alive by its unit tests."""
+    import ast
+    from collections import defaultdict
+    from pathlib import Path
+
+    import harvester_database_and_automation_spark as pkg
+
+    keep = {
+        # The documented cleanup of a failed publish's orphan version
+        # directory (publish_versioned docstring).
+        "vacuum",
+        # The recovery action of the versioned-directory marker protocol.
+        "rollback",
+        # The reference implementation tests/test_properties.py checks
+        # group_quantiles_binned against.
+        "group_quantiles_exact",
+    }
+    pkg_root = Path(pkg.__file__).parent
+    repo = pkg_root.parent
+    perfbench = repo / "perfbench"
+    files = [
+        *pkg_root.rglob("*.py"),
+        *(repo / "scripts").rglob("*.py"),
+        *(p for p in perfbench.rglob("*.py") if "tests" not in p.relative_to(perfbench).parts),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+    ]
+    spans = {}  # (path, name) -> (first line, last line)
+    uses = defaultdict(list)  # name -> [(path, line)]
+    for path in files:
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        if path.is_relative_to(pkg_root):
+            for node in tree.body:
+                if isinstance(node, (ast.FunctionDef, ast.ClassDef)) and not any(
+                    "register" in ast.unparse(d) for d in node.decorator_list
+                ):
+                    spans[(path, node.name)] = (node.lineno, node.end_lineno)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                uses[node.id].append((path, node.lineno))
+            elif isinstance(node, ast.Attribute):
+                uses[node.attr].append((path, node.lineno))
+
+    def inside(key, path, line):
+        first, last = spans[key]
+        return key[0] == path and first <= line <= last
+
+    dead: set = set()
+    while True:
+        newly = {
+            key
+            for key in spans.keys() - dead
+            if all(
+                inside(key, path, line) or any(inside(d, path, line) for d in dead)
+                for path, line in uses[key[1]]
+            )
+        }
+        if not newly:
+            break
+        dead |= newly
+    found = sorted(f"{path.relative_to(repo)}::{name}" for path, name in dead)
+    assert sorted(name for _, name in dead) == sorted(keep), found

@@ -8,17 +8,13 @@ from pyspark.sql import types as T
 
 from harvester_database_and_automation_spark.sources import (
     check_field_drift,
-    read_csv,
     read_fasta,
     read_jsonl,
     validate,
     write_fasta,
 )
-from harvester_database_and_automation_spark.sources.quarantine import (
-    date_between,
-    enum_check,
-    not_null,
-)
+from harvester_database_and_automation_spark.sources.quarantine import not_null
+from harvester_database_and_automation_spark.sources.tabular import read_csv_strict
 
 FASTA = """>seq1 Switzerland/ZH/2021
 ACGTACGT
@@ -142,8 +138,6 @@ def test_check_field_drift(spark, tmp_path):
 
 
 def test_read_csv_semicolon_typed(spark, tmp_path):
-    p = tmp_path / "nextclade.csv"
-    p.write_text("sample;clade;score\ns1;20A;0.5\ns2;20B;oops\ns3;21K;1.25\n")
     schema = T.StructType(
         [
             T.StructField("sample", T.StringType()),
@@ -151,32 +145,14 @@ def test_read_csv_semicolon_typed(spark, tmp_path):
             T.StructField("score", T.DoubleType()),
         ]
     )
-    scan = read_csv(spark, str(p), schema, sep=";")
-    assert {r["sample"] for r in scan.good.collect()} == {"s1", "s3"}
-    assert scan.corrupt.count() == 1
-    assert "oops" in scan.corrupt.collect()[0]["_corrupt_record"]
-    scan.release()
-
-
-def test_read_csv_release_drops_parse_cache(spark, tmp_path):
-    """read_csv caches one parse behind both views; release() must drop
-    it (unpersisting a filtered view is a no-op, so before the handle
-    existed the cache could never be freed)."""
-    p = tmp_path / "feed.csv"
-    p.write_text("sample,score\ns1,0.5\ns2,oops\n")
-    schema = T.StructType(
-        [T.StructField("sample", T.StringType()), T.StructField("score", T.DoubleType())]
-    )
-
-    def n_persisted():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-    before = n_persisted()
-    scan = read_csv(spark, str(p), schema)
-    assert (scan.good.count(), scan.corrupt.count()) == (1, 1)
-    assert n_persisted() == before + 1
-    scan.release()
-    assert n_persisted() == before
+    p = tmp_path / "nextclade.csv"
+    p.write_text("sample;clade;score\ns1;20A;0.5\ns3;21K;1.25\n")
+    got = {tuple(r) for r in read_csv_strict(spark, str(p), schema, sep=";").collect()}
+    assert got == {("s1", "20A", 0.5), ("s3", "21K", 1.25)}
+    bad = tmp_path / "nextclade_bad.csv"
+    bad.write_text("sample;clade;score\ns1;20A;0.5\ns2;20B;oops\n")
+    with pytest.raises(Exception, match="s2;20B;oops"):
+        read_csv_strict(spark, str(bad), schema, sep=";").collect()
 
 
 def test_read_csv_strict_one_pass_tripwire(spark, tmp_path):
@@ -184,8 +160,6 @@ def test_read_csv_strict_one_pass_tripwire(spark, tmp_path):
     scan in-plan — with the raw line in the message — on corrupt input
     (no quarantine cache, no second emptiness action)."""
     import pytest as _pytest
-
-    from harvester_database_and_automation_spark.sources.tabular import read_csv_strict
 
     schema = T.StructType(
         [
@@ -211,8 +185,6 @@ def test_read_csv_strict_guarantee_survives_column_pruning(spark, tmp_path):
     the corrupt-record column (count) must work, not raise Spark's
     corrupt-column AnalysisException."""
     import pytest as _pytest
-
-    from harvester_database_and_automation_spark.sources.tabular import read_csv_strict
 
     schema = T.StructType(
         [
@@ -247,7 +219,9 @@ def test_validate_quarantine_reasons(spark):
         {
             "lineage_required": not_null("lineage"),
             "lineage_valid": F.col("lineage").rlike(r"^[A-Z]+(\.[0-9]+)*$"),
-            "date_in_range": date_between("d", "2020-02-24"),
+            "date_in_range": F.col("d").between(
+                F.lit("2020-02-24").cast("date"), F.current_date()
+            ),
         },
     )
     assert [r["id"] for r in good.collect()] == [1]
@@ -309,10 +283,8 @@ def test_read_gzip_csv_transparently(spark, tmp_path):
             T.StructField("score", T.DoubleType()),
         ]
     )
-    scan = read_csv(spark, str(p), schema, sep=";")
-    assert {r["sample"] for r in scan.good.collect()} == {"s1", "s2"}
-    assert scan.corrupt.count() == 0
-    scan.release()
+    got = read_csv_strict(spark, str(p), schema, sep=";").collect()
+    assert {(r["sample"], r["score"]) for r in got} == {("s1", 0.5), ("s2", 1.5)}
 
 
 def test_orc_roundtrip_with_predicate_pushdown(spark, tmp_path):

@@ -1,5 +1,5 @@
-"""Tests for the streaming layer: incremental ingest ledger semantics,
-watermarked windows, stateful per-key counts."""
+"""Tests for the streaming layer: watermarked windows, stateful per-key
+counts, the published-table sinks and the replay spool."""
 
 from __future__ import annotations
 
@@ -7,52 +7,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from harvester_database_and_automation_spark.streaming import (
-    incremental_file_ingest,
     running_dedup_counts,
     windowed_event_counts,
 )
-
-CSV_SCHEMA = T.StructType(
-    [T.StructField("id", T.IntegerType()), T.StructField("name", T.StringType())]
-)
-
-
-def test_incremental_ingest_processes_each_file_once(spark, tmp_path):
-    src = tmp_path / "incoming"
-    src.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    (src / "a.csv").write_text("1,alpha\n2,beta\n")
-    incremental_file_ingest(spark, str(src), CSV_SCHEMA, ckpt, out)
-    assert spark.read.parquet(out).count() == 2
-
-    # Second poll with no new files: nothing re-processed.
-    incremental_file_ingest(spark, str(src), CSV_SCHEMA, ckpt, out)
-    assert spark.read.parquet(out).count() == 2
-
-    # New file arrives: only its rows are appended (ledger semantics).
-    (src / "b.csv").write_text("3,gamma\n")
-    incremental_file_ingest(spark, str(src), CSV_SCHEMA, ckpt, out)
-    got = {r["id"] for r in spark.read.parquet(out).collect()}
-    assert got == {1, 2, 3}
-
-
-def test_incremental_ingest_with_transform(spark, tmp_path):
-    src = tmp_path / "incoming"
-    src.mkdir()
-    (src / "a.csv").write_text("1,alpha\n2,beta\n")
-    out = str(tmp_path / "out")
-    incremental_file_ingest(
-        spark,
-        str(src),
-        CSV_SCHEMA,
-        str(tmp_path / "ckpt"),
-        out,
-        transform=lambda df: df.filter(F.col("id") > 1).withColumn("name", F.upper("name")),
-    )
-    rows = spark.read.parquet(out).collect()
-    assert [(r["id"], r["name"]) for r in rows] == [(2, "BETA")]
 
 
 def test_windowed_event_counts_batch_semantics(spark):
@@ -204,36 +161,6 @@ def test_dedup_within_watermark_batch_degrades(spark):
     assert dedup_within_watermark(df, ["k"]).count() == 1
 
 
-def test_stream_static_broadcast_enrichment(spark, tmp_path):
-    """Stream-static join: each micro-batch is enriched against a static
-    broadcast dim (the recode/lookup-map importer shape, SURVEY §2.8
-    'Lookup/recode' — canton/country dims joined to arriving feed rows)."""
-    src = tmp_path / "incoming"
-    src.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    schema = T.StructType(
-        [T.StructField("id", T.IntegerType()), T.StructField("code", T.StringType())]
-    )
-    dim = spark.createDataFrame(
-        [("a", "Alpha"), ("b", "Beta")], "code string, label string"
-    )
-
-    def enrich(df):
-        return df.join(F.broadcast(dim), "code", "left")
-
-    (src / "x.csv").write_text("1,a\n2,b\n3,zz\n")
-    incremental_file_ingest(spark, str(src), schema, ckpt, out, transform=enrich)
-    got = {(r["id"], r["label"]) for r in spark.read.parquet(out).collect()}
-    assert got == {(1, "Alpha"), (2, "Beta"), (3, None)}
-
-    # The dim is re-read per poll, so dim updates apply to NEW batches only.
-    (src / "y.csv").write_text("4,a\n")
-    incremental_file_ingest(spark, str(src), schema, ckpt, out, transform=enrich)
-    got = {(r["id"], r["label"]) for r in spark.read.parquet(out).collect()}
-    assert got == {(1, "Alpha"), (2, "Beta"), (3, None), (4, "Alpha")}
-
-
 def test_stream_upsert_into_published(spark, tmp_path):
     """foreachBatch upsert sink: arriving files merge into the published
     table through the same ``operators.merge.merge_delta`` as batch
@@ -341,58 +268,6 @@ def test_session_windowed_counts_batch_and_stream(spark, tmp_path):
     # the stream finalized exactly the three sessions the batch run produced
     assert streamed.count() == 3
     assert {r["user_id"] for r in streamed.collect()} == {1, 2}
-
-
-def test_interval_join_stream_stream(spark, tmp_path):
-    """Stream-stream inner join with watermarks on both sides and a time
-    bound: purchases pair with the clicks at most 1h before them."""
-    from harvester_database_and_automation_spark.streaming.joins import interval_join
-
-    clicks_rows = [
-        (7, "2024-01-01 10:00:00", 100),
-        (7, "2024-01-01 12:00:00", 101),
-        (8, "2024-01-01 10:30:00", 102),
-    ]
-    purch_rows = [
-        (7, "2024-01-01 10:40:00", 900),  # pairs with click 100 (40m before)
-        (7, "2024-01-01 12:05:00", 901),  # pairs with click 101 only (100 is 2h+ old)
-        (8, "2024-01-01 13:00:00", 902),  # click 102 is 2.5h before -> no pair
-    ]
-    clicks = spark.createDataFrame(clicks_rows, "user_id long, cts_s string, click_id long").select(
-        "user_id", F.col("cts_s").cast("timestamp").alias("click_ts"), "click_id"
-    )
-    purch = spark.createDataFrame(purch_rows, "user_id long, pts_s string, purchase_id long").select(
-        "user_id", F.col("pts_s").cast("timestamp").alias("purchase_ts"), "purchase_id"
-    )
-
-    # batch replay of the same plan defines the expectation
-    batch = interval_join(purch, clicks, "user_id", "purchase_ts", "click_ts")
-    expect = {(r["purchase_id"], r["click_id"]) for r in batch.collect()}
-    assert expect == {(900, 100), (901, 101)}
-
-    cdir, pdir, out = tmp_path / "clicks", tmp_path / "purch", str(tmp_path / "out")
-    clicks.write.parquet(str(cdir))
-    purch.write.parquet(str(pdir))
-    cs = spark.readStream.schema(clicks.schema).parquet(str(cdir))
-    ps = spark.readStream.schema(purch.schema).parquet(str(pdir))
-    q = (
-        interval_join(ps, cs, "user_id", "purchase_ts", "click_ts")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["purchase_id"], r["click_id"])
-        for r in spark.read.schema(
-            "user_id long, purchase_ts timestamp, purchase_id long,"
-            " click_ts timestamp, click_id long"
-        ).parquet(out).collect()
-    }
-    assert got == expect
 
 
 def test_streaming_change_router_classifies_against_state(spark, tmp_path):
@@ -508,28 +383,6 @@ def test_streaming_cms_rejects_foreign_checkpoint(spark, tmp_path):
     stream_cms_into_published(spark, str(src), schema, str(tmp_path / "ck1"), table, "word")
     with pytest.raises(ValueError, match="checkpoint"):
         stream_cms_into_published(spark, str(src), schema, str(tmp_path / "ck2"), table, "word")
-
-
-def test_interval_join_right_outer_keeps_unmatched_key(spark):
-    """An unmatched right row must come back with ITS key, not NULL
-    (batch replay of the streaming plan; watermarks are no-ops)."""
-    import datetime as dt
-
-    from harvester_database_and_automation_spark.streaming.joins import interval_join
-
-    l = spark.createDataFrame(
-        [(1, dt.datetime(2024, 1, 1, 10), "seq1")], "id bigint, lts timestamp_ntz, seq string"
-    )
-    r = spark.createDataFrame(
-        [
-            (1, dt.datetime(2024, 1, 1, 9, 30), "meta1"),
-            (2, dt.datetime(2024, 1, 1, 9, 45), "meta2"),
-        ],
-        "id bigint, rts timestamp_ntz, meta string",
-    )
-    out = interval_join(l, r, on="id", left_ts="lts", right_ts="rts", how="right_outer")
-    rows = {r_["meta"]: r_["id"] for r_ in out.collect()}
-    assert rows == {"meta1": 1, "meta2": 2}, rows
 
 
 def test_streaming_cms_rejects_geometry_change(spark, tmp_path):
